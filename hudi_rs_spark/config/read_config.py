@@ -19,9 +19,9 @@ class HudiReadOptions:
     filters: list[tuple[str, str, str]] = field(default_factory=list)
     projection: list[str] | None = None
     limit: int | None = None  # row-accurate fetch (op 21)
-    # MOR log decode locality: "auto" switches to executor-side
-    # (mapInPandas) when log volume warrants it; "driver"/"distributed"
-    # force a path
+    # selects nothing: every log-bearing MOR slice decodes and merges in
+    # the one per-slice executor kernel (sources/pyds.py::_read_slice).
+    # Kept so callers that still pass it keep working.
     log_decode: str = "auto"
     input_partitions: int = 0  # 0 -> let Spark decide
     batch_size: int = 1024  # streaming read batch rows
@@ -93,7 +93,6 @@ class HudiReadOptions:
             lambda v: str(v).lower() == "true",
         ),
         "hoodie.read.input.partitions": ("input_partitions", int),
-        "hoodie.read.log.decode": ("log_decode", str),  # repo extension
     }
 
     def resolve(self) -> "HudiReadOptions":

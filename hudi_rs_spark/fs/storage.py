@@ -549,6 +549,8 @@ _MAX_VARIANTS_PER_BASE = 4
 _cache: dict[tuple, Storage] = {}  # insertion-ordered (py3.7+ dict)
 _default: dict[tuple[str, str], tuple] = {}
 _cache_lock = threading.Lock()
+# (scheme, authority) pairs bound by register_storage in this process
+_registered: set[tuple[str, str]] = set()
 _LOCAL = LocalStorage()
 
 
@@ -608,12 +610,30 @@ def register_storage(
     point for filesystems ``FileSystem.from_uri`` can't build (custom
     fsspec handlers, SubTreeFileSystem test rigs). Driver-process scope
     only: executor workers resolve their own backends from shipped
-    options."""
+    options, so a table on such a binding with no storage options can
+    be planned but not read where decode runs in workers (log-bearing
+    slices, ``read_changes``) — see ``worker_reachable``."""
     base = (scheme.lower(), authority)
     full = base + (_options_key(options),)
     with _cache_lock:
         _cache[full] = storage
         _default[base] = full
+        _registered.add(base)
+
+
+def worker_reachable(path: str, options: dict | None = None) -> bool:
+    """Whether a Spark Python worker can open ``path`` on its own.
+    memory:// lives in one process's heap, and a ``register_storage``
+    binding sits in the driver's cache: a worker opening either gets an
+    empty backend. A registered scheme is reachable only when the table
+    ships ``options`` the worker can build its own backend from."""
+    if "://" not in path:
+        return True
+    parts = urlsplit(path)
+    scheme = parts.scheme.lower()
+    if scheme == "memory":
+        return False
+    return bool(options) or (scheme, parts.netloc) not in _registered
 
 
 def as_local_path(path: str) -> str | None:

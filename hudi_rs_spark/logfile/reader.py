@@ -214,42 +214,6 @@ def rollback_targets(blocks: list[LogBlock]) -> set[str]:
     }
 
 
-def scan_rollback_targets(path: str) -> set[str]:
-    """Header-only scan for rollback command targets: seeks past block
-    content, so the driver can aggregate a file group's rollback targets
-    across ALL its log files cheaply (O(blocks × header bytes) IO) before
-    the data blocks decode on executors."""
-    from hudi_rs_spark.fs.storage import storage_for
-
-    targets: set[str] = set()
-    with storage_for(path).open_seekable(path) as f:
-        while True:
-            magic = f.read(6)
-            if not magic:
-                break
-            if magic != MAGIC:
-                raise ValueError(f"bad log magic in {path}")
-            pos_after_magic = f.tell()
-            (block_len,) = struct.unpack(">Q", f.read(8))
-            (version,) = struct.unpack(">I", f.read(4))
-            if version >= 1:
-                (block_type,) = struct.unpack(">I", f.read(4))
-                (count,) = struct.unpack(">I", f.read(4))
-                header: dict[int, str] = {}
-                for _ in range(count):
-                    (key,) = struct.unpack(">I", f.read(4))
-                    (vlen,) = struct.unpack(">I", f.read(4))
-                    header[key] = f.read(vlen).decode("utf-8")
-                if (
-                    block_type == BLOCK_COMMAND
-                    and header.get(KEY_COMMAND_BLOCK_TYPE, "0") == "0"
-                    and header.get(KEY_TARGET_INSTANT_TIME)
-                ):
-                    targets.add(header[KEY_TARGET_INSTANT_TIME])
-            f.seek(pos_after_magic + 8 + block_len)
-    return targets
-
-
 def valid_blocks(
     blocks: list[LogBlock],
     start_exclusive: str | None = None,

@@ -2,7 +2,9 @@
 
 Re-expresses the reference's merge-on-read record merge
 (/root/reference/crates/core/src/merge/record_merger.rs:89-187 and
-merge/ordering.rs:34-101) as DataFrame pipelines:
+merge/ordering.rs:34-101) as DataFrame pipelines, for the ``merge_*``
+workload queries (Hudi table reads run the per-slice Arrow twin,
+sources/pyds.py::_merge_slice_table):
 
 OVERWRITE_WITH_LATEST:
   1. latest-wins dedup: sort desc by (key, ordering, tiebreak), keep first
@@ -51,45 +53,6 @@ def latest_by_key(
     )
 
 
-def partial_update_by_key(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    ordering_cols: Sequence[str],
-    fill_cols: Sequence[str],
-) -> DataFrame:
-    """PartialUpdateAvroPayload merge: one surviving row per key whose
-    ``fill_cols`` each take the NEWEST NON-NULL value across the key's
-    versions (ordered desc by ``ordering_cols``); every other column
-    (meta, ordering, keys) comes from the newest row, exactly like
-    ``latest_by_key``.
-
-    Same cost shape as ``latest_by_key`` — ONE shuffle+sort per key
-    partition; the column fills ride the same window as the row_number
-    (whole-partition frame so the newest non-null is visible from the
-    top row). At 100 TB this is the identical plan to the
-    overwrite-with-latest merge plus O(fill_cols) window expressions.
-    """
-    order = [F.col(c).desc_nulls_last() for c in ordering_cols]
-    keys = [F.col(k) for k in key_cols]
-    w_rank = Window.partitionBy(*keys).orderBy(*order)
-    w_fill = w_rank.rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    fill = set(fill_cols)
-    out = df.select(
-        *[
-            (
-                F.first(F.col(c), ignorenulls=True).over(w_fill).alias(c)
-                if c in fill
-                else F.col(c)
-            )
-            for c in df.columns
-        ],
-        F.row_number().over(w_rank).alias("__rn"),
-    )
-    return out.filter(F.col("__rn") == 1).drop("__rn")
-
-
 def merge_with_deletes(
     data: DataFrame,
     deletes: DataFrame,
@@ -97,8 +60,6 @@ def merge_with_deletes(
     event_col: str,
     commit_col: str,
     tiebreak_cols: Sequence[str] = (),
-    broadcast_deletes: bool = False,
-    partial_fill_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Full OVERWRITE_WITH_LATEST merge with delete records.
 
@@ -111,20 +72,14 @@ def merge_with_deletes(
     event-time ordering AND the max commit-time independently; a delete
     whose max event-time is 0 (or null) compares on commit time only.
 
-    ``broadcast_deletes``: only set True when the caller KNOWS the delete
-    set is small (e.g. driver-decoded rows it already counted). A forced
-    broadcast of an unbounded delete aggregate OOMs the driver on a
-    heavy-delete table between compactions; the default leaves the join
-    strategy to Catalyst/AQE, which still broadcasts at runtime when the
-    post-aggregation shuffle stats come in under the threshold.
+    The join strategy is left to Catalyst/AQE: a forced broadcast of an
+    unbounded delete aggregate OOMs the driver on a heavy-delete input,
+    and AQE still broadcasts at runtime when the post-aggregation
+    shuffle stats come in under the threshold.
     """
-    ordering = [event_col, commit_col, *tiebreak_cols]
-    if partial_fill_cols:
-        survivors = partial_update_by_key(
-            data, key_cols, ordering, partial_fill_cols
-        )
-    else:
-        survivors = latest_by_key(data, key_cols, ordering)
+    survivors = latest_by_key(
+        data, key_cols, [event_col, commit_col, *tiebreak_cols]
+    )
     if deletes is None:
         return survivors
 
@@ -142,8 +97,6 @@ def merge_with_deletes(
         c = survivors[k].eqNullSafe(F.col(f"__delk_{k}"))
         cond = c if cond is None else (cond & c)
 
-    if broadcast_deletes:
-        del_agg = F.broadcast(del_agg)
     joined = survivors.join(del_agg, cond, "left")
 
     row_event = F.col(event_col)

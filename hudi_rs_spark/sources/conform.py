@@ -1,5 +1,5 @@
 """Row conformance: avro/pyarrow-decoded python values -> rows matching a
-Spark StructType (shared by the driver and executor decode paths)."""
+Spark StructType (the log-decode kernel, sources/pyds.py::_decode_logs)."""
 
 from __future__ import annotations
 

@@ -6,44 +6,34 @@ Query lifecycle mirrors SURVEY.md §3 / docs/reader-spec.md:
      reader-spec.md:295-297)
   2. plan: timeline view as-of -> partition pruning -> file groups ->
      as-of slice per group -> minus replaced groups
-  3. execute: COW / read-optimized -> spark.read.parquet(planned files)
-     (Catalyst handles filter/projection pushdown, op 9/10/18/21/24);
-     MOR snapshot -> base ∪ decoded log rows -> OVERWRITE_WITH_LATEST
-     merge (operators/merge.py) -> anti delete resolution.
+  3. execute: COW / read-optimized / log-free slices ->
+     spark.read.parquet(planned files) (Catalyst handles filter/projection
+     pushdown, op 9/10/18/21/24); log-bearing MOR slices -> the per-slice
+     Arrow kernel (sources/pyds.py::_read_slice: log decode,
+     OVERWRITE_WITH_LATEST merge, delete resolution) in one mapInArrow.
 
 Scale: planning cost ∝ files in surviving partitions (driver-side
-listing); execution is standard Spark parquet scan + at most one shuffle
-on the record key for the MOR merge. Log decode currently runs on the
-driver (log payloads are tiny next to base files); the decode functions
-are pure and can move into mapInPandas over log paths when log volume
-warrants it.
+listing); execution is a Spark parquet scan plus, for log-bearing
+slices, executor-side decode+merge packed into at most one task per
+core — no shuffle, since a record key never leaves its file slice.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from decimal import Decimal
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hudi_rs_spark.avro.spark_schema import avro_record_to_struct
-from hudi_rs_spark.sources.conform import conform_row as _conform_row, conform_value as _conform_value
 from hudi_rs_spark.config.read_config import HudiReadOptions
-from hudi_rs_spark.config.table_config import HudiTableConfig, MergeStrategy, TableType
+from hudi_rs_spark.config.table_config import HudiTableConfig, TableType
 from hudi_rs_spark.fs.file_group import FileSlice
 from hudi_rs_spark.fs.fs_view import build_file_groups, get_file_slices
 from hudi_rs_spark.functions.filters import apply_filters
-from hudi_rs_spark.logfile import reader as logreader
-from hudi_rs_spark.operators.merge import (
-    latest_by_key,
-    merge_with_deletes,
-    partial_update_by_key,
-)
 from hudi_rs_spark.plans.partition_pruner import Filter, PartitionPruner
-from hudi_rs_spark.timeline.instant import Action
 from hudi_rs_spark.timeline.timeline import Timeline
 
 META_FIELDS = [
@@ -582,17 +572,12 @@ class HudiTable:
             df, options.batch_size if batch_size is None else batch_size
         )
 
-    def _scan_base_files(
-        self, slices, resolved: T.StructType, with_source: bool = False
-    ) -> DataFrame:
+    def _scan_base_files(self, slices, resolved: T.StructType) -> DataFrame:
         """Vectorized base-file scan, routed by base-file format (op 25
         routing is COW/MOR; this is the op 5/6 format routing the
         reference does in file_group/base_file/mod.rs): parquet slices go
         through Spark's native vectorized reader, ``.lance`` slices
-        through the distributed pure-python Lance v2 decoder. When
-        ``with_source`` is set every row carries a ``__src_file`` column
-        (base file NAME) so the MOR merge can tag file groups uniformly —
-        ``input_file_name()`` is empty for the Lance path."""
+        through the distributed pure-python Lance v2 decoder."""
         lance = [
             s for s in slices if s.base_file_relative_path().endswith(".lance")
         ]
@@ -601,9 +586,7 @@ class HudiTable:
         ]
         parts: list[DataFrame] = []
         if pq_slices:
-            parts.append(
-                self._scan_parquet_bases(pq_slices, resolved, with_source)
-            )
+            parts.append(self._scan_parquet_bases(pq_slices, resolved))
         if lance:
             parts.append(
                 self._scan_lance_files(
@@ -612,7 +595,6 @@ class HudiTable:
                         for s in lance
                     ],
                     resolved,
-                    with_source,
                 )
             )
         out = parts[0]
@@ -620,9 +602,7 @@ class HudiTable:
             out = out.unionByName(p)
         return out
 
-    def _scan_parquet_bases(
-        self, slices, resolved: T.StructType, with_source: bool = False
-    ) -> DataFrame:
+    def _scan_parquet_bases(self, slices, resolved: T.StructType) -> DataFrame:
         """Fast path: ONE multi-file scan with
         the resolved schema. When a column's TYPE evolved across commits
         (e.g. long -> string ts_millis in the reference's
@@ -634,14 +614,6 @@ class HudiTable:
         recorded (driver-side JSON, no footer reads), scan each epoch
         with its own physical types, cast to resolved, union. One epoch
         (the overwhelmingly common case) degenerates to the fast path."""
-
-        def _src(df: DataFrame) -> DataFrame:
-            if not with_source:
-                return df
-            return df.withColumn(
-                "__src_file",
-                F.element_at(F.split(F.input_file_name(), "/"), -1),
-            )
         by_ts = {i.timestamp: i for i in self.timeline.instants}
         if self.config.archived_read_enabled:
             for i in self.timeline.archived_instants():
@@ -666,7 +638,7 @@ class HudiTable:
             )
         if len(groups) <= 1 and not renames:
             paths = next(iter(groups.values()))
-            return _src(self.spark.read.schema(resolved).parquet(*paths))
+            return self.spark.read.schema(resolved).parquet(*paths)
 
         parts: list[DataFrame] = []
         for schema_json, paths in sorted(
@@ -702,17 +674,14 @@ class HudiTable:
             )
             df = self.spark.read.schema(phys).parquet(*paths)
             parts.append(
-                _src(
-                    df.select(
-                        *[
-                            F.col(names[f.name])
-                            .cast(f.dataType).alias(f.name)
-                            if names[f.name] != f.name
-                            or phys[names[f.name]].dataType != f.dataType
-                            else F.col(f.name)
-                            for f in resolved.fields
-                        ]
-                    )
+                df.select(
+                    *[
+                        F.col(names[f.name]).cast(f.dataType).alias(f.name)
+                        if names[f.name] != f.name
+                        or phys[names[f.name]].dataType != f.dataType
+                        else F.col(f.name)
+                        for f in resolved.fields
+                    ]
                 )
             )
         out = parts[0]
@@ -720,9 +689,7 @@ class HudiTable:
             out = out.unionByName(p)
         return out
 
-    def _scan_lance_files(
-        self, paths: list[str], resolved: T.StructType, with_source: bool = False
-    ) -> DataFrame:
+    def _scan_lance_files(self, paths: list[str], resolved: T.StructType) -> DataFrame:
         """Distributed Lance v2 base-file scan (op 6 — reference
         crates/core/src/file_group/base_file/lance.rs:56-271 via the
         lance-file crate; here the pure-python ``lance/reader.py``
@@ -733,14 +700,6 @@ class HudiTable:
         connector applies to parquet bases."""
         from pyspark.sql.pandas.types import to_arrow_schema
 
-        out_struct = T.StructType(
-            list(resolved.fields)
-            + (
-                [T.StructField("__src_file", T.StringType(), False)]
-                if with_source
-                else []
-            )
-        )
         target = to_arrow_schema(resolved)
         from hudi_rs_spark.write.ddl import rename_chain
 
@@ -753,8 +712,6 @@ class HudiTable:
         ).repartition(n)
 
         def decode(batches):
-            import pyarrow as pa
-
             from hudi_rs_spark.lance.reader import LanceFile
             from hudi_rs_spark.sources.pyds import _conform_table
 
@@ -764,16 +721,10 @@ class HudiTable:
                         LanceFile.from_path(path, opts).to_table(), target,
                         renames=renames,
                     )
-                    if with_source:
-                        name = path.rsplit("/", 1)[-1]
-                        tbl = tbl.append_column(
-                            "__src_file",
-                            pa.array([name] * len(tbl), pa.string()),
-                        )
                     if len(tbl):
                         yield from tbl.to_batches()
 
-        return paths_df.mapInArrow(decode, out_struct)
+        return paths_df.mapInArrow(decode, resolved)
 
     def _restore_partition_columns(self, df, slices, filters):
         """hoodie.datasource.write.drop.partition.columns=true support:
@@ -1203,7 +1154,6 @@ class HudiTable:
         self,
         start_timestamp: str | None,
         end_timestamp: str | None = None,
-        mode: str = "auto",
     ) -> DataFrame:
         """CDC-format incremental query — the analog of Hudi's
         ``hoodie.datasource.query.incremental.format=cdc``: typed change
@@ -1218,117 +1168,26 @@ class HudiTable:
 
         Blocks pass the same validity gates as data blocks (rollbacks,
         uncommitted, archival rules), so a rolled-back commit's changes
-        never leak into the feed.
-
-        ``mode``: 'driver' decodes on the driver (fine for small
-        windows), 'distributed' decodes executor-side via mapInPandas
-        (``logfile/distributed.decode_cdc_distributed`` — the feed never
-        materializes on the driver), 'auto' (default) picks distributed
-        past the same shape thresholds the MOR merge path uses (>64
-        in-window files, or >32 MiB when sizes are known from the
-        file-slice listing)."""
-        from hudi_rs_spark.logfile.reader import BLOCK_CDC_DATA
+        never leak into the feed. Decode runs on executors, one CDC log
+        group per slice descriptor through the same kernel as snapshot
+        reads (``sources/pyds.py::_read_cdc_slice``): the feed never
+        materializes on the driver."""
+        from hudi_rs_spark.sources.pyds import (
+            HudiPyDataSource,
+            _cdc_partitions,
+            read_slices,
+        )
         from hudi_rs_spark.timeline.timestamps import to_hudi_timestamp
 
         if start_timestamp is not None:
             start_timestamp = to_hudi_timestamp(start_timestamp, self.config.timezone)
         if end_timestamp is not None:
             end_timestamp = to_hudi_timestamp(end_timestamp, self.config.timezone)
-        end = end_timestamp or self.timeline.latest_commit_timestamp()
-        valid_instants = {i.timestamp for i in self.timeline.instants_as_of(end)}
-        schema = T.StructType(
-            [
-                T.StructField("commit_time", T.StringType(), True),
-                T.StructField("op", T.StringType(), True),
-                T.StructField("ts_ms", T.StringType(), True),
-                T.StructField("before", T.StringType(), True),
-                T.StructField("after", T.StringType(), True),
-            ]
-        )
-        groups = self.cdc_log_groups(start_timestamp, end)
-        tasks = [
-            (f"{part}/{fid}", os.path.join(self.base_path, rel))
-            for (part, fid), rels in sorted(groups.items())
-            for rel in rels
-        ]
-        # size info without per-file HEADs: the slice listing already
-        # carries log sizes for files still attached to live slices
-        known_sizes: dict[str, int] = {}
-        for s in self.get_file_slices(end):
-            for lf in s.log_files:
-                rel = (
-                    f"{s.partition_path}/{lf.file_name}"
-                    if s.partition_path
-                    else lf.file_name
-                )
-                known_sizes[rel] = lf.size
-        total_known = sum(
-            known_sizes.get(rel, 0) for rels in groups.values() for rel in rels
-        )
-        distributed = mode == "distributed" or (
-            mode == "auto"
-            and (len(tasks) > 64 or total_known > 32 * 1024 * 1024)
-        )
-        if distributed and self.spark is not None:
-            from hudi_rs_spark.logfile.distributed import (
-                decode_cdc_distributed,
-                scan_targets_distributed,
-            )
-
-            grp_targets = scan_targets_distributed(
-                self.spark, tasks, getattr(self, "storage_options", None)
-            )
-
-            return decode_cdc_distributed(
-                self.spark,
-                tasks,
-                valid_instants,
-                start_timestamp,
-                end,
-                rollback_targets_by_group={
-                    k: frozenset(v) for k, v in grp_targets.items()
-                },
-                archival_boundary=self.timeline.earliest_active_timestamp(),
-                pending_instants=frozenset(self.timeline.pending_timestamps),
-                storage_options=self.storage_options,
-            )
-
-        rows: list[tuple] = []
-        for _group, rel_paths in sorted(groups.items()):
-            file_blocks = []
-            for rel in rel_paths:
-                try:
-                    file_blocks.append(
-                        logreader.read_log_file(os.path.join(self.base_path, rel))
-                    )
-                except FileNotFoundError:
-                    continue  # cleaned after the commit wrote it
-            targets: set[str] = set()
-            for blocks in file_blocks:
-                targets |= logreader.rollback_targets(blocks)
-            for blocks in file_blocks:
-                for b in logreader.valid_blocks(
-                    blocks,
-                    start_timestamp,
-                    end,
-                    valid_instants,
-                    rollback_targets_override=targets,
-                    archival_boundary=self.timeline.earliest_active_timestamp(),
-                    pending_instants=self.timeline.pending_timestamps,
-                ):
-                    if b.block_type != BLOCK_CDC_DATA:
-                        continue
-                    for r in b.records or []:
-                        rows.append(
-                            (
-                                b.instant_time,
-                                r.get("op"),
-                                r.get("ts_ms"),
-                                r.get("before"),
-                                r.get("after"),
-                            )
-                        )
-        return self.spark.createDataFrame(rows, schema)
+        schema = HudiPyDataSource.CDC_SCHEMA
+        parts = _cdc_partitions(self, start_timestamp, end_timestamp, schema.json())
+        if not parts:
+            return self.spark.createDataFrame([], schema)
+        return read_slices(self.spark, parts)
 
     def read_changes_derived(
         self,
@@ -1365,16 +1224,10 @@ class HudiTable:
             start_timestamp = to_hudi_timestamp(start_timestamp, self.config.timezone)
         if end_timestamp is not None:
             end_timestamp = to_hudi_timestamp(end_timestamp, self.config.timezone)
+        from hudi_rs_spark.sources.pyds import HudiPyDataSource
+
         end = end_timestamp or self.timeline.latest_commit_timestamp()
-        schema = T.StructType(
-            [
-                T.StructField("commit_time", T.StringType(), True),
-                T.StructField("op", T.StringType(), True),
-                T.StructField("ts_ms", T.StringType(), True),
-                T.StructField("before", T.StringType(), True),
-                T.StructField("after", T.StringType(), True),
-            ]
-        )
+        schema = HudiPyDataSource.CDC_SCHEMA
         window = self.timeline.instants_in_range(start_timestamp, end)
         if not window:
             return self.spark.createDataFrame([], schema)
@@ -1519,284 +1372,54 @@ class HudiTable:
         options: HudiReadOptions,
         start_exclusive: str | None = None,
     ) -> DataFrame:
-        based_slices = [s for s in slices if s.base_file is not None]
-        base_paths = [
-            os.path.join(self.base_path, s.base_file_relative_path())
-            for s in based_slices
-        ]
-        log_slices = [] if options.use_read_optimized_mode else [
-            s for s in slices if s.has_log_files
-        ]
-
-        resolved = self._resolve_schema(slices)
-        if not base_paths and not log_slices:
-            return self.spark.createDataFrame([], resolved)
+        """Base-only slices (COW, read-optimized, MOR slices without log
+        files) scan through Spark's native parquet reader. Log-bearing
+        MOR slices decode and merge in the per-slice Arrow kernel
+        (``sources/pyds.py::_read_slice``, one ``mapInArrow`` over slice
+        descriptors): the merge scope is the file slice, as in the
+        reference (record_merger.rs runs per read_file_slice), so no
+        shuffle is needed. A key re-inserted into a second file group
+        after a rollback keeps both rows (pinned by table_read_tests.rs
+        test_nonpartitioned_rollback_mor_snapshot). Incremental reads
+        bound base rows and log blocks to (start_exclusive, as_of]
+        BEFORE the merge (file_group/reader.rs:169-177), so an
+        out-of-range row cannot beat an in-range one and make the key
+        vanish."""
+        from hudi_rs_spark.sources.pyds import _slice_partitions, read_slices
 
         # explicit schema: no footer inference job, and old base files of an
         # evolved table read with the latest column set (nulls backfilled);
         # type-evolved tables (heterogeneous physical types) scan per
         # schema epoch with casts. Log-only slices (no base file — beyond
         # the reference, which rejects them) merge against an empty base.
-        needs_fg = (
-            bool(log_slices)
+        resolved = self._resolve_schema(slices)
+        merge_logs = (
+            not options.use_read_optimized_mode
             and self.config.table_type != TableType.COPY_ON_WRITE
         )
-        if base_paths:
-            base_df = self._scan_base_files(
-                based_slices, resolved, with_source=needs_fg
-            )
-        else:
-            base_df = self.spark.createDataFrame([], resolved)
-
-        if not needs_fg:
-            return base_df if "__src_file" not in base_df.columns else (
-                base_df.drop("__src_file")
-            )
-
-        # ---- MOR snapshot: decode logs, union, merge -----------------
-        # The merge is scoped per FILE GROUP (reference merges per slice:
-        # record_merger.rs is invoked per read_file_slice). A record key
-        # normally lives in one group, but rollback/re-insert flows can
-        # legitimately produce the same key in two groups and the merged
-        # result must keep both (pinned by
-        # table_read_tests.rs test_nonpartitioned_rollback_mor_snapshot).
-        # (file_group, key) is also a better-distributed shuffle key.
-        valid_instants = {
-            i.timestamp for i in self.timeline.instants_as_of(as_of)
-        }
-        ordering_fields = self.config.ordering_fields
-        ordering = ordering_fields[0] if ordering_fields else None
-        strategy = self.config.merge_strategy
-        if strategy == MergeStrategy.OVERWRITE_WITH_LATEST and ordering is None:
-            # config validation error, not a silent append-only degrade
-            # (record_merger.rs: OrderingFields must be set for
-            # OverwriteWithLatest — only reachable with an explicit
-            # hoodie.table.record.merge.strategy and no ordering field)
-            raise ValueError(
-                "merge strategy OVERWRITE_WITH_LATEST requires "
-                "hoodie.table.ordering.fields / hoodie.table.precombine.field"
-            )
-        # PartialUpdateAvroPayload tables merge versions column-wise:
-        # every data column (not meta / ordering / partition) takes the
-        # newest NON-NULL value instead of the newest row's value
-        # (operators/merge.partial_update_by_key)
-        fill_cols: tuple[str, ...] = ()
-        if self.config.is_partial_update:
-            skip = set(META_FIELDS) | {"__fg", "__src_file", ordering}
-            skip.update(self.config.partition_fields)
-            skip.update(self.config.record_key_fields)
-            fill_cols = tuple(c for c in resolved.names if c not in skip)
-
-        # tag base rows with their file group, parsed from the scanned
-        # file name ({file_id}_{write_token}_{ts}.{ext} — file ids
-        # contain no underscores). The scan emitted __src_file (parquet:
-        # input_file_name; lance: literal per decoded file).
-        if "__src_file" in base_df.columns:
-            base_tagged = base_df.withColumn(
-                "__fg", F.element_at(F.split(F.col("__src_file"), "_"), 1)
-            ).drop("__src_file")
-        else:  # empty-base (log-only) frame built from createDataFrame
-            base_tagged = base_df.withColumn(
-                "__fg",
-                F.element_at(
-                    F.split(
-                        F.element_at(F.split(F.input_file_name(), "/"), -1), "_"
-                    ),
-                    1,
-                ),
-            )
-
-        # Incremental reads bound base rows BEFORE the merge, like the
-        # reference (file_group/reader.rs:169-177 applies the commit-time
-        # mask to base batches pre-merge): an out-of-range base row must
-        # not beat an in-range log row on the ordering field and then be
-        # dropped by a post-merge filter — the key would vanish instead of
-        # emitting its in-range version.
-        if start_exclusive is not None and "_hoodie_commit_time" in base_df.columns:
-            bound = F.col("_hoodie_commit_time") > F.lit(start_exclusive)
-            if as_of is not None:
-                bound = bound & (F.col("_hoodie_commit_time") <= F.lit(as_of))
-            base_tagged = base_tagged.filter(bound)
-
-        # choose decode locality: driver decode is fine for small deltas;
-        # log-heavy tables decode on executors (mapInPandas over paths)
-        log_tasks = [
-            (s.file_id, os.path.join(self.base_path, rel))
-            for s in log_slices
-            for rel in s.log_file_relative_paths()
+        log_slices = [s for s in slices if merge_logs and s.has_log_files]
+        based = [
+            s for s in slices
+            if s.base_file is not None and not (merge_logs and s.has_log_files)
         ]
-        total_log_bytes = sum(
-            lf.size for s in log_slices for lf in s.log_files
-        )
-        distributed = options.log_decode == "distributed" or (
-            options.log_decode == "auto"
-            and (total_log_bytes > 32 * 1024 * 1024 or len(log_tasks) > 64)
-        )
-        if distributed:
-            return self._merge_distributed(
-                base_tagged, log_tasks, ordering, strategy, valid_instants,
-                start_exclusive, as_of, fill_cols,
-            )
-
-        data_rows: list[dict] = []
-        delete_rows: list[tuple] = []  # (file_group, commit_time, key, partition, ordering)
-        for s in log_slices:
-            fg = s.file_id
-            # rollback targets aggregate across ALL of the slice's log
-            # files before filtering (scanner.rs CollectedBlocks): a
-            # rollback command in a later file voids blocks in earlier ones
-            file_blocks = [
-                logreader.read_log_file(os.path.join(self.base_path, rel))
-                for rel in s.log_file_relative_paths()
-            ]
-            slice_targets: set[str] = set()
-            for blocks in file_blocks:
-                slice_targets |= logreader.rollback_targets(blocks)
-            for blocks in file_blocks:
-                for b in logreader.valid_blocks(
-                    blocks, start_exclusive, as_of, valid_instants,
-                    rollback_targets_override=slice_targets,
-                    archival_boundary=self.timeline.earliest_active_timestamp(),
-                    pending_instants=self.timeline.pending_timestamps,
-                ):
-                    if b.records:
-                        for r in b.records:
-                            r["__fg"] = fg
-                        data_rows.extend(b.records)
-                    for key, part, ordering_val in b.delete_records:
-                        delete_rows.append((fg, b.instant_time, key, part, ordering_val))
-
-        if data_rows:
-            # conform every record straight to the (tagged) base schema by
-            # name — blocks of DIFFERENT schemas (parquet + avro + cdc in
-            # one slice) each contribute the columns they carry, missing
-            # ones null; same behavior as the distributed decode path
-            target = base_tagged.schema
-            from hudi_rs_spark.sources.conform import apply_renames
-            from hudi_rs_spark.write.ddl import rename_chain
-
-            renames = rename_chain(self.config.props) or None
-            rows = [
-                _conform_row(apply_renames(r, renames), target)
-                for r in data_rows
-            ]
-            log_df = self.spark.createDataFrame(rows, target)
-            data = base_tagged.unionByName(log_df)
-        else:
-            data = base_tagged
-
-        if strategy == MergeStrategy.APPEND_ONLY or ordering is None:
-            return data.drop("__fg")
-
-        merge_keys = ["__fg", "_hoodie_record_key"]
-        deletes_df = None
-        if delete_rows:
-            ord_type = data.schema[ordering].dataType
-            del_schema = T.StructType(
-                [
-                    T.StructField("__fg", T.StringType(), True),
-                    T.StructField("_hoodie_commit_time", T.StringType(), True),
-                    T.StructField("_hoodie_record_key", T.StringType(), True),
-                    T.StructField("_hoodie_partition_path", T.StringType(), True),
-                    T.StructField(ordering, ord_type, True),
-                ]
-            )
-            conv = [
-                (fg, c, k, p, _conform_value(o, ord_type))
-                for (fg, c, k, p, o) in delete_rows
-            ]
-            deletes_df = self.spark.createDataFrame(conv, del_schema)
-
-        if deletes_df is None:
-            if fill_cols:
-                out = partial_update_by_key(
-                    data, merge_keys, [ordering, "_hoodie_commit_seqno"],
-                    fill_cols,
+        parts: list[DataFrame] = []
+        if based:
+            parts.append(self._scan_base_files(based, resolved))
+        if log_slices:
+            parts.append(
+                read_slices(
+                    self.spark,
+                    _slice_partitions(
+                        self, log_slices, as_of, False, start_exclusive, resolved
+                    ),
                 )
-            else:
-                out = latest_by_key(
-                    data, merge_keys, [ordering, "_hoodie_commit_seqno"]
-                )
-        else:
-            out = merge_with_deletes(
-                data,
-                deletes_df,
-                merge_keys,
-                event_col=ordering,
-                commit_col="_hoodie_commit_time",
-                tiebreak_cols=["_hoodie_commit_seqno"],
-                # driver-decoded: the count is exact, gate the broadcast
-                broadcast_deletes=len(delete_rows) <= 100_000,
-                partial_fill_cols=fill_cols or None,
             )
-        return out.drop("__fg")
-
-    def _merge_distributed(
-        self,
-        base_tagged: DataFrame,
-        log_tasks: list[tuple[str, str]],
-        ordering: str | None,
-        strategy: MergeStrategy,
-        valid_instants: set[str],
-        start_exclusive: str | None,
-        end_inclusive: str | None,
-        fill_cols: tuple[str, ...] = (),
-    ) -> DataFrame:
-        """Executor-side log decode (logfile/distributed.py) feeding the
-        same per-file-group merge."""
-        from hudi_rs_spark.logfile.distributed import (
-            DELETE_FLAG,
-            decode_logs_distributed,
-            scan_targets_distributed,
-        )
-
-        # slice-level rollback voiding needs cross-file target sets; the
-        # header-only scan seeks past block content, so the pre-pass is a
-        # cheap driver loop for bounded file counts and ships through
-        # mapInPandas above the threshold (the last linear-driver-I/O
-        # step at millions of log files)
-        fg_targets = scan_targets_distributed(
-            self.spark, log_tasks, self.storage_options
-        )
-        from hudi_rs_spark.write.ddl import rename_chain as _rc
-
-        decoded = decode_logs_distributed(
-            self.spark,
-            log_tasks,
-            base_tagged.schema,
-            ordering,
-            valid_instants,
-            start_exclusive,
-            end_inclusive,
-            rollback_targets_by_fg={k: frozenset(v) for k, v in fg_targets.items()},
-            archival_boundary=self.timeline.earliest_active_timestamp(),
-            pending_instants=frozenset(self.timeline.pending_timestamps),
-            storage_options=self.storage_options,
-            renames=_rc(self.config.props) or None,
-        )
-        log_df = decoded.filter(~F.col(DELETE_FLAG)).drop(DELETE_FLAG)
-        data = base_tagged.unionByName(log_df)
-        if strategy == MergeStrategy.APPEND_ONLY or ordering is None:
-            return data.drop("__fg")
-        deletes_df = decoded.filter(F.col(DELETE_FLAG)).select(
-            "__fg",
-            "_hoodie_commit_time",
-            "_hoodie_record_key",
-            "_hoodie_partition_path",
-            ordering,
-        )
-        out = merge_with_deletes(
-            data,
-            deletes_df,
-            ["__fg", "_hoodie_record_key"],
-            event_col=ordering,
-            commit_col="_hoodie_commit_time",
-            tiebreak_cols=["_hoodie_commit_seqno"],
-            partial_fill_cols=fill_cols or None,
-        )
-        return out.drop("__fg")
-
-
+        if not parts:
+            return self.spark.createDataFrame([], resolved)
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
 
 
 class HudiFileGroupReader:

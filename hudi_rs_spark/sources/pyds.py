@@ -33,10 +33,10 @@ classification, taken conservatively.
 Scale: per-slice partitions give the same parallelism as the Spark
 parquet reader's split planning for typical Hudi file sizing (~128 MB
 base files); the MOR merge is slice-local (no shuffle at all — the
-merge key never leaves its file group by construction). The eager
-``HudiTable.read()`` path remains the better choice when one slice is
-huge (it can shuffle-merge), but at Hudi's write sizing the connector
-plan IS the scalable plan.
+merge key never leaves its file group by construction). ``_read_slice``
+is the engine's one MOR decode-and-merge kernel: ``HudiTable`` reads
+run it through ``read_slices`` (one ``mapInArrow`` over slice
+descriptors), and compaction/clustering run it per service task.
 """
 
 from __future__ import annotations
@@ -540,9 +540,12 @@ def _slice_partitions(
     as_of: str | None,
     read_optimized: bool,
     start_exclusive: str | None = None,
+    resolved: T.StructType | None = None,
 ) -> list[HudiSlicePartition]:
     """Driver-side: payload one picklable InputPartition per file slice
-    (shared by the batch reader and the streaming micro-batch planner)."""
+    (shared by the batch reader, the streaming micro-batch planner and
+    ``HudiTable`` reads, which pass the schema they resolved over every
+    slice of the read)."""
     from hudi_rs_spark.config.table_config import MergeStrategy, TableType
 
     if not slices:
@@ -552,7 +555,7 @@ def _slice_partitions(
     from hudi_rs_spark.write.ddl import rename_chain
 
     renames = rename_chain(t.config.props)
-    resolved = _as_nullable(t._resolve_schema(slices))
+    resolved = _as_nullable(resolved or t._resolve_schema(slices))
     merge_logs = (
         not read_optimized and t.config.table_type != TableType.COPY_ON_WRITE
     )
@@ -624,6 +627,59 @@ def _slice_partitions(
         )
         for s in slices
     ]
+
+
+def read_slices(spark, parts: list[HudiSlicePartition]):
+    """DataFrame of ``_read_slice`` over ``parts`` (non-empty, one scan
+    context): one ``mapInArrow`` over slice descriptors. Tasks are sized
+    by cores, not by slices — per-task Python start-up outweighs a small
+    slice's decode, so the descriptors pack into
+    ``min(len(parts), defaultParallelism)`` tasks, one RDD partition
+    each, and the plan has no Exchange. Descriptors travel pickled
+    (typed partition values survive); the table-constant scan context
+    rides once in the task closure. Storage only the driver process can
+    open (memory://, a ``register_storage`` binding without storage
+    options) raises here: workers would see an empty backend and every
+    file would read as cleaned."""
+    import pickle
+
+    from hudi_rs_spark.fs.storage import worker_reachable
+    from hudi_rs_spark.write.worklist import (
+        rebuild_slice,
+        shared_scan_context,
+        slice_descriptor,
+    )
+
+    path = parts[0].base_file or parts[0].log_files[0]
+    if not worker_reachable(path, parts[0].storage_options):
+        raise ValueError(
+            f"{path}: log decode runs in Spark's Python workers, which "
+            "cannot open this storage (memory:// and register_storage "
+            "bindings exist only in the driver process); pass "
+            "storage_options the workers can build the backend from"
+        )
+    sc = spark.sparkContext
+    groups = [
+        g.slices if isinstance(g, HudiSliceGroupPartition) else [g]
+        for g in _chunk_partitions(parts, min(len(parts), sc.defaultParallelism))
+    ]
+    tasks = spark.createDataFrame(
+        sc.parallelize(
+            [(pickle.dumps([slice_descriptor(p) for p in g]),) for g in groups],
+            len(groups),
+        ),
+        "slices binary",
+    )
+    shared = shared_scan_context(parts[0])
+
+    def run(batches):
+        for batch in batches:
+            for blob in batch.column(0).to_pylist():
+                for desc in pickle.loads(blob):
+                    yield from _read_slice(rebuild_slice(desc, shared))
+
+    schema = T.StructType.fromJson(json.loads(parts[0].schema_json))
+    return tasks.mapInArrow(run, schema)
 
 
 def _read_slice(partition: HudiSlicePartition):
@@ -714,7 +770,7 @@ def _read_slice(partition: HudiSlicePartition):
 def _read_cdc_slice(partition: HudiSlicePartition):
     """Executor-side CDC decode: change rows from this slice's type-6
     log blocks inside the commit window — same validity gating as data
-    blocks (HudiTable.read_changes, distributed)."""
+    blocks (the connector's queryType=cdc and HudiTable.read_changes)."""
     import pyarrow as pa
 
     from hudi_rs_spark.fs.storage import storage_for
@@ -826,8 +882,10 @@ def _conform_table(
 
 
 def _decode_logs(partition: HudiSlicePartition, struct: T.StructType):
-    """Decode + validity-filter this slice's log blocks (same rollback /
-    valid-commit / archival rules as the driver and mapInPandas paths)."""
+    """Decode + validity-filter this slice's log blocks: rollback
+    targets aggregate across ALL of the slice's log files first
+    (scanner.rs CollectedBlocks — a command in a later file voids blocks
+    in earlier ones), then the valid-commit / archival rules."""
     from hudi_rs_spark.logfile import reader as logreader
     from hudi_rs_spark.sources.conform import apply_renames, conform_row
 
@@ -842,8 +900,7 @@ def _decode_logs(partition: HudiSlicePartition, struct: T.StructType):
         for b in logreader.valid_blocks(
             blocks,
             # Incremental/streaming windows must exclude pre-window log
-            # blocks BEFORE the merge (mirrors the eager path's
-            # hudi.py _execute_slices gating): otherwise a pre-window row
+            # blocks BEFORE the merge: otherwise a pre-window row
             # with a higher ordering value wins the slice merge and the
             # post-merge commit window then drops the key entirely.
             partition.start_exclusive or None,
@@ -862,54 +919,42 @@ def _decode_logs(partition: HudiSlicePartition, struct: T.StructType):
     return rows, deletes
 
 
-def _sort_key_desc_nulls_last(vals):
-    """Key for reverse=True sort: non-null first (desc), nulls last —
-    mirrors merge.py desc_nulls_last."""
-    return tuple((v is not None, v if v is not None else 0) for v in vals)
-
-
 def _merge_slice_table(combined, deletes, partition, struct):
-    """Slice-local OVERWRITE_WITH_LATEST merge, mirroring
-    operators/merge.py::latest_by_key + merge_with_deletes exactly
-    (fixture-matrix equivalence against the Spark path is the test).
+    """Slice-local OVERWRITE_WITH_LATEST merge (record_merger.rs: lexsort
+    desc + first-of-key mask, then delete resolution per ordering.rs).
 
-    Arrow-native for the wide data: winner selection runs over just the
-    key/ordering/seqno columns (python scalars — cheap, three thin
-    columns), then one ``take`` materializes the surviving full rows —
-    no per-row python objects for the payload columns."""
+    Arrow-vectorized winner selection: one stable ``sort_indices`` on
+    (key asc, ordering desc, seqno desc, nulls last) plus a first-of-
+    key-run mask picks each key's winner — an exact tie keeps the
+    earliest row. Only winners whose key carries a delete record reach
+    python; one ``take`` then materializes the surviving full rows."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     from hudi_rs_spark.sources.conform import conform_value
 
     ordering = partition.ordering
     if partition.strategy == "APPEND_ONLY" or ordering is None:
         return combined
 
-    keys = combined.column("_hoodie_record_key").to_pylist()
-    evs = combined.column(ordering).to_pylist()
-    seqs = (
-        combined.column("_hoodie_commit_seqno").to_pylist()
-        if "_hoodie_commit_seqno" in struct.names
-        else None
-    )
-    n = len(keys)
-    order = sorted(
-        range(n),
-        key=(
-            (lambda i: _sort_key_desc_nulls_last((evs[i], seqs[i])))
-            if seqs is not None
-            else (lambda i: _sort_key_desc_nulls_last((evs[i],)))
-        ),
-        reverse=True,
-    )
-    winner: dict = {}
-    for i in order:
-        winner.setdefault(keys[i], i)
+    sort_keys = [("_hoodie_record_key", "ascending"), (ordering, "descending")]
+    if "_hoodie_commit_seqno" in struct.names:
+        sort_keys.append(("_hoodie_commit_seqno", "descending"))
+    order = pc.sort_indices(combined, sort_keys=sort_keys, null_placement="at_end")
+    sorted_keys = combined.column("_hoodie_record_key").take(order)
+    n = len(order)
+    first = np.ones(n, dtype=bool)
+    if n > 1:
+        prev, cur = sorted_keys.slice(0, n - 1), sorted_keys.slice(1)
+        same = pc.or_(
+            pc.fill_null(pc.equal(cur, prev), False),
+            pc.and_(pc.is_null(cur), pc.is_null(prev)),
+        )
+        first[1:] = ~same.to_numpy()
+    win = order.to_numpy()[first]  # winner row per key, in key order
 
     if deletes:
-        commits = (
-            combined.column("_hoodie_commit_time").to_pylist()
-            if "_hoodie_commit_time" in struct.names
-            else [None] * n
-        )
         ord_type = struct[ordering].dataType
         del_event: dict[str, object] = {}
         del_commit: dict[str, str] = {}
@@ -925,13 +970,25 @@ def _merge_slice_table(combined, deletes, partition, struct):
                     del_event[key] = oval
                 if commit > del_commit[key]:
                     del_commit[key] = commit
-        kept: list[int] = []
-        for key, i in winner.items():
-            if key not in del_commit:
-                kept.append(i)
-                continue
+        win_keys = sorted_keys.filter(pa.array(first))
+        hit = np.flatnonzero(
+            pc.is_in(
+                win_keys, value_set=pa.array(list(del_commit), win_keys.type)
+            ).to_numpy()
+        )
+        rows = pa.array(win[hit], type=pa.int64())
+        evs = combined.column(ordering).take(rows).to_pylist()
+        commits = (
+            combined.column("_hoodie_commit_time").take(rows).to_pylist()
+            if "_hoodie_commit_time" in struct.names
+            else [None] * len(rows)
+        )
+        deleted = np.zeros(len(win), dtype=bool)
+        for pos, key, re_, rc in zip(
+            hit, win_keys.take(pa.array(hit, type=pa.int64())).to_pylist(),
+            evs, commits,
+        ):
             de, dc = del_event.get(key), del_commit[key]
-            re_, rc = evs[i], commits[i]
             try:
                 event_zero = de is not None and float(de) == 0.0
             except (TypeError, ValueError):
@@ -944,12 +1001,9 @@ def _merge_slice_table(combined, deletes, partition, struct):
                 )
                 eq = de == re_ or (de is None and re_ is None)
                 wins = gt or (eq and dc > (rc or ""))
-            if not wins:
-                kept.append(i)
-    else:
-        kept = list(winner.values())
-    kept.sort()
-    import pyarrow as pa
+            deleted[pos] = wins
+        win = win[~deleted]
+    kept = np.sort(win).tolist()
 
     # typed indices: a plain empty list infers null type, which take()
     # has no kernel for
@@ -962,11 +1016,9 @@ def _merge_slice_table(combined, deletes, partition, struct):
         # Column-at-a-time with numpy null masks — only multi-version
         # keys with a null winner cell pay any python work; single-
         # version keys (the bulk of a slice) ride the take() above.
-        import numpy as np
-        import pyarrow.compute as pc
-
+        keys = combined.column("_hoodie_record_key").to_pylist()
         versions: dict[str, list[int]] = {}
-        for i in order:
+        for i in order.to_pylist():
             versions.setdefault(keys[i], []).append(i)
         multi = {k: v for k, v in versions.items() if len(v) > 1}
         if multi:

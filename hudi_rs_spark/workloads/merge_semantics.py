@@ -1,8 +1,9 @@
 """Merge-on-read semantics exercised on the driver's plain `events` table.
 
-The Hudi-format reader (sources/hudi.py) uses operators/merge.py on real
-MOR tables; these queries run the SAME operator code on the synthetic
-events stream so the duckdb oracle can hash-check the semantics:
+operators/merge.py is the DataFrame form of the record merge the
+Hudi-format reader runs per file slice (sources/pyds.py::
+_merge_slice_table); these queries run it on the synthetic events
+stream so the duckdb oracle can hash-check the semantics:
 latest-wins per key, delete-ordering resolution, half-open incremental
 windows, and as-of (time travel) states — mirroring
 /root/reference/crates/core/src/merge/record_merger.rs and

@@ -386,10 +386,9 @@ def write_cdc_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _register(spark)
     path = _ensure_lifecycle_table(spark, sf_dir, compacted=False)
-    # force the scale path: executor-side block decode (mapInPandas) —
-    # the oracle then certifies the distributed decode, and pytest pins
-    # driver-vs-distributed parity (tests/test_advice_fixes_r10.py)
-    feed = HudiTable(path, spark).read_changes(None, mode="distributed")
+    # executor-side block decode (the per-slice kernel): the oracle
+    # certifies it end to end
+    feed = HudiTable(path, spark).read_changes(None)
     return (
         feed.select(
             "op",
@@ -1611,7 +1610,7 @@ def write_partial_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hudi's PartialUpdateAvroPayload): upserts are SPARSE — each frame
     carries only the key/partition/ordering columns plus the columns it
     changes — and readers merge column-wise (newest NON-NULL value per
-    column, operators/merge.partial_update_by_key). Sequence: seed →
+    column, sources/pyds.py::_merge_slice_table). Sequence: seed →
     text-only upsert (%9, frame has NO source column) → source-only
     upsert (%6, frame has NO text column) → delete (%11). Rows divisible
     by both (18, 36, …) prove the fill: their newest version carries no

@@ -181,7 +181,7 @@ class WriteConfig:
     # hoodie.compaction.payload.class like Hudi proper. The partial
     # payload makes upserts SPARSE — an update row may carry only the
     # key/ordering columns plus the columns it changes; readers fill the
-    # rest from older versions (operators/merge.partial_update_by_key).
+    # rest from older versions (sources/pyds.py::_merge_slice_table).
     payload_class: str = ""
     # post-commit notification sink (write/callbacks.py — the analog of
     # hoodie.write.commit.callback.*): append one JSON event line per

@@ -169,7 +169,7 @@ def rename_column(
     stay put exactly like type widening).
 
     MOR log files are handled the same way: log records embed field
-    names, and every log-decode path (eager, connector, distributed)
+    names, and the log-decode kernel (sources/pyds.py::_decode_logs)
     maps a record carrying a prior name onto the current one before
     conforming (``sources/conform.py::apply_renames``). That mapping is
     sound because a renamed-away name can NEVER be reused — this

@@ -10,7 +10,8 @@ context ships once per executor via broadcast; executors rebuild the
 slice descriptor locally. Results (stat dicts — metadata-sized by
 construction) come back the same way.
 
-Used by write/compact.py and write/cluster.py.
+Used by write/compact.py and write/cluster.py; ``sources/pyds.py::
+read_slices`` builds its read descriptors with the same helpers.
 """
 
 from __future__ import annotations
@@ -73,6 +74,7 @@ def shared_scan_context(p) -> dict:
         "storage_options": p.storage_options,
         "partial_fill": p.partial_fill,
         "renames": p.renames,
+        "cdc": p.cdc,
     }
 
 
@@ -93,7 +95,7 @@ def rebuild_slice(desc: dict, shared: dict):
         merge_logs=shared["merge_logs"],
         start_exclusive=shared["start_exclusive"],
         partition_values=desc["partition_values"],
-        cdc=False,
+        cdc=shared["cdc"],
         storage_options=shared["storage_options"],
         partial_fill=shared.get("partial_fill"),
         renames=shared.get("renames"),

@@ -39,14 +39,6 @@ class TestCrossFileRollback:
             f.write(payload)
         return p
 
-    def test_scan_rollback_targets_header_only(self, tmp_path):
-        p1 = self._write(tmp_path, "f1.log", data_block("002", ["a", "b"]))
-        p2 = self._write(
-            tmp_path, "f2.log", data_block("004", ["c"]) + rollback_block("003", "002")
-        )
-        assert logreader.scan_rollback_targets(p1) == set()
-        assert logreader.scan_rollback_targets(p2) == {"002"}
-
     def test_override_voids_earlier_file(self, tmp_path):
         p1 = self._write(tmp_path, "f1.log", data_block("002", ["a", "b"]))
         blocks1 = logreader.read_log_file(p1)
@@ -69,10 +61,12 @@ class TestCrossFileRollback:
         kept = logreader.valid_blocks(blocks, valid_instants={"002", "004"})
         assert [b.instant_time for b in kept] == ["004"]
 
-    def test_distributed_decode_uses_fg_targets(self, spark, tmp_path):
+    def test_slice_read_voids_across_log_files(self, tmp_path):
+        import json
+
         from pyspark.sql import types as T
 
-        from hudi_rs_spark.logfile.distributed import decode_logs_distributed
+        from hudi_rs_spark.sources.pyds import HudiSlicePartition, _read_slice
 
         p1 = self._write(tmp_path, "f1.log", data_block("002", ["a", "b"]))
         p2 = self._write(tmp_path, "f2.log", rollback_block("003", "002"))
@@ -81,25 +75,23 @@ class TestCrossFileRollback:
                 T.StructField("_hoodie_commit_time", T.StringType()),
                 T.StructField("_hoodie_record_key", T.StringType()),
                 T.StructField("val", T.LongType()),
-                T.StructField("__fg", T.StringType()),
             ]
         )
-        tasks = [("g1", p1), ("g1", p2)]
-        targets = {
-            fg: frozenset().union(
-                *[logreader.scan_rollback_targets(p) for f2, p in tasks if f2 == fg]
+
+        def rows(logs):
+            part = HudiSlicePartition(
+                base_file=None, log_files=logs,
+                schema_json=json.dumps(schema.jsonValue()), ordering=None,
+                strategy="APPEND_ONLY", valid_instants=["002"],
+                archival_boundary=None, pending_instants=[], as_of=None,
+                merge_logs=True,
             )
-            for fg in {f for f, _ in tasks}
-        }
-        without = decode_logs_distributed(
-            spark, tasks, schema, None, {"002"}, None, None
-        )
-        with_targets = decode_logs_distributed(
-            spark, tasks, schema, None, {"002"}, None, None,
-            rollback_targets_by_fg=targets,
-        )
-        assert without.count() == 2  # the gap: per-file scan keeps voided rows
-        assert with_targets.count() == 0
+            return sum(b.num_rows for b in _read_slice(part))
+
+        assert rows([p1]) == 2
+        # the rollback command in the slice's second log file voids the
+        # data block in its first
+        assert rows([p1, p2]) == 0
 
 
 class TestTimelineTimezone:

@@ -1,10 +1,8 @@
 """Regression tests for the round-10 fixes (VERDICT + ADVICE r9).
 
 1. (verdict #1 / perf-weak) HudiTable.read_changes decoded every CDC
-   block into a driver-side Python list. Now it auto-gates to an
-   executor-side mapInPandas decode (logfile/distributed.
-   decode_cdc_distributed) past the MOR thresholds; forced-distributed
-   must match the driver decode bit-for-bit.
+   block into a driver-side Python list. Now the feed decodes on
+   executors through the per-slice kernel; its values are pinned.
 2. (advice high) archive_timeline flipped the archived-read gate only
    AFTER deleting active instant files — a crash in between left the
    gate off, and rollback_failed_writes then treated every archived
@@ -53,7 +51,7 @@ CDC_OPTS = {
 
 
 # ---------------------------------------------------------------------------
-# 1. distributed CDC feed decode
+# 1. executor-side CDC feed decode
 # ---------------------------------------------------------------------------
 
 
@@ -82,42 +80,50 @@ class TestDistributedCdcFeed:
         )
 
     @staticmethod
-    def _key(rows):
-        return sorted(
-            (r.commit_time, r.op, r.ts_ms, r.before, r.after) for r in rows
-        )
+    def _key(t, rows):
+        # (commit ordinal, op, record key, name after the change)
+        inst = sorted(i.timestamp for i in t.timeline.instants)
+        out = []
+        for r in rows:
+            after = json.loads(r.after) if r.after else {}
+            key = str(after["id"]) if after else json.loads(r.before)[
+                "_hoodie_record_key"
+            ]
+            out.append((inst.index(r.commit_time), r.op, key, after.get("name")))
+        return sorted(out)
 
-    def test_forced_distributed_matches_driver(self, spark, tmp_path):
+    def test_feed_values(self, spark, tmp_path):
         from hudi_rs_spark.sources.hudi import HudiTable
 
         tdir = str(tmp_path / "t")
         self._multi_commit_table(spark, tdir)
         t = HudiTable(tdir, spark)
-        driver = t.read_changes(None, mode="driver").collect()
-        dist = t.read_changes(None, mode="distributed").collect()
-        assert len(driver) == len(dist) > 0
-        assert self._key(driver) == self._key(dist)
-        # windowed parity too (start-exclusive bound applies executor-side)
+        updates = [
+            (1, "u", "3", "u3"), (1, "u", "4", "u4"),
+            (2, "i", "11", "n11"), (2, "u", "3", "u3b"),
+        ]
+        inserts = [(0, "i", str(i), f"n{i}") for i in range(10)]
+        assert self._key(t, t.read_changes(None).collect()) == sorted(
+            inserts + updates + [(3, "d", "7", None)]
+        )
+        # the start-exclusive window bound applies executor-side
         inst = sorted(i.timestamp for i in t.timeline.instants)
-        w_driver = t.read_changes(inst[0], inst[2], mode="driver").collect()
-        w_dist = t.read_changes(inst[0], inst[2], mode="distributed").collect()
-        assert self._key(w_driver) == self._key(w_dist)
+        window = t.read_changes(inst[0], inst[2]).collect()
+        assert self._key(t, window) == updates
 
-    def test_distributed_plan_has_no_local_relation(self, spark, tmp_path):
-        # the driver path ships a LocalRelation (createDataFrame of the
-        # whole feed); the distributed path must scan task rows through
-        # mapInPandas instead
+    def test_plan_has_no_local_relation(self, spark, tmp_path):
+        # a LocalRelation would mean the feed was decoded on the driver
+        # and shipped by createDataFrame; task rows go through mapInArrow
         from hudi_rs_spark.sources.hudi import HudiTable
 
         tdir = str(tmp_path / "t")
         self._multi_commit_table(spark, tdir)
-        df = HudiTable(tdir, spark).read_changes(None, mode="distributed")
+        df = HudiTable(tdir, spark).read_changes(None)
         plan = df._jdf.queryExecution().analyzed().toString()
-        assert "mapInPandas" in plan or "MapInPandas" in plan
+        assert "MapInArrow" in plan and "LocalRelation" not in plan
 
-    def test_rolled_back_commit_stays_out_distributed(self, spark, tmp_path):
-        # a voided commit's CDC blocks must not leak through the
-        # executor-side decode (rollback targets ship into the closure)
+    def test_rolled_back_commit_stays_out(self, spark, tmp_path):
+        # a voided commit's CDC blocks must not leak into the feed
         from hudi_rs_spark.sources.hudi import HudiTable
         from hudi_rs_spark.write.upsert import upsert
 
@@ -128,7 +134,8 @@ class TestDistributedCdcFeed:
             tdir,
         )
         t = HudiTable(tdir, spark)
-        before = self._key(t.read_changes(None, mode="distributed").collect())
+        before = self._key(t, t.read_changes(None).collect())
+        assert (1, "u", "2", "u2") in before
         # simulate a crashed third write: data + cdc blocks at an
         # uncommitted instant, then roll it back
         from hudi_rs_spark.write.rollback import rollback_failed_writes
@@ -154,10 +161,8 @@ class TestDistributedCdcFeed:
         st.remove(f"{tl_dir}/{latest}")
         rollback_failed_writes(tdir)
         t2 = HudiTable(tdir, spark)
-        after_driver = self._key(t2.read_changes(None, mode="driver").collect())
-        after_dist = self._key(t2.read_changes(None, mode="distributed").collect())
-        assert after_driver == after_dist
-        assert len(after_dist) < len(before)
+        after = self._key(t2, t2.read_changes(None).collect())
+        assert after == [(0, "i", str(i), f"n{i}") for i in range(6)]
 
 
 # ---------------------------------------------------------------------------

@@ -216,11 +216,6 @@ class TestRenameColumn:
         # incremental over the upsert commit decodes its logs too
         inc = HudiTable(path, spark).read_incremental(None)
         assert {r.id: r.points for r in inc.collect()} == want
-        # executor-side decode path (decode_logs_distributed) maps too
-        dist = HudiTable(path, spark).read(
-            HudiReadOptions(log_decode="distributed")
-        )
-        assert {r.id: r.points for r in dist.collect()} == want
 
         # post-rename upsert (new name) merges with pre-rename logs
         upsert(

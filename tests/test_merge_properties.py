@@ -1,8 +1,9 @@
 """Property-based merge testing (hypothesis) — goes beyond the
 reference's test strategy (SURVEY §5 notes it has no randomized tests).
 
-For arbitrary upsert/delete histories, the DataFrame merge must agree
-with an independent, obviously-correct Python model of the semantics:
+For arbitrary upsert/delete histories, the DataFrame merge and the
+per-slice Arrow kernel that Hudi table reads run must each agree with an
+independent, obviously-correct Python model of the semantics:
 latest (ordering, commit, seqno) wins per key; delete applies iff its
 max ordering beats the survivor (event-time-zero -> commit-time only).
 """
@@ -14,6 +15,7 @@ from hypothesis import strategies as st
 from pyspark.sql import types as T
 
 from hudi_rs_spark.operators.merge import merge_with_deletes
+from hudi_rs_spark.sources.pyds import _merge_slice_table
 
 KEYS = ["k1", "k2", "k3"]
 COMMITS = ["c1", "c2", "c3"]
@@ -117,3 +119,50 @@ def test_merge_matches_model(spark, data, deletes):
     }
     want = model_merge(data, deletes)
     assert got_rows == want, f"data={data} deletes={deletes}"
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    data=st.lists(data_row, min_size=1, max_size=12),
+    deletes=st.lists(delete_row, min_size=0, max_size=6),
+)
+def test_slice_kernel_matches_model(data, deletes):
+    """``_merge_slice_table`` on the same histories. A Hudi seqno is
+    ``{commit}_...``, so ordering on it covers the (commit, seqno)
+    tiebreak."""
+    from types import SimpleNamespace
+
+    import pyarrow as pa
+
+    struct = T.StructType(
+        [
+            T.StructField("_hoodie_commit_time", T.StringType()),
+            T.StructField("_hoodie_commit_seqno", T.StringType()),
+            T.StructField("_hoodie_record_key", T.StringType()),
+            T.StructField("ts", T.IntegerType()),
+            T.StructField("value", T.IntegerType()),
+        ]
+    )
+    cols = list(zip(*data))
+    table = pa.table(
+        {
+            "_hoodie_commit_time": pa.array(cols[0], pa.string()),
+            "_hoodie_commit_seqno": pa.array(
+                [f"{c}_{q}" for c, q in zip(cols[0], cols[1])], pa.string()
+            ),
+            "_hoodie_record_key": pa.array(cols[2], pa.string()),
+            "ts": pa.array(cols[3], pa.int32()),
+            "value": pa.array(cols[4], pa.int32()),
+        }
+    )
+    part = SimpleNamespace(strategy="OVERWRITE_WITH_LATEST", ordering="ts", partial_fill=None)
+    got = _merge_slice_table(
+        table, [(c, k, ts) for k, ts, c in deletes], part, struct
+    ).to_pylist()
+    got_rows = {
+        (r["_hoodie_commit_time"], r["_hoodie_commit_seqno"].split("_")[1],
+         r["_hoodie_record_key"], r["ts"], r["value"])
+        for r in got
+    }
+    assert len(got) == len(got_rows)
+    assert got_rows == model_merge(data, deletes), f"data={data} deletes={deletes}"

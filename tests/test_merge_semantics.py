@@ -162,11 +162,10 @@ class TestDeleteOrdering:
 
 
 class TestDeleteBroadcastGate:
-    """The delete-side broadcast is opt-in: a forced broadcast of an
-    unbounded delete aggregate OOMs on heavy-delete tables at scale, so
-    only callers that counted the delete set (driver decode) may hint."""
+    """The delete side is never force-broadcast: a forced broadcast of an
+    unbounded delete aggregate OOMs on heavy-delete inputs at scale."""
 
-    def _plans(self, spark, broadcast_deletes):
+    def _plans(self, spark):
         from pyspark.sql import functions as F
 
         data = spark.range(0, 1000).select(
@@ -184,17 +183,12 @@ class TestDeleteBroadcastGate:
         )
         out = merge_with_deletes(
             data, deletes, ["key"], event_col="ts", commit_col="commit",
-            tiebreak_cols=["seqno"], broadcast_deletes=broadcast_deletes,
+            tiebreak_cols=["seqno"],
         )
         jqe = out._jdf.queryExecution()
         return jqe.optimizedPlan().toString(), jqe.executedPlan().toString()
 
     def test_unhinted_large_deletes_plan_shuffle_join(self, spark):
-        logical, physical = self._plans(spark, broadcast_deletes=False)
+        logical, physical = self._plans(spark)
         assert "broadcast" not in logical.lower()
         assert "SortMergeJoin" in physical
-
-    def test_hinted_small_deletes_plan_broadcast(self, spark):
-        logical, physical = self._plans(spark, broadcast_deletes=True)
-        assert "broadcast" in logical.lower()
-        assert "BroadcastHashJoin" in physical

@@ -5,9 +5,9 @@ Semantics under test: upserts on a partial-update table may be SPARSE —
 a row carries the key/partition/ordering columns plus only the columns
 it changes — and every reader merges versions COLUMN-WISE: each data
 column takes the newest non-null value across the key's versions
-(operators/merge.partial_update_by_key; arrow twin in
-sources/pyds._merge_slice_table). Deletes still drop the whole record;
-compaction/clustering bake the merged row into the new base.
+(sources/pyds.py::_merge_slice_table, the kernel every read runs).
+Deletes drop the whole record; compaction/clustering bake the merged row
+into the new base.
 """
 
 from __future__ import annotations
@@ -109,18 +109,6 @@ class TestPartialUpdateMerge:
         got = [
             tuple(r)
             for r in HudiTable(path, spark).read()
-            .select("id", "a", "b", "v").orderBy("id").collect()
-        ]
-        assert got == MERGED
-
-    def test_distributed_decode_parity(self, spark, tmp_path):
-        path = str(tmp_path / "t")
-        _seed(spark, path)
-        _apply_sparse(spark, path)
-        got = [
-            tuple(r)
-            for r in HudiTable(path, spark)
-            .read(HudiReadOptions(log_decode="distributed"))
             .select("id", "a", "b", "v").orderBy("id").collect()
         ]
         assert got == MERGED

@@ -7,7 +7,7 @@ Catalyst plans that make the engine scale:
 - map-side partial aggregation before the shuffle
 - broadcast joins for dimension tables
 - top-k compiles to TakeOrderedAndProject (no global sort)
-- the MOR merge shuffles exactly once on the merge key
+- the MOR merge runs per file slice in one mapInArrow, with no shuffle
 """
 
 from __future__ import annotations
@@ -135,19 +135,26 @@ class TestHudiReadPlans:
         )
         assert "decimalField" not in scan_line  # unreferenced column pruned
 
-    def test_mor_merge_single_shuffle_on_group_key(self, spark, v8_trips_table):
+    def test_mor_read_merges_per_slice_without_shuffle(self, spark, tmp_path):
         from hudi_rs_spark import HudiTable
+        from hudi_rs_spark.sources.pyds import HudiPyDataSource
+        from hudi_rs_spark.write.upsert import upsert
 
-        t = HudiTable(v8_trips_table, spark)
+        spark.dataSource.register(HudiPyDataSource)
+        path, ddl = str(tmp_path / "t"), "id long, name string, ts long"
+        w = spark.createDataFrame([(i, f"n{i}", 1) for i in range(8)], ddl).write
+        for k, v in {"recordkey.field": "id", "precombine.field": "ts",
+                     "table.type": "MERGE_ON_READ", "path": path}.items():
+            w = w.option(k, v)
+        w.format("hudi_py").mode("append").save()
+        upsert(spark.createDataFrame([(3, "u3", 5)], ddl), path)
+        t = HudiTable(path, spark)
+        assert any(s.log_files for s in t.get_file_slices())
         plan = _plan(t.read())
-        exchanges = [
-            l for l in plan.splitlines() if "Exchange hashpartitioning" in l
-        ]
-        # window dedup: one shuffle on (__fg, record_key); Spark plans the
-        # rank<=1 filter as WindowGroupLimit (partial before the shuffle)
-        assert len(exchanges) == 1, exchanges
-        assert "WindowGroupLimit" in plan
-        assert "hashpartitioning(__fg" in plan
+        # log decode + merge run in the per-slice kernel: no window merge
+        # and no shuffle on the record key
+        assert "MapInArrow" in plan
+        assert "Window" not in plan and "Exchange" not in plan
 
 
 class TestRound3OperatorPlans:

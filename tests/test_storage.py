@@ -34,6 +34,25 @@ def _copy_to_memory(local_base: str, mem_base: str) -> MemoryStorage:
     return st
 
 
+def _cdc_feed_in_process(table: HudiTable, start: str, end: str) -> list:
+    """``read_changes``' worker kernel, run in this process: memory://
+    and registered test filesystems are driver-process-only, so
+    ``read_changes`` itself refuses them (its workers cannot open them)."""
+    from hudi_rs_spark.sources.pyds import (
+        HudiPyDataSource,
+        _cdc_partitions,
+        _read_slice,
+    )
+
+    schema = HudiPyDataSource.CDC_SCHEMA.json()
+    return [
+        row
+        for part in _cdc_partitions(table, start, end, schema)
+        for batch in _read_slice(part)
+        for row in batch.to_pylist()
+    ]
+
+
 def _synth(tmp_path) -> SynthTable:
     t = SynthTable(os.path.join(str(tmp_path), "tbl"))
     t.write_base("g1-0", C1, {"id": ["k1", "k2"], "ts": [1, 1],
@@ -117,7 +136,9 @@ class TestPlannerOnMemory:
 
     def test_cdc_feed_decodes_from_memory(self, spark, tmp_path):
         table = self._mem_table(tmp_path, spark)
-        feed = table.read_changes(C1, C2).collect()
+        with pytest.raises(ValueError, match="driver process"):
+            table.read_changes(C1, C2)
+        feed = _cdc_feed_in_process(table, C1, C2)
         assert [(r["commit_time"], r["op"]) for r in feed] == [(C2, "u")]
 
 
@@ -255,8 +276,19 @@ class TestPlannerOnArrowFS:
 
     def test_cdc_feed_decodes_via_arrow_fs(self, spark, tmp_path):
         table, _t = self._arrow_table(tmp_path, spark)
-        feed = table.read_changes(C1, C2).collect()
+        with pytest.raises(ValueError, match="driver process"):
+            table.read_changes(C1, C2)
+        feed = _cdc_feed_in_process(table, C1, C2)
         assert [(r["commit_time"], r["op"]) for r in feed] == [(C2, "u")]
+
+    def test_worker_reachability(self, spark, tmp_path):
+        from hudi_rs_spark.fs.storage import worker_reachable
+
+        self._arrow_table(tmp_path, spark)
+        assert not worker_reachable("mock://bucket/f")
+        assert worker_reachable("mock://bucket/f", {"endpoint": "e"})
+        assert not worker_reachable("memory://x/f", {"endpoint": "e"})
+        assert worker_reachable("/p") and worker_reachable("s3://b/f")
 
     def test_walk_and_listing_primitives(self, spark, tmp_path):
         _table, t = self._arrow_table(tmp_path, spark)
