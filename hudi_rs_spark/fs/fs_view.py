@@ -10,7 +10,6 @@ correctness-equivalent.)
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from hudi_rs_spark.fs.file_group import BaseFile, FileGroup, FileSlice, LogFile

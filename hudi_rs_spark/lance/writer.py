@@ -142,8 +142,6 @@ class _Writer:
             )
         # 32/64-bit: pyarrow's own buffer is already the wire format,
         # but only when the array has zero offset; normalize via take
-        import numpy as np
-
         np_arr = _fixed_np(arr, bits)
         return np_arr.tobytes()
 

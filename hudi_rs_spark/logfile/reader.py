@@ -23,7 +23,6 @@ import io
 import json
 import struct
 from dataclasses import dataclass, field
-from typing import Any
 
 from hudi_rs_spark.avro.binary import Reader, collect_names, decode
 

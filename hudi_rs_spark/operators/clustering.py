@@ -44,14 +44,6 @@ def quantize(vec_col: str) -> F.Column:
     )
 
 
-def _dist2(a: str, b: str) -> F.Column:
-    """Exact BIGINT squared L2 distance between two quantized arrays."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> (x - y) * (x - y)),"
-        " bigint(0), (acc, v) -> acc + v)"
-    )
-
-
 def kmeans_assign(
     df: DataFrame,
     id_col: str,

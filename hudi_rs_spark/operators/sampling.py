@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hudi_rs_spark.operators.pin import pin
+from hudi_rs_spark.session import local_frame
 
 _U32 = 4294967296.0  # 2^32, exactly representable as a double
 
@@ -176,8 +177,8 @@ def proportional_mix(
     All rate arithmetic is plain IEEE double ops in a fixed order
     (no rounding), so an oracle engine computes bit-identical rates.
     """
-    tgt = df.sparkSession.createDataFrame(
-        sorted(targets.items()), f"{stratum_col} string, p double"
+    tgt = local_frame(
+        df.sparkSession, sorted(targets.items()), f"{stratum_col} string, p double"
     )
     counts = df.groupBy(stratum_col).agg(F.count(F.lit(1)).alias("cnt"))
     ratios = counts.join(F.broadcast(tgt), stratum_col).select(

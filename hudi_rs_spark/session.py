@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(app_name: str = "hudi-rs-spark", cpus: int | None = None) -> SparkSession:
@@ -36,6 +36,28 @@ def get_spark(app_name: str = "hudi-rs-spark", cpus: int | None = None) -> Spark
         .config("spark.sql.python.filterPushdown.enabled", "true")
     )
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """DataFrame of driver-built ``rows`` (tuples, possibly none) under
+    ``schema`` (DDL or ``StructType``): the package's one way to turn
+    driver values into a frame. The rows reach the JVM as Arrow, so no
+    Python worker runs to un-pickle them, and the relation is re-wrapped
+    as a ``LogicalRDD`` so it keeps Spark's unknown RDD size (a bare
+    ``LocalRelation`` reports its few bytes, so a frame derived from it,
+    such as a ``HudiTable.read``, would look small enough to broadcast).
+    Partitions: ``min(len(rows), defaultParallelism)``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    target, rows = to_arrow_schema(schema), list(rows)
+    cols = [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(target)]
+    local = spark.createDataFrame(pa.Table.from_arrays(cols, schema=target), schema)
+    jdf = spark._jsparkSession.createDataFrame(local._jdf.rdd(), local._jdf.schema())
+    return DataFrame(jdf, spark)
 
 
 def _set_if_default(spark: SparkSession, key: str, default: str, value: str) -> None:

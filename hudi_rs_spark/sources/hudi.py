@@ -34,6 +34,7 @@ from hudi_rs_spark.fs.file_group import FileSlice
 from hudi_rs_spark.fs.fs_view import build_file_groups, get_file_slices
 from hudi_rs_spark.functions.filters import apply_filters
 from hudi_rs_spark.plans.partition_pruner import Filter, PartitionPruner
+from hudi_rs_spark.session import local_frame
 from hudi_rs_spark.timeline.timeline import Timeline
 
 META_FIELDS = [
@@ -705,11 +706,7 @@ class HudiTable:
 
         opts = self.storage_options
         renames = rename_chain(self.config.props) or None
-        n = min(len(paths), self.spark.sparkContext.defaultParallelism) or 1
-        paths_df = self.spark.createDataFrame(
-            [(p,) for p in paths],
-            T.StructType([T.StructField("path", T.StringType())]),
-        ).repartition(n)
+        paths_df = local_frame(self.spark, [(p,) for p in paths], "path string")
 
         def decode(batches):
             from hudi_rs_spark.lance.reader import LanceFile
@@ -766,8 +763,9 @@ class HudiTable:
             rows.append((p, *[str(vals[n]) for n in pf]))
         if not rows:
             return df, remaining
-        mapping = self.spark.createDataFrame(
-            rows, ["__pp"] + [f"__pv_{n}" for n in pf]
+        cols = ["__pp"] + [f"__pv_{n}" for n in pf]
+        mapping = local_frame(
+            self.spark, rows, ", ".join(f"`{c}` string" for c in cols)
         )
         out = df.join(
             F.broadcast(mapping),
@@ -960,7 +958,7 @@ class HudiTable:
             if parse_bucket_leaf(s.file_id, n) in wanted
         ]
         if not slices:
-            return self.spark.createDataFrame([], self.get_schema())
+            return local_frame(self.spark, [], self.get_schema())
         df = self._execute_slices(slices, None, options)
         if "_hoodie_record_key" in df.columns:
             return df.filter(F.col("_hoodie_record_key").isin(list(keys)))
@@ -1000,7 +998,7 @@ class HudiTable:
         idx = read_secondary_index(self.base_path, partition, set(values))
         keys = sorted({k for ks in idx.values() for k in ks})
         if not keys:
-            return self.spark.createDataFrame([], self.get_schema())
+            return local_frame(self.spark, [], self.get_schema())
         df = self.point_lookup(keys, options)
         # the index is a pruning structure, not an authority: a
         # value-changing update leaves the old value's cell behind
@@ -1065,7 +1063,7 @@ class HudiTable:
         slices = [s for s in self.get_file_slices() if may_match(s)]
         options = options or HudiReadOptions()
         if not slices:
-            df = self.spark.createDataFrame([], self.get_schema())
+            df = local_frame(self.spark, [], self.get_schema())
         else:
             df = self._execute_slices(slices, None, options)
         if isinstance(value, bool):
@@ -1186,7 +1184,7 @@ class HudiTable:
         schema = HudiPyDataSource.CDC_SCHEMA
         parts = _cdc_partitions(self, start_timestamp, end_timestamp, schema.json())
         if not parts:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         return read_slices(self.spark, parts)
 
     def read_changes_derived(
@@ -1230,7 +1228,7 @@ class HudiTable:
         schema = HudiPyDataSource.CDC_SCHEMA
         window = self.timeline.instants_in_range(start_timestamp, end)
         if not window:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         if len(window) > max_commits:
             raise ValueError(
                 f"derived change feed window spans {len(window)} commits, "
@@ -1316,14 +1314,8 @@ class HudiTable:
 
             def _side(df, alias):
                 if df is None:
-                    return self.spark.createDataFrame(
-                        [],
-                        T.StructType(
-                            [
-                                T.StructField("__k", T.StringType(), True),
-                                T.StructField(alias, T.StringType(), True),
-                            ]
-                        ),
+                    return local_frame(
+                        self.spark, [], f"__k string, `{alias}` string"
                     )
                 return df.filter(F.col(key).isNotNull()).select(
                     F.col(key).alias("__k"), _img(df).alias(alias)
@@ -1351,7 +1343,7 @@ class HudiTable:
                 )
             )
         if not parts:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         out = parts[0]
         since_checkpoint = 0
         for p in parts[1:]:
@@ -1415,7 +1407,7 @@ class HudiTable:
                 )
             )
         if not parts:
-            return self.spark.createDataFrame([], resolved)
+            return local_frame(self.spark, [], resolved)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)

@@ -635,8 +635,10 @@ def read_slices(spark, parts: list[HudiSlicePartition]):
     by cores, not by slices — per-task Python start-up outweighs a small
     slice's decode, so the descriptors pack into
     ``min(len(parts), defaultParallelism)`` tasks, one RDD partition
-    each, and the plan has no Exchange. Descriptors travel pickled
-    (typed partition values survive); the table-constant scan context
+    each, and the plan has no Exchange. The task frame is built
+    JVM-side (``session.local_frame``), so the only Python pass is the
+    decode itself; the descriptors inside it stay pickled (typed
+    partition values survive) and the table-constant scan context
     rides once in the task closure. Storage only the driver process can
     open (memory://, a ``register_storage`` binding without storage
     options) raises here: workers would see an empty backend and every
@@ -644,6 +646,7 @@ def read_slices(spark, parts: list[HudiSlicePartition]):
     import pickle
 
     from hudi_rs_spark.fs.storage import worker_reachable
+    from hudi_rs_spark.session import local_frame
     from hudi_rs_spark.write.worklist import (
         rebuild_slice,
         shared_scan_context,
@@ -658,16 +661,14 @@ def read_slices(spark, parts: list[HudiSlicePartition]):
             "bindings exist only in the driver process); pass "
             "storage_options the workers can build the backend from"
         )
-    sc = spark.sparkContext
+    n = min(len(parts), spark.sparkContext.defaultParallelism)
     groups = [
         g.slices if isinstance(g, HudiSliceGroupPartition) else [g]
-        for g in _chunk_partitions(parts, min(len(parts), sc.defaultParallelism))
+        for g in _chunk_partitions(parts, n)
     ]
-    tasks = spark.createDataFrame(
-        sc.parallelize(
-            [(pickle.dumps([slice_descriptor(p) for p in g]),) for g in groups],
-            len(groups),
-        ),
+    tasks = local_frame(
+        spark,
+        [(pickle.dumps([slice_descriptor(p) for p in g]),) for g in groups],
         "slices binary",
     )
     shared = shared_scan_context(parts[0])

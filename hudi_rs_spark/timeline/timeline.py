@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
-from functools import lru_cache
 
 from hudi_rs_spark.config.table_config import HudiTableConfig
 from hudi_rs_spark.timeline.commit_metadata import CommitMetadata, parse_commit_file

@@ -62,7 +62,6 @@ def schedule_compaction(
     per write/compact_strategy.py (Hudi's hoodie.compaction.strategy)."""
     from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.sources.hudi import HudiTable
-    from hudi_rs_spark.write.concurrency import ConcurrentWriteError
     from hudi_rs_spark.write.writer import _fs, timeline_dir
 
     tc = HudiTableConfig.from_base_path(path)

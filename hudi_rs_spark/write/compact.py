@@ -29,7 +29,6 @@ from __future__ import annotations
 import os
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 
 from hudi_rs_spark.write.config import WriteConfig, new_instant
 

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import io
 import json
-import os
 import struct
 
 import pyarrow as pa

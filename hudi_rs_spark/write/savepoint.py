@@ -25,7 +25,6 @@ without an existing savepoint at the target instant unless
 from __future__ import annotations
 
 import json
-import os
 
 from hudi_rs_spark.write.config import WriteConfig, new_instant
 

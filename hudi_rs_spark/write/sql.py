@@ -35,6 +35,8 @@ from __future__ import annotations
 
 import re
 
+from hudi_rs_spark.session import local_frame
+
 
 class SqlDmlError(ValueError):
     """The statement does not match the supported DML grammar."""
@@ -254,7 +256,7 @@ def hudi_sql(spark, statement: str, tables: dict | None = None, **options):
             )
         except Exception:  # noqa: BLE001 — private helper moved: degrade
             plan = df._jdf.queryExecution().toString()
-        return spark.createDataFrame([(plan,)], "plan string")
+        return local_frame(spark, [(plan,)], "plan string")
     raise SqlDmlError(
         "supported statements: MERGE INTO / UPDATE / DELETE FROM / "
         "ALTER TABLE ... DROP PARTITION / CALL <procedure>(...) / "
@@ -553,8 +555,8 @@ def _run_describe(spark, stmt: str, tables):
             ("# recordkey.fields", ",".join(tc.record_key_fields), ""),
             ("# ordering.fields", ",".join(tc.ordering_fields or []), ""),
         ]
-    return spark.createDataFrame(
-        rows, "col_name string, data_type string, comment string"
+    return local_frame(
+        spark, rows, "col_name string, data_type string, comment string"
     )
 
 
@@ -623,7 +625,7 @@ def _run_show_create(spark, tok: str, tables):
     stmt = _create_stmt_for(
         spark, path, tc.table_name or _unquote(tok), path
     )
-    return spark.createDataFrame([(stmt,)], "createtab_stmt string")
+    return local_frame(spark, [(stmt,)], "createtab_stmt string")
 
 
 def _run_create_like(spark, stmt: str, tables, options):
@@ -1242,7 +1244,7 @@ def _call_table(spark, args: dict, tables) -> str:
 
 
 def _one_col_df(spark, name: str, values) -> "object":
-    return spark.createDataFrame([(v,) for v in values], f"{name} string")
+    return local_frame(spark, [(v,) for v in values], f"{name} string")
 
 
 def _run_call(spark, stmt: str, tables, options):
@@ -1462,10 +1464,7 @@ def _run_call(spark, stmt: str, tables, options):
                     int(args["max_merges"]) if "max_merges" in args else None
                 ),
             )
-        return spark.createDataFrame(
-            [(b, m) for b, m in done] or spark.sparkContext.emptyRDD(),
-            "bucket int, modulus int",
-        )
+        return local_frame(spark, done, "bucket int, modulus int")
 
     if proc in ("upgrade_table", "downgrade_table"):
         from hudi_rs_spark.write.upgrade import upgrade_table
@@ -1480,12 +1479,12 @@ def _run_call(spark, stmt: str, tables, options):
         t = HudiTable(path, spark=None, listing="direct")
         pending = set(t.timeline.pending_timestamps)
         rows = [
-            (i.timestamp, i.action, "COMPLETED")
+            (i.timestamp, i.action.value, "COMPLETED")
             for i in sorted(t.timeline.instants, key=lambda i: i.timestamp)
         ] + [(ts, None, "PENDING") for ts in sorted(pending)]
         limit = int(args.get("limit", 10))
-        return spark.createDataFrame(
-            rows[-limit:] if limit else rows,
+        return local_frame(
+            spark, rows[-limit:] if limit else rows,
             "commit_time string, action string, state string",
         )
 
@@ -1510,8 +1509,8 @@ def _run_call(spark, stmt: str, tables, options):
         from hudi_rs_spark.config.table_config import HudiTableConfig
 
         props = HudiTableConfig.from_base_path(path).props
-        return spark.createDataFrame(
-            sorted(props.items()), "key string, value string"
+        return local_frame(
+            spark, sorted(props.items()), "key string, value string"
         )
 
     if proc in ("show_compaction", "show_clustering"):
@@ -1523,11 +1522,8 @@ def _run_call(spark, stmt: str, tables, options):
             if proc == "show_compaction"
             else tl.pending_clustering_plans()
         )
-        return spark.createDataFrame(
-            [(ts, len(p.get("groups", []))) for ts, p in sorted(plans.items())]
-            or spark.sparkContext.emptyRDD(),
-            "plan_time string, groups int",
-        )
+        rows = [(ts, len(p.get("groups", []))) for ts, p in sorted(plans.items())]
+        return local_frame(spark, rows, "plan_time string, groups int")
 
     if proc == "show_rollbacks":
         # rollback instants are maintenance actions (not data commits),
@@ -1552,8 +1548,8 @@ def _run_call(spark, stmt: str, tables, options):
             except (OSError, ValueError):
                 undone, deleted = "", 0
             rows.append((ts, undone, deleted))
-        return spark.createDataFrame(
-            sorted(rows) or spark.sparkContext.emptyRDD(),
+        return local_frame(
+            spark, sorted(rows),
             "rollback_time string, commits_rolled_back string, "
             "files_deleted int",
         )
@@ -1567,9 +1563,8 @@ def _run_call(spark, stmt: str, tables, options):
             for i in tl.archived_instants()
         )
         limit = int(args.get("limit", 0))
-        return spark.createDataFrame(
-            (rows[-limit:] if limit else rows)
-            or spark.sparkContext.emptyRDD(),
+        return local_frame(
+            spark, rows[-limit:] if limit else rows,
             "commit_time string, action string",
         )
 
@@ -1609,8 +1604,8 @@ def _run_call(spark, stmt: str, tables, options):
             )
             for cname, c in report["checks"].items()
         ]
-        return spark.createDataFrame(
-            rows, "check string, ok boolean, problems string"
+        return local_frame(
+            spark, rows, "check string, ok boolean, problems string"
         )
 
     if proc in ("show_fsview_all", "show_file_slices"):
@@ -1630,8 +1625,8 @@ def _run_call(spark, stmt: str, tables, options):
             )
             for s in t2.get_file_slices()
         ]
-        return spark.createDataFrame(
-            rows,
+        return local_frame(
+            spark, rows,
             "partition string, file_id string, base_instant string, "
             "base_file string, base_size long, num_logs int, log_size long",
         )
@@ -1659,8 +1654,8 @@ def _run_call(spark, stmt: str, tables, options):
             for s in t2.get_file_slices()
             if want is None or (s.partition_path or "") == want
         ]
-        return spark.createDataFrame(
-            rows or spark.sparkContext.emptyRDD(),
+        return local_frame(
+            spark, rows,
             "partition string, file_id string, base_instant string, "
             "base_file string, base_size long, num_logs int, "
             "log_size long, total_size long",
@@ -1700,8 +1695,8 @@ def _run_call(spark, stmt: str, tables, options):
                 )
                 for name, bi, b in blocks
             ]
-            return spark.createDataFrame(
-                rows or spark.sparkContext.emptyRDD(),
+            return local_frame(
+                spark, rows,
                 "log_file string, block_seq int, block_type int, "
                 "instant_time string, target_instant string, "
                 "num_records int, num_deletes int",
@@ -1717,8 +1712,8 @@ def _run_call(spark, stmt: str, tables, options):
                     break
             if len(recs) >= limit:
                 break
-        return spark.createDataFrame(
-            recs or spark.sparkContext.emptyRDD(),
+        return local_frame(
+            spark, recs,
             "log_file string, instant_time string, record string",
         )
 
@@ -1748,8 +1743,8 @@ def _run_call(spark, stmt: str, tables, options):
             )
             for p, (_x, _y, sizes, nlogs, logbytes) in sorted(agg.items())
         ]
-        return spark.createDataFrame(
-            rows or spark.sparkContext.emptyRDD(),
+        return local_frame(
+            spark, rows,
             "partition string, num_base_files int, min_base long, "
             "max_base long, avg_base long, total_base long, "
             "num_log_files int, total_log long",
@@ -1779,8 +1774,8 @@ def _run_call(spark, stmt: str, tables, options):
             rows.append(
                 (i.timestamp, up, wr, (float(wr) / up) if up else None)
             )
-        return spark.createDataFrame(
-            rows or spark.sparkContext.emptyRDD(),
+        return local_frame(
+            spark, rows,
             "commit_time string, total_upserted long, total_written long, "
             "write_amplification double",
         )
@@ -1819,8 +1814,8 @@ def _run_call(spark, stmt: str, tables, options):
                 rows.append(
                     (e.name, len(files), int(sum(f.size for f in files)))
                 )
-        return spark.createDataFrame(
-            sorted(rows) or spark.sparkContext.emptyRDD(),
+        return local_frame(
+            spark, sorted(rows),
             "partition string, num_files int, total_bytes long",
         )
 
@@ -1906,8 +1901,8 @@ def _run_call(spark, stmt: str, tables, options):
 
         dry = str(args.get("dry_run", "true")).lower() != "false"
         rels = repair_orphan_files(path, dry_run=dry)
-        return spark.createDataFrame(
-            [(r, dry) for r in rels] or spark.sparkContext.emptyRDD(),
+        return local_frame(
+            spark, [(r, dry) for r in rels],
             "file string, dry_run boolean",
         )
 

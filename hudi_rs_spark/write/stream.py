@@ -32,7 +32,6 @@ upserts route through write/upsert.py in a foreachBatch.
 from __future__ import annotations
 
 import json
-import os
 
 from pyspark.sql.datasource import DataSourceStreamArrowWriter
 

@@ -13,7 +13,6 @@ import json
 import os
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 
 META_COLS = (
     "_hoodie_commit_time",

@@ -30,7 +30,6 @@ O(active instants), zero data I/O, any table size.
 
 from __future__ import annotations
 
-import os
 import re
 
 _INSTANT_RE = re.compile(

@@ -39,6 +39,7 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from hudi_rs_spark.session import local_frame
 from hudi_rs_spark.write.config import (
     DELETE_COL,
     LOG_VERSION_COL,
@@ -106,25 +107,32 @@ def _index_from_record_index(
     if not n:
         return None
 
-    def read_shard(shard: int):
+    cols = ["_hoodie_record_key", "_hoodie_partition_path", TARGET_FILE_COL]
+
+    def read_shards(batches):
+        import pyarrow as pa
+
         from hudi_rs_spark.metadata.record_index import read_record_index
 
-        out = read_record_index(path, file_id=shard_file_id(shard))
-        return [(k, part, fid) for k, (part, fid) in out.items()]
+        for batch in batches:
+            for shard in batch.column(0).to_pylist():
+                out = read_record_index(path, file_id=shard_file_id(shard))
+                parts, fids = zip(*out.values()) if out else ((), ())
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(list(c), pa.string()) for c in (out, parts, fids)],
+                    names=cols,
+                )
 
-    rows = spark.sparkContext.parallelize(range(n), n).flatMap(read_shard)
-    idx = spark.createDataFrame(
-        rows,
-        "_hoodie_record_key string, _hoodie_partition_path string, "
-        f"{TARGET_FILE_COL} string",
+    idx = local_frame(spark, [(i,) for i in range(n)], "shard int").mapInArrow(
+        read_shards, ", ".join(f"{c} string" for c in cols)
     )
-    live = spark.createDataFrame(
+    live = local_frame(
+        spark,
         [
             (sl.file_id, sl.base_file.commit_timestamp)
             for sl in slices
             if sl.base_file is not None
-        ]
-        or spark.sparkContext.emptyRDD(),
+        ],
         f"{TARGET_FILE_COL} string, {TARGET_INSTANT_COL} string",
     )
     return idx.join(F.broadcast(live), TARGET_FILE_COL, "inner")
@@ -194,8 +202,8 @@ def _bloom_candidate_files(
 
 
 def _empty_index(spark) -> DataFrame:
-    return spark.createDataFrame(
-        [],
+    return local_frame(
+        spark, [],
         "_hoodie_record_key string, _hoodie_partition_path string, "
         f"{TARGET_FILE_COL} string, {TARGET_INSTANT_COL} string",
     )
@@ -369,8 +377,8 @@ def _tag_by_bucket(
                     (max(versions) + 1) if versions else 1,
                 )
             )
-    mapping = spark.createDataFrame(
-        rows or spark.sparkContext.emptyRDD(),
+    mapping = local_frame(
+        spark, rows,
         "__bp string, __bb int, __bm int, __bfid string, "
         "__banchor string, __bver int",
     )
@@ -641,9 +649,8 @@ def upsert(
         # group into the plan (10^6 entries at 100 TB = plan bloat +
         # analysis cost), while the join side stays a normal small
         # relation
-        versions = spark.createDataFrame(
-            [(fid, v) for fid, v in sorted(next_version.items())] or
-            spark.sparkContext.emptyRDD(),
+        versions = local_frame(
+            spark, sorted(next_version.items()),
             f"{TARGET_FILE_COL} string, {LOG_VERSION_COL} int",
         )
 
@@ -772,8 +779,8 @@ def upsert(
                     for inp in g.get("inputs", ()):  # clustering shape
                         plan_anchor[inp["fileId"]] = pi
     if plan_anchor:
-        anchors_df = spark.createDataFrame(
-            sorted(plan_anchor.items()),
+        anchors_df = local_frame(
+            spark, sorted(plan_anchor.items()),
             f"{TARGET_FILE_COL} string, __hoodie_plan_anchor string",
         )
         tagged = (

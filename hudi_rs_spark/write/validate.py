@@ -37,7 +37,6 @@ scan, which batches one listing per partition directory.
 
 from __future__ import annotations
 
-import os
 
 _CAP = 20  # max problems reported per check
 

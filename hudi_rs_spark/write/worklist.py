@@ -5,10 +5,10 @@ DataFrame of JSON descriptors, not pickled planner objects.
 every plan object through the driver's pickler and ships the scan
 context once PER TASK — at millions of file groups that is a driver
 CPU/heap bottleneck. Here the per-slice VARYING fields ride as Arrow
-rows (one small JSON string each) and the per-table CONSTANT scan
-context ships once per executor via broadcast; executors rebuild the
-slice descriptor locally. Results (stat dicts — metadata-sized by
-construction) come back the same way.
+rows (one small JSON string each, ``session.local_frame``) and the
+per-table CONSTANT scan context ships once per executor via broadcast;
+executors rebuild the slice descriptor locally. Results (stat dicts —
+metadata-sized by construction) come back the same way.
 
 Used by write/compact.py and write/cluster.py; ``sources/pyds.py::
 read_slices`` builds its read descriptors with the same helpers.
@@ -18,6 +18,8 @@ from __future__ import annotations
 
 import json
 from collections.abc import Callable, Iterator
+
+from hudi_rs_spark.session import local_frame
 
 
 def run_slice_tasks(
@@ -31,8 +33,8 @@ def run_slice_tasks(
     module-level function (pickled by reference, not by value)."""
     sc = spark.sparkContext
     n_part = min(len(descriptors), max(sc.defaultParallelism, 1) * 4) or 1
-    df = spark.createDataFrame(
-        [(json.dumps(d),) for d in descriptors], "desc string"
+    df = local_frame(
+        spark, [(json.dumps(d),) for d in descriptors], "desc string"
     ).repartition(n_part)
     shared_bc = sc.broadcast(json.dumps(shared))
 
