@@ -40,7 +40,7 @@ from __future__ import annotations
 import json
 import os
 
-from hudi_rs_spark.write.config import WriteConfig, new_instant
+from hudi_rs_spark.write.config import new_instant
 
 
 def _plan_marker(tdir: str, instant: str) -> str:
@@ -60,17 +60,17 @@ def schedule_compaction(
     Groups already covered by a pending plan are not re-planned.
     ``strategy``/``target_io_mb``/``target_partitions`` bound the plan
     per write/compact_strategy.py (Hudi's hoodie.compaction.strategy)."""
-    from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.sources.hudi import HudiTable
+    from hudi_rs_spark.write.compact import service_config
     from hudi_rs_spark.write.writer import _fs, timeline_dir
 
-    tc = HudiTableConfig.from_base_path(path)
+    table = HudiTable(path, spark=None, listing="direct")
+    tc = table.config
     if tc.table_version < 8:
         raise ValueError(
             "scheduled compaction requires a v8+ table: log anchoring at "
             "the plan instant rides on the completion-time timeline"
         )
-    table = HudiTable(path, spark=None, listing="direct")
     planned_already: set[str] = set()
     for plan in table.timeline.pending_compaction_plans().values():
         for g in plan.get("groups", ()):
@@ -109,7 +109,7 @@ def schedule_compaction(
 
     pinned = instant is not None
     instant = instant or new_instant()
-    cfg = _service_cfg(tc, path, instant)
+    cfg = service_config(tc, path, instant)
     tdir = timeline_dir(cfg)
     _, instant = claim_unique_timestamp(
         _fs(tdir),
@@ -126,35 +126,17 @@ def schedule_compaction(
     return instant
 
 
-def _service_cfg(tc, path: str, instant: str) -> WriteConfig:
-    return WriteConfig(
-        path=path,
-        table_name=tc.table_name,
-        record_key_fields=tuple(tc.record_key_fields) or ("id",),
-        precombine_field=(tc.ordering_fields or [None])[0],
-        partition_fields=tuple(tc.partition_fields),
-        table_type=tc.table_type.value,
-        table_version=tc.table_version,
-        instant=instant,
-        operation="compact",
-    )
-
-
 def run_scheduled_compaction(
     spark, path: str, instant: str | None = None
 ) -> int:
     """Execute pending compaction plan(s) (all of them, earliest first,
     unless ``instant`` picks one); returns the number of file groups
     compacted."""
-    from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.fs.file_group import BaseFile, LogFile
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.sources.pyds import HudiPyReader, _as_nullable
-    from hudi_rs_spark.write.compact import _compact_one
-    from hudi_rs_spark.write.concurrency import (
-        check_commit_conflicts,
-        completed_instant_set,
-    )
+    from hudi_rs_spark.write.compact import _compact_one, service_config
+    from hudi_rs_spark.write.concurrency import check_commit_conflicts
     from hudi_rs_spark.write.mdt import purge_uncommitted_mdt_logs
     from hudi_rs_spark.write.worklist import (
         run_slice_tasks,
@@ -164,7 +146,6 @@ def run_scheduled_compaction(
     from hudi_rs_spark.write.writer import _fs, commit_instant
 
     purge_uncommitted_mdt_logs(path)
-    tc = HudiTableConfig.from_base_path(path)
     plans = HudiTable(
         path, spark=None, listing="direct"
     ).timeline.pending_compaction_plans()
@@ -178,7 +159,6 @@ def run_scheduled_compaction(
         }
         if not planned:
             continue
-        read_point = completed_instant_set(path)
         # reclaim a CRASHED earlier attempt's uncommitted bases at this
         # instant first: re-running on newer table state must not leave
         # two same-instant bases racing on write-token order (the stale
@@ -204,11 +184,13 @@ def run_scheduled_compaction(
                     )
                 except OSError:
                     pass
+        # one snapshot per plan: slices, schema, service config and the
+        # OCC read point (its timeline)
         table = HudiTable(path, spark, listing="direct")
+        tc = table.config
+        read_point = frozenset(i.timestamp for i in table.timeline.instants)
         reader = HudiPyReader(
-            HudiTable(path, spark=None, listing="direct"),
-            {"path": path},
-            _as_nullable(table.get_schema()),
+            table, {"path": path}, _as_nullable(table.get_schema())
         )
         work = []
         for p in reader.partitions():
@@ -235,11 +217,11 @@ def run_scheduled_compaction(
         if not work:
             # every planned group vanished (replaced/cleaned): the plan
             # is moot — resolve the marker so it stops pinning archival
-            cfg = _service_cfg(tc, path, plan_instant)
+            cfg = service_config(tc, path, plan_instant)
             _remove_marker(cfg, plan_instant)
             continue
         meta_parts = tc.props.get("hoodie.table.metadata.partitions", "")
-        cfg = _service_cfg(tc, path, plan_instant)
+        cfg = service_config(tc, path, plan_instant)
         shared = shared_scan_context(reader.partitions()[0])
         shared.update({
             "path": path, "instant": plan_instant,
@@ -263,7 +245,7 @@ def run_scheduled_compaction(
             raise
         commit_instant(
             cfg, stats, table.schema_json(), action="commit",
-            instant=plan_instant,
+            instant=plan_instant, table_config=tc,
         )
         if "files" in meta_parts:
             from hudi_rs_spark.write.mdt import apply_commit_to_mdt

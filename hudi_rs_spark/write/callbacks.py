@@ -63,8 +63,12 @@ def last_callback_errors() -> list[str]:
     return out
 
 
-def fire(cfg, instant: str, action: str, stats: list[dict]) -> None:
-    """Invoked by commit_instant after the publish; never raises."""
+def fire(
+    cfg, instant: str, action: str, stats: list[dict], table_config=None
+) -> None:
+    """Invoked by commit_instant after the publish; never raises.
+    ``table_config``: the table's config as the committer loaded it
+    (read from storage when not given)."""
     callback_file = None
     try:
         # write option first, then the persisted table property
@@ -75,7 +79,7 @@ def fire(cfg, instant: str, action: str, stats: list[dict]) -> None:
             from hudi_rs_spark.config.table_config import HudiTableConfig
 
             try:
-                tc = HudiTableConfig.from_base_path(cfg.path)
+                tc = table_config or HudiTableConfig.from_base_path(cfg.path)
                 callback_file = tc.props.get(
                     "hoodie.write.commit.callback.file"
                 ) or None

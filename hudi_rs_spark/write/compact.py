@@ -114,6 +114,22 @@ def _compact_one(desc: dict, shared: dict) -> dict:
     return stat
 
 
+def service_config(tc, path: str, instant: str) -> WriteConfig:
+    """The WriteConfig a compaction commit at ``instant`` publishes
+    with, from the table's loaded config ``tc``."""
+    return WriteConfig(
+        path=path,
+        table_name=tc.table_name,
+        record_key_fields=tuple(tc.record_key_fields) or ("id",),
+        precombine_field=(tc.ordering_fields or [None])[0],
+        partition_fields=tuple(tc.partition_fields),
+        table_type=tc.table_type.value,
+        table_version=tc.table_version,
+        instant=instant,
+        operation="compact",
+    )
+
+
 def compact(
     spark,
     path: str,
@@ -130,32 +146,24 @@ def compact(
     round per write/compact_strategy.py (Hudi's
     hoodie.compaction.strategy family); the default compacts every
     dirty slice."""
-    from pyspark.sql import types as T
-
-    from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.sources.pyds import HudiPyReader, _as_nullable
+    from hudi_rs_spark.write.concurrency import check_commit_conflicts
+    from hudi_rs_spark.write.mdt import purge_uncommitted_mdt_logs
     from hudi_rs_spark.write.writer import commit_instant
 
-    from hudi_rs_spark.write.mdt import purge_uncommitted_mdt_logs
-
     purge_uncommitted_mdt_logs(path)  # never reuse a poisoned anchor
-    # OCC read point BEFORE planning: a log block committed to a slice
-    # while we compact it would be absorbed into neither the old slice
-    # (superseded) nor the new base (planned earlier) — conflict-check
-    # at commit instead of silently hiding the update
-    from hudi_rs_spark.write.concurrency import (
-        check_commit_conflicts,
-        completed_instant_set,
-    )
-
-    read_point = completed_instant_set(path)
-    tc = HudiTableConfig.from_base_path(path)
+    # ONE planning snapshot: slices, schema, the service config and the
+    # OCC read point all come from it. The read point is its timeline: a
+    # log block committed to a slice while we compact it would be
+    # absorbed into neither the old slice (superseded) nor the new base
+    # (planned earlier) — conflict-check at commit instead of silently
+    # hiding the update
     table = HudiTable(path, spark, listing="direct")
+    tc = table.config
+    read_point = frozenset(i.timestamp for i in table.timeline.instants)
     reader = HudiPyReader(
-        HudiTable(path, spark=None, listing="direct"),
-        {"path": path},
-        _as_nullable(table.get_schema()),
+        table, {"path": path}, _as_nullable(table.get_schema())
     )
     # log-only slices (bucket-routed first touches) compact too: their
     # rewrite writes the group's first base file
@@ -186,17 +194,7 @@ def compact(
     meta_parts = tc.props.get("hoodie.table.metadata.partitions", "")
     with_stats = "column_stats" in meta_parts
     with_bloom = "bloom_filters" in meta_parts
-    cfg = WriteConfig(
-        path=path,
-        table_name=tc.table_name,
-        record_key_fields=tuple(tc.record_key_fields) or ("id",),
-        precombine_field=(tc.ordering_fields or [None])[0],
-        partition_fields=tuple(tc.partition_fields),
-        table_type=tc.table_type.value,
-        table_version=tc.table_version,
-        instant=instant,
-        operation="compact",
-    )
+    cfg = service_config(tc, path, instant)
     # claim the compaction instant before any task writes (services take
     # the same collision-detection path as the batch writer)
     from hudi_rs_spark.write.concurrency import claim_instant, release_instant
@@ -235,14 +233,10 @@ def compact(
                 pass
         release_instant(cfg, "commit")
         raise
-    schema_json = None
-    sj = table.schema_json()
-    if sj is not None:
-        schema_json = sj
     commit_instant(
-        cfg, stats, schema_json, action="commit", instant=instant,
+        cfg, stats, table.schema_json(), action="commit", instant=instant,
+        table_config=tc,
     )
-    meta_parts = tc.props.get("hoodie.table.metadata.partitions", "")
     if "files" in meta_parts:
         from hudi_rs_spark.write.mdt import apply_commit_to_mdt
 

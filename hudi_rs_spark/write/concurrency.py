@@ -159,13 +159,11 @@ def completed_instant_set(path: str, options: dict | None = None) -> frozenset[s
     """Completed data-timeline instants right now — the writer's READ
     POINT snapshot, captured at claim time for ``check_commit_conflicts``.
     Empty for a not-yet-created table."""
-    from hudi_rs_spark.sources.hudi import HudiTable
-    from hudi_rs_spark.write.writer import _base, _fs
+    from hudi_rs_spark.write.writer import existing_table
 
-    base = _base(path)
-    if not _fs(base, options).isfile(f"{base}/.hoodie/hoodie.properties"):
+    t = existing_table(path, options)
+    if t is None:
         return frozenset()
-    t = HudiTable(base, spark=None, listing="direct", storage_options=options)
     return frozenset(i.timestamp for i in t.timeline.instants)
 
 
@@ -176,6 +174,7 @@ def check_commit_conflicts(
     strict: bool = False,
     ignore_log_anchor: str | None = None,
     nbcc_log_appends: bool = False,
+    table=None,
 ) -> None:
     """Hudi-style optimistic concurrency control, run at COMMIT time
     (after this writer's tasks finished, before its instant publishes):
@@ -190,20 +189,18 @@ def check_commit_conflicts(
     data commit conflicts — a replacecommit planned before the other
     write landed cannot exclude file groups it never saw.
 
+    ``table``: the table as the caller loaded it under its commit lock;
+    loaded here when not given.
+
     Preserves the linearized-timeline assumption the readers' merge
     semantics rely on (reference merge/record_merger.rs:89-187)."""
-    from hudi_rs_spark.sources.hudi import HudiTable
-    from hudi_rs_spark.write.writer import _base, _fs
+    if table is None:
+        from hudi_rs_spark.write.writer import existing_table
 
-    base = _base(cfg.path)
-    if not _fs(base, cfg.storage_dict()).isfile(
-        f"{base}/.hoodie/hoodie.properties"
-    ):
-        return  # first write to a fresh table: nothing completed yet
-    t = HudiTable(
-        base, spark=None, listing="direct", storage_options=cfg.storage_dict()
-    )
-    timeline = t.timeline
+        table = existing_table(cfg.path, cfg.storage_dict())
+        if table is None:
+            return  # first write to a fresh table: nothing completed yet
+    timeline = table.timeline
     # "self" is identified by (timestamp, action), not bare timestamp:
     # claim_unique_timestamp makes cross-action timestamp collisions
     # near-impossible, but if one ever slipped through (e.g. a marker

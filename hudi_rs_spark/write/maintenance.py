@@ -1,4 +1,5 @@
-"""Automatic growth management: inline archival + MDT folding.
+"""Automatic growth management: inline archival, MDT folding, cleaning
+and partition TTL.
 
 Hudi runs these inline by default (`hoodie.keep.max/min.commits`,
 `hoodie.metadata.compact.max.delta.commits`) because on a table written
@@ -13,11 +14,20 @@ active timelines and ever-longer MDT log chains. The writer calls
   floor);
 - when the MDT ``files`` file group has accumulated at least
   ``mdt_compact_max_deltas`` log files, fold every MDT group into fresh
-  HFile bases (write/mdt_compact.py — bounded point-lookup decode).
+  HFile bases (write/mdt_compact.py — bounded point-lookup decode);
+- clean and expire partitions when the write options or the table
+  properties turn those on.
 
-Cost per commit: one list of the timeline dir + one list of the MDT
-files dir — both already O(active metadata), both driver-side. The
-checks are cheap exactly because the maintenance keeps them bounded.
+Cost per commit when no threshold is crossed (counted on a local MOR
+table): two directory listings (the timeline dir and the MDT files dir,
+both O(active metadata)) and one hoodie.properties read for the clean
+and TTL gates. It runs in the process that commits: the ``hudi_py``
+writer's Python worker for batch and streaming writes. The checks are
+cheap exactly because the maintenance keeps them bounded.
+
+Inline compaction (``_maybe_compact``) is not part of this hook: it
+needs a SparkSession, which the writer's worker does not have, so
+``upsert()`` runs it on the driver after its save.
 
 Failures here must never fail the COMMIT (the data is already durable
 and visible): maintenance errors surface as warnings and the next
@@ -29,8 +39,10 @@ import warnings
 
 
 def maybe_auto_maintain(cfg) -> None:
-    """Run archival / MDT folding when the configured thresholds are
-    crossed; never raises (the commit already succeeded)."""
+    """Run archival / MDT folding / cleaning / partition TTL when the
+    configured thresholds are crossed; never raises (the commit already
+    succeeded). hoodie.properties is read once, for the clean and TTL
+    gates."""
     try:
         _maybe_archive(cfg)
     except Exception as e:  # noqa: BLE001 — commit durability over tidiness
@@ -40,44 +52,35 @@ def maybe_auto_maintain(cfg) -> None:
     except Exception as e:  # noqa: BLE001
         warnings.warn(f"auto MDT compaction skipped: {e}", stacklevel=2)
     try:
-        _maybe_compact(cfg)
+        from hudi_rs_spark.config.table_config import HudiTableConfig
+
+        props = HudiTableConfig.from_base_path(cfg.path).props
     except Exception as e:  # noqa: BLE001
-        warnings.warn(f"inline compaction skipped: {e}", stacklevel=2)
+        warnings.warn(f"auto clean and partition TTL skipped: {e}", stacklevel=2)
+        return
     try:
-        _maybe_clean(cfg)
+        _maybe_clean(cfg, props)
     except Exception as e:  # noqa: BLE001
         warnings.warn(f"auto clean skipped: {e}", stacklevel=2)
     try:
-        _maybe_ttl(cfg)
+        _maybe_ttl(cfg, props)
     except Exception as e:  # noqa: BLE001
         warnings.warn(f"auto partition TTL skipped: {e}", stacklevel=2)
 
 
-def _active_spark():
-    try:
-        from pyspark.sql import SparkSession
-
-        return SparkSession.getActiveSession()
-    except Exception:  # noqa: BLE001
-        return None
-
-
-def _maybe_compact(cfg, spark=None) -> None:
+def _maybe_compact(cfg, spark, props: dict) -> None:
     """hoodie.compact.inline: compact once ``max_delta_commits``
     deltacommits have landed since the last compaction commit — the
-    classic MOR read-amplification bound, now self-applying. The
-    trigger check is one timeline listing; the compaction itself is the
-    audited distributed service. Needs a SparkSession: the DataSource
-    WORKER process has none (its publish path silently skips), so
-    ``upsert()`` re-invokes this driver-side right after the save —
-    that call carries the session and does the work; the streaming
-    sink's driver-side hook resolves the active session itself."""
+    classic MOR read-amplification bound, now self-applying. Enablement
+    comes from the write options, else ``props`` (the table's
+    properties as the write loaded them). The trigger check is one
+    timeline listing; the compaction itself is the audited distributed
+    service. Needs the session, so ``upsert()`` calls it on the driver
+    right after its save; the ``hudi_py`` writer's commit runs in a
+    Python worker, which has none."""
     enabled = getattr(cfg, "compact_inline", False)
     max_deltas = getattr(cfg, "compact_inline_max_deltas", 5)
     if not enabled:
-        from hudi_rs_spark.config.table_config import HudiTableConfig
-
-        props = HudiTableConfig.from_base_path(cfg.path).props
         if props.get("hoodie.compact.inline", "").lower() != "true":
             return
         max_deltas = int(
@@ -99,32 +102,24 @@ def _maybe_compact(cfg, spark=None) -> None:
             deltas_since += 1
     if deltas_since < max_deltas:
         return
-    if spark is None and (
-        "://" not in cfg.path or cfg.path.startswith("file://")
-    ):
-        spark = _active_spark()
-    if spark is None:
-        return  # worker-process publish: the driver-side hook compacts
     from hudi_rs_spark.write.compact import compact
 
     compact(spark, cfg.path)
 
 
-def _maybe_clean(cfg) -> None:
+def _maybe_clean(cfg, props: dict) -> None:
     """hoodie.clean.automatic: run the cleaner inline after the commit.
     Enablement + policy come from the write options, else the persisted
-    table properties (so appends/services inherit the table's cleaning
-    contract). The cleaner itself is metadata-sized and early-exits
-    when retention holds, so the per-commit cost is one listing."""
+    table properties ``props`` (so appends/services inherit the table's
+    cleaning contract). The cleaner itself is metadata-sized and
+    early-exits when retention holds, so the per-commit cost is one
+    listing."""
     enabled = getattr(cfg, "clean_automatic", False)
     policy = getattr(cfg, "cleaner_policy", "") or "KEEP_LATEST_COMMITS"
     retain_commits = getattr(cfg, "clean_retain_commits", 10)
     retain_versions = getattr(cfg, "clean_retain_file_versions", 3)
     retain_hours = getattr(cfg, "clean_retain_hours", 168.0)
     if not enabled:
-        from hudi_rs_spark.config.table_config import HudiTableConfig
-
-        props = HudiTableConfig.from_base_path(cfg.path).props
         if props.get("hoodie.clean.automatic", "").lower() != "true":
             return
         policy = props.get("hoodie.cleaner.policy", policy)
@@ -149,7 +144,7 @@ def _maybe_clean(cfg) -> None:
     )
 
 
-def _maybe_ttl(cfg) -> None:
+def _maybe_ttl(cfg, props: dict) -> None:
     """RFC-65 inline partition-TTL strategy: when the table property
     ``hoodie.partition.ttl.inline.enabled`` is true (option spelling
     ``partition.ttl.inline`` at write time also accepted via table
@@ -157,9 +152,6 @@ def _maybe_ttl(cfg) -> None:
     ``hoodie.partition.ttl.days.retained`` after each write commit.
     Expiry is metadata-sized: per-partition newest-instant epochs from
     the fs view; nothing to expire publishes nothing (ttl.py)."""
-    from hudi_rs_spark.config.table_config import HudiTableConfig
-
-    props = HudiTableConfig.from_base_path(cfg.path).props
     if props.get(
         "hoodie.partition.ttl.inline.enabled", ""
     ).lower() != "true":

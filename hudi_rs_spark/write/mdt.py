@@ -313,31 +313,14 @@ def apply_commit_to_mdt(cfg: WriteConfig, stats: list[dict]) -> None:
     _append_mdt_records(cfg, mdt, records, extra)
 
 
-def column_stats_enabled(cfg: WriteConfig) -> bool:
-    """Stats partitions maintained when the write asked for them OR the
-    table already advertises column_stats (same staleness argument as
-    writer.mdt_enabled)."""
-    if cfg.emit_column_stats:
-        return True
-    base = _local(cfg.path)
-    if not _st(base, cfg.storage_dict()).isfile(
-        f"{base}/.hoodie/hoodie.properties"
-    ):
-        return False
-    from hudi_rs_spark.config.table_config import HudiTableConfig
-    from hudi_rs_spark.metadata.column_stats import has_column_stats_partition
-
-    return has_column_stats_partition(HudiTableConfig.from_base_path(base))
-
-
 def _stats_partitions(
     cfg: WriteConfig, stats: list[dict]
 ) -> list[tuple[str, str, dict, list]]:
     """column_stats + partition_stats record batches from the commit's
-    per-file ``columnStats`` (attached by the task writers when stats
-    emission is on). Empty when disabled or no stats were computed."""
-    if not column_stats_enabled(cfg):
-        return []
+    per-file ``columnStats``. Writers and services attach those only
+    when the write asked for stats or the table advertises column_stats
+    (``resolve_index_flags``), so their presence is the gate; empty when
+    no file carries any."""
     from hudi_rs_spark.write.mdt_stats import (
         STATS_RECORD_SCHEMA,
         encode_stats_record,

@@ -140,7 +140,7 @@ def append_record_index_log(
 SHARDS_PROP = "hoodie.metadata.record.index.shards"
 
 
-def existing_shard_count(path: str) -> int:
+def existing_shard_count(path: str, config=None) -> int:
     """Shard count the table was created with — from the persisted
     table property ``hoodie.metadata.record.index.shards``
     (authoritative); 0 when the index has never been written. The count
@@ -150,15 +150,17 @@ def existing_shard_count(path: str) -> int:
     from on-disk shard file names is NOT safe — high-numbered shards
     that happen to hold no keys yet would make max(observed)+1 too
     small and re-shard later keys inconsistently — so index files
-    without the property are an error, never a guess."""
+    without the property are an error, never a guess. ``config``: the
+    table's config as the caller loaded it (read here when not given)."""
     from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.fs.storage import storage_for
 
     st = storage_for(path)
-    if st.isfile(f"{path}/.hoodie/hoodie.properties"):
-        v = HudiTableConfig.from_base_path(path).props.get(SHARDS_PROP)
-        if v:
-            return int(v)
+    if config is None and st.isfile(f"{path}/.hoodie/hoodie.properties"):
+        config = HudiTableConfig.from_base_path(path)
+    v = config.props.get(SHARDS_PROP) if config is not None else None
+    if v:
+        return int(v)
     ri_dir = f"{path}/.hoodie/metadata/{RECORD_INDEX_PARTITION}"
     if any(
         e.name.startswith(".record-index-") and ".log." in e.name
@@ -298,13 +300,3 @@ def _rewrite_props(base: str, edit) -> None:
         props_path,
         ("\n".join(f"{k}={v}" for k, v in sorted(have.items())) + "\n").encode(),
     )
-
-
-def record_index_enabled_on_table(path: str) -> bool:
-    from hudi_rs_spark.config.table_config import HudiTableConfig
-    from hudi_rs_spark.fs.storage import storage_for
-    from hudi_rs_spark.metadata.record_index import has_record_index_partition
-
-    if not storage_for(path).isfile(f"{path}/.hoodie/hoodie.properties"):
-        return False
-    return has_record_index_partition(HudiTableConfig.from_base_path(path))

@@ -191,18 +191,3 @@ def backfill_secondary_index(spark, path: str, column: str) -> int:
         lambda have: _advertise(have, SECONDARY_INDEX_PREFIX + column),
     )
     return len(paths)
-
-
-def indexed_columns_on_table(path: str) -> tuple[str, ...]:
-    """Columns with a secondary_index_* partition advertised in the
-    table's properties (empty when none)."""
-    from hudi_rs_spark.config.table_config import HudiTableConfig
-    from hudi_rs_spark.fs.storage import storage_for
-    from hudi_rs_spark.metadata.secondary_index import list_secondary_indexes
-
-    if not storage_for(path).isfile(f"{path}/.hoodie/hoodie.properties"):
-        return ()
-    return tuple(
-        p.removeprefix(SECONDARY_INDEX_PREFIX)
-        for p in list_secondary_indexes(HudiTableConfig.from_base_path(path))
-    )

@@ -42,7 +42,10 @@ from hudi_rs_spark.write.writer import (
     _local,
     commit_instant,
     data_avro_schema,
+    existing_config,
     init_table,
+    mdt_enabled,
+    resolve_index_flags,
     timeline_dir,
     write_task,
 )
@@ -154,8 +157,6 @@ def committed_batch_ids(cfg: WriteConfig, qkey: str = "legacy") -> set[int]:
 
 class HudiPyStreamWriter(DataSourceStreamArrowWriter):
     def __init__(self, options: dict, schema):
-        from hudi_rs_spark.write.writer import resolve_index_flags
-
         self.cfg = WriteConfig.from_options(options)
         self.query_key = query_key(options)
         # failed earlier runs (or abandoned OTHER queries) may have left
@@ -174,7 +175,9 @@ class HudiPyStreamWriter(DataSourceStreamArrowWriter):
         # a stream into a stats/index-advertising table must keep those
         # partitions widening, exactly like a batch append (stale
         # partition_stats would make exclusion pruning WRONG)
-        resolve_index_flags(self.cfg)
+        resolve_index_flags(
+            self.cfg, existing_config(self.cfg.path, self.cfg.storage_dict())
+        )
         self.schema = schema
 
     def _sidecar_instants(self) -> set[str]:
@@ -238,7 +241,8 @@ class HudiPyStreamWriter(DataSourceStreamArrowWriter):
     def commit(self, messages, batchId: int) -> None:
         stats = [s for m in messages if m is not None for s in m.stats]
         cfg = self._batch_cfg(batchId)
-        init_table(cfg)
+        tc = existing_config(cfg.path, cfg.storage_dict())
+        init_table(cfg, tc)
         own_ledger = committed_batch_ids(cfg, self.query_key)
         if batchId in own_ledger or self._is_pre_upgrade_replay(
             cfg, batchId, own_ledger
@@ -253,9 +257,7 @@ class HudiPyStreamWriter(DataSourceStreamArrowWriter):
                 except OSError:
                     pass
             return
-        from hudi_rs_spark.write.writer import mdt_enabled
-
-        emit_mdt = mdt_enabled(cfg)
+        emit_mdt = mdt_enabled(cfg, tc)
         commit_instant(
             cfg, stats,
             data_avro_schema(self.schema, cfg.table_name),
@@ -263,6 +265,7 @@ class HudiPyStreamWriter(DataSourceStreamArrowWriter):
                 BATCH_ID_KEY: str(batchId),
                 QUERY_ID_KEY: self.query_key,
             },
+            table_config=tc,
         )
         if emit_mdt:
             from hudi_rs_spark.write.mdt import apply_commit_to_mdt

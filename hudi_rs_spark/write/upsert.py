@@ -86,7 +86,7 @@ def _spark_partition_expr(cfg: WriteConfig):
 
 
 def _index_from_record_index(
-    spark, path: str, slices
+    spark, table, slices
 ) -> DataFrame | None:
     """Tagging index from the MDT record index: each SHARD slice decodes
     executor-side into (key, partition, file_id) rows — index bytes
@@ -95,15 +95,16 @@ def _index_from_record_index(
     both attaches the base instant and drops stale entries (replaced
     file groups), whose keys then take the insert path. Returns None
     when the table has no record index."""
+    from hudi_rs_spark.metadata.record_index import has_record_index_partition
     from hudi_rs_spark.write.record_index import (
         existing_shard_count,
-        record_index_enabled_on_table,
         shard_file_id,
     )
 
-    if not record_index_enabled_on_table(path):
+    if not has_record_index_partition(table.config):
         return None
-    n = existing_shard_count(path)
+    path = table.base_path
+    n = existing_shard_count(path, table.config)
     if not n:
         return None
 
@@ -139,7 +140,7 @@ def _index_from_record_index(
 
 
 def _bloom_candidate_files(
-    spark, path: str, keys_df: DataFrame
+    spark, table, keys_df: DataFrame
 ) -> dict | None:
     """Middle index tier (no record index, bloom_filters MDT partition
     present): base-file NAMES the incoming keys may live in, so the
@@ -153,13 +154,13 @@ def _bloom_candidate_files(
     a bloom record stay candidates (missing record = no pruning, never
     wrong), so bloom-less history/compaction gaps cost speed only.
     Returns None when the table has no bloom partition."""
-    from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.metadata.bloom_filters import (
         has_bloom_filters_partition,
     )
 
-    if not has_bloom_filters_partition(HudiTableConfig.from_base_path(path)):
+    if not has_bloom_filters_partition(table.config):
         return None
+    path = table.base_path
 
     def gen(batches):
         import pandas as pd
@@ -209,12 +210,9 @@ def _empty_index(spark) -> DataFrame:
     )
 
 
-def _current_slices(spark, path: str):
+def _current_slices(table):
     """(slices, next-log-version per file group, base-file paths) of the
-    CURRENT table state — the driver-side listing every tag pass needs."""
-    from hudi_rs_spark.sources.hudi import HudiTable
-
-    table = HudiTable(path, spark, listing="direct")
+    table snapshot — the driver-side listing every tag pass needs."""
     slices = table.get_file_slices()
     next_version: dict[str, int] = {}
     paths = []
@@ -226,7 +224,9 @@ def _current_slices(spark, path: str):
             )
         versions = [lf.version for lf in sl.log_files]
         next_version[sl.file_id] = (max(versions) + 1) if versions else 1
-        paths.append(os.path.join(path, sl.base_file_relative_path()))
+        paths.append(
+            os.path.join(table.base_path, sl.base_file_relative_path())
+        )
     return slices, next_version, paths
 
 
@@ -259,16 +259,17 @@ def tag_index_handle(spark, path: str) -> TagIndexHandle:
     (checkpointed), so each consuming write reads the materialized rows
     instead of re-running the index decode/scan."""
     from hudi_rs_spark.operators.pin import pin
+    from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.write.writer import _base
 
-    base = _base(path)
-    slices, _next_version, paths = _current_slices(spark, base)
-    index = _build_tag_index(spark, base, slices, paths, keys_df=None)
-    return TagIndexHandle(base, pin(index))
+    table = HudiTable(_base(path), spark, listing="direct")
+    slices, _next_version, paths = _current_slices(table)
+    index = _build_tag_index(spark, table, slices, paths, keys_df=None)
+    return TagIndexHandle(table.base_path, pin(index))
 
 
 def _build_tag_index(
-    spark, path: str, slices, paths, keys_df: DataFrame | None
+    spark, table, slices, paths, keys_df: DataFrame | None
 ) -> DataFrame:
     """(key, partition) -> (file_id, base_instant) over CURRENT slices.
     Tiers: MDT record index (O(index)), bloom-pruned meta-column scan
@@ -276,11 +277,11 @@ def _build_tag_index(
     (O(live base files))."""
     if not paths:
         return _empty_index(spark)
-    via_index = _index_from_record_index(spark, path, slices)
+    via_index = _index_from_record_index(spark, table, slices)
     if via_index is not None:
         return via_index
     if keys_df is not None:
-        bloom = _bloom_candidate_files(spark, path, keys_df)
+        bloom = _bloom_candidate_files(spark, table, keys_df)
         if bloom is not None:
             keep = []
             for sl, p in zip(slices, paths):
@@ -310,29 +311,27 @@ def _build_tag_index(
 
 
 def _location_index(
-    spark, cfg: WriteConfig, keys_df: DataFrame | None = None,
+    spark, table, keys_df: DataFrame | None = None,
     index_handle: TagIndexHandle | None = None,
 ) -> tuple[DataFrame, dict[str, int]]:
     """Tag index plus the next log version per file group (from driver
     planning — the file-group listing is already in hand). With
     ``index_handle`` the materialized index is reused and only the
     listing runs (one index read per LIFECYCLE instead of per call)."""
-    slices, next_version, paths = _current_slices(spark, cfg.path)
+    slices, next_version, paths = _current_slices(table)
     if index_handle is not None:
-        from hudi_rs_spark.write.writer import _base
-
-        if index_handle.path != _base(cfg.path):
+        if index_handle.path != table.base_path:
             raise ValueError(
                 f"index_handle built for {index_handle.path}, "
-                f"used against {cfg.path}"
+                f"used against {table.base_path}"
             )
         return index_handle.index, next_version
-    return _build_tag_index(spark, cfg.path, slices, paths, keys_df), next_version
+    return _build_tag_index(spark, table, slices, paths, keys_df), next_version
 
 
 def _tag_by_bucket(
-    spark, cfg: WriteConfig, n: int, df: DataFrame, key_expr, part_expr,
-    table_exists: bool, splits=frozenset(),
+    spark, table, n: int, df: DataFrame, key_expr, part_expr,
+    splits=frozenset(),
 ) -> DataFrame:
     """Bucket-index tagging (write/bucket.py): target file id is a pure
     map-side hash of the record key — NO index read, NO tag join against
@@ -342,8 +341,8 @@ def _tag_by_bucket(
     keep a null anchor — the task writer anchors their log at its own
     commit instant, creating the group log-only. ``splits`` (the
     extendible-hash rescale map, write/bucket.py::split_bucket) folds
-    into the routing expression — still zero index I/O."""
-    from hudi_rs_spark.sources.hudi import HudiTable
+    into the routing expression — still zero index I/O. ``table``: the
+    write's snapshot, None when this upsert seeds the table."""
     from hudi_rs_spark.write.bucket import (
         bucket_route_exprs,
         leaf_file_id_expr,
@@ -351,8 +350,8 @@ def _tag_by_bucket(
     )
 
     rows = []
-    if table_exists:
-        for sl in HudiTable(cfg.path, spark=None, listing="direct").get_file_slices():
+    if table is not None:
+        for sl in table.get_file_slices():
             leaf = parse_bucket_leaf(sl.file_id, n)
             if leaf is None:
                 raise ValueError(
@@ -448,16 +447,19 @@ def upsert(
 
     ``options``: forwarded to the writer (``precombine.field`` etc.);
     table identity options default from the existing hoodie.properties.
+
+    The call loads the table ONCE (config + timeline): identity options,
+    schema reconciliation, the file-group listing, the index gates,
+    pending service-plan anchors and the OCC read point all come from
+    that one snapshot.
     """
     spark = df.sparkSession
-    from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.write.bucket import is_bucket_table, num_buckets
-    from hudi_rs_spark.write.writer import _base, _fs
+    from hudi_rs_spark.write.writer import existing_table, storage_options_of
 
-    base = _base(path)
-    exists = _fs(base).isfile(f"{base}/.hoodie/hoodie.properties")
-    if exists:
-        tc = HudiTableConfig.from_base_path(path)
+    table = existing_table(path, storage_options_of(options), spark)
+    if table is not None:
+        tc = table.config
         merged_options = {
             "path": path,
             "hoodie.table.name": tc.table_name,
@@ -498,14 +500,15 @@ def upsert(
         tc = None
         merged_options = {"path": path, "operation": "upsert"}
     merged_options.update(options)
-    # OCC read point: the tag/index join below reads the table state as
-    # of NOW — capture it before the index read so any commit landing
-    # between tagging and this write's own commit is conflict-checked
+    # OCC read point: the completed instants of this call's snapshot —
+    # the very timeline the slices below are planned from, taken before
+    # the index read — so any commit landing between tagging and this
+    # write's own commit is conflict-checked
     # (write/concurrency.check_commit_conflicts)
-    from hudi_rs_spark.write.concurrency import completed_instant_set
-
     merged_options.setdefault(
-        "occ.readpoint", ",".join(sorted(completed_instant_set(path)))
+        "occ.readpoint",
+        ",".join(sorted(i.timestamp for i in table.timeline.instants))
+        if table is not None else "",
     )
     cfg = WriteConfig.from_options(merged_options)
 
@@ -515,15 +518,11 @@ def upsert(
     # table type; legally WIDER columns pass through (the commit
     # publishes the widened schema); incompatible re-typings are
     # rejected here, before any file lands
-    if exists:
+    if table is not None:
         from hudi_rs_spark.avro.spark_schema import avro_record_to_struct
-        from hudi_rs_spark.sources.hudi import HudiTable
         from hudi_rs_spark.write.schema_evolve import reconcile_frame
 
-        sj = HudiTable(
-            path, spark=None, listing="direct",
-            storage_options=cfg.storage_dict(),
-        ).schema_json()
+        sj = table.schema_json()
         if sj is not None:
             df = reconcile_frame(df, avro_record_to_struct(sj))
 
@@ -628,16 +627,16 @@ def upsert(
         # bucket routing computes its own map-side columns; the named
         # tag columns would otherwise leak into the writer as data
         tagged = _tag_by_bucket(
-            spark, cfg, n_buckets,
+            spark, table, n_buckets,
             df.drop("__hoodie_key_x", "__hoodie_part_x"),
-            key_expr, part_expr, exists,
+            key_expr, part_expr,
             splits=parse_splits(tc.props) if tc is not None else frozenset(),
         )
         next_version = {}
         n_groups = n_buckets
     else:
         index, next_version = _location_index(
-            spark, cfg,
+            spark, table,
             df.select(
                 F.col("__hoodie_key_x").alias("k"),
                 F.col("__hoodie_part_x").alias("p"),
@@ -763,14 +762,11 @@ def upsert(
     # via the readers' pending-anchor merge. Compaction keeps them on
     # top of the new base; clustering migrates them onto the rewritten
     # group at execution time.
-    from hudi_rs_spark.sources.hudi import HudiTable as _HT
-
     plan_anchor: dict[str, str] = {}
-    if exists:
-        _tl = _HT(path, spark=None, listing="direct").timeline
+    if table is not None:
         for plans in (
-            _tl.pending_compaction_plans(),
-            _tl.pending_clustering_plans(),
+            table.timeline.pending_compaction_plans(),
+            table.timeline.pending_clustering_plans(),
         ):
             for pi, plan in plans.items():
                 for g in plan.get("groups", ()):
@@ -856,12 +852,12 @@ def upsert(
         )
 
     # inline compaction trigger (hoodie.compact.inline): the publish ran
-    # in the DataSource worker (no session there) — re-check driver-side
-    # where the session lives; never fails the upsert
+    # in the DataSource worker (no session there), so this driver-side
+    # call is the one trigger; never fails the upsert
     try:
         from hudi_rs_spark.write.maintenance import _maybe_compact
 
-        _maybe_compact(cfg, spark=spark)
+        _maybe_compact(cfg, spark, tc.props if tc is not None else {})
     except Exception as e:  # noqa: BLE001 — the data already committed
         import warnings
 
@@ -901,7 +897,11 @@ def bulk_insert(
     (keys/type/version) inherit from the existing table when absent —
     same as every other write entry point."""
     from hudi_rs_spark.write.config import WriteConfig
-    from hudi_rs_spark.write.writer import inherit_table_identity
+    from hudi_rs_spark.write.writer import (
+        existing_config,
+        inherit_table_identity,
+        storage_options_of,
+    )
 
     mode = str(
         options.pop("sort.mode", None) or sort_mode or "GLOBAL_SORT"
@@ -911,7 +911,10 @@ def bulk_insert(
             f"unknown bulk_insert sort mode {mode!r}: expected "
             "GLOBAL_SORT, PARTITION_SORT, or NONE"
         )
-    merged = inherit_table_identity({**options, "path": path})
+    merged = inherit_table_identity(
+        {**options, "path": path},
+        existing_config(path, storage_options_of(options)),
+    )
     cfg = WriteConfig.from_options(merged)
     sort_cols = [
         c for c in (*cfg.partition_fields, *cfg.record_key_fields)

@@ -646,10 +646,36 @@ def data_avro_schema(spark_schema, table_name: str) -> dict:
     return _spark_to_avro(T.StructType(fields), table_name + "_record")
 
 
-def resolve_index_flags(cfg: WriteConfig) -> None:
+def existing_config(path: str, storage: dict | None = None):
+    """The hoodie.properties of the table at ``path``, read once; None
+    before the table exists. ``storage``: the write's ``storage.*``
+    backend options."""
+    base = _base(path)
+    if not _fs(base, storage).isfile(f"{base}/.hoodie/hoodie.properties"):
+        return None
+    from hudi_rs_spark.config.table_config import HudiTableConfig
+
+    return HudiTableConfig.from_base_path(base)
+
+
+def existing_table(path: str, storage: dict | None = None, spark=None):
+    """The table at ``path`` as one snapshot (config and timeline, read
+    once) that a write step plans, tags, checks and publishes from; None
+    before the table exists."""
+    base = _base(path)
+    if not _fs(base, storage).isfile(f"{base}/.hoodie/hoodie.properties"):
+        return None
+    from hudi_rs_spark.sources.hudi import HudiTable
+
+    return HudiTable(base, spark, listing="direct", storage_options=storage)
+
+
+def resolve_index_flags(cfg: WriteConfig, existing) -> None:
     """Resolve layout + stats/index emission on the DRIVER against the
     existing table, mutating ``cfg`` in place — called by BOTH the
     batch and streaming writers before cfg ships to executors.
+    ``existing``: the table's config as the writer loaded it (None
+    before the table exists).
 
     - ``table_version`` is AUTHORITATIVE from the existing table: a v8
       table appended to with default options would otherwise get a
@@ -665,15 +691,20 @@ def resolve_index_flags(cfg: WriteConfig) -> None:
       record-index shard count is likewise fixed at table creation
       (cross-shard duplicates break the reader's last-wins merge).
     """
-    base = _base(cfg.path)
-    st = _fs(base, cfg.storage_dict())  # also primes options-less lookups
-    props_path = f"{base}/.hoodie/hoodie.properties"
-    have_props = st.isfile(props_path)
-    if have_props:
-        from hudi_rs_spark.config.table_config import HudiTableConfig
-        from hudi_rs_spark.metadata.files_partition import has_files_partition
+    from hudi_rs_spark.metadata.bloom_filters import (
+        has_bloom_filters_partition,
+    )
+    from hudi_rs_spark.metadata.column_stats import has_column_stats_partition
+    from hudi_rs_spark.metadata.files_partition import has_files_partition
+    from hudi_rs_spark.metadata.record_index import has_record_index_partition
+    from hudi_rs_spark.metadata.secondary_index import (
+        SECONDARY_INDEX_PREFIX,
+        list_secondary_indexes,
+    )
 
-        existing = HudiTableConfig.from_base_path(base)
+    base = _base(cfg.path)
+    indexed: tuple[str, ...] = ()
+    if existing is not None:
         cfg.table_version = existing.table_version
         if has_files_partition(existing):
             cfg.emit_metadata = True
@@ -691,48 +722,29 @@ def resolve_index_flags(cfg: WriteConfig) -> None:
             # inherit the payload (partial-update commit-schema handling
             # keys off it)
             cfg.payload_class = existing.payload_class
-    if not cfg.emit_column_stats:
-        from hudi_rs_spark.write.mdt import column_stats_enabled
-
-        if column_stats_enabled(cfg):
+        if has_column_stats_partition(existing):
             cfg.emit_column_stats = True
-    if cfg.emit_column_stats:
-        cfg.emit_metadata = True
-    if not cfg.emit_bloom_filters and have_props:
-        from hudi_rs_spark.metadata.bloom_filters import (
-            has_bloom_filters_partition,
-        )
-
         # a table that advertises bloom_filters keeps emitting them —
         # new base files without a bloom record are still CORRECT
         # (missing record = always-candidate in the tag path), they
         # just stop the index paying for itself
         if has_bloom_filters_partition(existing):
             cfg.emit_bloom_filters = True
-    if cfg.emit_bloom_filters:
-        cfg.emit_metadata = True
-    if not cfg.emit_record_index:
-        from hudi_rs_spark.write.record_index import (
-            record_index_enabled_on_table,
+        indexed = tuple(
+            p.removeprefix(SECONDARY_INDEX_PREFIX)
+            for p in list_secondary_indexes(existing)
         )
-
-        if record_index_enabled_on_table(base):
-            cfg.emit_record_index = True
-    elif have_props:
+    if cfg.emit_column_stats or cfg.emit_bloom_filters:
+        cfg.emit_metadata = True
+    if existing is not None and has_record_index_partition(existing):
+        cfg.emit_record_index = True
+    elif cfg.emit_record_index and existing is not None:
         # enabling the record index on a table with EXISTING data would
         # leave old keys unindexed — and the connector's index pruning
         # treats a missing key as proof the row does not exist. Refuse;
         # write.record_index.backfill_record_index builds the complete
         # index first.
-        from hudi_rs_spark.sources.hudi import HudiTable
-        from hudi_rs_spark.write.record_index import (
-            record_index_enabled_on_table,
-        )
-
-        if not record_index_enabled_on_table(base) and HudiTable(
-            base, spark=None, listing="direct",
-            storage_options=cfg.storage_dict(),
-        ).timeline.instants:
+        if _has_commits(base, existing):
             raise ValueError(
                 "cannot enable the record index on a table with existing "
                 "commits: old keys would be unindexed and index-based "
@@ -742,37 +754,21 @@ def resolve_index_flags(cfg: WriteConfig) -> None:
             )
     if cfg.emit_record_index:
         cfg.emit_metadata = True
-    if cfg.emit_record_index:
         from hudi_rs_spark.write.record_index import existing_shard_count
 
-        n = existing_shard_count(base)
+        n = existing_shard_count(base, existing)
         if n:
             cfg.record_index_shards = n
     if not cfg.secondary_index_columns:
-        from hudi_rs_spark.write.secondary_index import (
-            indexed_columns_on_table,
-        )
-
-        cols = indexed_columns_on_table(base)
-        if cols:
-            cfg.secondary_index_columns = cols
-    elif have_props:
+        if indexed:
+            cfg.secondary_index_columns = indexed
+    elif existing is not None:
         # same completeness argument as the record index: a secondary
         # index missing pre-existing rows' cells produces FALSE
         # NEGATIVES in lookup_by_secondary_key (the post-filter only
         # removes stale cells, it cannot conjure missing ones)
-        from hudi_rs_spark.sources.hudi import HudiTable
-        from hudi_rs_spark.write.secondary_index import (
-            indexed_columns_on_table,
-        )
-
-        new_cols = set(cfg.secondary_index_columns) - set(
-            indexed_columns_on_table(base)
-        )
-        if new_cols and HudiTable(
-            base, spark=None, listing="direct",
-            storage_options=cfg.storage_dict(),
-        ).timeline.instants:
+        new_cols = set(cfg.secondary_index_columns) - set(indexed)
+        if new_cols and _has_commits(base, existing):
             raise ValueError(
                 f"cannot enable secondary index(es) {sorted(new_cols)} on "
                 "a table with existing commits: old rows would be "
@@ -782,33 +778,36 @@ def resolve_index_flags(cfg: WriteConfig) -> None:
             )
 
 
-def mdt_enabled(cfg: WriteConfig) -> bool:
-    """Maintain the MDT when the write asked for it OR the existing
-    table already advertises a files partition (appends must not let
-    the MDT go stale once it exists)."""
-    if cfg.emit_metadata:
-        return True
-    base = _base(cfg.path)
-    props_path = f"{base}/.hoodie/hoodie.properties"
-    if not _fs(base, cfg.storage_dict()).isfile(props_path):
-        return False
-    from hudi_rs_spark.config.table_config import HudiTableConfig
+def _has_commits(base: str, config) -> bool:
+    from hudi_rs_spark.timeline.timeline import Timeline
+
+    return bool(Timeline.load(base, config).instants)
+
+
+def mdt_enabled(cfg: WriteConfig, config) -> bool:
+    """Maintain the MDT when the write asked for it OR the table, as
+    loaded for this commit (``config``; None before it exists), already
+    advertises a files partition (appends must not let the MDT go stale
+    once it exists)."""
     from hudi_rs_spark.metadata.files_partition import has_files_partition
 
-    return has_files_partition(HudiTableConfig.from_base_path(base))
+    return cfg.emit_metadata or (
+        config is not None and has_files_partition(config)
+    )
 
 
-def init_table(cfg: WriteConfig) -> bool:
+def init_table(cfg: WriteConfig, existing=None) -> bool:
     """Create ``.hoodie/hoodie.properties`` if absent. Returns True when
     this call created the table. Validates key configs on existing
-    tables so an append can't silently change table identity."""
+    tables so an append can't silently change table identity.
+    ``existing``: the table's config as the caller loaded it; read from
+    storage when not given."""
     base = _base(cfg.path)
     st = _fs(base, cfg.storage_dict())
     props_path = f"{base}/.hoodie/hoodie.properties"
-    if st.isfile(props_path):
-        from hudi_rs_spark.config.table_config import HudiTableConfig
-
-        existing = HudiTableConfig.from_base_path(base)
+    if existing is None:
+        existing = existing_config(base, cfg.storage_dict())
+    if existing is not None:
         if tuple(existing.record_key_fields) != cfg.record_key_fields:
             raise ValueError(
                 f"record key mismatch: table has {existing.record_key_fields}, "
@@ -858,8 +857,11 @@ def commit_instant(
     extra_metadata: dict[str, str] | None = None,
     action: str | None = None,
     instant: str | None = None,
+    table_config=None,
 ) -> str:
-    """Publish one completed instant; returns the commit file path."""
+    """Publish one completed instant; returns the commit file path.
+    ``table_config``: the table's config as the caller loaded it, for
+    the callback-sink lookup (read from storage when not given)."""
     from hudi_rs_spark.write.config import new_instant
 
     instant = instant or cfg.instant
@@ -891,23 +893,18 @@ def commit_instant(
     # commit; O(commits) driver work
     from hudi_rs_spark.write.callbacks import fire
 
-    fire(cfg, instant, action, stats)
+    fire(cfg, instant, action, stats, table_config)
     return path
 
 
 def existing_file_group_ids(cfg: WriteConfig) -> dict[str, list[str]]:
     """partition -> live file group ids (for insert_overwrite_table's
     replacecommit). Empty when the table doesn't exist yet."""
-    base = _base(cfg.path)
-    st = _fs(base, cfg.storage_dict())
-    if not st.isfile(f"{base}/.hoodie/hoodie.properties"):
+    table = existing_table(cfg.path, cfg.storage_dict())
+    if table is None:
         return {}
-    from hudi_rs_spark.sources.hudi import HudiTable
-
     out: dict[str, list[str]] = {}
-    for sl in HudiTable(
-        base, spark=None, listing="direct", storage_options=cfg.storage_dict()
-    ).get_file_slices():
+    for sl in table.get_file_slices():
         out.setdefault(sl.partition_path, []).append(sl.file_id)
     for k in out:
         out[k] = sorted(set(out[k]))
@@ -940,28 +937,27 @@ _IDENTITY_ALIASES: tuple[tuple[tuple[str, ...], object], ...] = (
 )
 
 
-def inherit_table_identity(options: dict) -> dict:
-    """Fill table-identity options absent from ``options`` from the
-    existing table's hoodie.properties. This is what lets a bare
-    ``INSERT INTO <hudi_py view>`` (whose OPTIONS carry only the path)
-    or a minimal ``df.write`` append land on an existing table without
-    restating keys/type/version — the table is authoritative for its
-    own identity, exactly like upsert()'s merged options."""
-    path = _opt(options, "path")
-    if not path:
-        return options
-    base = _base(str(path))
+def storage_options_of(options: dict) -> dict | None:
+    """The write's ``storage.<key>`` options (backend endpoint and
+    credentials) without the prefix; None when there are none."""
     storage = {
         str(k)[len("storage."):]: str(v)
         for k, v in options.items()
         if str(k).lower().startswith("storage.") and str(k)[len("storage."):]
     }
-    st = _fs(base, storage or None)
-    if not st.isfile(f"{base}/.hoodie/hoodie.properties"):
-        return options
-    from hudi_rs_spark.config.table_config import HudiTableConfig
+    return storage or None
 
-    tc = HudiTableConfig.from_base_path(base)
+
+def inherit_table_identity(options: dict, tc) -> dict:
+    """Fill table-identity options absent from ``options`` from the
+    existing table's config ``tc`` (None: no table yet, nothing to
+    fill). This is what lets a bare ``INSERT INTO <hudi_py view>``
+    (whose OPTIONS carry only the path) or a minimal ``df.write`` append
+    land on an existing table without restating keys/type/version — the
+    table is authoritative for its own identity, exactly like upsert()'s
+    merged options."""
+    if tc is None:
+        return options
     lowered = {str(k).lower() for k in options}
     out = dict(options)
     for aliases, getter in _IDENTITY_ALIASES:
@@ -983,7 +979,14 @@ class HudiPyBatchWriter(DataSourceArrowWriter):
     """
 
     def __init__(self, options: dict, schema, overwrite: bool):
-        options = inherit_table_identity(options)
+        # the plan step reads hoodie.properties once; identity, index
+        # flags and the bucket guard all resolve from this one config
+        path = _opt(options, "path")
+        tc = (
+            existing_config(str(path), storage_options_of(options))
+            if path else None
+        )
+        options = inherit_table_identity(options, tc)
         self.cfg = WriteConfig.from_options(options, overwrite=overwrite)
         # executor-side MDT appenders reuse any anchor they find on
         # disk; a failed prior write's never-committed anchor would
@@ -993,22 +996,25 @@ class HudiPyBatchWriter(DataSourceArrowWriter):
         from hudi_rs_spark.write.mdt import purge_uncommitted_mdt_logs
 
         purge_uncommitted_mdt_logs(self.cfg.path)
-        resolve_index_flags(self.cfg)
-        from hudi_rs_spark.write.concurrency import (
-            claim_instant,
-            completed_instant_set,
-        )
+        resolve_index_flags(self.cfg, tc)
+        from hudi_rs_spark.timeline.timeline import Timeline
+        from hudi_rs_spark.write.concurrency import claim_instant
 
         # OCC read point: completed instants visible when this write
-        # planned. upsert() passes the snapshot its tag/index join read
-        # (occ.readpoint) — it predates this __init__; everything that
-        # completes after it is a concurrent writer checked at commit
+        # planned. upsert() passes the timeline of the snapshot its
+        # tag/index join planned from (occ.readpoint) — it predates this
+        # __init__; everything that completes after it is a concurrent
+        # writer checked at commit
         rp = _opt(options, "occ.readpoint")
-        self._read_point = (
-            frozenset(x for x in str(rp).split(",") if x)
-            if rp is not None
-            else completed_instant_set(self.cfg.path, self.cfg.storage_dict())
-        )
+        if rp is not None:
+            self._read_point = frozenset(x for x in str(rp).split(",") if x)
+        elif tc is None:
+            self._read_point = frozenset()
+        else:
+            self._read_point = frozenset(
+                i.timestamp
+                for i in Timeline.load(_base(self.cfg.path), tc).instants
+            )
         self.schema = schema
         if self.cfg.operation == OP_UPSERT and self.cfg.table_type != "MERGE_ON_READ":
             raise ValueError(
@@ -1052,17 +1058,9 @@ class HudiPyBatchWriter(DataSourceArrowWriter):
             # table that breaks the one-group-per-bucket invariant
             from hudi_rs_spark.write.bucket import is_bucket_table
 
-            bucket = self.cfg.index_type == "bucket"
-            if not bucket:
-                try:
-                    from hudi_rs_spark.config.table_config import HudiTableConfig
-
-                    bucket = is_bucket_table(
-                        HudiTableConfig.from_base_path(self.cfg.path).props
-                    )
-                except Exception:
-                    bucket = False  # fresh table / unreadable props
-            if bucket:
+            if self.cfg.index_type == "bucket" or (
+                tc is not None and is_bucket_table(tc.props)
+            ):
                 raise ValueError(
                     "bucket-indexed tables (hoodie.index.type=BUCKET) are "
                     "written through write.upsert — the raw writer cannot "
@@ -1097,7 +1095,10 @@ class HudiPyBatchWriter(DataSourceArrowWriter):
         # on its own, so two processes could both pass the check before
         # either publishes — the second publish would be a silent lost
         # update. Under the lock the loser's check re-lists the timeline
-        # AFTER the winner's commit and fails deterministically.
+        # AFTER the winner's commit and fails deterministically. The
+        # table is loaded ONCE under the lock: the conflict check, the
+        # MDT gate, the identity check, the published schema and the
+        # callback sink all read that one snapshot.
         from hudi_rs_spark.write.concurrency import (
             check_commit_conflicts,
             commit_lock,
@@ -1107,6 +1108,8 @@ class HudiPyBatchWriter(DataSourceArrowWriter):
             OP_INSERT_OVERWRITE, OP_INSERT_OVERWRITE_PARTITION
         )
         with commit_lock(self.cfg):
+            table = existing_table(self.cfg.path, self.cfg.storage_dict())
+            tc = table.config if table is not None else None
             check_commit_conflicts(
                 self.cfg,
                 self._read_point,
@@ -1116,12 +1119,18 @@ class HudiPyBatchWriter(DataSourceArrowWriter):
                 nbcc_log_appends=(
                     self.cfg.concurrency_mode == "nbcc" and not strict
                 ),
+                table=table,
             )
-            emit_mdt = mdt_enabled(self.cfg)
-            init_table(self.cfg)
+            emit_mdt = mdt_enabled(self.cfg, tc)
+            init_table(self.cfg, tc)
             schema_json = data_avro_schema(self.schema, self.cfg.table_name)
             total_writes = sum(int(s.get("numWrites") or 0) for s in stats)
             total_deletes = sum(int(s.get("numDeletes") or 0) for s in stats)
+            sj = (
+                table.schema_json()
+                if table is not None and (total_writes or total_deletes)
+                else None
+            )
             if total_writes == 0 and total_deletes > 0:
                 # delete-only commit: a tombstone frame usually carries
                 # only key (+ partition + precombine) columns —
@@ -1129,12 +1138,6 @@ class HudiPyBatchWriter(DataSourceArrowWriter):
                 # table's latest schema and drop every data column from
                 # later snapshots. Deletes never evolve schema; keep the
                 # table's current one.
-                from hudi_rs_spark.sources.hudi import HudiTable
-
-                sj = HudiTable(
-                    self.cfg.path, spark=None, listing="direct",
-                    storage_options=self.cfg.storage_dict(),
-                ).schema_json()
                 if sj is not None:
                     schema_json = sj
             elif total_writes > 0:
@@ -1149,15 +1152,10 @@ class HudiPyBatchWriter(DataSourceArrowWriter):
                 # schema, and a type-widening upsert (int->long,
                 # float->double) publishes the widened type so old base
                 # files cast up per-epoch on read.
-                from hudi_rs_spark.sources.hudi import HudiTable
                 from hudi_rs_spark.write.schema_evolve import (
                     union_commit_schema,
                 )
 
-                sj = HudiTable(
-                    self.cfg.path, spark=None, listing="direct",
-                    storage_options=self.cfg.storage_dict(),
-                ).schema_json()
                 if sj is not None and isinstance(sj.get("fields"), list):
                     schema_json = union_commit_schema(sj, schema_json)
             replaced = self._replaced
@@ -1175,7 +1173,7 @@ class HudiPyBatchWriter(DataSourceArrowWriter):
                 }
             commit_instant(
                 self.cfg, stats, schema_json,
-                replaced=replaced,
+                replaced=replaced, table_config=tc,
             )
             if emit_mdt:
                 from hudi_rs_spark.write.mdt import apply_commit_to_mdt

@@ -134,6 +134,7 @@ class TestBloomPartitionRoundTrip:
 
 class TestBloomTagPruning:
     def test_index_scan_touches_only_candidates(self, spark, tmp_path):
+        from hudi_rs_spark.sources.hudi import HudiTable
         from hudi_rs_spark.write.config import WriteConfig
         from hudi_rs_spark.write.upsert import (
             _location_index,
@@ -154,10 +155,10 @@ class TestBloomTagPruning:
             _spark_key_expr(cfg.record_key_fields).alias("k"),
             _spark_partition_expr(cfg).alias("p"),
         )
-        index, _versions = _location_index(spark, cfg, keys_df)
+        index, _versions = _location_index(
+            spark, HudiTable(t, spark, listing="direct"), keys_df
+        )
         touched = {os.path.basename(p) for p in index.inputFiles()}
-        from hudi_rs_spark.sources.hudi import HudiTable
-
         all_files = {
             os.path.basename(sl.base_file_relative_path())
             for sl in HudiTable(t, spark=None, listing="direct").get_file_slices()
@@ -169,6 +170,7 @@ class TestBloomTagPruning:
         assert len(hits) == 1
 
     def test_untouched_partition_fully_pruned(self, spark, tmp_path):
+        from hudi_rs_spark.sources.hudi import HudiTable
         from hudi_rs_spark.write.config import WriteConfig
         from hudi_rs_spark.write.upsert import (
             _bloom_candidate_files,
@@ -188,22 +190,25 @@ class TestBloomTagPruning:
             _spark_key_expr(cfg.record_key_fields).alias("k"),
             _spark_partition_expr(cfg).alias("p"),
         )
-        bloom = _bloom_candidate_files(spark, cfg.path, keys_df)
+        bloom = _bloom_candidate_files(
+            spark, HudiTable(t, spark, listing="direct"), keys_df
+        )
         assert bloom is not None
         assert bloom["touched"] == {"part=a"}
         assert all(p == "part=a" for p, _f in bloom["recorded"])
 
     def test_plain_table_returns_none(self, spark, tmp_path):
-        from hudi_rs_spark.write.config import WriteConfig
+        from hudi_rs_spark.sources.hudi import HudiTable
         from hudi_rs_spark.write.upsert import _bloom_candidate_files
 
         t = str(tmp_path / "t")
         opts = {k: v for k, v in BLOOM_OPTS.items()
                 if "bloom" not in k and "metadata" not in k}
         _write(_rows(spark, n=10), t, **opts)
-        cfg = WriteConfig.from_options({"path": t, **opts, "operation": "upsert"})
         keys_df = spark.createDataFrame([("1", "part=a")], "k string, p string")
-        assert _bloom_candidate_files(spark, cfg.path, keys_df) is None
+        assert _bloom_candidate_files(
+            spark, HudiTable(t, spark, listing="direct"), keys_df
+        ) is None
 
 
 class TestBloomUpsertParity:
