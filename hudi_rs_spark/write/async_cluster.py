@@ -61,7 +61,7 @@ import json
 import os
 import uuid
 
-from hudi_rs_spark.write.config import WriteConfig, new_instant
+from hudi_rs_spark.write.config import new_instant, service_config
 
 
 def _plan_marker(tdir: str, instant: str) -> str:
@@ -73,21 +73,6 @@ def _output_file_id(instant: str, rel_dir: str, group_idx: int) -> str:
     write/cluster.py::_cluster_one so the rewrite task and the migration
     agree on the group."""
     return f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{instant}:{rel_dir}:{group_idx}')}-0"
-
-
-def _service_cfg(tc, path: str, instant: str, pinned: bool = True) -> WriteConfig:
-    return WriteConfig(
-        path=path,
-        table_name=tc.table_name,
-        record_key_fields=tuple(tc.record_key_fields) or ("id",),
-        precombine_field=(tc.ordering_fields or [None])[0],
-        partition_fields=tuple(tc.partition_fields),
-        table_type=tc.table_type.value,
-        table_version=tc.table_version,
-        instant=instant,
-        instant_pinned=pinned,
-        operation="cluster",
-    )
 
 
 def schedule_clustering(
@@ -181,7 +166,7 @@ def schedule_clustering(
 
     pinned = instant is not None
     instant = instant or new_instant()
-    cfg = _service_cfg(tc, path, instant, pinned=pinned)
+    cfg = service_config(tc, path, instant, "cluster", pinned)
     tdir = timeline_dir(cfg)
     plan = {
         "instant": instant,
@@ -390,6 +375,7 @@ def _run_one_plan(spark, path, tc, plan_instant: str, plan: dict) -> int:
     from hudi_rs_spark.write.concurrency import (
         ConcurrentWriteError,
         completed_instant_set,
+        publish,
     )
     from hudi_rs_spark.write.record_index import (
         append_record_index_log,
@@ -400,9 +386,9 @@ def _run_one_plan(spark, path, tc, plan_instant: str, plan: dict) -> int:
         shared_scan_context,
         slice_descriptor,
     )
-    from hudi_rs_spark.write.writer import _fs, commit_instant, timeline_dir
+    from hudi_rs_spark.write.writer import _fs, timeline_dir
 
-    cfg = _service_cfg(tc, path, plan_instant)
+    cfg = service_config(tc, path, plan_instant, "cluster", pinned=True)
     out_fids = {
         _output_file_id(plan_instant, g["relDir"], g["groupIdx"])
         for g in plan["groups"]
@@ -631,14 +617,13 @@ def _run_one_plan(spark, path, tc, plan_instant: str, plan: dict) -> int:
                     )
         read_point = new_rp
 
-    commit_instant(
-        cfg, commit_stats, table.schema_json(), replaced=replaced,
-        action="replacecommit", instant=plan_instant,
+    # the locked check closes the window after the last migration pass:
+    # a commit to a planned group landing now conflicts (outputs
+    # reclaimed, plan kept; re-run retries)
+    publish(
+        cfg, commit_stats, table.schema_json(), read_point=read_point,
+        touched=planned_set, replaced=replaced, action="replacecommit",
     )
-    if "files" in meta_parts:
-        from hudi_rs_spark.write.mdt import apply_commit_to_mdt
-
-        apply_commit_to_mdt(cfg, commit_stats)
     try:
         st.remove(_plan_marker(tdir, plan_instant))
     except OSError:

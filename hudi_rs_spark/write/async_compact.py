@@ -61,7 +61,7 @@ def schedule_compaction(
     ``strategy``/``target_io_mb``/``target_partitions`` bound the plan
     per write/compact_strategy.py (Hudi's hoodie.compaction.strategy)."""
     from hudi_rs_spark.sources.hudi import HudiTable
-    from hudi_rs_spark.write.compact import service_config
+    from hudi_rs_spark.write.config import service_config
     from hudi_rs_spark.write.writer import _fs, timeline_dir
 
     table = HudiTable(path, spark=None, listing="direct")
@@ -135,15 +135,16 @@ def run_scheduled_compaction(
     from hudi_rs_spark.fs.file_group import BaseFile, LogFile
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.sources.pyds import HudiPyReader, _as_nullable
-    from hudi_rs_spark.write.compact import _compact_one, service_config
-    from hudi_rs_spark.write.concurrency import check_commit_conflicts
+    from hudi_rs_spark.write.compact import _compact_one
+    from hudi_rs_spark.write.concurrency import publish
+    from hudi_rs_spark.write.config import service_config
     from hudi_rs_spark.write.mdt import purge_uncommitted_mdt_logs
     from hudi_rs_spark.write.worklist import (
         run_slice_tasks,
         shared_scan_context,
         slice_descriptor,
     )
-    from hudi_rs_spark.write.writer import _fs, commit_instant
+    from hudi_rs_spark.write.writer import _fs
 
     purge_uncommitted_mdt_logs(path)
     plans = HudiTable(
@@ -214,14 +215,13 @@ def run_scheduled_compaction(
             desc = slice_descriptor(p)
             desc["log_files"] = keep_logs
             work.append(desc)
+        cfg = service_config(tc, path, plan_instant)
         if not work:
             # every planned group vanished (replaced/cleaned): the plan
             # is moot — resolve the marker so it stops pinning archival
-            cfg = service_config(tc, path, plan_instant)
             _remove_marker(cfg, plan_instant)
             continue
         meta_parts = tc.props.get("hoodie.table.metadata.partitions", "")
-        cfg = service_config(tc, path, plan_instant)
         shared = shared_scan_context(reader.partitions()[0])
         shared.update({
             "path": path, "instant": plan_instant,
@@ -229,28 +229,11 @@ def run_scheduled_compaction(
             "with_bloom": "bloom_filters" in meta_parts,
         })
         stats = run_slice_tasks(spark, work, shared, _compact_one)
-        try:
-            check_commit_conflicts(
-                cfg, read_point,
-                {(s.get("partitionPath", "") or "", s["fileId"]) for s in stats},
-                ignore_log_anchor=plan_instant,
-            )
-        except Exception:
-            st = _fs(path)
-            for s in stats:  # reclaim unpublished rewrites; keep the plan
-                try:
-                    st.remove(f"{path}/{s['path']}")
-                except OSError:
-                    pass
-            raise
-        commit_instant(
-            cfg, stats, table.schema_json(), action="commit",
-            instant=plan_instant, table_config=tc,
+        # on a conflict publish reclaims the rewrites; the plan stays
+        publish(
+            cfg, stats, table.schema_json(), read_point=read_point,
+            ignore_log_anchor=plan_instant, action="commit",
         )
-        if "files" in meta_parts:
-            from hudi_rs_spark.write.mdt import apply_commit_to_mdt
-
-            apply_commit_to_mdt(cfg, stats)
         _remove_marker(cfg, plan_instant)
         n_done += len(work)
     return n_done

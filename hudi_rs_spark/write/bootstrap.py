@@ -182,13 +182,12 @@ def bootstrap_table(
     # ---- metadata_only ------------------------------------------------
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    from hudi_rs_spark.write.concurrency import claim_instant, release_instant
-    from hudi_rs_spark.write.writer import (
-        _fs,
-        commit_instant,
-        data_avro_schema,
-        timeline_dir,
+    from hudi_rs_spark.write.concurrency import (
+        claim_instant,
+        publish,
+        release_instant,
     )
+    from hudi_rs_spark.write.writer import _fs, data_avro_schema, timeline_dir
 
     first_schema = pq.read_schema(os.path.join(source, files[0][1]))
     cols = set(first_schema.names)
@@ -259,7 +258,7 @@ def bootstrap_table(
                 + [T.StructField(f, T.StringType(), True)
                    for f in partition_fields if f not in cols]
             )
-        commit_instant(
+        publish(
             cfg, stats, data_avro_schema(struct, cfg.table_name),
             extra_metadata={"bootstrap.source": os.path.abspath(source),
                             "bootstrap.mode": "METADATA_ONLY"},

@@ -200,13 +200,12 @@ def convert_to_bucket(
     from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.write.concurrency import (
-        check_commit_conflicts,
         claim_instant,
         completed_instant_set,
+        publish,
         release_instant,
     )
-    from hudi_rs_spark.write.config import WriteConfig, new_instant
-    from hudi_rs_spark.write.writer import commit_instant
+    from hudi_rs_spark.write.config import new_instant, service_config
 
     tc = HudiTableConfig.from_base_path(path)
     if is_bucket_table(tc.props):
@@ -227,17 +226,8 @@ def convert_to_bucket(
         raise ValueError("nothing to convert: the table has no file groups")
     for k in replaced:
         replaced[k] = sorted(set(replaced[k]))
-    cfg = WriteConfig(
-        path=path,
-        table_name=tc.table_name,
-        record_key_fields=tuple(tc.record_key_fields) or ("id",),
-        precombine_field=(tc.ordering_fields or [None])[0],
-        partition_fields=tuple(tc.partition_fields),
-        table_type=tc.table_type.value,
-        table_version=tc.table_version,
-        instant=instant or new_instant(),
-        instant_pinned=instant is not None,
-        operation="cluster",
+    cfg = service_config(
+        tc, path, instant or new_instant(), "cluster", instant is not None
     )
     claim_instant(cfg, "replacecommit")
     instant = cfg.instant
@@ -349,21 +339,14 @@ def convert_to_bucket(
             if bf:
                 d["bloomFilter"] = bf
             stats.append(d)
-        check_commit_conflicts(
-            cfg,
-            read_point,
-            {(p, fid) for p, fids in replaced.items() for fid in fids},
+        publish(
+            cfg, stats, schema_json, read_point=read_point,
+            touched={(p, fid) for p, fids in replaced.items() for fid in fids},
+            replaced=replaced, action="replacecommit",
         )
     except Exception:
         release_instant(cfg, "replacecommit")
         raise
-    commit_instant(
-        cfg, stats, schema_json, replaced=replaced, action="replacecommit"
-    )
-    if "files" in meta_parts:
-        from hudi_rs_spark.write.mdt import apply_commit_to_mdt
-
-        apply_commit_to_mdt(cfg, stats)
     from hudi_rs_spark.write.record_index import _local_base, _rewrite_props
 
     def pin_bucket(have: dict) -> dict:
@@ -431,14 +414,13 @@ def split_buckets(
     from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.write.concurrency import (
-        check_commit_conflicts,
         claim_instant,
         completed_instant_set,
+        publish,
         release_instant,
     )
-    from hudi_rs_spark.write.config import WriteConfig, new_instant
+    from hudi_rs_spark.write.config import new_instant, service_config
     from hudi_rs_spark.write.record_index import _local_base, _rewrite_props
-    from hudi_rs_spark.write.writer import commit_instant
 
     tc = HudiTableConfig.from_base_path(path)
     if not is_bucket_table(tc.props):
@@ -490,17 +472,8 @@ def split_buckets(
     for s in parent_slices:
         replaced.setdefault(s.partition_path or "", []).append(s.file_id)
 
-    cfg = WriteConfig(
-        path=path,
-        table_name=tc.table_name,
-        record_key_fields=tuple(tc.record_key_fields) or ("id",),
-        precombine_field=(tc.ordering_fields or [None])[0],
-        partition_fields=tuple(tc.partition_fields),
-        table_type=tc.table_type.value,
-        table_version=tc.table_version,
-        instant=instant or new_instant(),
-        instant_pinned=instant is not None,
-        operation="cluster",
+    cfg = service_config(
+        tc, path, instant or new_instant(), "cluster", instant is not None
     )
     new_splits = splits | set(norm_leaves)
     if not parent_slices:
@@ -629,21 +602,14 @@ def split_buckets(
             if bf:
                 d["bloomFilter"] = bf
             stats.append(d)
-        check_commit_conflicts(
-            cfg,
-            read_point,
-            {(p, fid) for p, fids in replaced.items() for fid in fids},
+        publish(
+            cfg, stats, schema_json, read_point=read_point,
+            touched={(p, fid) for p, fids in replaced.items() for fid in fids},
+            replaced=replaced, action="replacecommit",
         )
     except Exception:
         release_instant(cfg, "replacecommit")
         raise
-    commit_instant(
-        cfg, stats, schema_json, replaced=replaced, action="replacecommit"
-    )
-    if "files" in meta_parts:
-        from hudi_rs_spark.write.mdt import apply_commit_to_mdt
-
-        apply_commit_to_mdt(cfg, stats)
 
     def pin_split(have: dict) -> dict:
         have[SPLITS_PROP] = splits_str(new_splits)
@@ -682,14 +648,13 @@ def merge_buckets(
     from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.write.concurrency import (
-        check_commit_conflicts,
         claim_instant,
         completed_instant_set,
+        publish,
         release_instant,
     )
-    from hudi_rs_spark.write.config import WriteConfig, new_instant
+    from hudi_rs_spark.write.config import new_instant, service_config
     from hudi_rs_spark.write.record_index import _local_base, _rewrite_props
-    from hudi_rs_spark.write.writer import commit_instant
 
     tc = HudiTableConfig.from_base_path(path)
     if not is_bucket_table(tc.props):
@@ -719,17 +684,8 @@ def merge_buckets(
     for s in child_slices:
         replaced.setdefault(s.partition_path or "", []).append(s.file_id)
     new_splits = splits - {(bucket, modulus)}
-    cfg = WriteConfig(
-        path=path,
-        table_name=tc.table_name,
-        record_key_fields=tuple(tc.record_key_fields) or ("id",),
-        precombine_field=(tc.ordering_fields or [None])[0],
-        partition_fields=tuple(tc.partition_fields),
-        table_type=tc.table_type.value,
-        table_version=tc.table_version,
-        instant=instant or new_instant(),
-        instant_pinned=instant is not None,
-        operation="cluster",
+    cfg = service_config(
+        tc, path, instant or new_instant(), "cluster", instant is not None
     )
     if not child_slices:
 
@@ -834,21 +790,14 @@ def merge_buckets(
             if bf:
                 d["bloomFilter"] = bf
             stats.append(d)
-        check_commit_conflicts(
-            cfg,
-            read_point,
-            {(p, fid) for p, fids in replaced.items() for fid in fids},
+        publish(
+            cfg, stats, schema_json, read_point=read_point,
+            touched={(p, fid) for p, fids in replaced.items() for fid in fids},
+            replaced=replaced, action="replacecommit",
         )
     except Exception:
         release_instant(cfg, "replacecommit")
         raise
-    commit_instant(
-        cfg, stats, schema_json, replaced=replaced, action="replacecommit"
-    )
-    if "files" in meta_parts:
-        from hudi_rs_spark.write.mdt import apply_commit_to_mdt
-
-        apply_commit_to_mdt(cfg, stats)
 
     def unpin_split(have: dict) -> dict:
         have[SPLITS_PROP] = splits_str(new_splits)

@@ -50,7 +50,7 @@ from __future__ import annotations
 import json
 import os
 
-from hudi_rs_spark.write.config import WriteConfig, new_instant
+from hudi_rs_spark.write.config import new_instant, service_config
 
 POLICY_COMMITS = "KEEP_LATEST_COMMITS"
 POLICY_VERSIONS = "KEEP_LATEST_FILE_VERSIONS"
@@ -250,17 +250,7 @@ def clean(
 
     config = HudiTableConfig.from_base_path(path)
     instant = instant or new_instant()
-    cfg = WriteConfig(
-        path=path,
-        table_name=config.table_name,
-        record_key_fields=tuple(config.record_key_fields) or ("id",),
-        precombine_field=(config.ordering_fields or [None])[0],
-        partition_fields=tuple(config.partition_fields),
-        table_type=config.table_type.value,
-        table_version=config.table_version,
-        instant=instant,
-        operation="clean",
-    )
+    cfg = service_config(config, path, instant, "clean")
     # .clean instant: earliestCommitToRetain + per-partition deletions
     # (the readers' timeline parser skips the action; this is operator
     # metadata, mirroring Hudi's HoodieCleanMetadata essentials)

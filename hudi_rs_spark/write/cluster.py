@@ -35,7 +35,7 @@ import os
 
 import pyarrow as pa
 
-from hudi_rs_spark.write.config import WriteConfig, new_instant
+from hudi_rs_spark.write.config import new_instant, service_config
 
 
 def _slice_identity(base_path: str, p) -> tuple[str, str]:
@@ -189,7 +189,6 @@ def cluster(
     from hudi_rs_spark.util import split_into_chunks
     from hudi_rs_spark.write.layout import LAYOUTS
     from hudi_rs_spark.write.mdt import purge_uncommitted_mdt_logs
-    from hudi_rs_spark.write.writer import commit_instant
 
     if layout not in LAYOUTS:
         raise ValueError(f"unknown layout {layout!r}: expected one of {LAYOUTS}")
@@ -199,8 +198,11 @@ def cluster(
     # commit landing on a group while we rewrite it would vanish from
     # the clustered snapshot — conflict instead)
     from hudi_rs_spark.write.concurrency import (
-        check_commit_conflicts,
+        ConcurrentWriteError,
+        claim_instant,
         completed_instant_set,
+        publish,
+        release_instant,
     )
 
     read_point = completed_instant_set(path)
@@ -288,19 +290,7 @@ def cluster(
     if not work:
         return 0
 
-    cfg = WriteConfig(
-        path=path,
-        table_name=tc.table_name,
-        record_key_fields=tuple(tc.record_key_fields) or ("id",),
-        precombine_field=(tc.ordering_fields or [None])[0],
-        partition_fields=tuple(tc.partition_fields),
-        table_type=tc.table_type.value,
-        table_version=tc.table_version,
-        instant=instant,
-        operation="cluster",
-    )
-    from hudi_rs_spark.write.concurrency import claim_instant, release_instant
-
+    cfg = service_config(tc, path, instant, "cluster")
     claim_instant(cfg, "replacecommit")
     instant = cfg.instant  # claim may regenerate on a timestamp collision
     from hudi_rs_spark.write.worklist import run_slice_tasks, shared_scan_context
@@ -315,32 +305,16 @@ def cluster(
         "index_shards": index_shards,
     })
     stats = run_slice_tasks(spark, work, shared, _cluster_one)
-    # conflict check BEFORE publishing: the REPLACED (source) groups are
-    # what a concurrent commit can invalidate — the new fids are fresh
+    # the REPLACED (source) groups are what a concurrent commit can
+    # invalidate — the new fids are fresh
     try:
-        check_commit_conflicts(
-            cfg, read_point,
-            {(p, fid) for p, fids in replaced.items() for fid in fids},
+        publish(
+            cfg, stats, table.schema_json(), read_point=read_point,
+            touched={(p, fid) for p, fids in replaced.items() for fid in fids},
+            replaced=replaced, action="replacecommit",
         )
-    except Exception:
-        from hudi_rs_spark.write.writer import _fs as _fs_cc
-
-        st_cc = _fs_cc(path)
-        for s in stats:  # reclaim the unpublished rewrites
-            try:
-                st_cc.remove(f"{path}/{s['path']}")
-            except OSError:
-                pass
+    except ConcurrentWriteError:
         release_instant(cfg, "replacecommit")
         raise
-    commit_instant(
-        cfg, stats, table.schema_json(), replaced=replaced,
-        action="replacecommit", instant=instant,
-    )
-    meta_parts = tc.props.get("hoodie.table.metadata.partitions", "")
-    if "files" in meta_parts:
-        from hudi_rs_spark.write.mdt import apply_commit_to_mdt
-
-        apply_commit_to_mdt(cfg, stats)
     release_instant(cfg, "replacecommit")
     return sum(len(v) for v in replaced.values())

@@ -30,7 +30,7 @@ import os
 
 import pyarrow as pa
 
-from hudi_rs_spark.write.config import WriteConfig, new_instant
+from hudi_rs_spark.write.config import new_instant, service_config
 
 
 def _compact_one(desc: dict, shared: dict) -> dict:
@@ -114,22 +114,6 @@ def _compact_one(desc: dict, shared: dict) -> dict:
     return stat
 
 
-def service_config(tc, path: str, instant: str) -> WriteConfig:
-    """The WriteConfig a compaction commit at ``instant`` publishes
-    with, from the table's loaded config ``tc``."""
-    return WriteConfig(
-        path=path,
-        table_name=tc.table_name,
-        record_key_fields=tuple(tc.record_key_fields) or ("id",),
-        precombine_field=(tc.ordering_fields or [None])[0],
-        partition_fields=tuple(tc.partition_fields),
-        table_type=tc.table_type.value,
-        table_version=tc.table_version,
-        instant=instant,
-        operation="compact",
-    )
-
-
 def compact(
     spark,
     path: str,
@@ -148,9 +132,13 @@ def compact(
     dirty slice."""
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.sources.pyds import HudiPyReader, _as_nullable
-    from hudi_rs_spark.write.concurrency import check_commit_conflicts
+    from hudi_rs_spark.write.concurrency import (
+        ConcurrentWriteError,
+        claim_instant,
+        publish,
+        release_instant,
+    )
     from hudi_rs_spark.write.mdt import purge_uncommitted_mdt_logs
-    from hudi_rs_spark.write.writer import commit_instant
 
     purge_uncommitted_mdt_logs(path)  # never reuse a poisoned anchor
     # ONE planning snapshot: slices, schema, the service config and the
@@ -197,8 +185,6 @@ def compact(
     cfg = service_config(tc, path, instant)
     # claim the compaction instant before any task writes (services take
     # the same collision-detection path as the batch writer)
-    from hudi_rs_spark.write.concurrency import claim_instant, release_instant
-
     claim_instant(cfg, "commit")
     instant = cfg.instant  # claim may regenerate on a timestamp collision
     from hudi_rs_spark.write.worklist import (
@@ -215,31 +201,15 @@ def compact(
     stats = run_slice_tasks(
         spark, [slice_descriptor(p) for p in dirty], shared, _compact_one
     )
-    # conflict check BEFORE publishing: the compacted file groups must
-    # not have been touched by a commit that completed since planning
+    # the compacted file groups must not have been touched by a commit
+    # that completed since planning
     try:
-        check_commit_conflicts(
-            cfg, read_point,
-            {(s.get("partitionPath", "") or "", s["fileId"]) for s in stats},
+        publish(
+            cfg, stats, table.schema_json(), read_point=read_point,
+            action="commit",
         )
-    except Exception:
-        from hudi_rs_spark.write.writer import _fs as _fs_cc
-
-        st_cc = _fs_cc(path)
-        for s in stats:  # reclaim the unpublished new bases
-            try:
-                st_cc.remove(f"{path}/{s['path']}")
-            except OSError:
-                pass
+    except ConcurrentWriteError:
         release_instant(cfg, "commit")
         raise
-    commit_instant(
-        cfg, stats, table.schema_json(), action="commit", instant=instant,
-        table_config=tc,
-    )
-    if "files" in meta_parts:
-        from hudi_rs_spark.write.mdt import apply_commit_to_mdt
-
-        apply_commit_to_mdt(cfg, stats)
     release_instant(cfg, "commit")
     return len(dirty)

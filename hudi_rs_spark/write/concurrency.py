@@ -25,6 +25,14 @@ optional external lock service; this module is the same design:
   best-effort, so production multi-writer there should inject a real
   provider (DynamoDB/ZooKeeper-backed) — exactly Hudi's own guidance
   for ``hoodie.write.lock.provider``.
+- ``publish`` is the one way any committer (the batch and streaming
+  writers, compaction, clustering, the bucket services, drop-partition
+  and truncate, schema DDL, bootstrap) completes a data-timeline
+  instant: under ``commit_lock`` it loads the table, runs
+  ``check_commit_conflicts`` against the caller's read point, removes
+  the commit's files on a conflict, publishes, and applies the MDT.
+  Because the check and the publish hold one lock, no commit can land
+  between them.
 
 The streaming sink does NOT call ``claim_instant``: its per-(query,
 batch) instant sidecar is already an atomic create-if-absent claim, and
@@ -169,12 +177,12 @@ def completed_instant_set(path: str, options: dict | None = None) -> frozenset[s
 
 def check_commit_conflicts(
     cfg,
+    table,
     read_point: frozenset[str],
     touched: set[tuple[str, str]],
     strict: bool = False,
     ignore_log_anchor: str | None = None,
     nbcc_log_appends: bool = False,
-    table=None,
 ) -> None:
     """Hudi-style optimistic concurrency control, run at COMMIT time
     (after this writer's tasks finished, before its instant publishes):
@@ -189,17 +197,10 @@ def check_commit_conflicts(
     data commit conflicts — a replacecommit planned before the other
     write landed cannot exclude file groups it never saw.
 
-    ``table``: the table as the caller loaded it under its commit lock;
-    loaded here when not given.
+    ``table``: the table as ``publish`` loaded it under the commit lock.
 
     Preserves the linearized-timeline assumption the readers' merge
     semantics rely on (reference merge/record_merger.rs:89-187)."""
-    if table is None:
-        from hudi_rs_spark.write.writer import existing_table
-
-        table = existing_table(cfg.path, cfg.storage_dict())
-        if table is None:
-            return  # first write to a fresh table: nothing completed yet
     timeline = table.timeline
     # "self" is identified by (timestamp, action), not bare timestamp:
     # claim_unique_timestamp makes cross-action timestamp collisions
@@ -392,7 +393,8 @@ class StorageLockProvider(LockProvider):
 def commit_lock(cfg) -> LockProvider:
     """Table-level lock guarding the OCC critical section (conflict
     check -> publish -> MDT apply) — Hudi's TransactionManager around
-    ``commitStats``. Without it two writers can BOTH pass the conflict
+    ``commitStats``. Every committer publishes through ``publish``, the
+    lock's one holder. Without it two writers can BOTH pass the conflict
     check before EITHER publishes (check-then-publish is not atomic),
     and the second publish is a silent lost update. Cost: one
     conditional create + one delete per commit — metadata-scale at any
@@ -402,3 +404,83 @@ def commit_lock(cfg) -> LockProvider:
     return StorageLockProvider(
         cfg.path, "commit", cfg.storage_dict(), stale_s=600.0
     )
+
+
+# ---------------------------------------------------------------------------
+# the one publish path
+# ---------------------------------------------------------------------------
+def publish(
+    cfg,
+    stats: list[dict],
+    schema_json,
+    *,
+    read_point: frozenset[str] | None = None,
+    touched: set[tuple[str, str]] | None = None,
+    strict: bool = False,
+    ignore_log_anchor: str | None = None,
+    nbcc_log_appends: bool = False,
+    replaced: dict[str, list[str]] | None = None,
+    extra_metadata: dict[str, str] | None = None,
+    action: str | None = None,
+) -> str:
+    """Publish one data-timeline instant at ``cfg.instant``; every
+    committer (writers, services, DDL/DML) goes through here. Under the
+    table commit lock, in order:
+
+    1. load the table once;
+    2. when the caller has a ``read_point``, ``check_commit_conflicts``
+       over ``touched`` (default: the file groups ``stats`` wrote);
+    3. on a conflict, remove ``stats``' unpublished files and re-raise;
+    4. ``commit_instant`` (``action`` defaults to ``cfg.action``);
+    5. record ``stats`` in the MDT when the table keeps one.
+
+    ``schema_json`` may be a function of the locked table (None before
+    the table exists). Claim and plan markers stay with the caller, which
+    releases them after this returns or raises. Returns the commit file
+    path."""
+    from hudi_rs_spark.write.writer import (
+        _base,
+        _fs,
+        commit_instant,
+        existing_table,
+        mdt_enabled,
+    )
+
+    with commit_lock(cfg):
+        table = existing_table(cfg.path, cfg.storage_dict())
+        tc = table.config if table is not None else None
+        # a table that does not exist yet has no completed instant
+        if read_point is not None and table is not None:
+            if touched is None:
+                touched = {
+                    (s.get("partitionPath", "") or "", s["fileId"])
+                    for s in stats
+                }
+            try:
+                check_commit_conflicts(
+                    cfg, table, read_point, touched,
+                    strict=strict,
+                    ignore_log_anchor=ignore_log_anchor,
+                    nbcc_log_appends=nbcc_log_appends,
+                )
+            except ConcurrentWriteError:
+                # with no commit naming them, nothing else reclaims them
+                base = _base(cfg.path)
+                st = _fs(base, cfg.storage_dict())
+                for s in stats:
+                    try:
+                        st.remove(f"{base}/{s['path']}")
+                    except OSError:
+                        pass
+                raise
+        if callable(schema_json):
+            schema_json = schema_json(table)
+        path = commit_instant(
+            cfg, stats, schema_json, replaced=replaced,
+            extra_metadata=extra_metadata, action=action, table_config=tc,
+        )
+        if stats and mdt_enabled(cfg, tc):
+            from hudi_rs_spark.write.mdt import apply_commit_to_mdt
+
+            apply_commit_to_mdt(cfg, stats)
+    return path

@@ -583,3 +583,28 @@ class WriteConfig:
                 )
             ),
         )
+
+
+def service_config(
+    tc,
+    path: str,
+    instant: str,
+    operation: str = "compact",
+    pinned: bool = False,
+) -> WriteConfig:
+    """The WriteConfig a table service or metadata-only commit at
+    ``instant`` runs with, from the table's loaded config ``tc``.
+    ``pinned``: the caller chose ``instant``, so a claim fails on a
+    timestamp collision instead of regenerating it."""
+    return WriteConfig(
+        path=path,
+        table_name=tc.table_name,
+        record_key_fields=tuple(tc.record_key_fields) or ("id",),
+        precombine_field=(tc.ordering_fields or [None])[0],
+        partition_fields=tuple(tc.partition_fields),
+        table_type=tc.table_type.value,
+        table_version=tc.table_version,
+        instant=instant,
+        instant_pinned=pinned,
+        operation=operation,
+    )

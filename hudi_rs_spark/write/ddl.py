@@ -31,25 +31,20 @@ class DdlError(ValueError):
 def _schema_commit(path: str, schema_json: dict, instant: str | None) -> None:
     """Publish one empty commit whose only payload is the new schema."""
     from hudi_rs_spark.config.table_config import HudiTableConfig
-    from hudi_rs_spark.write.concurrency import claim_instant, release_instant
-    from hudi_rs_spark.write.config import WriteConfig, new_instant
-    from hudi_rs_spark.write.writer import commit_instant
+    from hudi_rs_spark.write.concurrency import (
+        claim_instant,
+        publish,
+        release_instant,
+    )
+    from hudi_rs_spark.write.config import new_instant, service_config
 
-    tc = HudiTableConfig.from_base_path(path)
-    cfg = WriteConfig(
-        path=path,
-        table_name=tc.table_name,
-        record_key_fields=tuple(tc.record_key_fields) or ("id",),
-        partition_fields=tuple(tc.partition_fields),
-        table_type=tc.table_type.value,
-        table_version=tc.table_version,
-        instant=instant or new_instant(),
-        instant_pinned=instant is not None,
-        operation="alter_schema",
+    cfg = service_config(
+        HudiTableConfig.from_base_path(path), path,
+        instant or new_instant(), "alter_schema", instant is not None,
     )
     claim_instant(cfg)
     try:
-        commit_instant(cfg, [], schema_json)
+        publish(cfg, [], schema_json)
     finally:
         release_instant(cfg)
 

@@ -95,61 +95,10 @@ def delete_partitions(path: str, partitions, instant: str | None = None) -> int:
     (no bytes were written); ``read_changes_derived`` — the
     before/after snapshot diff — reports the dropped rows as deletes.
     """
-    from hudi_rs_spark.config.table_config import HudiTableConfig
-    from hudi_rs_spark.sources.hudi import HudiTable
-    from hudi_rs_spark.write.concurrency import (
-        check_commit_conflicts,
-        claim_instant,
-        completed_instant_set,
-        release_instant,
-    )
-    from hudi_rs_spark.write.config import WriteConfig, new_instant
-    from hudi_rs_spark.write.writer import commit_instant
-
     wanted = {str(p).strip("/") for p in partitions}
     if not wanted:
         return 0
-    read_point = completed_instant_set(path)
-    tc = HudiTableConfig.from_base_path(path)
-    table = HudiTable(path, spark=None, listing="direct")
-    replaced: dict[str, list[str]] = {}
-    for sl in table.get_file_slices():
-        part = (sl.partition_path or "").strip("/")
-        if part in wanted:
-            replaced.setdefault(part, []).append(sl.file_id)
-    if not replaced:
-        return 0
-    for k in replaced:
-        replaced[k] = sorted(set(replaced[k]))
-    cfg = WriteConfig(
-        path=path,
-        table_name=tc.table_name,
-        record_key_fields=tuple(tc.record_key_fields) or ("id",),
-        partition_fields=tuple(tc.partition_fields),
-        table_type=tc.table_type.value,
-        table_version=tc.table_version,
-        instant=instant or new_instant(),
-        instant_pinned=instant is not None,
-        operation="delete_partition",
-    )
-    claim_instant(cfg, "replacecommit")
-    try:
-        # a commit landing on a dropped group since our listing would be
-        # silently erased by this replacecommit — conflict instead
-        check_commit_conflicts(
-            cfg,
-            read_point,
-            {(p, fid) for p, fids in replaced.items() for fid in fids},
-        )
-    except Exception:
-        release_instant(cfg, "replacecommit")
-        raise
-    commit_instant(
-        cfg, [], table.schema_json(), replaced=replaced,
-        action="replacecommit",
-    )
-    release_instant(cfg, "replacecommit")
-    return sum(len(v) for v in replaced.values())
+    return _drop_file_groups(path, instant, wanted)
 
 
 def truncate_table(path: str, instant: str | None = None) -> int:
@@ -159,50 +108,50 @@ def truncate_table(path: str, instant: str | None = None) -> int:
     before the truncate intact, the table identity/schema/properties
     untouched so the next write starts clean. Returns the number of
     file groups dropped."""
-    from hudi_rs_spark.config.table_config import HudiTableConfig
+    return _drop_file_groups(path, instant)
+
+
+def _drop_file_groups(
+    path: str, instant: str | None, wanted: set[str] | None = None
+) -> int:
+    """Publish ONE metadata-only replacecommit naming every live file
+    group of the ``wanted`` relative partition paths (all partitions
+    when None); returns the number of groups named (0 = none live, no
+    instant published)."""
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.write.concurrency import (
-        check_commit_conflicts,
+        ConcurrentWriteError,
         claim_instant,
-        completed_instant_set,
+        publish,
         release_instant,
     )
-    from hudi_rs_spark.write.config import WriteConfig, new_instant
-    from hudi_rs_spark.write.writer import commit_instant
+    from hudi_rs_spark.write.config import new_instant, service_config
 
-    read_point = completed_instant_set(path)
-    tc = HudiTableConfig.from_base_path(path)
     table = HudiTable(path, spark=None, listing="direct")
+    read_point = frozenset(i.timestamp for i in table.timeline.instants)
     replaced: dict[str, list[str]] = {}
     for sl in table.get_file_slices():
-        replaced.setdefault(sl.partition_path or "", []).append(sl.file_id)
+        part = (sl.partition_path or "").strip("/")
+        if wanted is None or part in wanted:
+            replaced.setdefault(part, []).append(sl.file_id)
     if not replaced:
         return 0
     for k in replaced:
         replaced[k] = sorted(set(replaced[k]))
-    cfg = WriteConfig(
-        path=path,
-        table_name=tc.table_name,
-        record_key_fields=tuple(tc.record_key_fields) or ("id",),
-        partition_fields=tuple(tc.partition_fields),
-        table_type=tc.table_type.value,
-        table_version=tc.table_version,
-        instant=instant or new_instant(),
-        instant_pinned=instant is not None,
-        operation="delete_partition",
+    cfg = service_config(
+        table.config, path, instant or new_instant(), "delete_partition",
+        instant is not None,
     )
     claim_instant(cfg, "replacecommit")
     try:
-        check_commit_conflicts(
-            cfg,
-            read_point,
-            {(p, fid) for p, fids in replaced.items() for fid in fids},
+        # a commit landing on a dropped group since our listing would be
+        # silently erased by this replacecommit — conflict instead
+        publish(
+            cfg, [], table.schema_json(), read_point=read_point,
+            touched={(p, fid) for p, fids in replaced.items() for fid in fids},
+            replaced=replaced, action="replacecommit",
         )
-        commit_instant(
-            cfg, [], table.schema_json(), replaced=replaced,
-            action="replacecommit",
-        )
-    except Exception:
+    except ConcurrentWriteError:
         release_instant(cfg, "replacecommit")
         raise
     release_instant(cfg, "replacecommit")

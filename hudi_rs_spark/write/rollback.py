@@ -33,7 +33,7 @@ from __future__ import annotations
 import json
 import os
 
-from hudi_rs_spark.write.config import WriteConfig, new_instant
+from hudi_rs_spark.write.config import new_instant, service_config
 
 
 def _cdc_instant(name: str) -> str | None:
@@ -159,15 +159,7 @@ def rollback_failed_writes(path: str, instant: str | None = None) -> list[str]:
 
     config = HudiTableConfig.from_base_path(path)
     tdir_probe = timeline_dir(
-        WriteConfig(
-            path=path, table_name=config.table_name,
-            record_key_fields=tuple(config.record_key_fields) or ("id",),
-            precombine_field=(config.ordering_fields or [None])[0],
-            partition_fields=tuple(config.partition_fields),
-            table_type=config.table_type.value,
-            table_version=config.table_version,
-            instant=instant or new_instant(), operation="rollback",
-        )
+        service_config(config, path, instant or new_instant(), "rollback")
     )
     completed_now = {i.timestamp for i in timeline.instants}
     for e in st.list_dir(tdir_probe):

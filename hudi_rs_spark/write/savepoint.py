@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import json
 
-from hudi_rs_spark.write.config import WriteConfig, new_instant
+from hudi_rs_spark.write.config import WriteConfig, new_instant, service_config
 
 SAVEPOINT_ACTION = "savepoint"
 
@@ -34,14 +34,8 @@ SAVEPOINT_ACTION = "savepoint"
 def _cfg_for(path: str, operation: str) -> WriteConfig:
     from hudi_rs_spark.config.table_config import HudiTableConfig
 
-    tc = HudiTableConfig.from_base_path(path)
-    return WriteConfig(
-        path=path, table_name=tc.table_name,
-        record_key_fields=tuple(tc.record_key_fields) or ("id",),
-        precombine_field=(tc.ordering_fields or [None])[0],
-        partition_fields=tuple(tc.partition_fields),
-        table_type=tc.table_type.value, table_version=tc.table_version,
-        instant=new_instant(), operation=operation,
+    return service_config(
+        HudiTableConfig.from_base_path(path), path, new_instant(), operation
     )
 
 

@@ -40,11 +40,9 @@ from hudi_rs_spark.write.writer import (
     HudiWriteMessage,
     _fs,
     _local,
-    commit_instant,
     data_avro_schema,
     existing_config,
     init_table,
-    mdt_enabled,
     resolve_index_flags,
     timeline_dir,
     write_task,
@@ -257,20 +255,16 @@ class HudiPyStreamWriter(DataSourceStreamArrowWriter):
                 except OSError:
                     pass
             return
-        emit_mdt = mdt_enabled(cfg, tc)
-        commit_instant(
+        from hudi_rs_spark.write.concurrency import publish
+
+        publish(
             cfg, stats,
             data_avro_schema(self.schema, cfg.table_name),
             extra_metadata={
                 BATCH_ID_KEY: str(batchId),
                 QUERY_ID_KEY: self.query_key,
             },
-            table_config=tc,
         )
-        if emit_mdt:
-            from hudi_rs_spark.write.mdt import apply_commit_to_mdt
-
-            apply_commit_to_mdt(cfg, stats)
         # a per-micro-batch committer is exactly the writer that grows
         # timelines without bound — inline maintenance keeps the active
         # dir and MDT chains bounded without operator action

@@ -856,15 +856,16 @@ def commit_instant(
     replaced: dict[str, list[str]] | None = None,
     extra_metadata: dict[str, str] | None = None,
     action: str | None = None,
-    instant: str | None = None,
     table_config=None,
 ) -> str:
-    """Publish one completed instant; returns the commit file path.
-    ``table_config``: the table's config as the caller loaded it, for
-    the callback-sink lookup (read from storage when not given)."""
+    """Write the completed-instant file for ``cfg.instant``; returns its
+    path. Committers go through ``concurrency.publish``, which calls
+    this under the commit lock. ``table_config``: the table's config as
+    the caller loaded it, for the callback-sink lookup (read from
+    storage when not given)."""
     from hudi_rs_spark.write.config import new_instant
 
-    instant = instant or cfg.instant
+    instant = cfg.instant
     action = action or cfg.action
     by_partition: dict[str, list[dict]] = {}
     for s in stats:
@@ -1085,102 +1086,76 @@ class HudiPyBatchWriter(DataSourceArrowWriter):
     def write(self, iterator):
         return write_task(self.cfg, iterator)
 
+    def _commit_schema(self, table, stats) -> dict:
+        """Under the commit lock, with the table as ``publish`` loaded it
+        (None before it exists): create or identity-check the table, then
+        resolve the schema this commit publishes."""
+        tc = table.config if table is not None else None
+        init_table(self.cfg, tc)
+        schema_json = data_avro_schema(self.schema, self.cfg.table_name)
+        total_writes = sum(int(s.get("numWrites") or 0) for s in stats)
+        total_deletes = sum(int(s.get("numDeletes") or 0) for s in stats)
+        sj = (
+            table.schema_json()
+            if table is not None and (total_writes or total_deletes)
+            else None
+        )
+        if total_writes == 0 and total_deletes > 0:
+            # delete-only commit: a tombstone frame usually carries only
+            # key (+ partition + precombine) columns — publishing THAT
+            # as the commit schema would narrow the table's latest
+            # schema and drop every data column from later snapshots.
+            # Deletes never evolve schema; keep the table's current one.
+            if sj is not None:
+                schema_json = sj
+        elif total_writes > 0:
+            # commit-schema union for EVERY write on an existing table:
+            # table columns first (order authoritative), each published
+            # at the WIDEST of (table, frame) type along the avro
+            # promotion lattice (resolver.rs:41-114 + schema.rs:63-150
+            # widening rules); frame-only columns append (add-column
+            # evolution). A sparse frame — partial-update upserts carry
+            # only the columns they change — can therefore never NARROW
+            # the published schema, and a type-widening upsert
+            # (int->long, float->double) publishes the widened type so
+            # old base files cast up per-epoch on read.
+            from hudi_rs_spark.write.schema_evolve import union_commit_schema
+
+            if sj is not None and isinstance(sj.get("fields"), list):
+                schema_json = union_commit_schema(sj, schema_json)
+        return schema_json
+
     def commit(self, messages):
         stats = [s for m in messages if m is not None for s in m.stats]
-        # OCC: fail BEFORE publishing if a concurrent writer completed an
-        # overlapping commit since our read point (write/concurrency.py);
-        # Spark then calls abort(), which reclaims this write's files.
-        # The check and the publish run under the table COMMIT LOCK
-        # (Hudi's TransactionManager): check-then-publish is not atomic
-        # on its own, so two processes could both pass the check before
-        # either publishes — the second publish would be a silent lost
-        # update. Under the lock the loser's check re-lists the timeline
-        # AFTER the winner's commit and fails deterministically. The
-        # table is loaded ONCE under the lock: the conflict check, the
-        # MDT gate, the identity check, the published schema and the
-        # callback sink all read that one snapshot.
-        from hudi_rs_spark.write.concurrency import (
-            check_commit_conflicts,
-            commit_lock,
-        )
+        # OCC: the locked conflict check fails BEFORE publishing if a
+        # concurrent writer completed an overlapping commit since our
+        # read point (write/concurrency.py::publish); Spark then calls
+        # abort(), which releases the claim and the MDT logs.
+        from hudi_rs_spark.write.concurrency import publish, release_instant
 
         strict = self.cfg.operation in (
             OP_INSERT_OVERWRITE, OP_INSERT_OVERWRITE_PARTITION
         )
-        with commit_lock(self.cfg):
-            table = existing_table(self.cfg.path, self.cfg.storage_dict())
-            tc = table.config if table is not None else None
-            check_commit_conflicts(
-                self.cfg,
-                self._read_point,
-                {(s.get("partitionPath", "") or "", s["fileId"])
-                 for s in stats},
-                strict=strict,
-                nbcc_log_appends=(
-                    self.cfg.concurrency_mode == "nbcc" and not strict
-                ),
-                table=table,
-            )
-            emit_mdt = mdt_enabled(self.cfg, tc)
-            init_table(self.cfg, tc)
-            schema_json = data_avro_schema(self.schema, self.cfg.table_name)
-            total_writes = sum(int(s.get("numWrites") or 0) for s in stats)
-            total_deletes = sum(int(s.get("numDeletes") or 0) for s in stats)
-            sj = (
-                table.schema_json()
-                if table is not None and (total_writes or total_deletes)
-                else None
-            )
-            if total_writes == 0 and total_deletes > 0:
-                # delete-only commit: a tombstone frame usually carries
-                # only key (+ partition + precombine) columns —
-                # publishing THAT as the commit schema would narrow the
-                # table's latest schema and drop every data column from
-                # later snapshots. Deletes never evolve schema; keep the
-                # table's current one.
-                if sj is not None:
-                    schema_json = sj
-            elif total_writes > 0:
-                # commit-schema union for EVERY write on an existing
-                # table: table columns first (order authoritative), each
-                # published at the WIDEST of (table, frame) type along
-                # the avro promotion lattice (resolver.rs:41-114 +
-                # schema.rs:63-150 widening rules); frame-only columns
-                # append (add-column evolution). A sparse frame —
-                # partial-update upserts carry only the columns they
-                # change — can therefore never NARROW the published
-                # schema, and a type-widening upsert (int->long,
-                # float->double) publishes the widened type so old base
-                # files cast up per-epoch on read.
-                from hudi_rs_spark.write.schema_evolve import (
-                    union_commit_schema,
-                )
-
-                if sj is not None and isinstance(sj.get("fields"), list):
-                    schema_json = union_commit_schema(sj, schema_json)
-            replaced = self._replaced
-            if (
-                replaced is not None
-                and self.cfg.operation == OP_INSERT_OVERWRITE_PARTITION
-            ):
-                # dynamic overwrite: only partitions this write actually
-                # touched lose their prior file groups; untouched
-                # partitions keep theirs (insert_overwrite_table
-                # replaces everything)
-                touched = {s.get("partitionPath", "") or "" for s in stats}
-                replaced = {
-                    p: v for p, v in replaced.items() if p in touched
-                }
-            commit_instant(
-                self.cfg, stats, schema_json,
-                replaced=replaced, table_config=tc,
-            )
-            if emit_mdt:
-                from hudi_rs_spark.write.mdt import apply_commit_to_mdt
-
-                apply_commit_to_mdt(self.cfg, stats)
-        from hudi_rs_spark.write.concurrency import release_instant
-
+        replaced = self._replaced
+        if (
+            replaced is not None
+            and self.cfg.operation == OP_INSERT_OVERWRITE_PARTITION
+        ):
+            # dynamic overwrite: only partitions this write actually
+            # touched lose their prior file groups; untouched
+            # partitions keep theirs (insert_overwrite_table replaces
+            # everything)
+            touched = {s.get("partitionPath", "") or "" for s in stats}
+            replaced = {p: v for p, v in replaced.items() if p in touched}
+        publish(
+            self.cfg, stats, lambda table: self._commit_schema(table, stats),
+            read_point=self._read_point,
+            strict=strict,
+            nbcc_log_appends=(
+                self.cfg.concurrency_mode == "nbcc" and not strict
+            ),
+            replaced=replaced,
+        )
         release_instant(self.cfg)
         # inline growth management: archive / fold the MDT when this
         # commit crossed the configured thresholds (never fails the

@@ -716,63 +716,6 @@ class TestConditionalPutClaims:
 
 
 # ---------------------------------------------------------------------------
-# 1f. services conflict-check too: compaction vs a racing upsert
-# ---------------------------------------------------------------------------
-
-
-class TestServiceOCC:
-    def test_compact_aborts_when_commit_lands_mid_run(
-        self, spark, tmp_path, monkeypatch
-    ):
-        import hudi_rs_spark.write.worklist as worklist_mod
-        from hudi_rs_spark.sources.hudi import HudiTable
-        from hudi_rs_spark.write.compact import compact
-        from hudi_rs_spark.write.concurrency import ConcurrentWriteError
-        from hudi_rs_spark.write.upsert import upsert
-
-        tdir = str(tmp_path / "t")
-        opts = {
-            "recordkey.field": "id", "precombine.field": "ts",
-            "table.type": "MERGE_ON_READ",
-        }
-        _write(_people(spark, 8), tdir, **opts)
-        upsert(
-            spark.createDataFrame([(1, "u1", 5)], "id long, name string, ts long"),
-            tdir,
-        )
-
-        real = worklist_mod.run_slice_tasks
-
-        def racing(spark_, descriptors, shared, fn):
-            # a concurrent upsert lands on the SAME file group AFTER
-            # compaction planned its slices and BEFORE it publishes —
-            # the classic lost-update window the commit-time check must
-            # catch (id=1 lives in the one dirty group being compacted)
-            upsert(
-                spark.createDataFrame(
-                    [(1, "race", 9)], "id long, name string, ts long"
-                ),
-                tdir,
-            )
-            return real(spark_, descriptors, shared, fn)
-
-        monkeypatch.setattr(worklist_mod, "run_slice_tasks", racing)
-        with pytest.raises(ConcurrentWriteError, match="conflict"):
-            compact(spark, tdir)
-        monkeypatch.undo()
-        # the racing upsert survives; compaction published nothing
-        t = HudiTable(tdir, spark)
-        rows = {r.id: r.name for r in t.read().collect()}
-        assert rows[1] == "race"
-        actions = [i.action.value for i in t.timeline.instants]
-        assert "commit" not in actions  # no compaction commit
-        # and a CLEAN retry (no race) succeeds
-        assert compact(spark, tdir) > 0
-        rows2 = {r.id: r.name for r in HudiTable(tdir, spark).read().collect()}
-        assert rows2 == rows
-
-
-# ---------------------------------------------------------------------------
 # 2c. executor-side MDT fold parity
 # ---------------------------------------------------------------------------
 
