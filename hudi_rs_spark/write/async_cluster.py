@@ -59,20 +59,13 @@ from __future__ import annotations
 
 import json
 import os
-import uuid
 
+from hudi_rs_spark.write.cluster import _output_file_id
 from hudi_rs_spark.write.config import new_instant, service_config
 
 
 def _plan_marker(tdir: str, instant: str) -> str:
     return f"{tdir}/{instant}.clustering.requested"
-
-
-def _output_file_id(instant: str, rel_dir: str, group_idx: int) -> str:
-    """Deterministic output-group file id — MUST match the derivation in
-    write/cluster.py::_cluster_one so the rewrite task and the migration
-    agree on the group."""
-    return f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{instant}:{rel_dir}:{group_idx}')}-0"
 
 
 def schedule_clustering(
@@ -89,11 +82,12 @@ def schedule_clustering(
     them bucketed into clustering groups of at most ``max_group_slices``
     (reference ``split_into_chunks`` parity, util/collection.rs:37-49).
     Groups already under a pending compaction or clustering plan are
-    skipped. ``small_file_limit_mb`` restricts the plan to under-sized
-    slices (base + logs), same semantics as the inline cluster()'s
-    size-based strategy — big healthy files stay out of the plan.
+    skipped. ``small_file_limit_mb`` keeps only slices whose total bytes
+    (base + logs) are under the limit — big healthy files stay out of
+    the plan — and the kept slices are then grouped by count exactly as
+    above; unlike the inline ``cluster()``, there is no greedy binning
+    to a target output size.
     Returns the scheduled instant (None = nothing to plan)."""
-    from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.util import split_into_chunks
     from hudi_rs_spark.write.concurrency import claim_unique_timestamp
@@ -102,13 +96,13 @@ def schedule_clustering(
 
     if layout not in LAYOUTS:
         raise ValueError(f"unknown layout {layout!r}: expected one of {LAYOUTS}")
-    tc = HudiTableConfig.from_base_path(path)
+    table = HudiTable(path, spark=None, listing="direct")
+    tc = table.config
     if tc.table_version < 8:
         raise ValueError(
             "scheduled clustering requires a v8+ table: log anchoring at "
             "the plan instant rides on the completion-time timeline"
         )
-    table = HudiTable(path, spark=None, listing="direct")
     planned_already: set[str] = set()
     for plan in table.timeline.pending_compaction_plans().values():
         for g in plan.get("groups", ()):
@@ -202,6 +196,7 @@ def _scheduled_cluster_one(desc: dict, shared: dict) -> dict:
         read_log_file,
     )
     from hudi_rs_spark.write.cluster import _cluster_one
+    from hudi_rs_spark.write.worklist import task_token
 
     stat = _cluster_one(
         {k: desc[k] for k in ("rel_dir", "group_idx", "slices")}, shared
@@ -214,13 +209,8 @@ def _scheduled_cluster_one(desc: dict, shared: dict) -> dict:
     valid = set(shared["valid_instants"])
     migrated, skipped = [], []
     keymap: dict[str, tuple[str, str]] = {}
-    from pyspark import TaskContext
-
-    tctx = TaskContext.get()
-    token = (
-        f"{tctx.partitionId()}-{tctx.stageId()}-{tctx.attemptNumber()}"
-        if tctx else "0-0-0"
-    )
+    token = task_token()
+    index_shards = shared["side"]["index_shards"]
     for ver, src_rel in enumerate(desc.get("extras", ()), start=1):
         keys: set[str] = set()
         instants: set[str] = set()
@@ -248,15 +238,13 @@ def _scheduled_cluster_one(desc: dict, shared: dict) -> dict:
         dst_rel = f"{rel_dir}/{name}" if rel_dir else name
         st.append_bytes(f"{base_path}/{dst_rel}", payload)
         migrated.append({"path": dst_rel, "size": len(payload)})
-        if shared["index_shards"]:
+        if index_shards:
             for k in keys:
                 keymap[k] = (rel_dir, out_fid)
     if keymap:
         from hudi_rs_spark.write.record_index import append_record_index_log
 
-        append_record_index_log(
-            base_path, instant, keymap, shared["index_shards"], token,
-        )
+        append_record_index_log(base_path, instant, keymap, index_shards, token)
     stat["migratedLogs"] = migrated
     stat["skippedExtras"] = skipped
     return stat
@@ -270,12 +258,10 @@ def run_scheduled_clustering(
     Raises ConcurrentWriteError on a hard (non-append) race — the plan
     survives, re-run retries. Input groups whose base changed since
     scheduling are dropped from the rewrite (stay live), never lost."""
-    from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.write.mdt import purge_uncommitted_mdt_logs
 
     purge_uncommitted_mdt_logs(path)
-    tc = HudiTableConfig.from_base_path(path)
     plans = HudiTable(
         path, spark=None, listing="direct"
     ).timeline.pending_clustering_plans()
@@ -286,7 +272,7 @@ def run_scheduled_clustering(
         plan = plans[plan_instant]
         if not plan.get("groups"):
             continue
-        n_replaced += _run_one_plan(spark, path, tc, plan_instant, plan)
+        n_replaced += _run_one_plan(spark, path, plan_instant, plan)
     return n_replaced
 
 
@@ -369,7 +355,7 @@ def _migrate_committed_log(
     }, keys
 
 
-def _run_one_plan(spark, path, tc, plan_instant: str, plan: dict) -> int:
+def _run_one_plan(spark, path, plan_instant: str, plan: dict) -> int:
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.sources.pyds import HudiPyReader, _as_nullable
     from hudi_rs_spark.write.concurrency import (
@@ -377,47 +363,39 @@ def _run_one_plan(spark, path, tc, plan_instant: str, plan: dict) -> int:
         completed_instant_set,
         publish,
     )
-    from hudi_rs_spark.write.record_index import (
-        append_record_index_log,
-        existing_shard_count,
-    )
+    from hudi_rs_spark.write.record_index import append_record_index_log
     from hudi_rs_spark.write.worklist import (
         run_slice_tasks,
         shared_scan_context,
+        side_records,
         slice_descriptor,
+        slice_identity,
     )
     from hudi_rs_spark.write.writer import _fs, timeline_dir
 
-    cfg = service_config(tc, path, plan_instant, "cluster", pinned=True)
     out_fids = {
         _output_file_id(plan_instant, g["relDir"], g["groupIdx"])
         for g in plan["groups"]
     }
     _reclaim_crashed_attempt(path, plan_instant, out_fids)
 
-    read_point = completed_instant_set(path)
+    # ONE planning snapshot: slices, schema, the service config, the side
+    # records and the OCC read point (its timeline); the migrate loop
+    # below re-reads the timeline on purpose
     table = HudiTable(path, spark, listing="direct")
-    reader = HudiPyReader(
-        HudiTable(path, spark=None, listing="direct"),
-        {"path": path},
-        _as_nullable(table.get_schema()),
-    )
+    tc = table.config
+    cfg = service_config(tc, path, plan_instant, "cluster", pinned=True)
+    read_point = frozenset(i.timestamp for i in table.timeline.instants)
+    schema = _as_nullable(table.get_schema())
+    reader = HudiPyReader(table, {"path": path}, schema)
     # current SERVED slices (committed logs + pending-anchored merged)
-    from hudi_rs_spark.fs.file_group import BaseFile, LogFile
+    from hudi_rs_spark.fs.file_group import LogFile
 
-    current: dict[tuple[str, str], object] = {}
-    for p in reader.partitions():
-        ref = p.base_file or (p.log_files[0] if p.log_files else None)
-        if ref is None:
-            continue
-        d = os.path.dirname(os.path.relpath(ref, path))
-        rel_dir = "" if d == "." else d
-        name = os.path.basename(ref)
-        fid = (
-            BaseFile.parse(name).file_id if p.base_file
-            else LogFile.parse(name).file_id
-        )
-        current[(rel_dir, fid)] = p
+    current: dict[tuple[str, str], object] = {
+        slice_identity(path, p): p
+        for p in reader.partitions()
+        if p.base_file or p.log_files
+    }
 
     work = []
     replaced: dict[str, list[str]] = {}
@@ -481,10 +459,8 @@ def _run_one_plan(spark, path, tc, plan_instant: str, plan: dict) -> int:
     for k in replaced:
         replaced[k] = sorted(set(replaced[k]))
 
-    meta_parts = tc.props.get("hoodie.table.metadata.partitions", "")
-    index_shards = (
-        existing_shard_count(path) if "record_index" in meta_parts else 0
-    )
+    side = side_records(path, tc)
+    index_shards = side["index_shards"]
     shared = shared_scan_context(
         next(iter(current.values()))
     )
@@ -492,9 +468,7 @@ def _run_one_plan(spark, path, tc, plan_instant: str, plan: dict) -> int:
         "path": path, "instant": plan_instant,
         "sort_columns": list(plan.get("sortColumns") or ()),
         "layout": plan.get("layout", "linear"),
-        "with_stats": "column_stats" in meta_parts,
-        "with_bloom": "bloom_filters" in meta_parts,
-        "index_shards": index_shards,
+        "side": side,
     })
     stats = run_slice_tasks(spark, work, shared, _scheduled_cluster_one)
     commit_stats = []
@@ -577,22 +551,15 @@ def _run_one_plan(spark, path, tc, plan_instant: str, plan: dict) -> int:
         reader2 = HudiPyReader(
             HudiTable(path, spark=None, listing="direct"),
             {"path": path},
-            _as_nullable(table.get_schema()),
+            schema,
         )
         survivor_set = {
             (pp, f) for pp, fs in replaced.items() for f in fs
         }
         for p in reader2.partitions():
-            ref = p.base_file or (p.log_files[0] if p.log_files else None)
-            if ref is None:
+            if not (p.base_file or p.log_files):
                 continue
-            d = os.path.dirname(os.path.relpath(ref, path))
-            rel_dir = "" if d == "." else d
-            name = os.path.basename(ref)
-            fid = (
-                BaseFile.parse(name).file_id if p.base_file
-                else LogFile.parse(name).file_id
-            )
+            rel_dir, fid = slice_identity(path, p)
             if (rel_dir, fid) not in survivor_set:
                 continue
             out_dir, out_fid = group_of[(rel_dir, fid)]

@@ -135,7 +135,10 @@ def run_scheduled_compaction(
     from hudi_rs_spark.fs.file_group import BaseFile, LogFile
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.sources.pyds import HudiPyReader, _as_nullable
-    from hudi_rs_spark.write.compact import _compact_one
+    from hudi_rs_spark.write.compact import (
+        _compact_one,
+        compaction_side_records,
+    )
     from hudi_rs_spark.write.concurrency import publish
     from hudi_rs_spark.write.config import service_config
     from hudi_rs_spark.write.mdt import purge_uncommitted_mdt_logs
@@ -221,12 +224,10 @@ def run_scheduled_compaction(
             # is moot — resolve the marker so it stops pinning archival
             _remove_marker(cfg, plan_instant)
             continue
-        meta_parts = tc.props.get("hoodie.table.metadata.partitions", "")
         shared = shared_scan_context(reader.partitions()[0])
         shared.update({
             "path": path, "instant": plan_instant,
-            "with_stats": "column_stats" in meta_parts,
-            "with_bloom": "bloom_filters" in meta_parts,
+            "side": compaction_side_records(path, tc),
         })
         stats = run_slice_tasks(spark, work, shared, _compact_one)
         # on a conflict publish reclaims the rewrites; the plan stays

@@ -23,6 +23,15 @@ Mechanics (mirrors Hudi's Flink/Spark bucket writers):
   rejects untagged inserts to them (it cannot guarantee the
   one-group-per-bucket invariant across tasks).
 
+The bucket services that rewrite data — ``convert_to_bucket``,
+``split_buckets`` and ``merge_buckets`` — differ only in which file
+group each row goes to: they share ``_rewrite_groups``, one
+``groupBy(partition, file id).applyInArrow`` whose tasks write each
+group's base file through the shared base-file finisher
+(``worklist.finish_base_file``: the file, its column stats, its bloom
+blob and the moved keys' record-index relocation), then one published
+replacecommit.
+
 At 100 TB: size N so a bucket's slice stays near the base-file target
 (Hudi guidance); too few buckets = giant groups, too many = small
 files. The bucket count is a per-table knob, not auto-tuned here.
@@ -46,6 +55,7 @@ INDEX_TYPE_PROP = "hoodie.index.type"
 # JVM-side expression.
 SPLITS_PROP = "hoodie.bucket.index.splits"
 MAX_MODULUS = 9999  # leaf modulus rides in a 4-digit file-id segment
+_FID_COL = "__hoodie_fid_x"  # target file group of a row being rewritten
 
 
 def is_bucket_table(props: dict) -> bool:
@@ -178,6 +188,49 @@ def leaf_file_id_expr(bucket_col: Column, modulus_col: Column, n: int) -> Column
     )
 
 
+def _rewrite_groups(snap, fid_col: Column, cfg, table, replaced) -> None:
+    """Rewrite ``snap``'s rows into one new base file per (partition,
+    ``fid_col``) group — each through ``worklist.finish_base_file`` with
+    the table's side records — and publish them as ``cfg``'s claimed
+    replacecommit over the ``replaced`` groups, OCC-checked against
+    ``table``'s timeline. The claim is released when anything fails."""
+    import json
+
+    import pyarrow as pa
+
+    from hudi_rs_spark.write.concurrency import publish, release_instant
+    from hudi_rs_spark.write.worklist import side_records
+
+    path, instant = cfg.path, cfg.instant
+    side = side_records(path, table.config)
+
+    def write_group(key, rows):
+        from hudi_rs_spark.write.worklist import finish_base_file, task_token
+
+        stat = finish_base_file(
+            rows.drop_columns([_FID_COL]), path, key[0].as_py() or "",
+            key[1].as_py(), instant, task_token(), side,
+        )
+        return pa.table({"stat": [json.dumps(stat)]})
+
+    try:
+        out = (
+            snap.withColumn(_FID_COL, fid_col)
+            .groupBy("_hoodie_partition_path", _FID_COL)
+            .applyInArrow(write_group, "stat string")
+            .collect()
+        )
+        publish(
+            cfg, [json.loads(r.stat) for r in out], table.schema_json(),
+            read_point=frozenset(i.timestamp for i in table.timeline.instants),
+            touched={(p, fid) for p, fids in replaced.items() for fid in fids},
+            replaced=replaced, action="replacecommit",
+        )
+    except Exception:
+        release_instant(cfg, "replacecommit")
+        raise
+
+
 def convert_to_bucket(
     spark, path: str, num_buckets: int, instant: str | None = None
 ) -> int:
@@ -195,19 +248,13 @@ def convert_to_bucket(
     conflicts instead of being silently dropped.
 
     Returns the number of file groups replaced."""
-    from pyspark.sql import functions as F
-
-    from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.sources.hudi import HudiTable
-    from hudi_rs_spark.write.concurrency import (
-        claim_instant,
-        completed_instant_set,
-        publish,
-        release_instant,
-    )
+    from hudi_rs_spark.write.concurrency import claim_instant, release_instant
     from hudi_rs_spark.write.config import new_instant, service_config
+    from hudi_rs_spark.write.record_index import _local_base, _rewrite_props
 
-    tc = HudiTableConfig.from_base_path(path)
+    table = HudiTable(path, spark)
+    tc = table.config
     if is_bucket_table(tc.props):
         raise ValueError(f"{path} is already bucket-indexed")
     if tc.table_type.value != "MERGE_ON_READ":
@@ -217,8 +264,6 @@ def convert_to_bucket(
         )
     if num_buckets < 1:
         raise ValueError("num_buckets must be >= 1")
-    read_point = completed_instant_set(path)
-    table = HudiTable(path, spark)
     replaced: dict[str, list[str]] = {}
     for sl in table.get_file_slices():
         replaced.setdefault(sl.partition_path or "", []).append(sl.file_id)
@@ -230,128 +275,17 @@ def convert_to_bucket(
         tc, path, instant or new_instant(), "cluster", instant is not None
     )
     claim_instant(cfg, "replacecommit")
-    instant = cfg.instant
-    snap = table.read()
-    spark_schema = snap.schema
-    schema_json = table.schema_json()
-    base_path = cfg.path
-    n = num_buckets
-    meta_parts = tc.props.get("hoodie.table.metadata.partitions", "")
-    with_stats = "column_stats" in meta_parts
-    with_bloom = "bloom_filters" in meta_parts
-    index_shards = (
-        int(tc.props.get("hoodie.metadata.record.index.shards", "0"))
-        if "record_index" in meta_parts
-        else 0
+    _rewrite_groups(
+        table.read(),
+        bucket_file_id_expr(
+            bucket_expr(F.col("_hoodie_record_key"), num_buckets)
+        ),
+        cfg, table, replaced,
     )
-
-    def write_group(pdf):
-        import base64
-        import json as _json
-
-        import pandas as pd
-        import pyarrow as pa
-        from pyspark import TaskContext
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from hudi_rs_spark.write.writer import _fs, write_parquet
-
-        part = pdf["_hoodie_partition_path"].iloc[0] or ""
-        b = int(pdf["__hoodie_bucket_x"].iloc[0])
-        fid = bucket_file_id(b)
-        tctx = TaskContext.get()
-        token = (
-            f"{tctx.partitionId()}-{tctx.stageId()}-{tctx.attemptNumber()}"
-            if tctx else "0-0-0"
-        )
-        name = f"{fid}_{token}_{instant}.parquet"
-        rel = f"{part}/{name}" if part else name
-        pdf = pdf.drop(columns=["__hoodie_bucket_x"])
-        pdf["_hoodie_file_name"] = name
-        # arrow-schema-faithful encode: pandas upcasts nullable ints to
-        # float — convert back against the table's exact arrow schema
-        arrow_schema = to_arrow_schema(spark_schema)
-        tbl = pa.Table.from_pandas(
-            pdf, schema=arrow_schema, preserve_index=False
-        )
-        size = write_parquet(tbl, f"{base_path}/{rel}", _fs(base_path))
-        keys = tbl["_hoodie_record_key"].combine_chunks()
-        cs = bf_b64 = None
-        if with_stats:
-            from hudi_rs_spark.write.mdt_stats import compute_column_stats
-
-            cs = _json.dumps(compute_column_stats(tbl))
-        if with_bloom:
-            from hudi_rs_spark.bloomfilter import build_bloom
-
-            bf_b64 = base64.b64encode(
-                build_bloom(k.as_py() for k in keys)
-            ).decode("ascii")
-        if index_shards:
-            # the conversion MOVES every record: rewrite its record-index
-            # location so point lookups keep resolving (the clustering
-            # service's own rule, write/cluster.py::_cluster_one)
-            from hudi_rs_spark.write.record_index import (
-                append_record_index_log,
-            )
-
-            append_record_index_log(
-                base_path, instant,
-                {k.as_py(): (part, fid) for k in keys},
-                index_shards, token,
-            )
-        return pd.DataFrame(
-            {
-                "fileId": [fid],
-                "path": [rel],
-                "partitionPath": [part],
-                "numWrites": [len(tbl)],
-                "fileSizeInBytes": [size],
-                "totalWriteBytes": [size],
-                "columnStats": [cs],
-                "bloomFilter": [bf_b64],
-            }
-        )
-
-    try:
-        stats_df = (
-            snap.withColumn(
-                "__hoodie_bucket_x",
-                bucket_expr(F.col("_hoodie_record_key"), n),
-            )
-            .groupBy("_hoodie_partition_path", "__hoodie_bucket_x")
-            .applyInPandas(
-                write_group,
-                "fileId string, path string, partitionPath string, "
-                "numWrites long, fileSizeInBytes long, "
-                "totalWriteBytes long, columnStats string, "
-                "bloomFilter string",
-            )
-        )
-        import json as _json
-
-        stats = []
-        for r in stats_df.collect():
-            d = r.asDict()
-            cs, bf = d.pop("columnStats"), d.pop("bloomFilter")
-            if cs:
-                d["columnStats"] = _json.loads(cs)
-            if bf:
-                d["bloomFilter"] = bf
-            stats.append(d)
-        publish(
-            cfg, stats, schema_json, read_point=read_point,
-            touched={(p, fid) for p, fids in replaced.items() for fid in fids},
-            replaced=replaced, action="replacecommit",
-        )
-    except Exception:
-        release_instant(cfg, "replacecommit")
-        raise
-    from hudi_rs_spark.write.record_index import _local_base, _rewrite_props
 
     def pin_bucket(have: dict) -> dict:
         have[INDEX_TYPE_PROP] = "BUCKET"
-        have[NUM_BUCKETS_PROP] = str(n)
+        have[NUM_BUCKETS_PROP] = str(num_buckets)
         return have
 
     _rewrite_props(_local_base(path), pin_bucket)
@@ -411,18 +345,13 @@ def split_buckets(
     metadata-only trie pin). Returns the number of file groups replaced.
     """
     from hudi_rs_spark.config.read_config import HudiReadOptions
-    from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.sources.hudi import HudiTable
-    from hudi_rs_spark.write.concurrency import (
-        claim_instant,
-        completed_instant_set,
-        publish,
-        release_instant,
-    )
+    from hudi_rs_spark.write.concurrency import claim_instant, release_instant
     from hudi_rs_spark.write.config import new_instant, service_config
     from hudi_rs_spark.write.record_index import _local_base, _rewrite_props
 
-    tc = HudiTableConfig.from_base_path(path)
+    table = HudiTable(path, spark)
+    tc = table.config
     if not is_bucket_table(tc.props):
         raise ValueError(f"{path} is not bucket-indexed")
     n = num_buckets(tc.props)
@@ -463,8 +392,6 @@ def split_buckets(
         return 0
 
     parent_fids = {leaf_file_id(b, m, n) for b, m in norm_leaves}
-    read_point = completed_instant_set(path)
-    table = HudiTable(path, spark)
     parent_slices = [
         s for s in table.get_file_slices() if s.file_id in parent_fids
     ]
@@ -487,129 +414,14 @@ def split_buckets(
         return 0
 
     claim_instant(cfg, "replacecommit")
-    instant = cfg.instant
-    snap = table._execute_slices(parent_slices, None, HudiReadOptions())
-    spark_schema = snap.schema
-    schema_json = table.schema_json()
-    base_path = cfg.path
-    meta_parts = tc.props.get("hoodie.table.metadata.partitions", "")
-    with_stats = "column_stats" in meta_parts
-    with_bloom = "bloom_filters" in meta_parts
-    index_shards = (
-        int(tc.props.get("hoodie.metadata.record.index.shards", "0"))
-        if "record_index" in meta_parts
-        else 0
+    # child assignment via the POST-split trie: each row read from a
+    # split parent descends exactly one level to its child leaf, so one
+    # expression routes every leaf's rows in the same pass
+    b_col, m_col = bucket_route_exprs(F.col("_hoodie_record_key"), n, new_splits)
+    _rewrite_groups(
+        table._execute_slices(parent_slices, None, HudiReadOptions()),
+        leaf_file_id_expr(b_col, m_col, n), cfg, table, replaced,
     )
-
-    def write_child(pdf):
-        import base64
-        import json as _json
-
-        import pandas as pd
-        import pyarrow as pa
-        from pyspark import TaskContext
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from hudi_rs_spark.write.writer import _fs, write_parquet
-
-        part = pdf["_hoodie_partition_path"].iloc[0] or ""
-        b = int(pdf["__hoodie_bucket_x"].iloc[0])
-        child_mod = int(pdf["__hoodie_bmod_x"].iloc[0])
-        fid = leaf_file_id(b, child_mod, n)
-        tctx = TaskContext.get()
-        token = (
-            f"{tctx.partitionId()}-{tctx.stageId()}-{tctx.attemptNumber()}"
-            if tctx else "0-0-0"
-        )
-        name = f"{fid}_{token}_{instant}.parquet"
-        rel = f"{part}/{name}" if part else name
-        pdf = pdf.drop(columns=["__hoodie_bucket_x", "__hoodie_bmod_x"])
-        pdf["_hoodie_file_name"] = name
-        arrow_schema = to_arrow_schema(spark_schema)
-        tbl = pa.Table.from_pandas(
-            pdf, schema=arrow_schema, preserve_index=False
-        )
-        size = write_parquet(tbl, f"{base_path}/{rel}", _fs(base_path))
-        keys = tbl["_hoodie_record_key"].combine_chunks()
-        cs = bf_b64 = None
-        if with_stats:
-            from hudi_rs_spark.write.mdt_stats import compute_column_stats
-
-            cs = _json.dumps(compute_column_stats(tbl))
-        if with_bloom:
-            from hudi_rs_spark.bloomfilter import build_bloom
-
-            bf_b64 = base64.b64encode(
-                build_bloom(k.as_py() for k in keys)
-            ).decode("ascii")
-        if index_shards:
-            from hudi_rs_spark.write.record_index import (
-                append_record_index_log,
-            )
-
-            append_record_index_log(
-                base_path, instant,
-                {k.as_py(): (part, fid) for k in keys},
-                index_shards, token,
-            )
-        return pd.DataFrame(
-            {
-                "fileId": [fid],
-                "path": [rel],
-                "partitionPath": [part],
-                "numWrites": [len(tbl)],
-                "fileSizeInBytes": [size],
-                "totalWriteBytes": [size],
-                "columnStats": [cs],
-                "bloomFilter": [bf_b64],
-            }
-        )
-
-    try:
-        # child assignment via the POST-split trie: each row read from a
-        # split parent descends exactly one level to its child leaf, so
-        # one expression routes every leaf's rows in the same pass
-        b_col, m_col = bucket_route_exprs(
-            F.col("_hoodie_record_key"), n, new_splits
-        )
-        stats_df = (
-            snap.withColumn("__hoodie_bucket_x", b_col)
-            .withColumn("__hoodie_bmod_x", m_col)
-            .repartition(
-                "_hoodie_partition_path",
-                "__hoodie_bucket_x", "__hoodie_bmod_x",
-            )
-            .groupBy(
-                "_hoodie_partition_path",
-                "__hoodie_bucket_x", "__hoodie_bmod_x",
-            )
-            .applyInPandas(
-                write_child,
-                "fileId string, path string, partitionPath string, "
-                "numWrites long, fileSizeInBytes long, "
-                "totalWriteBytes long, columnStats string, "
-                "bloomFilter string",
-            )
-        )
-        import json as _json
-
-        stats = []
-        for r in stats_df.collect():
-            d = r.asDict()
-            cs, bf = d.pop("columnStats"), d.pop("bloomFilter")
-            if cs:
-                d["columnStats"] = _json.loads(cs)
-            if bf:
-                d["bloomFilter"] = bf
-            stats.append(d)
-        publish(
-            cfg, stats, schema_json, read_point=read_point,
-            touched={(p, fid) for p, fids in replaced.items() for fid in fids},
-            replaced=replaced, action="replacecommit",
-        )
-    except Exception:
-        release_instant(cfg, "replacecommit")
-        raise
 
     def pin_split(have: dict) -> dict:
         have[SPLITS_PROP] = splits_str(new_splits)
@@ -617,7 +429,7 @@ def split_buckets(
 
     _rewrite_props(_local_base(path), pin_split)
     write_hashing_metadata(
-        path, instant, n, new_splits, sorted(replaced) or [""]
+        path, cfg.instant, n, new_splits, sorted(replaced) or [""]
     )
     release_instant(cfg, "replacecommit")
     return sum(len(v) for v in replaced.values())
@@ -645,18 +457,13 @@ def merge_buckets(
     props: validator flags ("live for SPLIT bucket"), re-run heals
     (metadata-only unpin) — TestRescaleCrashRecovery."""
     from hudi_rs_spark.config.read_config import HudiReadOptions
-    from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.sources.hudi import HudiTable
-    from hudi_rs_spark.write.concurrency import (
-        claim_instant,
-        completed_instant_set,
-        publish,
-        release_instant,
-    )
+    from hudi_rs_spark.write.concurrency import claim_instant, release_instant
     from hudi_rs_spark.write.config import new_instant, service_config
     from hudi_rs_spark.write.record_index import _local_base, _rewrite_props
 
-    tc = HudiTableConfig.from_base_path(path)
+    table = HudiTable(path, spark)
+    tc = table.config
     if not is_bucket_table(tc.props):
         raise ValueError(f"{path} is not bucket-indexed")
     n = num_buckets(tc.props)
@@ -674,9 +481,6 @@ def merge_buckets(
             )
     child_fids = {leaf_file_id(b, m, n) for b, m in children}
     parent_fid = leaf_file_id(bucket, modulus, n)
-
-    read_point = completed_instant_set(path)
-    table = HudiTable(path, spark)
     child_slices = [
         s for s in table.get_file_slices() if s.file_id in child_fids
     ]
@@ -698,106 +502,12 @@ def merge_buckets(
         return 0
 
     claim_instant(cfg, "replacecommit")
-    instant = cfg.instant
-    snap = table._execute_slices(child_slices, None, HudiReadOptions())
-    spark_schema = snap.schema
-    schema_json = table.schema_json()
-    base_path = cfg.path
-    meta_parts = tc.props.get("hoodie.table.metadata.partitions", "")
-    with_stats = "column_stats" in meta_parts
-    with_bloom = "bloom_filters" in meta_parts
-    index_shards = (
-        int(tc.props.get("hoodie.metadata.record.index.shards", "0"))
-        if "record_index" in meta_parts
-        else 0
+    # both children's keys route to the parent by construction: one
+    # group per partition, no re-hashing
+    _rewrite_groups(
+        table._execute_slices(child_slices, None, HudiReadOptions()),
+        F.lit(parent_fid), cfg, table, replaced,
     )
-
-    def write_parent(pdf):
-        import base64
-        import json as _json
-
-        import pandas as pd
-        import pyarrow as pa
-        from pyspark import TaskContext
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        from hudi_rs_spark.write.writer import _fs, write_parquet
-
-        part = pdf["_hoodie_partition_path"].iloc[0] or ""
-        tctx = TaskContext.get()
-        token = (
-            f"{tctx.partitionId()}-{tctx.stageId()}-{tctx.attemptNumber()}"
-            if tctx else "0-0-0"
-        )
-        name = f"{parent_fid}_{token}_{instant}.parquet"
-        rel = f"{part}/{name}" if part else name
-        pdf["_hoodie_file_name"] = name
-        arrow_schema = to_arrow_schema(spark_schema)
-        tbl = pa.Table.from_pandas(
-            pdf, schema=arrow_schema, preserve_index=False
-        )
-        size = write_parquet(tbl, f"{base_path}/{rel}", _fs(base_path))
-        keys = tbl["_hoodie_record_key"].combine_chunks()
-        cs = bf_b64 = None
-        if with_stats:
-            from hudi_rs_spark.write.mdt_stats import compute_column_stats
-
-            cs = _json.dumps(compute_column_stats(tbl))
-        if with_bloom:
-            from hudi_rs_spark.bloomfilter import build_bloom
-
-            bf_b64 = base64.b64encode(
-                build_bloom(k.as_py() for k in keys)
-            ).decode("ascii")
-        if index_shards:
-            from hudi_rs_spark.write.record_index import (
-                append_record_index_log,
-            )
-
-            append_record_index_log(
-                base_path, instant,
-                {k.as_py(): (part, parent_fid) for k in keys},
-                index_shards, token,
-            )
-        return pd.DataFrame(
-            {
-                "fileId": [parent_fid],
-                "path": [rel],
-                "partitionPath": [part],
-                "numWrites": [len(tbl)],
-                "fileSizeInBytes": [size],
-                "totalWriteBytes": [size],
-                "columnStats": [cs],
-                "bloomFilter": [bf_b64],
-            }
-        )
-
-    try:
-        stats_df = snap.groupBy("_hoodie_partition_path").applyInPandas(
-            write_parent,
-            "fileId string, path string, partitionPath string, "
-            "numWrites long, fileSizeInBytes long, "
-            "totalWriteBytes long, columnStats string, bloomFilter string",
-        )
-        import json as _json
-
-        stats = []
-        for r in stats_df.collect():
-            d = r.asDict()
-            cs, bf = d.pop("columnStats"), d.pop("bloomFilter")
-            if cs:
-                d["columnStats"] = _json.loads(cs)
-            if bf:
-                d["bloomFilter"] = bf
-            stats.append(d)
-        publish(
-            cfg, stats, schema_json, read_point=read_point,
-            touched={(p, fid) for p, fids in replaced.items() for fid in fids},
-            replaced=replaced, action="replacecommit",
-        )
-    except Exception:
-        release_instant(cfg, "replacecommit")
-        raise
 
     def unpin_split(have: dict) -> dict:
         have[SPLITS_PROP] = splits_str(new_splits)
@@ -805,7 +515,7 @@ def merge_buckets(
 
     _rewrite_props(_local_base(path), unpin_split)
     write_hashing_metadata(
-        path, instant, n, new_splits, sorted(replaced) or [""]
+        path, cfg.instant, n, new_splits, sorted(replaced) or [""]
     )
     release_instant(cfg, "replacecommit")
     return sum(len(v) for v in replaced.values())

@@ -239,7 +239,7 @@ def clean(
     if not to_remove:
         return 0
 
-    from hudi_rs_spark.write.writer import _fs
+    from hudi_rs_spark.write.writer import _fs, completed_instant_name
 
     st = _fs(path)
     for rel in to_remove:
@@ -259,10 +259,7 @@ def clean(
     claim_instant(cfg)
     instant = cfg.instant  # claim may regenerate on a timestamp collision
     tdir = timeline_dir(cfg)
-    if cfg.table_version >= 8:
-        name = f"{instant}_{max(new_instant(), instant)}.clean"
-    else:
-        name = f"{instant}.clean"
+    name = completed_instant_name(instant, "clean", cfg.table_version)
     meta = {
         "earliestCommitToRetain": (
             min_retention if policy == POLICY_VERSIONS else boundary

@@ -19,7 +19,10 @@ Spark-first split (same shape as write/compact.py):
   every read — MOR log files are absorbed for free), concatenates,
   optionally sorts by ``sort_columns`` (pyarrow sort — the classic
   Hudi z-order/linear-sort clustering payoff: downstream min/max
-  pruning on the sort key), and writes ONE new base file per group.
+  pruning on the sort key), and writes ONE new base file per group
+  through the shared base-file finisher (``worklist.finish_base_file``:
+  the file, its column stats, its bloom blob and the moved keys'
+  record-index relocation).
 - DRIVER publishes the ``replacecommit`` naming every input file group
   in ``partitionToReplaceFileIds``.
 
@@ -31,62 +34,33 @@ to many bounded tasks, never one giant task.
 
 from __future__ import annotations
 
-import os
-
-import pyarrow as pa
+import uuid
 
 from hudi_rs_spark.write.config import new_instant, service_config
 
 
-def _slice_identity(base_path: str, p) -> tuple[str, str]:
-    """(relative partition dir, file id) of a slice descriptor — from
-    the base file when present, else the first log file (log-only
-    slice)."""
-    from hudi_rs_spark.fs.file_group import BaseFile, LogFile
-
-    ref = p.base_file or p.log_files[0]
-    d = os.path.dirname(os.path.relpath(ref, base_path))
-    rel_dir = "" if d == "." else d
-    name = os.path.basename(ref)
-    if p.base_file:
-        return rel_dir, BaseFile.parse(name).file_id
-    return rel_dir, LogFile.parse(name).file_id
+def _output_file_id(instant: str, rel_dir: str, group_idx: int) -> str:
+    """Deterministic file id of a clustering group's output — scheduled
+    clustering (write/async_cluster.py) derives the same id to migrate
+    logs onto the group."""
+    return f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{instant}:{rel_dir}:{group_idx}')}-0"
 
 
 def _cluster_one(desc: dict, shared: dict) -> dict:
-    """Executor: rewrite one clustering group -> one new base file.
+    """Executor: rewrite one clustering group -> one new base file
+    (``worklist.finish_base_file``, which also re-points the moved
+    records' record-index locations); returns its write stat.
     ``desc``/``shared`` per write/worklist.py (Arrow-shipped JSON, not
     pickled plan objects — survives million-group tables)."""
-    import uuid
+    from hudi_rs_spark.write.worklist import (
+        finish_base_file,
+        read_slices,
+        rebuild_slice,
+        task_token,
+    )
 
-    from pyspark import TaskContext
-
-    from hudi_rs_spark.sources.pyds import _read_slice
-    from hudi_rs_spark.write.worklist import rebuild_slice
-
-    base_path = shared["path"]
-    instant = shared["instant"]
+    merged = read_slices([rebuild_slice(s, shared) for s in desc["slices"]])
     sort_columns = shared["sort_columns"]
-    with_stats = shared["with_stats"]
-    index_shards = shared["index_shards"]
-    rel_dir = desc["rel_dir"]
-    group_idx = desc["group_idx"]
-    slices = [rebuild_slice(s, shared) for s in desc["slices"]]
-
-    batches = []
-    for p in slices:
-        batches.extend(_read_slice(p))
-    if batches:
-        merged = pa.Table.from_batches(batches)
-    else:
-        import json
-
-        from pyspark.sql import types as T
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        merged = to_arrow_schema(
-            T.StructType.fromJson(json.loads(slices[0].schema_json))
-        ).empty_table()
     if sort_columns:
         layout = shared.get("layout", "linear")
         if layout == "linear":
@@ -95,56 +69,12 @@ def _cluster_one(desc: dict, shared: dict) -> dict:
             from hudi_rs_spark.write.layout import curve_order
 
             merged = curve_order(merged, sort_columns, layout)
-
-    tc = TaskContext.get()
-    token = f"{tc.partitionId()}-{tc.stageId()}-{tc.attemptNumber()}" if tc else "0-0-0"
-    fid = f"{uuid.uuid5(uuid.NAMESPACE_URL, f'{instant}:{rel_dir}:{group_idx}')}-0"
-    name = f"{fid}_{token}_{instant}.parquet"
-    rel = f"{rel_dir}/{name}" if rel_dir else name
-    if "_hoodie_file_name" in merged.column_names:
-        i = merged.column_names.index("_hoodie_file_name")
-        merged = merged.set_column(
-            i, "_hoodie_file_name", pa.array([name] * len(merged), pa.string())
-        )
-    from hudi_rs_spark.write.writer import _fs, write_parquet
-
-    full = f"{base_path}/{rel}"
-    size = write_parquet(merged, full, _fs(base_path))
-    stat = {
-        "fileId": fid,
-        "path": rel,
-        "partitionPath": rel_dir,
-        "numWrites": len(merged),
-        "fileSizeInBytes": size,
-        "totalWriteBytes": size,
-    }
-    if with_stats:
-        from hudi_rs_spark.write.mdt_stats import compute_column_stats
-
-        stat["columnStats"] = compute_column_stats(merged)
-    if shared.get("with_bloom") and "_hoodie_record_key" in merged.column_names:
-        import base64
-
-        from hudi_rs_spark.bloomfilter import build_bloom
-
-        stat["bloomFilter"] = base64.b64encode(
-            build_bloom(
-                k.as_py()
-                for k in merged["_hoodie_record_key"].combine_chunks()
-            )
-        ).decode("ascii")
-    if index_shards and "_hoodie_record_key" in merged.column_names:
-        # clustering MOVES records to the new file group: rewrite their
-        # record-index locations (executor-side, like the task writers)
-        from hudi_rs_spark.write.record_index import append_record_index_log
-
-        append_record_index_log(
-            base_path, instant,
-            {k.as_py(): (rel_dir, fid)
-             for k in merged["_hoodie_record_key"].combine_chunks()},
-            index_shards, token,
-        )
-    return stat
+    instant = shared["instant"]
+    return finish_base_file(
+        merged, shared["path"], desc["rel_dir"],
+        _output_file_id(instant, desc["rel_dir"], desc["group_idx"]),
+        instant, task_token(), shared["side"],
+    )
 
 
 def cluster(
@@ -183,54 +113,46 @@ def cluster(
     transparency); time travel before the instant still reads the old
     groups.
     """
-    from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.sources.pyds import HudiPyReader, _as_nullable
     from hudi_rs_spark.util import split_into_chunks
+    from hudi_rs_spark.write.concurrency import (
+        ConcurrentWriteError,
+        claim_instant,
+        publish,
+        release_instant,
+    )
     from hudi_rs_spark.write.layout import LAYOUTS
     from hudi_rs_spark.write.mdt import purge_uncommitted_mdt_logs
+    from hudi_rs_spark.write.worklist import (
+        side_records,
+        slice_descriptor,
+        slice_identity,
+    )
 
     if layout not in LAYOUTS:
         raise ValueError(f"unknown layout {layout!r}: expected one of {LAYOUTS}")
 
     purge_uncommitted_mdt_logs(path)  # never reuse a poisoned anchor
-    # OCC read point BEFORE planning (same rationale as compact: a
-    # commit landing on a group while we rewrite it would vanish from
-    # the clustered snapshot — conflict instead)
-    from hudi_rs_spark.write.concurrency import (
-        ConcurrentWriteError,
-        claim_instant,
-        completed_instant_set,
-        publish,
-        release_instant,
-    )
-
-    read_point = completed_instant_set(path)
-    tc = HudiTableConfig.from_base_path(path)
+    # ONE planning snapshot: slices, schema, the service config, the
+    # side records and the OCC read point (its timeline) all come from
+    # it (same rationale as compact: a commit landing on a group while
+    # we rewrite it would vanish from the clustered snapshot — conflict
+    # instead)
     table = HudiTable(path, spark, listing="direct")
+    tc = table.config
+    read_point = frozenset(i.timestamp for i in table.timeline.instants)
     reader = HudiPyReader(
-        HudiTable(path, spark=None, listing="direct"),
-        {"path": path},
-        _as_nullable(table.get_schema()),
+        table, {"path": path}, _as_nullable(table.get_schema())
     )
     by_partition: dict[str, list] = {}
     fids: dict[str, list[str]] = {}
     for p in reader.partitions():
-        rel_dir, fid = _slice_identity(path, p)
+        rel_dir, fid = slice_identity(path, p)
         by_partition.setdefault(rel_dir, []).append(p)
         fids.setdefault(rel_dir, []).append(fid)
 
     instant = instant or new_instant()
-    meta_parts_pre = tc.props.get("hoodie.table.metadata.partitions", "")
-    with_stats = "column_stats" in meta_parts_pre
-    with_bloom = "bloom_filters" in meta_parts_pre
-    index_shards = 0
-    if "record_index" in meta_parts_pre:
-        from hudi_rs_spark.write.record_index import existing_shard_count
-
-        index_shards = existing_shard_count(path)
-    from hudi_rs_spark.write.worklist import slice_descriptor
-
     slice_bytes: dict[tuple[str, str], int] = {}
     if small_file_limit_mb is not None:
         for sl in table.get_file_slices():
@@ -301,8 +223,7 @@ def cluster(
         "path": path, "instant": instant,
         "sort_columns": list(sort_columns),
         "layout": layout,
-        "with_stats": with_stats, "with_bloom": with_bloom,
-        "index_shards": index_shards,
+        "side": side_records(path, tc),
     })
     stats = run_slice_tasks(spark, work, shared, _cluster_one)
     # the REPLACED (source) groups are what a concurrent commit can

@@ -13,7 +13,10 @@ Spark-first split:
 - EXECUTORS merge: each task runs the connector's slice reader
   (``pyds._read_slice`` — identical block validity/ordering/delete
   semantics as every read) and writes the merged result as the file
-  group's new base file at the compaction instant. Per-slice map over
+  group's new base file at the compaction instant through the shared
+  base-file finisher (``worklist.finish_base_file``: the file, its
+  column stats and its bloom blob; the keys keep their file group, so
+  there is no record-index relocation). Per-slice map over
   an RDD of slice descriptors — the one place imperative per-partition
   logic is the right tool (a slice is exactly the merge scope; there is
   nothing to shuffle).
@@ -28,90 +31,38 @@ from __future__ import annotations
 
 import os
 
-import pyarrow as pa
-
 from hudi_rs_spark.write.config import new_instant, service_config
 
 
 def _compact_one(desc: dict, shared: dict) -> dict:
-    """Executor: merge one slice -> new base file; returns a stat dict.
+    """Executor: merge one slice -> the file group's new base file
+    (``worklist.finish_base_file``); returns its write stat.
     ``desc``/``shared`` per write/worklist.py (Arrow-shipped JSON, not
-    pickled plan objects — survives million-group tables)."""
-    from hudi_rs_spark.fs.file_group import BaseFile
-    from hudi_rs_spark.sources.pyds import _read_slice
-    from hudi_rs_spark.write.worklist import rebuild_slice
+    pickled plan objects — survives million-group tables). A log-only
+    slice (bucket-routed first touches, write/bucket.py) gets the
+    group's FIRST base."""
+    from hudi_rs_spark.write.worklist import (
+        finish_base_file,
+        read_slices,
+        rebuild_slice,
+        slice_identity,
+        task_token,
+    )
 
-    base_path = shared["path"]
-    instant = shared["instant"]
-    with_stats = shared["with_stats"]
     partition = rebuild_slice(desc, shared)
-    if partition.base_file:
-        file_id = BaseFile.parse(os.path.basename(partition.base_file)).file_id
-        ref = partition.base_file
-    else:
-        # log-only slice (bucket-routed first touches, write/bucket.py):
-        # compaction writes the group's FIRST base
-        from hudi_rs_spark.fs.file_group import LogFile
+    rel_dir, file_id = slice_identity(shared["path"], partition)
+    return finish_base_file(
+        read_slices([partition]), shared["path"], rel_dir, file_id,
+        shared["instant"], task_token(), shared["side"],
+    )
 
-        file_id = LogFile.parse(os.path.basename(partition.log_files[0])).file_id
-        ref = partition.log_files[0]
-    d = os.path.dirname(os.path.relpath(ref, base_path))
-    rel_dir = "" if d == "." else d
-    from pyspark import TaskContext
 
-    tc = TaskContext.get()
-    token = f"{tc.partitionId()}-{tc.stageId()}-{tc.attemptNumber()}" if tc else "0-0-0"
-    name = f"{file_id}_{token}_{instant}.parquet"
-    rel = f"{rel_dir}/{name}" if rel_dir else name
+def compaction_side_records(path: str, config) -> dict:
+    """``worklist.side_records`` for a compaction rewrite: every key
+    stays in its file group, so there is no record-index relocation."""
+    from hudi_rs_spark.write.worklist import side_records
 
-    batches = list(_read_slice(partition))
-    if batches:
-        merged = pa.Table.from_batches(batches)
-    else:
-        import json
-
-        from pyspark.sql import types as T
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        merged = to_arrow_schema(
-            T.StructType.fromJson(json.loads(partition.schema_json))
-        ).empty_table()
-    if "_hoodie_file_name" in merged.column_names:
-        i = merged.column_names.index("_hoodie_file_name")
-        merged = merged.set_column(
-            i, "_hoodie_file_name", pa.array([name] * len(merged), pa.string())
-        )
-    from hudi_rs_spark.write.writer import _fs, write_parquet
-
-    full = f"{base_path}/{rel}"
-    size = write_parquet(merged, full, _fs(base_path))
-    stat = {
-        "fileId": file_id,
-        "path": rel,
-        "partitionPath": rel_dir,
-        "numWrites": len(merged),
-        "fileSizeInBytes": size,
-        "totalWriteBytes": size,
-    }
-    if with_stats:
-        from hudi_rs_spark.write.mdt_stats import compute_column_stats
-
-        stat["columnStats"] = compute_column_stats(merged)
-    if shared.get("with_bloom") and "_hoodie_record_key" in merged.column_names:
-        # the rewritten base carries a NEW file name — re-emit its bloom
-        # so the tag path keeps pruning (a missing record is safe but
-        # makes the file an always-candidate)
-        import base64
-
-        from hudi_rs_spark.bloomfilter import build_bloom
-
-        stat["bloomFilter"] = base64.b64encode(
-            build_bloom(
-                k.as_py()
-                for k in merged["_hoodie_record_key"].combine_chunks()
-            )
-        ).decode("ascii")
-    return stat
+    return {**side_records(path, config), "index_shards": 0}
 
 
 def compact(
@@ -179,9 +130,6 @@ def compact(
     if not dirty:
         return 0
     instant = instant or new_instant()
-    meta_parts = tc.props.get("hoodie.table.metadata.partitions", "")
-    with_stats = "column_stats" in meta_parts
-    with_bloom = "bloom_filters" in meta_parts
     cfg = service_config(tc, path, instant)
     # claim the compaction instant before any task writes (services take
     # the same collision-detection path as the batch writer)
@@ -195,8 +143,8 @@ def compact(
 
     shared = shared_scan_context(dirty[0])
     shared.update({
-        "path": path, "instant": instant, "with_stats": with_stats,
-        "with_bloom": with_bloom,
+        "path": path, "instant": instant,
+        "side": compaction_side_records(path, tc),
     })
     stats = run_slice_tasks(
         spark, [slice_descriptor(p) for p in dirty], shared, _compact_one

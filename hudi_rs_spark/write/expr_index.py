@@ -145,13 +145,10 @@ def create_expression_index(spark, path: str, name: str, expr: str) -> int:
 
         def stats_one(pdf):
             import pandas as pd
-            from pyspark import TaskContext
 
-            tc = TaskContext.get()
-            token = (
-                f"{tc.partitionId()}-{tc.stageId()}-{tc.attemptNumber()}"
-                if tc else "0-0-0"
-            )
+            from hudi_rs_spark.write.worklist import task_token
+
+            token = task_token()
             fname = pdf["_hoodie_file_name"].iloc[0]
             part = pdf["_hoodie_partition_path"].iloc[0] or ""
             col = pdf["__expr_value"]

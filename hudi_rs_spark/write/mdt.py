@@ -25,8 +25,8 @@ from hudi_rs_spark.metadata.files_partition import (
     ALL_PARTITIONS_KEY,
     NON_PARTITIONED_NAME,
 )
-from hudi_rs_spark.write.config import WriteConfig, new_instant
-from hudi_rs_spark.write.writer import _local
+from hudi_rs_spark.write.config import WriteConfig
+from hudi_rs_spark.write.writer import _local, completed_instant_name
 
 MDT_FILE_ID = "files-0000"
 COL_STATS_FILE_ID = "col-stats-0000"
@@ -407,7 +407,7 @@ def apply_deletions_to_mdt(cfg: WriteConfig, deleted: dict[str, list[str]]) -> N
     from hudi_rs_spark.write.logblocks import encode_datum
 
     mdt = _mdt_base(cfg)
-    _init_mdt(mdt)
+    _init_mdt(mdt, cfg.storage_dict())
     records: list[tuple[bytes, bytes]] = []
     for part, names in sorted(deleted.items()):
         key = part if part else NON_PARTITIONED_NAME
@@ -485,12 +485,11 @@ def publish_mdt_deltacommit(
 ) -> None:
     """Atomically publish one MDT deltacommit at ``instant`` — the
     single visibility gate for every MDT log block of that instant."""
-    completion = max(new_instant(), instant)
     meta = {
         "partitionToWriteStats": write_stats,
         "operationType": "UPSERT",
     }
+    name = completed_instant_name(instant, "deltacommit", 8)
     _st(mdt, options).publish_bytes(
-        f"{mdt}/.hoodie/timeline/{instant}_{completion}.deltacommit",
-        json.dumps(meta).encode(),
+        f"{mdt}/.hoodie/timeline/{name}", json.dumps(meta).encode()
     )

@@ -148,15 +148,11 @@ def backfill_bloom_filters(spark, path: str) -> int:
 
         def bloom_one(pdf):
             import pandas as pd
-            from pyspark import TaskContext
 
             from hudi_rs_spark.bloomfilter import build_bloom
+            from hudi_rs_spark.write.worklist import task_token
 
-            tc = TaskContext.get()
-            token = (
-                f"{tc.partitionId()}-{tc.stageId()}-{tc.attemptNumber()}"
-                if tc else "0-0-0"
-            )
+            token = task_token()
             fname = pdf["_hoodie_file_name"].iloc[0]
             part = pdf["_hoodie_partition_path"].iloc[0] or ""
             append_bloom_log(

@@ -155,7 +155,7 @@ def compact_mdt(
     from hudi_rs_spark.write.concurrency import claim_instant, release_instant
     from hudi_rs_spark.write.config import WriteConfig, new_instant
     from hudi_rs_spark.write.mdt import purge_uncommitted_mdt_logs
-    from hudi_rs_spark.write.writer import _base, _fs
+    from hudi_rs_spark.write.writer import _base, _fs, completed_instant_name
 
     base = _base(table_path)
     st = _fs(base)
@@ -206,10 +206,9 @@ def compact_mdt(
         return 0
 
     # one completed MDT commit makes every new base visible atomically
-    completion = max(new_instant(), instant)
     meta = {"partitionToWriteStats": write_stats, "operationType": "COMPACT"}
     _fs(mdt).publish_bytes(
-        f"{mdt}/.hoodie/timeline/{instant}_{completion}.commit",
+        f"{mdt}/.hoodie/timeline/{completed_instant_name(instant, 'commit', 8)}",
         json.dumps(meta).encode(),
     )
     release_instant(mdt_cfg, "commit")

@@ -231,13 +231,9 @@ def backfill_record_index(spark, path: str, shards: int = 4) -> int:
         )
 
         def index_partition(rows):
-            from pyspark import TaskContext
+            from hudi_rs_spark.write.worklist import task_token
 
-            tc = TaskContext.get()
-            token = (
-                f"{tc.partitionId()}-{tc.stageId()}-{tc.attemptNumber()}"
-                if tc else "0-0-0"
-            )
+            token = task_token()
             entries = {
                 r["_hoodie_record_key"]: (r["_hoodie_partition_path"], r["fid"])
                 for r in rows

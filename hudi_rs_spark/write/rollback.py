@@ -60,7 +60,11 @@ def rollback_failed_writes(path: str, instant: str | None = None) -> list[str]:
     )
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.write.logblocks import rollback_block
-    from hudi_rs_spark.write.writer import _fs, timeline_dir
+    from hudi_rs_spark.write.writer import (
+        _fs,
+        completed_instant_name,
+        timeline_dir,
+    )
 
     st = _fs(path)
 
@@ -208,10 +212,7 @@ def rollback_failed_writes(path: str, instant: str | None = None) -> list[str]:
         return []
 
     ts = instant or new_instant()
-    if config.table_version >= 8:
-        name = f"{ts}_{max(new_instant(), ts)}.rollback"
-    else:
-        name = f"{ts}.rollback"
+    name = completed_instant_name(ts, "rollback", config.table_version)
     meta = {
         "commitsRollback": sorted(rolled),
         "totalFilesDeleted": files_deleted,

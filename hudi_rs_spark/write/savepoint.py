@@ -99,15 +99,12 @@ def savepoint(path: str, instant: str | None = None) -> str:
     target = instant or completed[-1]
     if target not in completed:
         raise ValueError(f"no completed instant {target!r} to savepoint")
-    from hudi_rs_spark.write.writer import _fs
+    from hudi_rs_spark.write.writer import _fs, completed_instant_name
 
     cfg = _cfg_for(path, "rollback")  # reuse a maintenance op slot
     tdir = _timeline_dir(path)
     ts = new_instant()
-    if cfg.table_version >= 8:
-        name = f"{ts}_{max(new_instant(), ts)}.{SAVEPOINT_ACTION}"
-    else:
-        name = f"{ts}.{SAVEPOINT_ACTION}"
+    name = completed_instant_name(ts, SAVEPOINT_ACTION, cfg.table_version)
     meta = {"savepointedInstant": target, "savepointTime": ts}
     _fs(tdir).publish_bytes(f"{tdir}/{name}", json.dumps(meta).encode())
     return target
@@ -199,7 +196,7 @@ def restore(path: str, instant: str, force: bool = False) -> list[str]:
     doomed = [i for i in timeline.instants if i.timestamp > instant]
     if instant not in {i.timestamp for i in timeline.instants}:
         raise ValueError(f"no completed instant {instant!r} to restore to")
-    from hudi_rs_spark.write.writer import _fs
+    from hudi_rs_spark.write.writer import _fs, completed_instant_name
 
     tdir = _timeline_dir(path)
     st = _fs(tdir)
@@ -231,10 +228,7 @@ def restore(path: str, instant: str, force: bool = False) -> list[str]:
 
     ts = new_instant()
     cfg = _cfg_for(path, "rollback")
-    if cfg.table_version >= 8:
-        name = f"{ts}_{max(new_instant(), ts)}.restore"
-    else:
-        name = f"{ts}.restore"
+    name = completed_instant_name(ts, "restore", cfg.table_version)
     meta = {"restoredToInstant": instant, "commitsRemoved": sorted(removed)}
     st.publish_bytes(f"{tdir}/{name}", json.dumps(meta).encode())
     return sorted(removed)

@@ -163,13 +163,9 @@ def backfill_secondary_index(spark, path: str, column: str) -> int:
         df = spark.read.parquet(*paths).select(column, "_hoodie_record_key")
 
         def index_partition(rows):
-            from pyspark import TaskContext
+            from hudi_rs_spark.write.worklist import task_token
 
-            tc = TaskContext.get()
-            token = (
-                f"{tc.partitionId()}-{tc.stageId()}-{tc.attemptNumber()}"
-                if tc else "0-0-0"
-            )
+            token = task_token()
             cells = [
                 (str(r[column]), r["_hoodie_record_key"])
                 for r in rows

@@ -63,7 +63,9 @@ from hudi_rs_spark.write.config import (
     TARGET_INSTANT_COL,
     WriteConfig,
     _opt,
+    new_instant,
 )
+from hudi_rs_spark.write.worklist import finish_base_file, task_token
 
 _FILE_ID_NS = uuid.UUID("00000000-0000-0000-0000-00000000aced")
 
@@ -216,6 +218,13 @@ class _TaskWriter:
         #                          "tables": [...], "deletes": [...]}
         self.log_groups: dict[tuple[str, str], dict] = {}
         self.stats: list[dict] = []
+        self.side = {
+            "column_stats": cfg.emit_column_stats,
+            "bloom": cfg.emit_bloom_filters,
+            "index_shards": (
+                cfg.record_index_shards if cfg.emit_record_index else 0
+            ),
+        }
 
     # -- routing ----------------------------------------------------------
     def consume(self, batch: pa.RecordBatch) -> None:
@@ -423,43 +432,12 @@ class _TaskWriter:
         keys = merged["__hoodie_key"].combine_chunks()
         data = self._data_columns(merged)
         file_id = self._new_file_id(pv)
-        ext = self.cfg.base_file_format
-        name = f"{file_id}_{self.token}_{self.cfg.instant}.{ext}"
-        rel = f"{pv}/{name}" if pv else name
-        full = f"{self.base}/{rel}"
-        size = write_base_file(
-            self._with_meta(data, keys, pv, name), full, self.storage
+        stat = finish_base_file(  # names the file and sets _hoodie_file_name
+            self._with_meta(data, keys, pv, ""), self.cfg.path, pv, file_id,
+            self.cfg.instant, self.token, self.side,
+            ext=self.cfg.base_file_format,
+            storage_options=self.cfg.storage_dict(), inserts=True,
         )
-        stat = {
-            "fileId": file_id,
-            "path": rel,
-            "partitionPath": pv,
-            "numWrites": len(merged),
-            "numInserts": len(merged),
-            "fileSizeInBytes": size,
-            "totalWriteBytes": size,
-        }
-        if self.cfg.emit_column_stats:
-            from hudi_rs_spark.write.mdt_stats import compute_column_stats
-
-            stat["columnStats"] = compute_column_stats(data)
-        if self.cfg.emit_bloom_filters:
-            import base64
-
-            from hudi_rs_spark.bloomfilter import build_bloom
-
-            stat["bloomFilter"] = base64.b64encode(
-                build_bloom(k.as_py() for k in keys)
-            ).decode("ascii")
-        if self.cfg.emit_record_index:
-            from hudi_rs_spark.write.record_index import append_record_index_log
-
-            append_record_index_log(
-                self.cfg.path, self.cfg.instant,
-                {k.as_py(): (pv, file_id) for k in keys},
-                self.cfg.record_index_shards, self.token,
-                self.cfg.storage_dict(),
-            )
         self._emit_secondary_cells(data, keys)
         if self.cfg.emit_cdc and len(data):
             # change rows ride in a SIDECAR ``.cdc.`` file: the data
@@ -577,10 +555,7 @@ def write_task(cfg: WriteConfig, iterator) -> HudiWriteMessage:
     from pyspark import TaskContext
 
     tc = TaskContext.get()
-    tpid = tc.partitionId() if tc else 0
-    attempt = tc.attemptNumber() if tc else 0
-    stage = tc.stageId() if tc else 0
-    tw = _TaskWriter(cfg, tpid, token=f"{tpid}-{stage}-{attempt}")
+    tw = _TaskWriter(cfg, tc.partitionId() if tc else 0, task_token())
     for batch in iterator:
         tw.consume(batch)
     return HudiWriteMessage(stats=tw.finish())
@@ -849,6 +824,15 @@ def timeline_dir(cfg: WriteConfig) -> str:
     return f"{base}/.hoodie"
 
 
+def completed_instant_name(instant: str, action: str, table_version: int) -> str:
+    """File name of ``instant``'s completed ``action``: v8+
+    ``{instant}_{completion}.{action}`` with a completion time that never
+    precedes the instant, v6 ``{instant}.{action}``."""
+    if table_version >= 8:
+        return f"{instant}_{max(new_instant(), instant)}.{action}"
+    return f"{instant}.{action}"
+
+
 def commit_instant(
     cfg: WriteConfig,
     stats: list[dict],
@@ -863,8 +847,6 @@ def commit_instant(
     this under the commit lock. ``table_config``: the table's config as
     the caller loaded it, for the callback-sink lookup (read from
     storage when not given)."""
-    from hudi_rs_spark.write.config import new_instant
-
     instant = cfg.instant
     action = action or cfg.action
     by_partition: dict[str, list[dict]] = {}
@@ -882,12 +864,7 @@ def commit_instant(
     if extra:
         meta["extraMetadata"] = extra
     tdir = timeline_dir(cfg)
-    if cfg.table_version >= 8:
-        completion = max(new_instant(), instant)  # monotonic completion ts
-        name = f"{instant}_{completion}.{action}"
-    else:
-        name = f"{instant}.{action}"
-    path = f"{tdir}/{name}"
+    path = f"{tdir}/{completed_instant_name(instant, action, cfg.table_version)}"
     # atomic publish: a reader sees a complete instant or none at all
     _fs(tdir, cfg.storage_dict()).publish_bytes(path, json.dumps(meta).encode())
     # post-publish notification (write/callbacks.py) — never fails the

@@ -331,21 +331,6 @@ class TestConvertToBucket:
         snap = _snap(spark, t)
         assert snap[2] == ("w2", 3) and snap[1] == ("u1", 2)
 
-    def test_conversion_rewrites_record_index(self, spark, tmp_path):
-        from hudi_rs_spark.sources.hudi import HudiTable
-        from hudi_rs_spark.write.bucket import convert_to_bucket
-
-        t = self._seed_plain(
-            spark, tmp_path,
-            **{"metadata.enable": "true", "metadata.recordindex.enable": "true"},
-        )
-        convert_to_bucket(spark, t, 4)
-        rows = {
-            r.id: r.name
-            for r in HudiTable(t, spark).point_lookup(["1", "8"]).collect()
-        }
-        assert rows == {1: "u1", 8: "n8"}
-
     def test_invalid_targets_rejected(self, spark, tmp_path):
         from hudi_rs_spark.write.bucket import convert_to_bucket
 

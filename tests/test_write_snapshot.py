@@ -1,6 +1,7 @@
 """One table snapshot per write step: ``upsert`` / ``delete`` on the
-driver and the ``hudi_py`` writer's plan and commit steps each load the
-table (hoodie.properties + timeline) once and hand that snapshot to every
+driver, the ``hudi_py`` writer's plan and commit steps, and the
+``cluster`` and ``split_buckets`` services each load the table
+(hoodie.properties + timeline) once and hand that snapshot to every
 helper, instead of re-reading it by path in each one.
 
 The counts are taken in the test process by wrapping
@@ -145,3 +146,39 @@ def test_writer_plan_reads_properties_once_and_commit_loads_once(
     assert reads["props"] <= 2 and reads["timeline"] <= 1, dict(reads)
     live = _live(spark, tdir)
     assert len(live) == 202 and live[1001] == "b"
+
+
+def test_cluster_loads_the_table_once(spark, tdir, reads):  # noqa: F811
+    from hudi_rs_spark.write.cluster import cluster
+
+    _seed(spark, tdir)
+    before = _live(spark, tdir)
+    reads.clear()
+    assert cluster(spark, tdir, min_group_slices=1) > 0
+    # the planning snapshot + one snapshot under the commit lock
+    assert reads["timeline"] <= 2 and reads["props"] <= 2, dict(reads)
+    assert _live(spark, tdir) == before
+
+
+def test_split_buckets_loads_the_table_once(spark, tdir, reads):  # noqa: F811
+    from hudi_rs_spark.write.bucket import split_buckets
+    from hudi_rs_spark.write.upsert import upsert
+
+    _register(spark)
+    upsert(
+        spark.createDataFrame(
+            [(i, f"n{i}", f"p{i % 2}", 1) for i in range(40)], SCHEMA
+        ),
+        tdir,
+        **{
+            "hoodie.table.name": "snap_bkt", "recordkey.field": "id",
+            "precombine.field": "ts", "partitionpath.field": "part",
+            "table.type": "MERGE_ON_READ", "table.version": "8",
+            "index.type": "bucket", "bucket.index.num.buckets": "2",
+        },
+    )
+    before = _live(spark, tdir)
+    reads.clear()
+    assert split_buckets(spark, tdir, [(0, None)]) > 0
+    assert reads["timeline"] <= 2 and reads["props"] <= 2, dict(reads)
+    assert _live(spark, tdir) == before

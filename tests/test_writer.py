@@ -1751,3 +1751,28 @@ class TestBulkInsert:
                 self._df(spark, 2), str(tmp_path / "t"),
                 sort_mode="SHUFFLE",
             )
+
+
+def test_clean_tombstones_reach_the_mdt_with_the_table_storage_options(
+    tmp_path, monkeypatch
+):
+    """A clean's MDT init and appends resolve storage with the table's
+    own ``storage.*`` options: an options-less lookup would get the most
+    recently primed handle for the bucket, not this table's."""
+    import hudi_rs_spark.write.mdt as mdt_mod
+    from hudi_rs_spark.write.config import WriteConfig
+
+    cfg = WriteConfig.from_options(
+        {"path": str(tmp_path / "t"), "recordkey.field": "id",
+         "storage.token": "t1"}
+    )
+    seen = []
+    real = mdt_mod._st
+
+    def recording(path, options=None):
+        seen.append(options)
+        return real(path, options)
+
+    monkeypatch.setattr(mdt_mod, "_st", recording)
+    mdt_mod.apply_deletions_to_mdt(cfg, {"p=a": ["f1_0-0-0_001.parquet"]})
+    assert seen and all(o == {"token": "t1"} for o in seen), seen
