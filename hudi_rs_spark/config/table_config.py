@@ -55,6 +55,38 @@ def parse_properties(text: str) -> dict[str, str]:
     return out
 
 
+def format_properties(props: dict[str, str]) -> str:
+    """The inverse of ``parse_properties``: one ``key=value`` line per
+    entry, sorted by key. ``\\`` is escaped everywhere; in keys so are
+    ``=``/``:`` (the separators) and a leading ``#``/``!`` (a comment
+    marker). The reader strips both sides, so surrounding whitespace
+    does not survive."""
+    lines = []
+    for k, v in sorted(props.items()):
+        key = k.replace("\\", "\\\\").replace("=", "\\=").replace(":", "\\:")
+        if key.startswith(("#", "!")):
+            key = "\\" + key
+        val = v.replace("\\", "\\\\")
+        lines.append(f"{key}={val}")
+    return "\n".join(lines) + "\n"
+
+
+def update_properties(base, edit, storage_options=None) -> None:
+    """Read-modify-publish ``{base}/.hoodie/hoodie.properties`` through
+    the storage ``storage_options`` select: ``edit`` receives the parsed
+    properties and returns the new ones, which are published atomically
+    unless they are unchanged."""
+    from hudi_rs_spark.fs.storage import as_local_path, storage_for
+
+    base = as_local_path(base) or base
+    st = storage_for(base, storage_options)
+    path = f"{base}/.hoodie/hoodie.properties"
+    have = parse_properties(st.read_text(path))
+    new = edit(dict(have))
+    if new != have:
+        st.publish_bytes(path, format_properties(new).encode())
+
+
 @dataclass
 class HudiTableConfig:
     """Typed view over hoodie.properties."""

@@ -40,7 +40,10 @@ import json
 def archive_timeline(path: str, keep_active: int = 10) -> int:
     """Move the oldest completed data instants into the archived layout;
     returns the number archived (0 = nothing to do)."""
-    from hudi_rs_spark.config.table_config import HudiTableConfig
+    from hudi_rs_spark.config.table_config import (
+        HudiTableConfig,
+        update_properties,
+    )
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.timeline.timeline import _completed_file_name
     from hudi_rs_spark.write.writer import _base, _fs
@@ -73,7 +76,13 @@ def archive_timeline(path: str, keep_active: int = 10) -> int:
     # flag is harmless, but a crash after deletion with the gate still
     # off would make rollback_failed_writes treat every archived
     # commit's base files as orphans (permanent data loss).
-    _enable_archived_reads(st, base)
+    if not config.archived_read_enabled:
+        update_properties(
+            base,
+            lambda have: {
+                **have, "hoodie.internal.timeline.archived.enabled": "true"
+            },
+        )
 
     tdir = timeline.timeline_dir
     if config.timeline_layout_version >= 2:
@@ -149,17 +158,3 @@ def _archive_lsm(st, base: str, tdir: str, config, victims) -> None:
     for name in names:
         st.remove(f"{tdir}/{name}")
 
-
-def _enable_archived_reads(st, base: str) -> None:
-    props_path = f"{base}/.hoodie/hoodie.properties"
-    text = st.read_text(props_path)
-    have = dict(
-        ln.split("=", 1) for ln in text.splitlines() if "=" in ln
-    )
-    if have.get("hoodie.internal.timeline.archived.enabled", "").lower() == "true":
-        return
-    have["hoodie.internal.timeline.archived.enabled"] = "true"
-    st.publish_bytes(
-        props_path,
-        ("\n".join(f"{k}={v}" for k, v in sorted(have.items())) + "\n").encode(),
-    )

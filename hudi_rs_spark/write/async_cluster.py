@@ -188,7 +188,6 @@ def _scheduled_cluster_one(desc: dict, shared: dict) -> dict:
     slices (write/cluster.py::_cluster_one does the heavy lifting), then
     migrate the group's extra committed logs (pending-window appends)
     onto the new output group and re-point their record-index entries."""
-    from hudi_rs_spark.fs.storage import storage_for
     from hudi_rs_spark.logfile.reader import (
         BLOCK_COMMAND,
         BLOCK_CORRUPTED,
@@ -197,6 +196,7 @@ def _scheduled_cluster_one(desc: dict, shared: dict) -> dict:
     )
     from hudi_rs_spark.write.cluster import _cluster_one
     from hudi_rs_spark.write.worklist import task_token
+    from hudi_rs_spark.write.writer import _fs
 
     stat = _cluster_one(
         {k: desc[k] for k in ("rel_dir", "group_idx", "slices")}, shared
@@ -205,7 +205,8 @@ def _scheduled_cluster_one(desc: dict, shared: dict) -> dict:
     instant = shared["instant"]
     rel_dir = desc["rel_dir"]
     out_fid = stat["fileId"]
-    st = storage_for(base_path)
+    options = shared["storage_options"]
+    st = _fs(base_path, options)
     valid = set(shared["valid_instants"])
     migrated, skipped = [], []
     keymap: dict[str, tuple[str, str]] = {}
@@ -244,7 +245,9 @@ def _scheduled_cluster_one(desc: dict, shared: dict) -> dict:
     if keymap:
         from hudi_rs_spark.write.record_index import append_record_index_log
 
-        append_record_index_log(base_path, instant, keymap, index_shards, token)
+        append_record_index_log(
+            base_path, instant, keymap, index_shards, token, options
+        )
     stat["migratedLogs"] = migrated
     stat["skippedExtras"] = skipped
     return stat
@@ -581,6 +584,7 @@ def _run_one_plan(spark, path, plan_instant: str, plan: dict) -> int:
                         path, plan_instant,
                         {k: (out_dir, out_fid) for k in keys},
                         index_shards, f"0-0-r{attempt}",
+                        shared["storage_options"],
                     )
         read_point = new_rp
 

@@ -43,6 +43,7 @@ import os
 import shutil
 import uuid
 
+from hudi_rs_spark.config.table_config import format_properties
 from hudi_rs_spark.write.config import WriteConfig, new_instant
 
 _BOOTSTRAP_NS = uuid.UUID("00000000-0000-0000-0000-0000b0075a90")
@@ -220,8 +221,7 @@ def bootstrap_table(
         props["hoodie.datasource.write.drop.partition.columns"] = "true"
     props["hoodie.bootstrap.base.path"] = os.path.abspath(source)
     st.publish_bytes(
-        f"{target}/.hoodie/hoodie.properties",
-        ("\n".join(f"{k}={v}" for k, v in sorted(props.items())) + "\n").encode(),
+        f"{target}/.hoodie/hoodie.properties", format_properties(props).encode()
     )
     os.makedirs(timeline_dir(cfg), exist_ok=True)
 

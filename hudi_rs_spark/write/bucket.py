@@ -203,6 +203,7 @@ def _rewrite_groups(snap, fid_col: Column, cfg, table, replaced) -> None:
 
     path, instant = cfg.path, cfg.instant
     side = side_records(path, table.config)
+    options = table.storage_options
 
     def write_group(key, rows):
         from hudi_rs_spark.write.worklist import finish_base_file, task_token
@@ -210,6 +211,7 @@ def _rewrite_groups(snap, fid_col: Column, cfg, table, replaced) -> None:
         stat = finish_base_file(
             rows.drop_columns([_FID_COL]), path, key[0].as_py() or "",
             key[1].as_py(), instant, task_token(), side,
+            storage_options=options,
         )
         return pa.table({"stat": [json.dumps(stat)]})
 
@@ -248,10 +250,10 @@ def convert_to_bucket(
     conflicts instead of being silently dropped.
 
     Returns the number of file groups replaced."""
+    from hudi_rs_spark.config.table_config import update_properties
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.write.concurrency import claim_instant, release_instant
     from hudi_rs_spark.write.config import new_instant, service_config
-    from hudi_rs_spark.write.record_index import _local_base, _rewrite_props
 
     table = HudiTable(path, spark)
     tc = table.config
@@ -288,7 +290,7 @@ def convert_to_bucket(
         have[NUM_BUCKETS_PROP] = str(num_buckets)
         return have
 
-    _rewrite_props(_local_base(path), pin_bucket)
+    update_properties(path, pin_bucket, table.storage_options)
     release_instant(cfg, "replacecommit")
     return sum(len(v) for v in replaced.values())
 
@@ -345,10 +347,10 @@ def split_buckets(
     metadata-only trie pin). Returns the number of file groups replaced.
     """
     from hudi_rs_spark.config.read_config import HudiReadOptions
+    from hudi_rs_spark.config.table_config import update_properties
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.write.concurrency import claim_instant, release_instant
     from hudi_rs_spark.write.config import new_instant, service_config
-    from hudi_rs_spark.write.record_index import _local_base, _rewrite_props
 
     table = HudiTable(path, spark)
     tc = table.config
@@ -403,13 +405,14 @@ def split_buckets(
         tc, path, instant or new_instant(), "cluster", instant is not None
     )
     new_splits = splits | set(norm_leaves)
+
+    def pin_split(have: dict) -> dict:
+        have[SPLITS_PROP] = splits_str(new_splits)
+        return have
+
     if not parent_slices:
         # no partition materialized any parent: metadata-only splits
-        def pin_only(have: dict) -> dict:
-            have[SPLITS_PROP] = splits_str(new_splits)
-            return have
-
-        _rewrite_props(_local_base(path), pin_only)
+        update_properties(path, pin_split, table.storage_options)
         write_hashing_metadata(path, cfg.instant, n, new_splits, [""])
         return 0
 
@@ -422,12 +425,7 @@ def split_buckets(
         table._execute_slices(parent_slices, None, HudiReadOptions()),
         leaf_file_id_expr(b_col, m_col, n), cfg, table, replaced,
     )
-
-    def pin_split(have: dict) -> dict:
-        have[SPLITS_PROP] = splits_str(new_splits)
-        return have
-
-    _rewrite_props(_local_base(path), pin_split)
+    update_properties(path, pin_split, table.storage_options)
     write_hashing_metadata(
         path, cfg.instant, n, new_splits, sorted(replaced) or [""]
     )
@@ -457,10 +455,10 @@ def merge_buckets(
     props: validator flags ("live for SPLIT bucket"), re-run heals
     (metadata-only unpin) — TestRescaleCrashRecovery."""
     from hudi_rs_spark.config.read_config import HudiReadOptions
+    from hudi_rs_spark.config.table_config import update_properties
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.write.concurrency import claim_instant, release_instant
     from hudi_rs_spark.write.config import new_instant, service_config
-    from hudi_rs_spark.write.record_index import _local_base, _rewrite_props
 
     table = HudiTable(path, spark)
     tc = table.config
@@ -491,13 +489,13 @@ def merge_buckets(
     cfg = service_config(
         tc, path, instant or new_instant(), "cluster", instant is not None
     )
+
+    def unpin_split(have: dict) -> dict:
+        have[SPLITS_PROP] = splits_str(new_splits)
+        return have
+
     if not child_slices:
-
-        def unpin_only(have: dict) -> dict:
-            have[SPLITS_PROP] = splits_str(new_splits)
-            return have
-
-        _rewrite_props(_local_base(path), unpin_only)
+        update_properties(path, unpin_split, table.storage_options)
         write_hashing_metadata(path, cfg.instant, n, new_splits, [""])
         return 0
 
@@ -508,12 +506,7 @@ def merge_buckets(
         table._execute_slices(child_slices, None, HudiReadOptions()),
         F.lit(parent_fid), cfg, table, replaced,
     )
-
-    def unpin_split(have: dict) -> dict:
-        have[SPLITS_PROP] = splits_str(new_splits)
-        return have
-
-    _rewrite_props(_local_base(path), unpin_split)
+    update_properties(path, unpin_split, table.storage_options)
     write_hashing_metadata(
         path, cfg.instant, n, new_splits, sorted(replaced) or [""]
     )

@@ -74,6 +74,7 @@ def _cluster_one(desc: dict, shared: dict) -> dict:
         merged, shared["path"], desc["rel_dir"],
         _output_file_id(instant, desc["rel_dir"], desc["group_idx"]),
         instant, task_token(), shared["side"],
+        storage_options=shared["storage_options"],
     )
 
 

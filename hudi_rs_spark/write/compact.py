@@ -54,6 +54,7 @@ def _compact_one(desc: dict, shared: dict) -> dict:
     return finish_base_file(
         read_slices([partition]), shared["path"], rel_dir, file_id,
         shared["instant"], task_token(), shared["side"],
+        storage_options=shared["storage_options"],
     )
 
 

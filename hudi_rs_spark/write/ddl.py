@@ -174,9 +174,11 @@ def rename_column(
     (they are wired into routing, pruning, and precombine)."""
     import json
 
-    from hudi_rs_spark.config.table_config import HudiTableConfig
+    from hudi_rs_spark.config.table_config import (
+        HudiTableConfig,
+        update_properties,
+    )
     from hudi_rs_spark.sources.hudi import HudiTable
-    from hudi_rs_spark.write.record_index import _local_base, _rewrite_props
 
     tc = HudiTableConfig.from_base_path(path)
     protected = set(tc.record_key_fields) | set(tc.partition_fields) | set(
@@ -247,7 +249,7 @@ def rename_column(
         have[RENAMES_PROP] = json.dumps(chain, sort_keys=True)
         return have
 
-    _rewrite_props(_local_base(path), pin)
+    update_properties(path, pin)
 
 
 # ---------------------------------------------------------------------------
@@ -293,7 +295,7 @@ def set_table_properties(path: str, props: dict[str, str]) -> int:
     commit.callback.file, precommit validators) and user tags. One
     read-modify-publish of the properties file; no commit (properties
     are table config, not data — same as Hudi)."""
-    from hudi_rs_spark.write.record_index import _local_base, _rewrite_props
+    from hudi_rs_spark.config.table_config import update_properties
 
     if not props:
         raise DdlError("SET TBLPROPERTIES requires at least one key")
@@ -303,7 +305,7 @@ def set_table_properties(path: str, props: dict[str, str]) -> int:
         have.update({str(k): str(v) for k, v in props.items()})
         return have
 
-    _rewrite_props(_local_base(path), edit)
+    update_properties(path, edit)
     return len(props)
 
 
@@ -312,8 +314,10 @@ def unset_table_properties(
 ) -> int:
     """ALTER TABLE UNSET TBLPROPERTIES [IF EXISTS]: remove free keys.
     Without ``if_exists`` a missing key raises (Spark semantics)."""
-    from hudi_rs_spark.config.table_config import HudiTableConfig
-    from hudi_rs_spark.write.record_index import _local_base, _rewrite_props
+    from hudi_rs_spark.config.table_config import (
+        HudiTableConfig,
+        update_properties,
+    )
 
     keys = [str(k) for k in keys]
     if not keys:
@@ -334,5 +338,5 @@ def unset_table_properties(
         return have
 
     if present:
-        _rewrite_props(_local_base(path), edit)
+        update_properties(path, edit)
     return len(present)

@@ -17,8 +17,12 @@ Spark-first split:
   expression JVM-side (``F.expr`` — Catalyst, codegen), aggregates
   per-file min/max/counts map-side, and each task appends its files'
   records to the ``expr_index_{name}`` MDT file group executor-side
-  (the bloom-backfill pattern — stats never transit the driver);
-  one MDT deltacommit publishes atomically.
+  through the one MDT log appender (``write/mdt.py::append_mdt_log`` —
+  stats never transit the driver); one MDT deltacommit publishes
+  atomically. The expression is registered in ``hoodie.properties``
+  through the properties codec (``config/table_config.py::
+  update_properties``), which escapes backslashes, so an expression
+  like ``regexp_extract(name, '(\\d+)', 1)`` reads back unchanged.
 - QUERY: ``HudiTable.read_where_expression(name, op, literal)`` prunes
   slices whose indexed interval disproves the predicate — files
   WITHOUT an entry (written after the index build) always survive
@@ -32,57 +36,12 @@ the surviving files.
 
 from __future__ import annotations
 
-import json
-
 EXPR_INDEX_FILE_ID = "expr-index-0000"
 PROP_PREFIX = "hoodie.table.expr.index."
 
 
 def expr_index_partition(name: str) -> str:
     return f"expr_index_{name}"
-
-
-def append_expr_stats_log(
-    table_base_path: str,
-    partition_name: str,
-    instant: str,
-    records: list[tuple[str, str, str, object, object, int, int]],
-    token: str,
-    storage_options: dict | None = None,
-) -> None:
-    """Append (data_partition, file_name, expr, min, max, values, nulls)
-    records to the expression-index MDT file group. Runs on EXECUTORS —
-    one log file per task token, anchored like every MDT append
-    (write/mdt.py::_next_log_state)."""
-    from hudi_rs_spark.hfile.writer import build_hfile
-    from hudi_rs_spark.logfile.reader import BLOCK_HFILE_DATA, KEY_INSTANT_TIME
-    from hudi_rs_spark.write.logblocks import frame_block
-    from hudi_rs_spark.write.mdt import _next_log_state
-    from hudi_rs_spark.write.mdt_stats import (
-        STATS_RECORD_SCHEMA,
-        encode_stats_record,
-    )
-    from hudi_rs_spark.write.writer import _base, _fs
-
-    if not records:
-        return
-    cells = sorted(
-        encode_stats_record(
-            f"{part or '.'}:{fname}", fname, expr, mn, mx, values, nulls
-        )
-        for part, fname, expr, mn, mx, values, nulls in records
-    )
-    base = f"{_base(table_base_path)}/.hoodie/metadata/{partition_name}"
-    st = _fs(base, storage_options)
-    anchor, version = _next_log_state(base, EXPR_INDEX_FILE_ID, storage_options)
-    anchor = anchor or instant
-    log_name = f".{EXPR_INDEX_FILE_ID}_{anchor}.log.{version}_{token}"
-    payload = frame_block(
-        BLOCK_HFILE_DATA,
-        {KEY_INSTANT_TIME: instant},
-        build_hfile(cells, {"schema": json.dumps(STATS_RECORD_SCHEMA).encode()}),
-    )
-    st.append_bytes(f"{base}/{log_name}", payload)
 
 
 def create_expression_index(spark, path: str, name: str, expr: str) -> int:
@@ -97,17 +56,19 @@ def create_expression_index(spark, path: str, name: str, expr: str) -> int:
 
     from pyspark.sql import functions as F
 
-    from hudi_rs_spark.config.table_config import HudiTableConfig
+    from hudi_rs_spark.config.table_config import (
+        HudiTableConfig,
+        update_properties,
+    )
     from hudi_rs_spark.metadata.files_partition import has_files_partition
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.write.config import new_instant
-    from hudi_rs_spark.write.mdt import publish_mdt_deltacommit
-    from hudi_rs_spark.write.mdt import purge_uncommitted_mdt_logs
-    from hudi_rs_spark.write.record_index import (
-        _advertise,
-        _local_base,
-        _rewrite_props,
+    from hudi_rs_spark.write.mdt import (
+        publish_mdt_deltacommit,
+        purge_uncommitted_mdt_logs,
     )
+    from hudi_rs_spark.write.record_index import _advertise
+    from hudi_rs_spark.write.writer import _base
 
     if not re.fullmatch(r"[A-Za-z0-9_]+", name):
         raise ValueError(
@@ -146,9 +107,13 @@ def create_expression_index(spark, path: str, name: str, expr: str) -> int:
         def stats_one(pdf):
             import pandas as pd
 
+            from hudi_rs_spark.write.mdt import append_mdt_log
+            from hudi_rs_spark.write.mdt_stats import (
+                STATS_RECORD_SCHEMA,
+                encode_stats_record,
+            )
             from hudi_rs_spark.write.worklist import task_token
 
-            token = task_token()
             fname = pdf["_hoodie_file_name"].iloc[0]
             part = pdf["_hoodie_partition_path"].iloc[0] or ""
             col = pdf["__expr_value"]
@@ -162,10 +127,16 @@ def create_expression_index(spark, path: str, name: str, expr: str) -> int:
                 mx = mx.item() if hasattr(mx, "item") else mx
             else:
                 mn = mx = None
-            append_expr_stats_log(
-                path, partition_name, instant,
-                [(part, fname, expr, mn, mx, values, nulls)],
-                token,
+            append_mdt_log(
+                f"{_base(path)}/.hoodie/metadata", partition_name,
+                EXPR_INDEX_FILE_ID, STATS_RECORD_SCHEMA,
+                [
+                    encode_stats_record(
+                        f"{part or '.'}:{fname}", fname, expr, mn, mx,
+                        values, nulls,
+                    )
+                ],
+                instant, task_token(),
             )
             return pd.DataFrame({"f": [fname]})
 
@@ -176,42 +147,31 @@ def create_expression_index(spark, path: str, name: str, expr: str) -> int:
         )
 
     publish_mdt_deltacommit(
-        f"{_local_base(path)}/.hoodie/metadata", instant, {partition_name: []}
+        f"{_base(path)}/.hoodie/metadata", instant, {partition_name: []}
     )
 
-    _rewrite_props(
-        _local_base(path), lambda have: _advertise(have, partition_name)
-    )
-    _set_prop(path, PROP_PREFIX + name, expr)
+    def register(have: dict) -> dict:
+        have[PROP_PREFIX + name] = expr
+        return _advertise(have, partition_name)
+
+    update_properties(path, register)
     return int(n_files)
-
-
-def _set_prop(path: str, key: str, value: str | None) -> None:
-    """Add/remove one hoodie.properties entry (atomic rewrite)."""
-    from hudi_rs_spark.write.record_index import _local_base, _rewrite_props
-
-    def edit(have: dict) -> dict:
-        if value is None:
-            have.pop(key, None)
-        else:
-            have[key] = value
-        return have
-
-    _rewrite_props(_local_base(path), edit)
 
 
 def drop_expression_index(path: str, name: str) -> bool:
     """Remove the index: delete its MDT partition directory, un-advertise
     it, and drop the expression property. Returns False if absent."""
-    from hudi_rs_spark.config.table_config import HudiTableConfig
-    from hudi_rs_spark.write.record_index import _local_base, _rewrite_props
-    from hudi_rs_spark.write.writer import _fs
+    from hudi_rs_spark.config.table_config import (
+        HudiTableConfig,
+        update_properties,
+    )
+    from hudi_rs_spark.write.writer import _base, _fs
 
     config = HudiTableConfig.from_base_path(path)
     if config.props.get(PROP_PREFIX + name) is None:
         return False
     partition_name = expr_index_partition(name)
-    base = _local_base(path)
+    base = _base(path)
     st = _fs(base)
     pdir = f"{base}/.hoodie/metadata/{partition_name}"
     if st.isdir(pdir):
@@ -226,8 +186,8 @@ def drop_expression_index(path: str, name: str) -> bool:
             if p.strip() and p.strip() != partition_name
         ]
         have["hoodie.table.metadata.partitions"] = ",".join(sorted(parts))
+        have.pop(PROP_PREFIX + name, None)
         return have
 
-    _rewrite_props(base, unregister)
-    _set_prop(path, PROP_PREFIX + name, None)
+    update_properties(base, unregister)
     return True

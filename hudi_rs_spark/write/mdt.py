@@ -20,13 +20,17 @@ from __future__ import annotations
 import json
 import os
 
+from hudi_rs_spark.config.table_config import (
+    format_properties,
+    update_properties,
+)
 from hudi_rs_spark.logfile.reader import BLOCK_HFILE_DATA, KEY_INSTANT_TIME
 from hudi_rs_spark.metadata.files_partition import (
     ALL_PARTITIONS_KEY,
     NON_PARTITIONED_NAME,
 )
 from hudi_rs_spark.write.config import WriteConfig
-from hudi_rs_spark.write.writer import _local, completed_instant_name
+from hudi_rs_spark.write.writer import _base, _fs, completed_instant_name
 
 MDT_FILE_ID = "files-0000"
 COL_STATS_FILE_ID = "col-stats-0000"
@@ -64,18 +68,12 @@ MDT_RECORD_SCHEMA = {
 }
 
 
-def _st(path: str, options: dict | None = None):
-    from hudi_rs_spark.fs.storage import storage_for
-
-    return storage_for(path, options)
-
-
 def _mdt_base(cfg: WriteConfig) -> str:
-    return f"{_local(cfg.path)}/.hoodie/metadata"
+    return f"{_base(cfg.path)}/.hoodie/metadata"
 
 
 def _init_mdt(mdt: str, options: dict | None = None) -> None:
-    st = _st(mdt, options)
+    st = _fs(mdt, options)
     props_path = f"{mdt}/.hoodie/hoodie.properties"
     if st.isfile(props_path):
         return
@@ -88,53 +86,40 @@ def _init_mdt(mdt: str, options: dict | None = None) -> None:
         "hoodie.table.recordkey.fields": "key",
         "hoodie.populate.meta.fields": "false",
     }
-    st.publish_bytes(
-        props_path,
-        ("\n".join(f"{k}={v}" for k, v in sorted(props.items())) + "\n").encode(),
-    )
+    st.publish_bytes(props_path, format_properties(props).encode())
 
 
 def _ensure_data_props_flag(cfg: WriteConfig) -> None:
     """Flip the data table's hoodie.properties to advertise the files
     partition (the read side's ``has_files_partition`` gate)."""
-    st = _st(_local(cfg.path), cfg.storage_dict())
-    props_path = f"{_local(cfg.path)}/.hoodie/hoodie.properties"
-    text = st.read_text(props_path)
-    lines = [ln for ln in text.splitlines() if ln.strip()]
-    have = dict(ln.split("=", 1) for ln in lines if "=" in ln)
-    changed = False
-    parts = [
-        p.strip()
-        for p in have.get("hoodie.table.metadata.partitions", "").split(",")
-        if p.strip()
-    ]
     want = {"files"}
     if cfg.emit_column_stats:
         want |= {"column_stats", "partition_stats"}
     if cfg.emit_bloom_filters:
         want.add("bloom_filters")
     if cfg.emit_record_index:
-        want |= {"record_index"}
-        from hudi_rs_spark.write.record_index import SHARDS_PROP
+        want.add("record_index")
+    want |= {f"secondary_index_{col}" for col in cfg.secondary_index_columns}
 
-        if SHARDS_PROP not in have:
-            have[SHARDS_PROP] = str(cfg.record_index_shards)
-            changed = True
-    for col in cfg.secondary_index_columns:
-        want.add(f"secondary_index_{col}")
-    if not want <= set(parts):
-        have["hoodie.table.metadata.partitions"] = ",".join(
-            sorted(set(parts) | want)
-        )
-        changed = True
-    if have.get("hoodie.metadata.enable", "").lower() != "true":
-        have["hoodie.metadata.enable"] = "true"
-        changed = True
-    if changed:
-        st.publish_bytes(
-            props_path,
-            ("\n".join(f"{k}={v}" for k, v in sorted(have.items())) + "\n").encode(),
-        )
+    def edit(have: dict[str, str]) -> dict[str, str]:
+        if cfg.emit_record_index:
+            from hudi_rs_spark.write.record_index import SHARDS_PROP
+
+            have.setdefault(SHARDS_PROP, str(cfg.record_index_shards))
+        parts = {
+            p.strip()
+            for p in have.get("hoodie.table.metadata.partitions", "").split(",")
+            if p.strip()
+        }
+        if not want <= parts:
+            have["hoodie.table.metadata.partitions"] = ",".join(
+                sorted(parts | want)
+            )
+        if have.get("hoodie.metadata.enable", "").lower() != "true":
+            have["hoodie.metadata.enable"] = "true"
+        return have
+
+    update_properties(cfg.path, edit, cfg.storage_dict())
 
 
 def _next_log_state(
@@ -152,7 +137,7 @@ def _next_log_state(
     newest_base = ""
     from hudi_rs_spark.fs.file_group import BaseFile, LogFile
 
-    for e in _st(files_dir, options).list_dir(files_dir):
+    for e in _fs(files_dir, options).list_dir(files_dir):
         name = e.name
         if name.startswith(f".{file_id}_") and ".log." in name:
             lf = LogFile.parse(name)
@@ -173,7 +158,7 @@ def _mdt_completed_instants(mdt: str, options: dict | None = None) -> set[str]:
     (requested ts only — v8 names are ``{ts}_{completion}.{action}``)."""
     tdir = f"{mdt}/.hoodie/timeline"
     out: set[str] = set()
-    for e in _st(tdir, options).list_dir(tdir):
+    for e in _fs(tdir, options).list_dir(tdir):
         if e.name.endswith((".deltacommit", ".commit", ".replacecommit")):
             out.add(e.name.split(".", 1)[0].split("_", 1)[0])
     return out
@@ -185,7 +170,7 @@ def _claimed_data_instants(base: str, options: dict | None = None) -> set[str]:
     (write/concurrency.claim_instant). Checks both timeline layouts."""
     out: set[str] = set()
     for cand in (f"{base}/.hoodie/timeline", f"{base}/.hoodie"):
-        st = _st(cand, options)
+        st = _fs(cand, options)
         try:
             entries = st.list_dir(cand)
         except (FileNotFoundError, OSError):
@@ -214,8 +199,9 @@ def purge_uncommitted_mdt_logs(
     index lookups then report live keys as nonexistent and upsert
     tagging inserts duplicates. Running this BEFORE a write's tasks
     launch restores the invariant ``any on-disk anchor is committed``
-    that the executor-side appenders (record/secondary index, files
-    partition) rely on when they reuse an existing anchor.
+    that ``append_mdt_log`` relies on when it reuses an existing
+    anchor, for every MDT partition and on executors and the driver
+    alike.
 
     Driver-side, O(MDT files) listings; returns the deleted paths.
     Single-writer assumption: nothing else may be appending MDT logs
@@ -226,13 +212,9 @@ def purge_uncommitted_mdt_logs(
     re-instantiates the stream writer at commit time and the in-flight
     batch's (not-yet-committed) shard logs must survive that, and a
     restart REPLAYS the last batch under its original sidecar instant."""
-    from hudi_rs_spark.fs.storage import as_local_path
-
-    base = as_local_path(table_path)
-    if base is None:
-        base = table_path
+    base = _base(table_path)
     mdt = f"{base}/.hoodie/metadata"
-    st = _st(mdt, options)
+    st = _fs(mdt, options)
     from hudi_rs_spark.fs.file_group import LogFile
 
     # A LIVE concurrent writer's in-flight MDT appends are anchored at
@@ -269,8 +251,7 @@ def purge_uncommitted_mdt_logs(
 
 def apply_commit_to_mdt(cfg: WriteConfig, stats: list[dict]) -> None:
     """Record one data commit's files in the MDT files partition."""
-    from hudi_rs_spark.hfile.writer import build_hfile
-    from hudi_rs_spark.write.logblocks import encode_datum, frame_block
+    from hudi_rs_spark.write.logblocks import encode_datum
 
     mdt = _mdt_base(cfg)
     _init_mdt(mdt, cfg.storage_dict())
@@ -423,53 +404,77 @@ def apply_deletions_to_mdt(cfg: WriteConfig, deleted: dict[str, list[str]]) -> N
         _append_mdt_records(cfg, mdt, records)
 
 
+def append_mdt_log(
+    mdt: str,
+    partition_dir: str,
+    file_id: str,
+    schema: dict,
+    records: list[tuple[bytes, bytes]],
+    instant: str,
+    token: str,
+    storage_options: dict | None = None,
+) -> dict:
+    """Append ``records`` to MDT file group ``file_id`` of partition
+    ``partition_dir`` as one HFile-payload log block stamped with
+    ``instant``; returns the new log's write stat. The one writer of MDT
+    log files: driver-side for the commit's files/stats/bloom records
+    (``_append_mdt_records``), executor-side for the record, secondary
+    and expression indexes and the bloom backfill.
+
+    The log is ``.{file_id}_{anchor}.log.{version}_{token}``, anchored
+    at the group's existing log anchor (``_next_log_state``) so every
+    append of the slice attaches to it; a fresh group anchors at
+    ``instant``. Blocks become visible only when the MDT deltacommit at
+    ``instant`` is published."""
+    from hudi_rs_spark.hfile.writer import build_hfile
+    from hudi_rs_spark.write.logblocks import frame_block
+
+    out_dir = f"{mdt}/{partition_dir}"
+    anchor, version = _next_log_state(out_dir, file_id, storage_options)
+    name = f".{file_id}_{anchor or instant}.log.{version}_{token}"
+    payload = frame_block(
+        BLOCK_HFILE_DATA,
+        {KEY_INSTANT_TIME: instant},
+        build_hfile(records, {"schema": json.dumps(schema).encode()}),
+    )
+    _fs(out_dir, storage_options).append_bytes(f"{out_dir}/{name}", payload)
+    # the version is new, so the file holds exactly this block
+    return {
+        "fileId": file_id,
+        "path": f"{partition_dir}/{name}",
+        "partitionPath": partition_dir,
+        "fileSizeInBytes": len(payload),
+    }
+
+
 def _append_mdt_records(
     cfg: WriteConfig,
     mdt: str,
     records: list[tuple[bytes, bytes]],
     extra_partitions: list[tuple[str, str, dict, list]] | None = None,
 ) -> None:
-    """Append one HFile-payload log block per MDT partition and publish
-    ONE MDT deltacommit covering them all. ``records`` targets the
-    ``files`` partition; ``extra_partitions`` entries are
+    """Append one log block per MDT partition (``append_mdt_log``) and
+    publish ONE MDT deltacommit covering them all. ``records`` targets
+    the ``files`` partition; ``extra_partitions`` entries are
     (partition_dir, file_id, avro_schema, records) — e.g. column_stats /
     partition_stats. A single deltacommit matters: every MDT write for
     one data commit must appear atomically at the data commit's
     instant."""
-    from hudi_rs_spark.hfile.writer import build_hfile
-    from hudi_rs_spark.write.logblocks import frame_block
-
-    st = _st(mdt, cfg.storage_dict())
     instant = cfg.instant
     work = [("files", MDT_FILE_ID, MDT_RECORD_SCHEMA, records)]
     work.extend(extra_partitions or [])
     write_stats: dict[str, list[dict]] = {}
     for part_dir, file_id, schema, recs in work:
-        if not recs:
-            continue
-        hfile_bytes = build_hfile(
-            recs, {"schema": json.dumps(schema).encode()}
-        )
-        out_dir = f"{mdt}/{part_dir}"
-        anchor, version = _next_log_state(out_dir, file_id, cfg.storage_dict())
-        anchor = anchor or instant
-        # token embeds the writing instant: a concurrent process that
-        # computed the same (anchor, version) can then never emit the
-        # same NAME (the commit lock serializes the appends themselves)
-        log_name = f".{file_id}_{anchor}.log.{version}_{instant}-0"
-        payload = frame_block(
-            BLOCK_HFILE_DATA, {KEY_INSTANT_TIME: instant}, hfile_bytes
-        )
-        log_path = f"{out_dir}/{log_name}"
-        st.append_bytes(log_path, payload)
-        write_stats.setdefault(part_dir, []).append(
-            {
-                "fileId": file_id,
-                "path": f"{part_dir}/{log_name}",
-                "partitionPath": part_dir,
-                "fileSizeInBytes": st.size(log_path),
-            }
-        )
+        if recs:
+            # token embeds the writing instant: a concurrent process that
+            # computed the same (anchor, version) can then never emit the
+            # same NAME (the commit lock serializes the appends themselves)
+            write_stats.setdefault(part_dir, []).append(
+                append_mdt_log(
+                    mdt, part_dir, file_id, schema, recs, instant,
+                    f"{instant}-0", cfg.storage_dict(),
+                )
+            )
     if not write_stats:
         return
 
@@ -490,6 +495,6 @@ def publish_mdt_deltacommit(
         "operationType": "UPSERT",
     }
     name = completed_instant_name(instant, "deltacommit", 8)
-    _st(mdt, options).publish_bytes(
+    _fs(mdt, options).publish_bytes(
         f"{mdt}/.hoodie/timeline/{name}", json.dumps(meta).encode()
     )

@@ -12,6 +12,12 @@ Value shape mirrors Hudi's HoodieMetadataBloomFilter avro
 like write/mdt_stats.py — avro binary is plain field concatenation,
 and the hand encoder keeps reader and writer self-consistent without
 the wrapper-type zoo.
+
+This module only encodes records. They reach the MDT through the one
+log appender, ``write/mdt.py::append_mdt_log``: on the driver for a
+commit's new base files (``mdt._bloom_partition``), and in the
+executor tasks of ``backfill_bloom_filters``, one log file per task
+token, anchored to the group's existing log anchor.
 """
 
 from __future__ import annotations
@@ -62,46 +68,6 @@ def bloom_record_key(partition: str, file_name: str) -> str:
     return f"{partition or '.'}:{file_name}"
 
 
-def append_bloom_log(
-    table_base_path: str,
-    instant: str,
-    records: list[tuple[str, str, bytes]],
-    token: str,
-    storage_options: dict | None = None,
-) -> None:
-    """Append (partition, file_name, bloom_blob) records to the MDT
-    bloom_filters file group. Runs on EXECUTORS — one log file per task
-    token, anchored to the group's existing log anchor so all files
-    attach to the same MDT file slice (the append_record_index_log
-    pattern)."""
-    import json
-
-    from hudi_rs_spark.hfile.writer import build_hfile
-    from hudi_rs_spark.logfile.reader import BLOCK_HFILE_DATA, KEY_INSTANT_TIME
-    from hudi_rs_spark.write.logblocks import frame_block
-    from hudi_rs_spark.write.mdt import BLOOM_FILE_ID, _next_log_state
-    from hudi_rs_spark.write.writer import _base, _fs
-
-    if not records:
-        return
-    cells = sorted(
-        encode_bloom_record(part, fname, instant, blob)
-        for part, fname, blob in records
-    )
-    base = f"{_base(table_base_path)}/.hoodie/metadata/bloom_filters"
-    st = _fs(base, storage_options)
-    anchor, version = _next_log_state(base, BLOOM_FILE_ID, storage_options)
-    anchor = anchor or instant
-    log_name = f".{BLOOM_FILE_ID}_{anchor}.log.{version}_{token}"
-    hfile_bytes = build_hfile(
-        cells, {"schema": json.dumps(BLOOM_RECORD_SCHEMA).encode()}
-    )
-    payload = frame_block(
-        BLOCK_HFILE_DATA, {KEY_INSTANT_TIME: instant}, hfile_bytes
-    )
-    st.append_bytes(f"{base}/{log_name}", payload)
-
-
 def backfill_bloom_filters(spark, path: str) -> int:
     """Build bloom_filters records for a table that predates them: scan
     every live base file's key column DISTRIBUTED (one bloom per file,
@@ -115,16 +81,20 @@ def backfill_bloom_filters(spark, path: str) -> int:
     new blindness."""
     import os
 
-    from hudi_rs_spark.config.table_config import HudiTableConfig
+    from hudi_rs_spark.config.table_config import (
+        HudiTableConfig,
+        update_properties,
+    )
     from hudi_rs_spark.metadata.files_partition import has_files_partition
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.write.config import new_instant
-    from hudi_rs_spark.write.mdt import purge_uncommitted_mdt_logs
-    from hudi_rs_spark.write.record_index import (
-        _advertise,
-        _local_base,
-        _rewrite_props,
+    from hudi_rs_spark.write.mdt import (
+        BLOOM_FILE_ID,
+        publish_mdt_deltacommit,
+        purge_uncommitted_mdt_logs,
     )
+    from hudi_rs_spark.write.record_index import _advertise
+    from hudi_rs_spark.write.writer import _base
 
     config = HudiTableConfig.from_base_path(path)
     if not has_files_partition(config):
@@ -150,15 +120,21 @@ def backfill_bloom_filters(spark, path: str) -> int:
             import pandas as pd
 
             from hudi_rs_spark.bloomfilter import build_bloom
+            from hudi_rs_spark.write.mdt import append_mdt_log
             from hudi_rs_spark.write.worklist import task_token
 
-            token = task_token()
             fname = pdf["_hoodie_file_name"].iloc[0]
             part = pdf["_hoodie_partition_path"].iloc[0] or ""
-            append_bloom_log(
-                path, instant,
-                [(part, fname, build_bloom(pdf["_hoodie_record_key"]))],
-                token,
+            append_mdt_log(
+                f"{_base(path)}/.hoodie/metadata", "bloom_filters",
+                BLOOM_FILE_ID, BLOOM_RECORD_SCHEMA,
+                [
+                    encode_bloom_record(
+                        part, fname, instant,
+                        build_bloom(pdf["_hoodie_record_key"]),
+                    )
+                ],
+                instant, task_token(),
             )
             return pd.DataFrame({"f": [fname]})
 
@@ -168,15 +144,10 @@ def backfill_bloom_filters(spark, path: str) -> int:
             .count()
         )
 
-    from hudi_rs_spark.write.mdt import publish_mdt_deltacommit
-
     publish_mdt_deltacommit(
-        f"{_local_base(path)}/.hoodie/metadata", instant,
-        {"bloom_filters": []},
+        f"{_base(path)}/.hoodie/metadata", instant, {"bloom_filters": []}
     )
-    _rewrite_props(
-        _local_base(path), lambda have: _advertise(have, "bloom_filters")
-    )
+    update_properties(path, lambda have: _advertise(have, "bloom_filters"))
     return int(n_files)
 
 

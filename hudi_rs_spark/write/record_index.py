@@ -28,7 +28,6 @@ deletes, and clustering rewrites touch the index.
 from __future__ import annotations
 
 import hashlib
-import json
 import os
 
 RECORD_INDEX_PARTITION = "record_index"
@@ -103,15 +102,10 @@ def append_record_index_log(
 ) -> None:
     """Append this task's index entries (``None`` value = tombstone) to
     their shard file groups. Runs on EXECUTORS — one log file per
-    (shard, task token), anchored to the shard's existing log anchor so
-    all files attach to the same MDT file slice. All bytes route
-    through the storage backend, so index writes work on object stores
-    (workers resolve their own backend from ``storage_options``)."""
-    from hudi_rs_spark.hfile.writer import build_hfile
-    from hudi_rs_spark.logfile.reader import BLOCK_HFILE_DATA, KEY_INSTANT_TIME
-    from hudi_rs_spark.write.logblocks import frame_block
-    from hudi_rs_spark.write.mdt import _next_log_state
-    from hudi_rs_spark.write.writer import _base, _fs
+    (shard, task token) through ``mdt.append_mdt_log``; workers resolve
+    their own storage backend from ``storage_options``."""
+    from hudi_rs_spark.write.mdt import append_mdt_log
+    from hudi_rs_spark.write.writer import _base
 
     by_shard: dict[int, list[tuple[bytes, bytes]]] = {}
     for key, loc in entries.items():
@@ -121,20 +115,12 @@ def append_record_index_log(
             rec = encode_location(key, loc[0], loc[1])
         by_shard.setdefault(shard_of(key, shards), []).append(rec)
 
-    base = f"{_base(table_base_path)}/.hoodie/metadata/{RECORD_INDEX_PARTITION}"
-    st = _fs(base, storage_options)
+    mdt = f"{_base(table_base_path)}/.hoodie/metadata"
     for shard, records in sorted(by_shard.items()):
-        fid = shard_file_id(shard)
-        anchor, version = _next_log_state(base, fid, storage_options)
-        anchor = anchor or instant
-        log_name = f".{fid}_{anchor}.log.{version}_{token}"
-        hfile_bytes = build_hfile(
-            records, {"schema": json.dumps(RECORD_INDEX_SCHEMA).encode()}
+        append_mdt_log(
+            mdt, RECORD_INDEX_PARTITION, shard_file_id(shard),
+            RECORD_INDEX_SCHEMA, records, instant, token, storage_options,
         )
-        payload = frame_block(
-            BLOCK_HFILE_DATA, {KEY_INSTANT_TIME: instant}, hfile_bytes
-        )
-        st.append_bytes(f"{base}/{log_name}", payload)
 
 
 SHARDS_PROP = "hoodie.metadata.record.index.shards"
@@ -244,25 +230,21 @@ def backfill_record_index(spark, path: str, shards: int = 4) -> int:
         df.rdd.foreachPartition(index_partition)
 
     # one MDT deltacommit makes every shard's blocks visible atomically
+    from hudi_rs_spark.config.table_config import update_properties
     from hudi_rs_spark.write.mdt import publish_mdt_deltacommit
+    from hudi_rs_spark.write.writer import _base
 
     publish_mdt_deltacommit(
-        f"{_local_base(path)}/.hoodie/metadata", instant,
+        f"{_base(path)}/.hoodie/metadata", instant,
         {RECORD_INDEX_PARTITION: []},
     )
 
     # advertise: partitions += record_index, shard count pinned
-    _rewrite_props(
-        _local_base(path),
+    update_properties(
+        path,
         lambda have: _advertise(have, RECORD_INDEX_PARTITION, {SHARDS_PROP: str(shards)}),
     )
     return len(paths)
-
-
-def _local_base(path: str) -> str:
-    from hudi_rs_spark.write.writer import _base
-
-    return _base(path)
 
 
 def _advertise(
@@ -278,21 +260,3 @@ def _advertise(
     for k, v in (defaults or {}).items():
         have.setdefault(k, v)
     return have
-
-
-def _rewrite_props(base: str, edit) -> None:
-    """Read-modify-publish of hoodie.properties through storage."""
-    from hudi_rs_spark.fs.storage import storage_for
-
-    st = storage_for(base)
-    props_path = f"{base}/.hoodie/hoodie.properties"
-    have = dict(
-        ln.split("=", 1)
-        for ln in st.read_text(props_path).splitlines()
-        if "=" in ln
-    )
-    have = edit(have)
-    st.publish_bytes(
-        props_path,
-        ("\n".join(f"{k}={v}" for k, v in sorted(have.items())) + "\n").encode(),
-    )

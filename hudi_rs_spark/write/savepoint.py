@@ -124,8 +124,8 @@ def _rewind_mdt_files(st, path: str, instant: str) -> None:
       honestly by stripping the metadata partitions from the table
       props so readers fall back to direct listing and the writer
       refuses index-dependent paths until a backfill rebuilds them."""
+    from hudi_rs_spark.config.table_config import update_properties
     from hudi_rs_spark.fs.file_group import BaseFile, LogFile
-    from hudi_rs_spark.write.record_index import _rewrite_props
 
     mdt = f"{path}/.hoodie/metadata"
     surviving: set[str] = set()
@@ -174,7 +174,7 @@ def _rewind_mdt_files(st, path: str, instant: str) -> None:
                 )
             return have
 
-        _rewrite_props(path, strip)
+        update_properties(path, strip)
 
 
 def restore(path: str, instant: str, force: bool = False) -> list[str]:

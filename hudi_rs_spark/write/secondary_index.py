@@ -19,7 +19,6 @@ write of old values.
 
 from __future__ import annotations
 
-import json
 import os
 
 from hudi_rs_spark.metadata.secondary_index import (
@@ -82,44 +81,6 @@ def index_file_id(column: str) -> str:
     return f"secondary-index-{column}-0000"
 
 
-def append_secondary_index_log(
-    table_base_path: str,
-    instant: str,
-    column: str,
-    cells: list[tuple[str, str]],
-    token: str,
-    storage_options: dict | None = None,
-) -> None:
-    """Append (value, record_key) cells for one indexed column; runs on
-    EXECUTORS with the same visibility contract as the record index
-    (blocks valid only once the driver publishes the MDT deltacommit).
-    Bytes route through the storage backend — object-store safe."""
-    from hudi_rs_spark.hfile.writer import build_hfile
-    from hudi_rs_spark.logfile.reader import BLOCK_HFILE_DATA, KEY_INSTANT_TIME
-    from hudi_rs_spark.write.logblocks import frame_block
-    from hudi_rs_spark.write.mdt import _next_log_state
-    from hudi_rs_spark.write.writer import _base, _fs
-
-    if not cells:
-        return
-    records = [encode_cell(v, k) for v, k in cells]
-    fid = index_file_id(column)
-    out_dir = (
-        f"{_base(table_base_path)}/.hoodie/metadata/"
-        f"{SECONDARY_INDEX_PREFIX + column}"
-    )
-    anchor, version = _next_log_state(out_dir, fid, storage_options)
-    anchor = anchor or instant
-    log_name = f".{fid}_{anchor}.log.{version}_{token}"
-    hfile_bytes = build_hfile(
-        records, {"schema": json.dumps(SECONDARY_INDEX_SCHEMA).encode()}
-    )
-    payload = frame_block(
-        BLOCK_HFILE_DATA, {KEY_INSTANT_TIME: instant}, hfile_bytes
-    )
-    _fs(out_dir, storage_options).append_bytes(f"{out_dir}/{log_name}", payload)
-
-
 def backfill_secondary_index(spark, path: str, column: str) -> int:
     """Build a secondary index on ``column`` for a table that predates
     it: scan every live base file's (value, record_key) pairs
@@ -131,11 +92,14 @@ def backfill_secondary_index(spark, path: str, column: str) -> int:
     values of updated rows (and key inserts), and cells built from base
     files alone would miss them — ``write.compact`` first. Null values
     are unindexed, matching the writer."""
-    from hudi_rs_spark.config.table_config import HudiTableConfig
+    from hudi_rs_spark.config.table_config import (
+        HudiTableConfig,
+        update_properties,
+    )
     from hudi_rs_spark.metadata.files_partition import has_files_partition
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.write.config import new_instant
-    from hudi_rs_spark.write.writer import _local
+    from hudi_rs_spark.write.writer import _base
 
     config = HudiTableConfig.from_base_path(path)
     if not has_files_partition(config):
@@ -163,27 +127,31 @@ def backfill_secondary_index(spark, path: str, column: str) -> int:
         df = spark.read.parquet(*paths).select(column, "_hoodie_record_key")
 
         def index_partition(rows):
+            from hudi_rs_spark.write.mdt import append_mdt_log
             from hudi_rs_spark.write.worklist import task_token
 
-            token = task_token()
-            cells = [
-                (str(r[column]), r["_hoodie_record_key"])
+            records = [
+                encode_cell(str(r[column]), r["_hoodie_record_key"])
                 for r in rows
                 if r[column] is not None
             ]
-            append_secondary_index_log(path, instant, column, cells, token)
+            if records:
+                append_mdt_log(
+                    f"{_base(path)}/.hoodie/metadata",
+                    SECONDARY_INDEX_PREFIX + column, index_file_id(column),
+                    SECONDARY_INDEX_SCHEMA, records, instant, task_token(),
+                )
 
         df.rdd.foreachPartition(index_partition)
 
     from hudi_rs_spark.write.mdt import publish_mdt_deltacommit
-    from hudi_rs_spark.write.record_index import _advertise, _rewrite_props
+    from hudi_rs_spark.write.record_index import _advertise
 
     publish_mdt_deltacommit(
-        f"{_local(path)}/.hoodie/metadata", instant,
+        f"{_base(path)}/.hoodie/metadata", instant,
         {SECONDARY_INDEX_PREFIX + column: []},
     )
-    _rewrite_props(
-        _local(path),
-        lambda have: _advertise(have, SECONDARY_INDEX_PREFIX + column),
+    update_properties(
+        path, lambda have: _advertise(have, SECONDARY_INDEX_PREFIX + column)
     )
     return len(paths)

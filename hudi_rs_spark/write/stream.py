@@ -38,8 +38,8 @@ from pyspark.sql.datasource import DataSourceStreamArrowWriter
 from hudi_rs_spark.write.config import WriteConfig, new_instant
 from hudi_rs_spark.write.writer import (
     HudiWriteMessage,
+    _base,
     _fs,
-    _local,
     data_avro_schema,
     existing_config,
     init_table,
@@ -87,7 +87,7 @@ def batch_instant(table_path: str, batch_id: int, qkey: str = "legacy") -> str:
     replay-written files differ only in write token, which the reader's
     retried-write rule (newer token wins within an instant) dedupes even
     before the commit-ledger check skips re-publishing."""
-    base = _local(table_path)
+    base = _base(table_path)
     st = _fs(base)
     # sidecars are per-QUERY: a fresh-checkpoint query reusing an old
     # query's batch-0 sidecar would write files under an instant that
@@ -181,7 +181,7 @@ class HudiPyStreamWriter(DataSourceStreamArrowWriter):
     def _sidecar_instants(self) -> set[str]:
         """Instants this query's batches have allocated (committed or
         in-flight) — read from the per-query sidecar files."""
-        d = f"{_local(self.cfg.path)}/.hoodie/.stream_instants"
+        d = f"{_base(self.cfg.path)}/.hoodie/.stream_instants"
         st = _fs(d, self.cfg.storage_dict())
         out: set[str] = set()
         want_legacy = self.query_key == "legacy"
@@ -247,7 +247,7 @@ class HudiPyStreamWriter(DataSourceStreamArrowWriter):
         ):
             # restart replay of an already-published batch: drop the
             # duplicate (uncommitted, hence invisible) files and ack
-            base = _local(cfg.path)
+            base = _base(cfg.path)
             st = _fs(base, cfg.storage_dict())
             for s in stats:
                 try:
@@ -273,7 +273,7 @@ class HudiPyStreamWriter(DataSourceStreamArrowWriter):
         maybe_auto_maintain(cfg)
 
     def abort(self, messages, batchId: int) -> None:
-        base = _local(self.cfg.path)
+        base = _base(self.cfg.path)
         st = _fs(base, self.cfg.storage_dict())
         for m in messages:
             if m is None:

@@ -48,6 +48,7 @@ class HudiTableWriter:
         table_version: int = 6,
         table_type: str = "MERGE_ON_READ",
     ):
+        from hudi_rs_spark.config.table_config import format_properties
         from hudi_rs_spark.write.writer import _base, _fs
 
         self.base_path = _base(base_path)
@@ -67,8 +68,7 @@ class HudiTableWriter:
             props["hoodie.timeline.path"] = "timeline"
         props.update(extra_props or {})
         self.storage.publish_bytes(
-            f"{hoodie}/hoodie.properties",
-            ("\n".join(f"{k}={v}" for k, v in props.items()) + "\n").encode(),
+            f"{hoodie}/hoodie.properties", format_properties(props).encode()
         )
         self._write_stats: dict[str, list[dict]] = {}  # instant -> stats
         self._props = props

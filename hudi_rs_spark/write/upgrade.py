@@ -41,24 +41,6 @@ _PENDING_RE = re.compile(r"\.(requested|inflight)$")
 _SUPPORTED = {(6, 8), (8, 9), (6, 9), (9, 8), (8, 6), (9, 6)}
 
 
-def _read_props(st, props_path: str) -> dict:
-    out = {}
-    for line in st.read_text(props_path).splitlines():
-        line = line.strip()
-        if line and not line.startswith("#") and "=" in line:
-            k, _, v = line.partition("=")
-            out[k.strip()] = v.strip()
-    return out
-
-
-def _write_props(st, props_path: str, props: dict) -> None:
-    st.publish_bytes(
-        props_path,
-        ("\n".join(f"{k}={v}" for k, v in sorted(props.items())) + "\n")
-        .encode(),
-    )
-
-
 def _guard_no_pending(path: str) -> None:
     from hudi_rs_spark.sources.hudi import HudiTable
 
@@ -77,7 +59,10 @@ def upgrade_table(path: str, to_version: int = 8) -> int:
     """Upgrade (or downgrade) the table at ``path`` to ``to_version``;
     returns the number of timeline files moved (0 = property-only or
     no-op). Refuses unsupported jumps and unresolved pending state."""
-    from hudi_rs_spark.config.table_config import HudiTableConfig
+    from hudi_rs_spark.config.table_config import (
+        HudiTableConfig,
+        format_properties,
+    )
     from hudi_rs_spark.write.writer import _fs
 
     tc = HudiTableConfig.from_base_path(path)
@@ -91,8 +76,7 @@ def upgrade_table(path: str, to_version: int = 8) -> int:
         )
     _guard_no_pending(path)
     st = _fs(path)
-    props_path = f"{path}/.hoodie/hoodie.properties"
-    props = _read_props(st, props_path)
+    props = dict(tc.props)
     moved = 0
     step_from = cur
     # walk one step at a time so 6->9 shares the audited 6->8 move
@@ -127,7 +111,9 @@ def upgrade_table(path: str, to_version: int = 8) -> int:
             props["hoodie.timeline.layout.version"] = "1"
             props.pop("hoodie.timeline.path", None)
             step_from = 6
-    _write_props(st, props_path, props)
+    st.publish_bytes(
+        f"{path}/.hoodie/hoodie.properties", format_properties(props).encode()
+    )
     return moved
 
 

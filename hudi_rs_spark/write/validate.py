@@ -43,6 +43,11 @@ _CAP = 20  # max problems reported per check
 
 def validate_table(path: str, sample_keys: int = 64, spark=None) -> dict:
     from hudi_rs_spark.config.table_config import HudiTableConfig
+    from hudi_rs_spark.metadata.bloom_filters import (
+        has_bloom_filters_partition,
+    )
+    from hudi_rs_spark.metadata.files_partition import has_files_partition
+    from hudi_rs_spark.metadata.record_index import has_record_index_partition
     from hudi_rs_spark.sources.hudi import HudiTable
     from hudi_rs_spark.write.writer import _base, _fs
 
@@ -123,8 +128,7 @@ def validate_table(path: str, sample_keys: int = 64, spark=None) -> dict:
 
     # 3. MDT listing parity
     problems = []
-    meta_parts = tc.props.get("hoodie.table.metadata.partitions", "")
-    if "files" in meta_parts:
+    if has_files_partition(tc):
         try:
             mdt_slices = HudiTable(
                 base, spark=None, listing="mdt"
@@ -149,7 +153,7 @@ def validate_table(path: str, sample_keys: int = 64, spark=None) -> dict:
 
     # 4. record index spot check
     problems = []
-    if "record_index" in meta_parts:
+    if has_record_index_partition(tc):
         import pyarrow.parquet as pq
 
         from hudi_rs_spark.metadata.record_index import read_record_index
@@ -276,7 +280,7 @@ def validate_table(path: str, sample_keys: int = 64, spark=None) -> dict:
     # as an insert (silent duplicate). Stale entries for dead files are
     # harmless (candidates are intersected with the live listing).
     problems = []
-    if "bloom_filters" in meta_parts:
+    if has_bloom_filters_partition(tc):
         import pyarrow.parquet as pq
 
         from hudi_rs_spark.bloomfilter import _parse, bloom_contains

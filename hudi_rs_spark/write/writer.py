@@ -89,10 +89,6 @@ def _base(path: str) -> str:
     return path if p is None else p
 
 
-# transitional alias: older call sites / tests import _local
-_local = _base
-
-
 def _fs(path: str, options: dict | None = None):
     """Storage backend for any path under the table — the write-side
     twin of the readers' ``storage_for`` routing (the reference's
@@ -396,23 +392,34 @@ class _TaskWriter:
         indexed column present in this flush (nulls unindexed)."""
         if not self.cfg.secondary_index_columns:
             return
+        from hudi_rs_spark.metadata.secondary_index import (
+            SECONDARY_INDEX_PREFIX,
+        )
+        from hudi_rs_spark.write.mdt import append_mdt_log
         from hudi_rs_spark.write.secondary_index import (
-            append_secondary_index_log,
+            SECONDARY_INDEX_SCHEMA,
+            encode_cell,
+            index_file_id,
         )
 
         key_list = [k.as_py() for k in keys]
         for col in self.cfg.secondary_index_columns:
             if col not in data.column_names:
                 continue
-            cells = [
-                (str(v), k)
+            # encoded before anything is appended: an over-long cell key
+            # raises with no partial log on storage
+            records = [
+                encode_cell(str(v), k)
                 for v, k in zip(data[col].to_pylist(), key_list)
                 if v is not None
             ]
-            append_secondary_index_log(
-                self.cfg.path, self.cfg.instant, col, cells, self.token,
-                self.cfg.storage_dict(),
-            )
+            if records:
+                append_mdt_log(
+                    f"{self.base}/.hoodie/metadata",
+                    SECONDARY_INDEX_PREFIX + col, index_file_id(col),
+                    SECONDARY_INDEX_SCHEMA, records, self.cfg.instant,
+                    self.token, self.cfg.storage_dict(),
+                )
 
     def _new_file_id(self, pv: str) -> str:
         fid = uuid.uuid5(
@@ -777,6 +784,8 @@ def init_table(cfg: WriteConfig, existing=None) -> bool:
     tables so an append can't silently change table identity.
     ``existing``: the table's config as the caller loaded it; read from
     storage when not given."""
+    from hudi_rs_spark.config.table_config import format_properties
+
     base = _base(cfg.path)
     st = _fs(base, cfg.storage_dict())
     props_path = f"{base}/.hoodie/hoodie.properties"
@@ -809,10 +818,8 @@ def init_table(cfg: WriteConfig, existing=None) -> bool:
                 "invariant)"
             )
         return False
-    props = cfg.table_properties()
     st.publish_bytes(
-        props_path,
-        ("\n".join(f"{k}={v}" for k, v in sorted(props.items())) + "\n").encode(),
+        props_path, format_properties(cfg.table_properties()).encode()
     )
     return True
 

@@ -226,16 +226,21 @@ class TestHFileKeyCap:
             encode_cell("v" * 40000, "rk")
 
     def test_append_secondary_log_appends_nothing_on_error(self, tmp_path):
-        from hudi_rs_spark.write.secondary_index import (
-            append_secondary_index_log,
-        )
+        import pyarrow as pa
+
+        from hudi_rs_spark.write.config import WriteConfig
+        from hudi_rs_spark.write.writer import _TaskWriter
 
         base = str(tmp_path / "t")
         os.makedirs(base)
+        cfg = WriteConfig(
+            path=base, instant="20240101000000000", table_version=8,
+            emit_metadata=True, emit_record_index=True,
+            secondary_index_columns=("c",),
+        )
         with pytest.raises(ValueError):
-            append_secondary_index_log(
-                base, "20240101000000000", "c",
-                [("ok", "k1"), ("v" * 40000, "k2")], "0-0-0",
+            _TaskWriter(cfg, 0, "0-0-0")._emit_secondary_cells(
+                pa.table({"c": ["ok", "v" * 40000]}), pa.array(["k1", "k2"])
             )
         idx_dir = os.path.join(base, ".hoodie", "metadata", "secondary_index_c")
         assert not os.path.isdir(idx_dir) or not os.listdir(idx_dir)

@@ -732,7 +732,7 @@ class TestRescaleCrashRecovery:
     replaced."""
 
     def test_split_rerun_heals_missing_props(self, spark, tmp_path, monkeypatch):
-        from hudi_rs_spark.write import record_index as ri
+        from hudi_rs_spark.config import table_config
         from hudi_rs_spark.write.bucket import (
             parse_splits,
             route_key,
@@ -744,15 +744,15 @@ class TestRescaleCrashRecovery:
         t = _seed(spark, tmp_path)
         before = _snap(spark, t)
         b = route_key("1", N_BUCKETS)[0]
-        real = ri._rewrite_props
+        real = table_config.update_properties
 
-        def boom(base, fn):
+        def boom(base, edit, storage_options=None):
             raise RuntimeError("injected crash before props update")
 
-        monkeypatch.setattr(ri, "_rewrite_props", boom)
+        monkeypatch.setattr(table_config, "update_properties", boom)
         with pytest.raises(RuntimeError, match="injected"):
             split_bucket(spark, t, b)
-        monkeypatch.setattr(ri, "_rewrite_props", real)
+        monkeypatch.setattr(table_config, "update_properties", real)
         # replacecommit published, props lagging: validator flags it
         report = validate_table(t)
         assert not report["checks"]["bucket"]["ok"]
@@ -768,7 +768,7 @@ class TestRescaleCrashRecovery:
         assert _snap(spark, t) == before
 
     def test_merge_rerun_heals_missing_props(self, spark, tmp_path, monkeypatch):
-        from hudi_rs_spark.write import record_index as ri
+        from hudi_rs_spark.config import table_config
         from hudi_rs_spark.write.bucket import (
             merge_buckets,
             parse_splits,
@@ -782,15 +782,15 @@ class TestRescaleCrashRecovery:
         before = _snap(spark, t)
         b = route_key("1", N_BUCKETS)[0]
         split_bucket(spark, t, b)
-        real = ri._rewrite_props
+        real = table_config.update_properties
 
-        def boom(base, fn):
+        def boom(base, edit, storage_options=None):
             raise RuntimeError("injected crash before props update")
 
-        monkeypatch.setattr(ri, "_rewrite_props", boom)
+        monkeypatch.setattr(table_config, "update_properties", boom)
         with pytest.raises(RuntimeError, match="injected"):
             merge_buckets(spark, t, b, N_BUCKETS)
-        monkeypatch.setattr(ri, "_rewrite_props", real)
+        monkeypatch.setattr(table_config, "update_properties", real)
         report = validate_table(t)
         assert not report["checks"]["bucket"]["ok"]
         assert "live for SPLIT bucket" in str(

@@ -79,6 +79,32 @@ class TestBuild:
         with pytest.raises(ValueError, match="already exists"):
             create_expression_index(spark, t, "x2", "id * 3")
 
+    def test_backslash_in_expression_survives_properties(
+        self, spark, tmp_path
+    ):
+        """The expression is stored in hoodie.properties; a backslash in
+        it must read back unchanged, so the pruned read equals the
+        unpruned filter and re-creating the index with the same
+        expression is not a conflicting redefinition."""
+        from pyspark.sql import functions as F
+
+        from hudi_rs_spark.sources.hudi import HudiTable
+        from hudi_rs_spark.write import create_expression_index
+
+        t = _seed(spark, tmp_path)
+        expr = "regexp_extract(name, '(\\\\d+)', 1)"
+        create_expression_index(spark, t, "digits", expr)
+        ht = HudiTable(t, spark)
+        got = sorted(
+            r.id
+            for r in ht.read_where_expression("digits", "=", "3").collect()
+        )
+        want = sorted(
+            r.id for r in ht.read().filter(F.expr(expr) == "3").collect()
+        )
+        assert got == want == [3, 103]
+        create_expression_index(spark, t, "digits", expr)
+
     def test_bad_name_rejected(self, spark, tmp_path):
         from hudi_rs_spark.write import create_expression_index
 

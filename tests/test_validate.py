@@ -149,6 +149,21 @@ class TestBloomAndExprChecks:
         assert report["checks"]["expr_index"]["ok"]
         assert "skipped" not in report["checks"]["expr_index"]
 
+    def test_index_named_like_a_partition_enables_no_check(
+        self, spark, tmp_path
+    ):
+        """An expression index whose name contains ``record_index``
+        advertises ``expr_index_record_index_x``; the record-index check
+        must still see no record index on the table."""
+        from hudi_rs_spark.write.expr_index import create_expression_index
+        from hudi_rs_spark.write.validate import validate_table
+
+        t = _seed(spark, tmp_path, **{"metadata.enable": "true"})
+        create_expression_index(spark, t, "record_index_x", "id * 2")
+        report = validate_table(t, spark=spark)
+        assert report["checks"]["record_index"]["ok"], report
+        assert report["healthy"], report
+
     def test_expr_check_skipped_without_spark(self, spark, tmp_path):
         from hudi_rs_spark.write.validate import validate_table
 
@@ -161,8 +176,15 @@ class TestBloomAndExprChecks:
         from hudi_rs_spark.bloomfilter import build_bloom
         from hudi_rs_spark.sources.hudi import HudiTable
         from hudi_rs_spark.write.config import new_instant
-        from hudi_rs_spark.write.mdt import publish_mdt_deltacommit
-        from hudi_rs_spark.write.mdt_bloom import append_bloom_log
+        from hudi_rs_spark.write.mdt import (
+            BLOOM_FILE_ID,
+            append_mdt_log,
+            publish_mdt_deltacommit,
+        )
+        from hudi_rs_spark.write.mdt_bloom import (
+            BLOOM_RECORD_SCHEMA,
+            encode_bloom_record,
+        )
         from hudi_rs_spark.write.validate import validate_table
 
         t = self._seed_indexed(spark, tmp_path)
@@ -181,11 +203,14 @@ class TestBloomAndExprChecks:
         # newest record wins: override the file's bloom with one built
         # from the WRONG keys — live keys now test (mostly) negative
         inst = new_instant()
-        append_bloom_log(
-            t, inst,
-            [(sl.partition_path or "", sl.base_file.file_name,
-              build_bloom(["@@bogus@@"]))],
-            "9-9-9",
+        append_mdt_log(
+            f"{t}/.hoodie/metadata", "bloom_filters", BLOOM_FILE_ID,
+            BLOOM_RECORD_SCHEMA,
+            [encode_bloom_record(
+                sl.partition_path or "", sl.base_file.file_name, inst,
+                build_bloom(["@@bogus@@"]),
+            )],
+            inst, "9-9-9",
         )
         publish_mdt_deltacommit(
             f"{t}/.hoodie/metadata", inst, {"bloom_filters": []}
@@ -200,10 +225,17 @@ class TestBloomAndExprChecks:
         from hudi_rs_spark.sources.hudi import HudiTable
         from hudi_rs_spark.write.config import new_instant
         from hudi_rs_spark.write.expr_index import (
-            append_expr_stats_log,
+            EXPR_INDEX_FILE_ID,
             expr_index_partition,
         )
-        from hudi_rs_spark.write.mdt import publish_mdt_deltacommit
+        from hudi_rs_spark.write.mdt import (
+            append_mdt_log,
+            publish_mdt_deltacommit,
+        )
+        from hudi_rs_spark.write.mdt_stats import (
+            STATS_RECORD_SCHEMA,
+            encode_stats_record,
+        )
         from hudi_rs_spark.write.validate import validate_table
 
         t = self._seed_indexed(spark, tmp_path)
@@ -225,11 +257,15 @@ class TestBloomAndExprChecks:
         # cannot contain any real value
         inst = new_instant()
         part = expr_index_partition("len_name")
-        append_expr_stats_log(
-            t, part, inst,
-            [(sl.partition_path or "", sl.base_file.file_name,
-              "length(name)", 100, 100, 10, 0)],
-            "9-9-9",
+        fname = sl.base_file.file_name
+        append_mdt_log(
+            f"{t}/.hoodie/metadata", part, EXPR_INDEX_FILE_ID,
+            STATS_RECORD_SCHEMA,
+            [encode_stats_record(
+                f"{sl.partition_path or '.'}:{fname}", fname,
+                "length(name)", 100, 100, 10, 0,
+            )],
+            inst, "9-9-9",
         )
         publish_mdt_deltacommit(f"{t}/.hoodie/metadata", inst, {part: []})
         report = validate_table(t, spark=spark)

@@ -305,6 +305,104 @@ class TestInstantClaim:
             compact(spark, p, instant=fixed)
 
 
+class TestServiceStorageOptions:
+    """Compaction and clustering tasks write with the table's storage
+    options: one descriptor of each runs in the test process (the same
+    function the executors run), and every ``_fs`` handle it resolves —
+    the new base file and the record-index appends — carries them."""
+
+    def test_service_tasks_resolve_storage_with_table_options(
+        self, spark, tmp_path, monkeypatch
+    ):
+        import sys
+
+        from hudi_rs_spark.sources.hudi import HudiTable
+        from hudi_rs_spark.sources.pyds import (
+            HudiPyDataSource,
+            HudiPyReader,
+            _as_nullable,
+        )
+        from hudi_rs_spark.write import writer
+        from hudi_rs_spark.write.cluster import _cluster_one
+        from hudi_rs_spark.write.compact import (
+            _compact_one,
+            compaction_side_records,
+        )
+        from hudi_rs_spark.write.config import new_instant
+        from hudi_rs_spark.write.upsert import upsert
+        from hudi_rs_spark.write.worklist import (
+            shared_scan_context,
+            side_records,
+            slice_descriptor,
+            slice_identity,
+        )
+
+        spark.dataSource.register(HudiPyDataSource)
+        p = str(tmp_path / "t")
+        df = spark.createDataFrame(
+            [(i, f"n{i}", "a", 1) for i in range(12)],
+            "id long, name string, city string, ts long",
+        )
+        w = df.coalesce(1).write.format("hudi_py").option("path", p)
+        for k, v in {
+            "recordkey.field": "id", "precombine.field": "ts",
+            "table.type": "MERGE_ON_READ", **RI_OPTS,
+        }.items():
+            w = w.option(k, v)
+        w.mode("append").save()
+        upsert(
+            spark.createDataFrame(
+                [(3, "u3", "a", 2)], "id long, name string, city string, ts long"
+            ),
+            p,
+        )
+        opts = {"endpoint_override": "http://table-endpoint"}
+        table = HudiTable(p, spark, listing="direct", storage_options=opts)
+        reader = HudiPyReader(
+            table, {"path": p}, _as_nullable(table.get_schema())
+        )
+        dirty = [s for s in reader.partitions() if s.log_files]
+        assert dirty
+
+        seen = []
+        real = writer._fs
+
+        def recording(path, options=None):
+            seen.append(options)
+            return real(path, options)
+
+        for mod in list(sys.modules.values()):
+            if (
+                getattr(mod, "__name__", "").startswith("hudi_rs_spark.")
+                and getattr(mod, "_fs", None) is real
+            ):
+                monkeypatch.setattr(mod, "_fs", recording)
+
+        shared = shared_scan_context(dirty[0])
+        shared.update({
+            "path": p, "instant": new_instant(),
+            "side": compaction_side_records(p, table.config),
+        })
+        _compact_one(slice_descriptor(dirty[0]), shared)
+        n_compact = len(seen)
+        shared.update({
+            "instant": new_instant(), "sort_columns": [],
+            "side": side_records(p, table.config),
+        })
+        assert shared["side"]["index_shards"]
+        _cluster_one(
+            {
+                "rel_dir": slice_identity(p, dirty[0])[0], "group_idx": 0,
+                "slices": [slice_descriptor(dirty[0])],
+            },
+            shared,
+        )
+        # compaction: the base file; clustering: the base file plus the
+        # record-index appends (shard listing and log append)
+        assert all(o == opts for o in seen), seen
+        assert n_compact >= 1 and len(seen) >= n_compact + 3
+
+
 class TestTaskMemoryBound:
     def test_skewed_partition_rolls_under_byte_cap(self, tmp_path):
         """A deliberately skewed frame under a tiny flush cap rolls into

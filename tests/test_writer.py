@@ -1767,12 +1767,12 @@ def test_clean_tombstones_reach_the_mdt_with_the_table_storage_options(
          "storage.token": "t1"}
     )
     seen = []
-    real = mdt_mod._st
+    real = mdt_mod._fs
 
     def recording(path, options=None):
         seen.append(options)
         return real(path, options)
 
-    monkeypatch.setattr(mdt_mod, "_st", recording)
+    monkeypatch.setattr(mdt_mod, "_fs", recording)
     mdt_mod.apply_deletions_to_mdt(cfg, {"p=a": ["f1_0-0-0_001.parquet"]})
     assert seen and all(o == {"token": "t1"} for o in seen), seen
