@@ -183,10 +183,10 @@ class HFile:
             )
 
     @classmethod
-    def from_path(cls, path: str) -> "HFile":
+    def from_path(cls, path: str, options: dict | None = None) -> "HFile":
         from hudi_rs_spark.fs.storage import storage_for
 
-        return cls(storage_for(path).read_bytes(path))
+        return cls(storage_for(path, options).read_bytes(path))
 
     # -- blocks -----------------------------------------------------------
     def _block_payload(self, off: int) -> tuple[BlockHeader, bytes]:

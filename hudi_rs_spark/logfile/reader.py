@@ -111,10 +111,12 @@ def _read_metadata_map(r: Reader) -> dict[int, str]:
     return out
 
 
-def read_log_file(path: str) -> list[LogBlock]:
+def read_log_file(path: str, options: dict | None = None) -> list[LogBlock]:
+    """Every block of the log file at ``path``, opened with the table's
+    storage ``options``."""
     from hudi_rs_spark.fs.storage import storage_for
 
-    buf = storage_for(path).read_bytes(path)
+    buf = storage_for(path, options).read_bytes(path)
     r = Reader(buf)
     blocks: list[LogBlock] = []
     while not r.at_end():

@@ -92,23 +92,30 @@ def has_files_partition(config: HudiTableConfig) -> bool:
     return FILES_PARTITION in [p.strip() for p in parts.split(",") if p.strip()]
 
 
-def iter_partition_hfiles(
-    data_table_base_path: str, partition: str, file_id: str | None = None,
-    with_instants: bool = False,
-):
-    """Yield (is_base, HFile) for the given MDT partition's file
-    slice(s), in merge order: base first, then valid log-block payloads.
-    ``file_id`` restricts to one file group (a record-index SHARD reads
-    only its own slice — the per-shard parallel read path).
-    ``with_instants=True`` yields (is_base, HFile, instant, slice_ix)
-    instead, where instant is the block's writing instant (base: the
-    base file's commit) and slice_ix the ordinal of the file slice the
-    payload belongs to — needed by folds that order same-instant twins
-    semantically and stream per slice (read_record_index; record keys
-    never span slices, so cross-slice order is free).
+@dataclass(frozen=True)
+class PartitionSnapshot:
+    """One MDT partition as planned from one MDT timeline: its file
+    slices in merge order plus the facts the log-block validity rules
+    need. Planned once (the only step that reads the MDT's
+    hoodie.properties, loads its timeline and lists the partition) and
+    picklable, so executor tasks read shard slices from the driver's
+    plan; ``storage_options`` opens its files."""
 
-    Planning of the MDT itself reuses the normal timeline/slice machinery
-    (it IS a Hudi MOR table); only the payload format differs."""
+    base: str
+    slices: tuple
+    valid: frozenset
+    archival_boundary: str | None
+    pending: frozenset
+    storage_options: dict | None = None
+
+
+def plan_partition(
+    data_table_base_path: str, partition: str,
+    storage_options: dict | None = None,
+) -> PartitionSnapshot:
+    """Plan the MDT ``partition`` of the table at ``data_table_base_path``.
+    Planning of the MDT reuses the normal timeline/slice machinery (it IS
+    a Hudi MOR table); only the payload format differs."""
     base = mdt_path(data_table_base_path)
     config = HudiTableConfig.from_base_path(base)
     timeline = Timeline.load(base, config)
@@ -120,19 +127,41 @@ def iter_partition_hfiles(
         }
     groups = build_file_groups(base, completion, lambda p: p == partition)
     valid = {i.timestamp for i in timeline.instants}
+    boundary = timeline.earliest_active_timestamp()
     slices = get_file_slices(
         groups, None, valid_commit_timestamps=valid,
-        archival_boundary=timeline.earliest_active_timestamp(),
+        archival_boundary=boundary,
         pending_timestamps=timeline.pending_timestamps,
     )
-    if not slices:
-        return
-    for slice_ix, sl in enumerate(slices):
+    return PartitionSnapshot(
+        base, tuple(slices), frozenset(valid), boundary,
+        frozenset(timeline.pending_timestamps), storage_options,
+    )
+
+
+def iter_partition_hfiles(
+    data_table_base_path: str, partition: str, file_id: str | None = None,
+    with_instants: bool = False, snapshot: PartitionSnapshot | None = None,
+):
+    """Yield (is_base, HFile) for the given MDT partition's file
+    slice(s), in merge order: base first, then valid log-block payloads.
+    ``file_id`` restricts to one file group (a record-index SHARD reads
+    only its own slice — the per-shard parallel read path).
+    ``with_instants=True`` yields (is_base, HFile, instant, slice_ix)
+    instead, where instant is the block's writing instant (base: the
+    base file's commit) and slice_ix the ordinal of the file slice the
+    payload belongs to — needed by folds that order same-instant twins
+    semantically and stream per slice (read_record_index; record keys
+    never span slices, so cross-slice order is free). ``snapshot``: a
+    ``plan_partition`` result to read from instead of planning here."""
+    snap = snapshot or plan_partition(data_table_base_path, partition)
+    base, options = snap.base, snap.storage_options
+    for slice_ix, sl in enumerate(snap.slices):
         if file_id is not None and sl.file_id != file_id:
             continue
         if sl.base_file is not None:
             hf = HFile.from_path(
-                os.path.join(base, sl.base_file_relative_path())
+                os.path.join(base, sl.base_file_relative_path()), options
             )
             if with_instants:
                 yield True, hf, sl.base_file.commit_timestamp, slice_ix
@@ -142,11 +171,11 @@ def iter_partition_hfiles(
         # writer appends HFile-payload log blocks); a baseless slice just
         # means every record is still in the logs
         for rel in sl.log_file_relative_paths():
-            blocks = logreader.read_log_file(os.path.join(base, rel))
+            blocks = logreader.read_log_file(os.path.join(base, rel), options)
             for b in logreader.valid_blocks(
-                blocks, valid_instants=valid,
-                archival_boundary=timeline.earliest_active_timestamp(),
-                pending_instants=timeline.pending_timestamps,
+                blocks, valid_instants=snap.valid,
+                archival_boundary=snap.archival_boundary,
+                pending_instants=snap.pending,
             ):
                 if b.hfile_content is not None:
                     if with_instants:

@@ -42,12 +42,15 @@ def read_record_index(
     data_table_base_path: str,
     keys: set[str] | None = None,
     file_id: str | None = None,
+    snapshot=None,
 ) -> dict[str, tuple[str, str]]:
     """{record_key: (partition_path, file_id)}. With ``keys`` given, each
     index HFile answers through its block index (hfile/reader.py
     lookup_records — reference reader.rs:937 parity): only the blocks
     holding requested keys decompress, O(log blocks) per key, instead of
-    a full index scan — the point of a point lookup on a 10^9-key index."""
+    a full index scan — the point of a point lookup on a 10^9-key index.
+    ``snapshot``: the partition as ``files_partition.plan_partition``
+    planned it (shard tasks get it from the driver); None plans here."""
     # Fold rule (r13 correctness fix): one commit can legitimately emit
     # BOTH a tombstone and an add for the same key from DIFFERENT writer
     # tasks (update.partition.path=true: the record moves — tombstone at
@@ -69,17 +72,18 @@ def read_record_index(
     # order), the streaming pass aborts and the fold re-reads in the
     # r13 collect-everything/global-sort mode — bitwise-identical
     # semantics, never silently wrong.
+    src = (data_table_base_path, keys, file_id, snapshot)
     try:
-        return _fold_streaming(data_table_base_path, keys, file_id)
+        return _fold_streaming(*src)
     except _OutOfOrderInstant:
-        return _fold_collected(data_table_base_path, keys, file_id)
+        return _fold_collected(*src)
 
 
 class _OutOfOrderInstant(Exception):
     pass
 
 
-def _iter_entries(data_table_base_path, keys, file_id):
+def _iter_entries(data_table_base_path, keys, file_id, snapshot):
     """Yield (slice_ix, order_instant, key, loc) per decoded index
     entry, in iter_partition_hfiles merge order (loc None = tombstone).
     Record keys never span slices (shard = hash(key)), so folds may
@@ -88,7 +92,7 @@ def _iter_entries(data_table_base_path, keys, file_id):
     sorted_keys = sorted(keys) if keys is not None else None
     for tup in iter_partition_hfiles(
         data_table_base_path, RECORD_INDEX_PARTITION, file_id=file_id,
-        with_instants=True,
+        with_instants=True, snapshot=snapshot,
     ):
         is_base, hf, instant = tup[0], tup[1], tup[2]
         slice_ix = tup[3] if len(tup) > 3 else 0
@@ -117,7 +121,7 @@ def _iter_entries(data_table_base_path, keys, file_id):
             yield slice_ix, order_instant, key, loc
 
 
-def _fold_streaming(data_table_base_path, keys, file_id):
+def _fold_streaming(data_table_base_path, keys, file_id, snapshot):
     out: dict[str, tuple[str, str]] = {}
     group: list[tuple[str, tuple[str, str] | None]] = []
     group_key: tuple[int, str] = (-1, "")
@@ -136,7 +140,7 @@ def _fold_streaming(data_table_base_path, keys, file_id):
         group.clear()
 
     for slice_ix, order_instant, key, loc in _iter_entries(
-        data_table_base_path, keys, file_id
+        data_table_base_path, keys, file_id, snapshot
     ):
         k = (slice_ix, order_instant)
         if k < group_key:
@@ -151,7 +155,7 @@ def _fold_streaming(data_table_base_path, keys, file_id):
     return out
 
 
-def _fold_collected(data_table_base_path, keys, file_id):
+def _fold_collected(data_table_base_path, keys, file_id, snapshot):
     """r13 shape: collect every entry, stable global sort on
     (instant, deletes-before-adds, arrival), fold once. Keys never span
     slices, so sorting on instant across slices is equivalent to
@@ -159,7 +163,7 @@ def _fold_collected(data_table_base_path, keys, file_id):
     entries = [
         (order_instant, loc is not None, seq, key, loc)
         for seq, (_six, order_instant, key, loc) in enumerate(
-            _iter_entries(data_table_base_path, keys, file_id)
+            _iter_entries(data_table_base_path, keys, file_id, snapshot)
         )
     ]
     out: dict[str, tuple[str, str]] = {}

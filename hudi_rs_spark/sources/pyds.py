@@ -708,27 +708,22 @@ def _read_slice(partition: HudiSlicePartition):
 
     struct = T.StructType.fromJson(json.loads(partition.schema_json))
     target = to_arrow_schema(struct)
-    # prime this worker's storage cache with the table's backend options
-    # (one (scheme, authority) entry covers every file of the table)
-    any_path = partition.base_file or (
-        partition.log_files[0] if partition.log_files else None
-    )
-    if any_path is None:
-        return  # log-only slice under read-optimized mode: nothing to emit
-    storage = storage_for(any_path, partition.storage_options)
     if partition.base_file is None:
+        if not partition.log_files:
+            return  # log-only slice under read-optimized mode: nothing to emit
         # log-only slice (beyond the reference, which rejects baseless
         # slices): merge the logs against an empty base
         base = target.empty_table()
-    elif partition.base_file.endswith(".lance"):
-        # Lance v2 base file (reference lance.rs:56-271): pure-python
-        # decoder over the storage backend
-        from hudi_rs_spark.lance.reader import LanceFile
-
-        base = LanceFile(storage.read_bytes(partition.base_file)).to_table()
     else:
+        storage = storage_for(partition.base_file, partition.storage_options)
         local = as_local_path(partition.base_file)
-        if local is not None:
+        if partition.base_file.endswith(".lance"):
+            # Lance v2 base file (reference lance.rs:56-271): pure-python
+            # decoder over the storage backend
+            from hudi_rs_spark.lance.reader import LanceFile
+
+            base = LanceFile(storage.read_bytes(partition.base_file)).to_table()
+        elif local is not None:
             base = pq.read_table(local)
         else:
             with storage.open_seekable(partition.base_file) as f:
@@ -774,17 +769,15 @@ def _read_cdc_slice(partition: HudiSlicePartition):
     blocks (the connector's queryType=cdc and HudiTable.read_changes)."""
     import pyarrow as pa
 
-    from hudi_rs_spark.fs.storage import storage_for
     from hudi_rs_spark.logfile import reader as logreader
     from hudi_rs_spark.logfile.reader import BLOCK_CDC_DATA
 
-    if partition.log_files:
-        # prime this worker's storage cache (see _read_slice)
-        storage_for(partition.log_files[0], partition.storage_options)
     file_blocks = []
     for p in partition.log_files:
         try:
-            file_blocks.append(logreader.read_log_file(p))
+            file_blocks.append(
+                logreader.read_log_file(p, partition.storage_options)
+            )
         except FileNotFoundError:
             continue  # cleaned between planning and read
     targets: set[str] = set()
@@ -890,7 +883,10 @@ def _decode_logs(partition: HudiSlicePartition, struct: T.StructType):
     from hudi_rs_spark.logfile import reader as logreader
     from hudi_rs_spark.sources.conform import apply_renames, conform_row
 
-    file_blocks = [logreader.read_log_file(p) for p in partition.log_files]
+    file_blocks = [
+        logreader.read_log_file(p, partition.storage_options)
+        for p in partition.log_files
+    ]
     targets: set[str] = set()
     for blocks in file_blocks:
         targets |= logreader.rollback_targets(blocks)

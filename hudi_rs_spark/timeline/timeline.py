@@ -154,6 +154,21 @@ class Timeline:
                 out[ts] = {}
         return out
 
+    def pending_plan_file_groups(self) -> dict[str, str]:
+        """{file_id: plan instant} for every file group a pending
+        service plan pins: compaction plans list ``groups[].fileId``,
+        clustering plans ``groups[].inputs[].fileId``. The one reader of
+        both plan shapes."""
+        out: dict[str, str] = {}
+        for pi, plan in self.pending_compaction_plans().items():
+            for g in plan.get("groups", ()):
+                out[g["fileId"]] = pi
+        for pi, plan in self.pending_clustering_plans().items():
+            for g in plan.get("groups", ()):
+                for inp in g.get("inputs", ()):
+                    out[inp["fileId"]] = pi
+        return out
+
     def pending_service_anchors(self) -> set[str]:
         """Instants of every pending table-service plan (compaction +
         clustering): committed logs anchored at one of these merge onto

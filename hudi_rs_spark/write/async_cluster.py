@@ -103,14 +103,7 @@ def schedule_clustering(
             "scheduled clustering requires a v8+ table: log anchoring at "
             "the plan instant rides on the completion-time timeline"
         )
-    planned_already: set[str] = set()
-    for plan in table.timeline.pending_compaction_plans().values():
-        for g in plan.get("groups", ()):
-            planned_already.add(g["fileId"])
-    for plan in table.timeline.pending_clustering_plans().values():
-        for g in plan.get("groups", ()):
-            for inp in g.get("inputs", ()):
-                planned_already.add(inp["fileId"])
+    planned_already = table.timeline.pending_plan_file_groups()
 
     by_partition: dict[str, list] = {}
     limit = (
@@ -215,7 +208,7 @@ def _scheduled_cluster_one(desc: dict, shared: dict) -> dict:
     for ver, src_rel in enumerate(desc.get("extras", ()), start=1):
         keys: set[str] = set()
         instants: set[str] = set()
-        for b in read_log_file(f"{base_path}/{src_rel}"):
+        for b in read_log_file(f"{base_path}/{src_rel}", options):
             if b.block_type in (
                 BLOCK_COMMAND, BLOCK_CORRUPTED, BLOCK_HFILE_DATA
             ):
@@ -317,12 +310,14 @@ def _reclaim_crashed_attempt(path: str, plan_instant: str, out_fids: set[str]):
 
 
 def _migrate_committed_log(
-    st, path, rel_dir, out_fid, plan_instant, src_rel, ver, token, completed
+    st, path, rel_dir, out_fid, plan_instant, src_rel, ver, token, completed,
+    options,
 ):
     """Driver-side retry-loop twin of the executor migration: copy one
     input-group log onto the output group (anchored at the plan instant,
     blocks keep their real deltacommit instants) IF any of its blocks is
-    committed. Returns (stat|None, record_keys)."""
+    committed; ``options`` open the source log. Returns (stat|None,
+    record_keys)."""
     from hudi_rs_spark.logfile.reader import (
         BLOCK_COMMAND,
         BLOCK_CORRUPTED,
@@ -332,7 +327,7 @@ def _migrate_committed_log(
 
     keys: set[str] = set()
     instants: set[str] = set()
-    for b in read_log_file(f"{path}/{src_rel}"):
+    for b in read_log_file(f"{path}/{src_rel}", options):
         if b.block_type in (BLOCK_COMMAND, BLOCK_CORRUPTED, BLOCK_HFILE_DATA):
             continue
         if b.instant_time:
@@ -574,6 +569,7 @@ def _run_one_plan(spark, path, plan_instant: str, plan: dict) -> int:
                 mstat, keys = _migrate_committed_log(
                     st, path, out_dir, out_fid, plan_instant, rel,
                     migr_count[out_fid], f"0-0-r{attempt}", completed_now,
+                    shared["storage_options"],
                 )
                 if mstat is None:
                     continue  # all blocks still pending: next pass

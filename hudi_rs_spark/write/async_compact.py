@@ -71,16 +71,9 @@ def schedule_compaction(
             "scheduled compaction requires a v8+ table: log anchoring at "
             "the plan instant rides on the completion-time timeline"
         )
-    planned_already: set[str] = set()
-    for plan in table.timeline.pending_compaction_plans().values():
-        for g in plan.get("groups", ()):
-            planned_already.add(g["fileId"])
     # a group under a pending CLUSTERING plan is about to be replaced —
     # compacting it would race the rewrite for no benefit
-    for plan in table.timeline.pending_clustering_plans().values():
-        for g in plan.get("groups", ()):
-            for inp in g.get("inputs", ()):
-                planned_already.add(inp["fileId"])
+    planned_already = table.timeline.pending_plan_file_groups()
     candidates = [
         sl for sl in table.get_file_slices()
         if sl.base_file is not None and sl.log_files

@@ -4,11 +4,14 @@ then route them through ``df.write.format("hudi_py")`` as log blocks.
 Hudi's upsert is index-lookup + shuffle-by-file-group + log append; this
 re-expresses it Spark-first:
 
-1. **Index** — the key→location mapping is a Spark parquet scan over the
+1. **Index** — the key→(partition, file group) mapping: the MDT record
+   index when the table has one, else a Spark parquet scan over the
    table's CURRENT base files projecting ONLY the three meta columns
-   (column pruning reaches the footer: ~1% of table bytes). This is
-   Hudi's "simple index", the shuffle-free baseline that scales with
-   table size, not memory.
+   (column pruning reaches the footer: ~1% of table bytes), bloom-pruned
+   when the MDT holds bloom filters. The scan is Hudi's "simple index",
+   the shuffle-free baseline that scales with table size, not memory.
+   The index inner-joins the file-group side (one broadcast row per
+   live group: log anchor + next log version).
 2. **Tag** — one left join of incoming records against the index on
    (record key, partition path). Matched rows carry
    ``__hoodie_target_file_id`` / ``__hoodie_target_base_instant`` /
@@ -85,17 +88,24 @@ def _spark_partition_expr(cfg: WriteConfig):
     return parts[0] if len(parts) == 1 else F.concat(*parts)
 
 
-def _index_from_record_index(
-    spark, table, slices
-) -> DataFrame | None:
-    """Tagging index from the MDT record index: each SHARD slice decodes
+# the tag index every tier yields: key, partition, file group
+_TAG_COLS = ("_hoodie_record_key", "_hoodie_partition_path", TARGET_FILE_COL)
+_TAG_SCHEMA = ", ".join(f"{c} string" for c in _TAG_COLS)
+
+
+def _record_index_tier(spark, table) -> DataFrame | None:
+    """Tag tier from the MDT record index: each SHARD slice decodes
     executor-side into (key, partition, file_id) rows — index bytes
     scanned instead of every base file's meta columns (the O(table) vs
-    O(index) difference at 100 TB). Joining against the live slices
-    both attaches the base instant and drops stale entries (replaced
-    file groups), whose keys then take the insert path. Returns None
-    when the table has no record index."""
-    from hudi_rs_spark.metadata.record_index import has_record_index_partition
+    O(index) difference at 100 TB). The driver plans the record_index
+    partition once and the task closure carries that plan, so shard
+    tasks read no MDT properties, load no timeline and list nothing.
+    Returns None when the table has no record index."""
+    from hudi_rs_spark.metadata.files_partition import plan_partition
+    from hudi_rs_spark.metadata.record_index import (
+        RECORD_INDEX_PARTITION,
+        has_record_index_partition,
+    )
     from hudi_rs_spark.write.record_index import (
         existing_shard_count,
         shard_file_id,
@@ -107,8 +117,9 @@ def _index_from_record_index(
     n = existing_shard_count(path, table.config)
     if not n:
         return None
-
-    cols = ["_hoodie_record_key", "_hoodie_partition_path", TARGET_FILE_COL]
+    snapshot = plan_partition(
+        path, RECORD_INDEX_PARTITION, table.storage_options
+    )
 
     def read_shards(batches):
         import pyarrow as pa
@@ -117,26 +128,18 @@ def _index_from_record_index(
 
         for batch in batches:
             for shard in batch.column(0).to_pylist():
-                out = read_record_index(path, file_id=shard_file_id(shard))
+                out = read_record_index(
+                    path, file_id=shard_file_id(shard), snapshot=snapshot
+                )
                 parts, fids = zip(*out.values()) if out else ((), ())
                 yield pa.RecordBatch.from_arrays(
                     [pa.array(list(c), pa.string()) for c in (out, parts, fids)],
-                    names=cols,
+                    names=_TAG_COLS,
                 )
 
-    idx = local_frame(spark, [(i,) for i in range(n)], "shard int").mapInArrow(
-        read_shards, ", ".join(f"{c} string" for c in cols)
+    return local_frame(spark, [(i,) for i in range(n)], "shard int").mapInArrow(
+        read_shards, _TAG_SCHEMA
     )
-    live = local_frame(
-        spark,
-        [
-            (sl.file_id, sl.base_file.commit_timestamp)
-            for sl in slices
-            if sl.base_file is not None
-        ],
-        f"{TARGET_FILE_COL} string, {TARGET_INSTANT_COL} string",
-    )
-    return idx.join(F.broadcast(live), TARGET_FILE_COL, "inner")
 
 
 def _bloom_candidate_files(
@@ -202,54 +205,144 @@ def _bloom_candidate_files(
     return {"touched": touched, "hits": candidates, "recorded": pruned}
 
 
-def _empty_index(spark) -> DataFrame:
-    return local_frame(
-        spark, [],
-        "_hoodie_record_key string, _hoodie_partition_path string, "
-        f"{TARGET_FILE_COL} string, {TARGET_INSTANT_COL} string",
+def _tag_index(
+    spark, table, slices, keys_df: DataFrame | None
+) -> DataFrame:
+    """(key, partition, file_id) over the snapshot's live base files.
+    Tiers: MDT record index (O(index)), bloom-pruned meta-column scan
+    (O(candidate files), needs ``keys_df``), full meta-column scan
+    (O(live base files)). A record-index entry may name a replaced
+    group: the inner join with the file-group side drops it."""
+    bases = [
+        (sl.partition_path or "",
+         os.path.join(table.base_path, sl.base_file_relative_path()))
+        for sl in slices
+        if sl.base_file is not None
+    ]
+    if bases:
+        via_index = _record_index_tier(spark, table)
+        if via_index is not None:
+            return via_index
+    if bases and keys_df is not None:
+        bloom = _bloom_candidate_files(spark, table, keys_df)
+        if bloom is not None:
+            bases = [
+                (part, p) for part, p in bases
+                # no incoming key targets this partition, or the bloom
+                # proves no incoming key lives in this file
+                if part in bloom["touched"]
+                and not (
+                    (part, os.path.basename(p)) in bloom["recorded"]
+                    and os.path.basename(p) not in bloom["hits"]
+                )
+            ]
+    if not bases:
+        return local_frame(spark, [], _TAG_SCHEMA)
+    # meta-columns-only projection: Catalyst prunes to 3 columns at scan
+    return spark.read.parquet(*(p for _part, p in bases)).select(
+        "_hoodie_record_key",
+        "_hoodie_partition_path",
+        F.substring_index("_hoodie_file_name", "_", 1).alias(TARGET_FILE_COL),
     )
 
 
-def _current_slices(table):
-    """(slices, next-log-version per file group, base-file paths) of the
-    table snapshot — the driver-side listing every tag pass needs."""
-    slices = table.get_file_slices()
-    next_version: dict[str, int] = {}
-    paths = []
+def _file_group_side(spark, table, slices, n_buckets: int = 0) -> DataFrame:
+    """The write's one per-file-group side: a row per live file group
+    of the snapshot, ``(__fg_part, file id, anchor, next log version)``,
+    plus its bucket leaf ``(__fg_bucket, __fg_mod)`` when ``n_buckets``
+    is set. A log file is named ``.{file_id}_{anchor}.log.{version}_…``,
+    so a tagged row needs exactly these values.
+
+    The anchor is the pending service plan's instant when a plan pins
+    the group (its logs are written against the service's future
+    output, visible meanwhile through the readers' pending-anchor
+    merge), else the base commit, else — a log-only bucket group — its
+    first log's anchor. The version is the largest log version + 1.
+    ``table``: the write's snapshot, None when a bucket upsert seeds the
+    table."""
+    from hudi_rs_spark.write.bucket import parse_bucket_leaf
+
+    pinned = (
+        table.timeline.pending_plan_file_groups() if table is not None else {}
+    )
+    rows = []
     for sl in slices:
-        if sl.base_file is None:
+        if sl.base_file is not None:
+            anchor = sl.base_file.commit_timestamp
+        elif n_buckets:
+            anchor = sl.log_files[0].timestamp
+        else:
             raise ValueError(
                 "upsert against log-only file groups is unsupported: "
                 "compact the table first (write.compact)"
             )
         versions = [lf.version for lf in sl.log_files]
-        next_version[sl.file_id] = (max(versions) + 1) if versions else 1
-        paths.append(
-            os.path.join(table.base_path, sl.base_file_relative_path())
+        row = (
+            sl.partition_path or "",
+            sl.file_id,
+            pinned.get(sl.file_id, anchor),
+            (max(versions) + 1) if versions else 1,
         )
-    return slices, next_version, paths
+        if n_buckets:
+            leaf = parse_bucket_leaf(sl.file_id, n_buckets)
+            if leaf is None:
+                raise ValueError(
+                    f"file group {sl.file_id} is not bucket-named: this "
+                    "table was not written through the bucket index "
+                    "(hoodie.index.type=BUCKET tables take every write "
+                    "via write.upsert)"
+                )
+            row += leaf
+        rows.append(row)
+    schema = (
+        f"__fg_part string, {TARGET_FILE_COL} string, "
+        f"{TARGET_INSTANT_COL} string, {LOG_VERSION_COL} int"
+    )
+    if n_buckets:
+        schema += ", __fg_bucket int, __fg_mod int"
+    return local_frame(spark, rows, schema)
 
 
 class TagIndexHandle:
-    """A materialized snapshot of the tag index — (key, partition) ->
-    (file_id, base_instant) — shared across SEVERAL write calls on one
-    table so the index is read ONCE, not once per call
-    (``tag_index_handle``).
+    """A materialized tag index — (key, partition, file_id) — shared
+    across SEVERAL write calls on one table so the index is read ONCE,
+    not once per call (``tag_index_handle``). Anchors and log versions
+    are not part of it: every call joins a fresh file-group side.
 
-    Contract (the caller asserts it, the handle cannot check it): between
-    handle creation and last use, (a) no call inserts a NEW key that a
-    later call references — a stale handle would tag that key as an
-    insert again (duplicate) or tombstone it into the wrong group — and
-    (b) no compaction / clustering / rescale replaces file groups. Log
-    appends are fine: updating or deleting a key never moves its file
-    group, so the standard seed -> upsert -> delete lifecycle qualifies.
-    Next log versions are NOT part of the handle — every call re-lists
-    the table for those (cheap driver-side planning).
+    What the handle checks: each call raises ValueError when a file
+    group live at creation is no longer live — clustering, a bucket
+    rescale, insert_overwrite or delete_partition replaced it. Log
+    appends and compaction keep every file id, so the handle survives
+    them, and a scheduled service plan only re-anchors the group's logs.
+    What the caller asserts: no call inserts a NEW key that a later call
+    with this handle references — the handle would tag that key as an
+    insert again (duplicate) or tombstone it nowhere. The standard seed
+    -> upsert -> delete lifecycle qualifies.
     """
 
-    def __init__(self, path: str, index: DataFrame):
+    def __init__(self, path: str, index: DataFrame, file_ids: frozenset):
         self.path = path
         self.index = index
+        self.file_ids = file_ids
+
+    def index_for(self, table, slices) -> DataFrame:
+        """The pinned index, after checking it was built for ``table``
+        and that every file group it saw is among ``slices``."""
+        if self.path != table.base_path:
+            raise ValueError(
+                f"index_handle built for {self.path}, "
+                f"used against {table.base_path}"
+            )
+        missing = self.file_ids - {sl.file_id for sl in slices}
+        if missing:
+            raise ValueError(
+                "index_handle is stale: file groups "
+                f"{', '.join(sorted(missing))} are no longer live "
+                "(replaced by clustering, a bucket rescale, "
+                "insert_overwrite or delete_partition); build a new "
+                "handle with tag_index_handle"
+            )
+        return self.index
 
 
 def tag_index_handle(spark, path: str) -> TagIndexHandle:
@@ -263,149 +356,51 @@ def tag_index_handle(spark, path: str) -> TagIndexHandle:
     from hudi_rs_spark.write.writer import _base
 
     table = HudiTable(_base(path), spark, listing="direct")
-    slices, _next_version, paths = _current_slices(table)
-    index = _build_tag_index(spark, table, slices, paths, keys_df=None)
-    return TagIndexHandle(table.base_path, pin(index))
-
-
-def _build_tag_index(
-    spark, table, slices, paths, keys_df: DataFrame | None
-) -> DataFrame:
-    """(key, partition) -> (file_id, base_instant) over CURRENT slices.
-    Tiers: MDT record index (O(index)), bloom-pruned meta-column scan
-    (O(candidate files), needs ``keys_df``), full meta-column scan
-    (O(live base files))."""
-    if not paths:
-        return _empty_index(spark)
-    via_index = _index_from_record_index(spark, table, slices)
-    if via_index is not None:
-        return via_index
-    if keys_df is not None:
-        bloom = _bloom_candidate_files(spark, table, keys_df)
-        if bloom is not None:
-            keep = []
-            for sl, p in zip(slices, paths):
-                part = sl.partition_path or ""
-                fname = os.path.basename(p)
-                if part not in bloom["touched"]:
-                    continue  # no incoming key targets this partition
-                if (part, fname) in bloom["recorded"] and fname not in bloom["hits"]:
-                    continue  # bloom proves no incoming key lives here
-                keep.append(p)
-            paths = keep
-            if not paths:
-                return _empty_index(spark)
-    # meta-columns-only projection: Catalyst prunes to 3 columns at scan
-    return (
-        spark.read.parquet(*paths)
-        .select("_hoodie_record_key", "_hoodie_partition_path", "_hoodie_file_name")
-        .select(
-            "_hoodie_record_key",
-            "_hoodie_partition_path",
-            F.substring_index("_hoodie_file_name", "_", 1).alias(TARGET_FILE_COL),
-            F.regexp_extract(
-                "_hoodie_file_name", r"^[^_]+_[^_]+_(\d+)\.", 1
-            ).alias(TARGET_INSTANT_COL),
-        )
+    slices = table.get_file_slices()
+    index = _tag_index(spark, table, slices, keys_df=None)
+    return TagIndexHandle(
+        table.base_path, pin(index), frozenset(sl.file_id for sl in slices)
     )
 
 
-def _location_index(
-    spark, table, keys_df: DataFrame | None = None,
-    index_handle: TagIndexHandle | None = None,
-) -> tuple[DataFrame, dict[str, int]]:
-    """Tag index plus the next log version per file group (from driver
-    planning — the file-group listing is already in hand). With
-    ``index_handle`` the materialized index is reused and only the
-    listing runs (one index read per LIFECYCLE instead of per call)."""
-    slices, next_version, paths = _current_slices(table)
-    if index_handle is not None:
-        if index_handle.path != table.base_path:
-            raise ValueError(
-                f"index_handle built for {index_handle.path}, "
-                f"used against {table.base_path}"
-            )
-        return index_handle.index, next_version
-    return _build_tag_index(spark, table, slices, paths, keys_df), next_version
-
-
 def _tag_by_bucket(
-    spark, table, n: int, df: DataFrame, key_expr, part_expr,
+    side: DataFrame, n: int, df: DataFrame, key_expr, part_expr,
     splits=frozenset(),
 ) -> DataFrame:
     """Bucket-index tagging (write/bucket.py): target file id is a pure
     map-side hash of the record key — NO index read, NO tag join against
-    table state; only the (partition, bucket) -> existing-group mapping
-    joins in (broadcast, one row per live file group, needed for the log
-    anchor + next version). Rows landing in a bucket with no group yet
-    keep a null anchor — the task writer anchors their log at its own
-    commit instant, creating the group log-only. ``splits`` (the
-    extendible-hash rescale map, write/bucket.py::split_bucket) folds
-    into the routing expression — still zero index I/O. ``table``: the
-    write's snapshot, None when this upsert seeds the table."""
-    from hudi_rs_spark.write.bucket import (
-        bucket_route_exprs,
-        leaf_file_id_expr,
-        parse_bucket_leaf,
-    )
+    table state; only the file-group ``side`` joins in (broadcast,
+    keyed on partition, bucket and modulus). Rows landing in a bucket
+    with no group yet keep a null anchor — the task writer anchors their
+    log at its own commit instant, creating the group log-only.
+    ``splits`` (the extendible-hash rescale map,
+    write/bucket.py::split_bucket) folds into the routing expression —
+    still zero index I/O."""
+    from hudi_rs_spark.write.bucket import bucket_route_exprs, leaf_file_id_expr
 
-    rows = []
-    if table is not None:
-        for sl in table.get_file_slices():
-            leaf = parse_bucket_leaf(sl.file_id, n)
-            if leaf is None:
-                raise ValueError(
-                    f"file group {sl.file_id} is not bucket-named: this "
-                    "table was not written through the bucket index "
-                    "(hoodie.index.type=BUCKET tables take every write "
-                    "via write.upsert)"
-                )
-            anchor = (
-                sl.base_file.commit_timestamp
-                if sl.base_file is not None
-                else sl.log_files[0].timestamp
-            )
-            versions = [lf.version for lf in sl.log_files]
-            rows.append(
-                (
-                    sl.partition_path or "",
-                    leaf[0],
-                    leaf[1],
-                    sl.file_id,
-                    anchor,
-                    (max(versions) + 1) if versions else 1,
-                )
-            )
-    mapping = local_frame(
-        spark, rows,
-        "__bp string, __bb int, __bm int, __bfid string, "
-        "__banchor string, __bver int",
-    )
     b_col, m_col = bucket_route_exprs(key_expr, n, splits)
     return (
         df.withColumn("__hoodie_part_x", part_expr)
         .withColumn("__hoodie_bucket_x", b_col)
         .withColumn("__hoodie_bmod_x", m_col)
         .join(
-            F.broadcast(mapping),
-            (F.col("__hoodie_part_x") == F.col("__bp"))
-            & (F.col("__hoodie_bucket_x") == F.col("__bb"))
-            & (F.col("__hoodie_bmod_x") == F.col("__bm")),
+            F.broadcast(side),
+            (F.col("__hoodie_part_x") == F.col("__fg_part"))
+            & (F.col("__hoodie_bucket_x") == F.col("__fg_bucket"))
+            & (F.col("__hoodie_bmod_x") == F.col("__fg_mod")),
             "left",
         )
         .withColumn(
             TARGET_FILE_COL,
             F.coalesce(
-                F.col("__bfid"),
+                F.col(TARGET_FILE_COL),
                 leaf_file_id_expr(
                     F.col("__hoodie_bucket_x"), F.col("__hoodie_bmod_x"), n
                 ),
             ),
         )
-        .withColumn(TARGET_INSTANT_COL, F.col("__banchor"))
-        .withColumn(LOG_VERSION_COL, F.coalesce(F.col("__bver"), F.lit(1)))
         .drop(
-            "__bp", "__bb", "__bm", "__bfid", "__banchor", "__bver",
+            "__fg_part", "__fg_bucket", "__fg_mod",
             "__hoodie_part_x", "__hoodie_bucket_x", "__hoodie_bmod_x",
         )
     )
@@ -455,36 +450,15 @@ def upsert(
     """
     spark = df.sparkSession
     from hudi_rs_spark.write.bucket import is_bucket_table, num_buckets
-    from hudi_rs_spark.write.writer import existing_table, storage_options_of
+    from hudi_rs_spark.write.writer import (
+        existing_table,
+        inherit_table_identity,
+        storage_options_of,
+    )
 
     table = existing_table(path, storage_options_of(options), spark)
-    if table is not None:
-        tc = table.config
-        merged_options = {
-            "path": path,
-            "hoodie.table.name": tc.table_name,
-            "recordkey.field": ",".join(tc.record_key_fields),
-            "table.type": tc.table_type.value,
-            "table.version": str(tc.table_version),
-            "operation": "upsert",
-        }
-        if tc.ordering_fields:
-            merged_options["precombine.field"] = tc.ordering_fields[0]
-        if tc.payload_class:
-            merged_options["payload.class"] = tc.payload_class
-        if tc.partition_fields:
-            merged_options["partitionpath.field"] = ",".join(tc.partition_fields)
-            merged_options["hive_style_partitioning"] = (
-                "true" if tc.hive_style_partitioning else "false"
-            )
-        for k in (
-            "hoodie.keygen.timebased.timestamp.type",
-            "hoodie.keygen.timebased.output.dateformat",
-            "hoodie.keygen.timebased.input.dateformat",
-        ):
-            if tc.props.get(k):
-                merged_options[k] = tc.props[k]
-    else:
+    tc = table.config if table is not None else None
+    if tc is None:
         # fresh-table upsert: only bucket tables, whose SEED is itself an
         # upsert (every bucket-routed write is a log append — the first
         # touch of a bucket creates its file group log-only)
@@ -497,9 +471,10 @@ def upsert(
                 "(seed with df.write.format('hudi_py')), except bucket "
                 "tables, which seed through upsert with index.type=bucket"
             )
-        tc = None
-        merged_options = {"path": path, "operation": "upsert"}
-    merged_options.update(options)
+    defaults = {"path": path, "operation": "upsert"}
+    if tc is not None and tc.payload_class:
+        defaults["payload.class"] = tc.payload_class
+    merged_options = inherit_table_identity({**defaults, **options}, tc)
     # OCC read point: the completed instants of this call's snapshot —
     # the very timeline the slices below are planned from, taken before
     # the index read — so any commit landing between tagging and this
@@ -614,6 +589,11 @@ def upsert(
             "index.global does not compose with the bucket index: bucket "
             "routing is (partition, hash)-scoped by construction"
         )
+    # the per-file-group side (anchor + next log version), built once
+    # from this call's snapshot and broadcast-joined once: NOT a
+    # create_map literal, which would inline every file group into the
+    # plan (10^6 entries at 100 TB = plan bloat + analysis cost)
+    slices = table.get_file_slices() if table is not None else []
     if bucket_mode:
         from hudi_rs_spark.write.bucket import parse_splits
 
@@ -627,31 +607,27 @@ def upsert(
         # bucket routing computes its own map-side columns; the named
         # tag columns would otherwise leak into the writer as data
         tagged = _tag_by_bucket(
-            spark, table, n_buckets,
+            _file_group_side(spark, table, slices, n_buckets), n_buckets,
             df.drop("__hoodie_key_x", "__hoodie_part_x"),
             key_expr, part_expr,
             splits=parse_splits(tc.props) if tc is not None else frozenset(),
         )
-        next_version = {}
-        n_groups = n_buckets
     else:
-        index, next_version = _location_index(
-            spark, table,
-            df.select(
-                F.col("__hoodie_key_x").alias("k"),
-                F.col("__hoodie_part_x").alias("p"),
-            ),
-            index_handle=index_handle,
+        side = _file_group_side(spark, table, slices).drop("__fg_part")
+        index = (
+            index_handle.index_for(table, slices)
+            if index_handle is not None
+            else _tag_index(
+                spark, table, slices,
+                df.select(
+                    F.col("__hoodie_key_x").alias("k"),
+                    F.col("__hoodie_part_x").alias("p"),
+                ),
+            )
         )
-        # per-file-group next log version as a broadcast-joined frame,
-        # NOT a create_map literal: a map literal inlines every file
-        # group into the plan (10^6 entries at 100 TB = plan bloat +
-        # analysis cost), while the join side stays a normal small
-        # relation
-        versions = local_frame(
-            spark, sorted(next_version.items()),
-            f"{TARGET_FILE_COL} string, {LOG_VERSION_COL} int",
-        )
+        # a stale entry naming a replaced group drops out here, and the
+        # surviving ones carry their group's anchor and log version
+        index = index.join(F.broadcast(side), TARGET_FILE_COL)
 
         if global_index:
             # key-only tag join: the located partition rides along so
@@ -667,11 +643,6 @@ def upsert(
                     "left",
                 )
                 .drop("_hoodie_record_key")
-                .join(F.broadcast(versions), TARGET_FILE_COL, "left")
-                .withColumn(
-                    LOG_VERSION_COL,
-                    F.coalesce(F.col(LOG_VERSION_COL), F.lit(1)),
-                )
             )
             drifted = F.col("__hoodie_loc_part").isNotNull() & (
                 F.col("__hoodie_loc_part") != F.col("__hoodie_part_x")
@@ -706,22 +677,13 @@ def upsert(
                         F.when(is_tomb, F.lit(True))
                         .otherwise(F.col(DELETE_COL)),
                     )
+                    # an untagged row is an insert: the writer reads
+                    # anchor and version only for tagged rows
                     .withColumn(
                         TARGET_FILE_COL,
                         F.when(
                             is_ins, F.lit(None).cast("string")
                         ).otherwise(F.col(TARGET_FILE_COL)),
-                    )
-                    .withColumn(
-                        TARGET_INSTANT_COL,
-                        F.when(
-                            is_ins, F.lit(None).cast("string")
-                        ).otherwise(F.col(TARGET_INSTANT_COL)),
-                    )
-                    .withColumn(
-                        LOG_VERSION_COL,
-                        F.when(is_ins, F.lit(1))
-                        .otherwise(F.col(LOG_VERSION_COL)),
                     )
                     .drop("__hoodie_role")
                 )
@@ -745,48 +707,11 @@ def upsert(
                     ),
                     "left",
                 )
-                .drop("_hoodie_record_key", "_hoodie_partition_path")
-                .join(F.broadcast(versions), TARGET_FILE_COL, "left")
-                .withColumn(
-                    LOG_VERSION_COL,
-                    F.coalesce(F.col(LOG_VERSION_COL), F.lit(1)),
+                .drop(
+                    "_hoodie_record_key", "_hoodie_partition_path",
+                    "__hoodie_key_x", "__hoodie_part_x",
                 )
-                .drop("__hoodie_key_x", "__hoodie_part_x")
             )
-        n_groups = len(next_version)
-
-    # non-blocking async compaction/clustering (write/async_compact.py,
-    # write/async_cluster.py): updates routed to a file group with a
-    # SCHEDULED service plan anchor their log files at the plan instant
-    # — written against the service's future output, visible throughout
-    # via the readers' pending-anchor merge. Compaction keeps them on
-    # top of the new base; clustering migrates them onto the rewritten
-    # group at execution time.
-    plan_anchor: dict[str, str] = {}
-    if table is not None:
-        for plans in (
-            table.timeline.pending_compaction_plans(),
-            table.timeline.pending_clustering_plans(),
-        ):
-            for pi, plan in plans.items():
-                for g in plan.get("groups", ()):
-                    if "fileId" in g:  # compaction plan shape
-                        plan_anchor[g["fileId"]] = pi
-                    for inp in g.get("inputs", ()):  # clustering shape
-                        plan_anchor[inp["fileId"]] = pi
-    if plan_anchor:
-        anchors_df = local_frame(
-            spark, sorted(plan_anchor.items()),
-            f"{TARGET_FILE_COL} string, __hoodie_plan_anchor string",
-        )
-        tagged = (
-            tagged.join(F.broadcast(anchors_df), TARGET_FILE_COL, "left")
-            .withColumn(
-                TARGET_INSTANT_COL,
-                F.coalesce("__hoodie_plan_anchor", TARGET_INSTANT_COL),
-            )
-            .drop("__hoodie_plan_anchor")
-        )
 
     # ONE routed pass: a filter/unionByName(updates, inserts) pair would
     # execute the whole tag subtree (index scan + tag join + precombine

@@ -137,9 +137,9 @@ class TestBloomTagPruning:
         from hudi_rs_spark.sources.hudi import HudiTable
         from hudi_rs_spark.write.config import WriteConfig
         from hudi_rs_spark.write.upsert import (
-            _location_index,
             _spark_key_expr,
             _spark_partition_expr,
+            _tag_index,
         )
 
         t = str(tmp_path / "t")
@@ -155,9 +155,8 @@ class TestBloomTagPruning:
             _spark_key_expr(cfg.record_key_fields).alias("k"),
             _spark_partition_expr(cfg).alias("p"),
         )
-        index, _versions = _location_index(
-            spark, HudiTable(t, spark, listing="direct"), keys_df
-        )
+        table = HudiTable(t, spark, listing="direct")
+        index = _tag_index(spark, table, table.get_file_slices(), keys_df)
         touched = {os.path.basename(p) for p in index.inputFiles()}
         all_files = {
             os.path.basename(sl.base_file_relative_path())

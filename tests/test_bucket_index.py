@@ -138,9 +138,9 @@ class TestBucketLifecycle:
         n_before = len(_groups(t))
 
         def boom(*a, **kw):  # the lookup index must never be consulted
-            raise AssertionError("bucket tagging consulted _location_index")
+            raise AssertionError("bucket tagging consulted _tag_index")
 
-        monkeypatch.setattr(upsert_mod, "_location_index", boom)
+        monkeypatch.setattr(upsert_mod, "_tag_index", boom)
         upsert(_rows(spark, 10, ts=2, name="u"), t)
         snap = _snap(spark, t)
         assert snap[3] == ("u3", 2) and snap[11] == ("n11", 1)

@@ -122,3 +122,67 @@ class TestSameInstantTwins:
             .filter(F.col("id") == 0).select("id", "name", "city").collect()
         )
         assert rows == [(0, "moved", "b")]
+
+
+class TestShardTasksReadTheDriverPlan:
+    def test_shard_closure_plans_nothing(self, spark, tmp_path, monkeypatch):
+        """The record-index tier's shard-read closure, run in the test
+        process (the function executors run): it reads every shard from
+        the plan the driver shipped, without reading the MDT's
+        hoodie.properties, loading its timeline or listing a directory,
+        and yields what the driver-side index read returns."""
+        import pyarrow as pa
+
+        from hudi_rs_spark.config.table_config import HudiTableConfig
+        from hudi_rs_spark.fs.storage import LocalStorage
+        from hudi_rs_spark.metadata.record_index import read_record_index
+        from hudi_rs_spark.sources.hudi import HudiTable
+        from hudi_rs_spark.timeline.timeline import Timeline
+        from hudi_rs_spark.write.upsert import _record_index_tier
+
+        path = os.path.join(str(tmp_path), "t")
+        _seed(spark, path, n=40)
+        upsert(
+            spark.createDataFrame(
+                [(i, f"u{i}", ["a", "b"][i % 2], 2) for i in range(0, 50, 5)],
+                "id int, name string, city string, ts int",
+            ),
+            path,
+        )
+        closures = []
+        DataFrame = type(spark.range(1))
+        real_map = DataFrame.mapInArrow
+
+        def capture(self, fn, schema, *a, **k):
+            closures.append(fn)
+            return real_map(self, fn, schema, *a, **k)
+
+        monkeypatch.setattr(DataFrame, "mapInArrow", capture)
+        table = HudiTable(path, spark, listing="direct")
+        assert _record_index_tier(spark, table) is not None
+        (read_shards,) = closures
+
+        calls = []
+
+        def counting(owner, name):
+            orig = getattr(owner, name)
+
+            def wrapped(*a, **k):
+                calls.append(name)
+                return orig(*a, **k)
+
+            monkeypatch.setattr(owner, name, wrapped)
+
+        counting(HudiTableConfig, "from_base_path")
+        counting(Timeline, "load")
+        counting(LocalStorage, "list_dir")
+        n = int(table.config.props["hoodie.metadata.record.index.shards"])
+        shards = pa.record_batch([pa.array(range(n), pa.int32())], ["shard"])
+        got = {}
+        for b in read_shards(iter([shards])):
+            for k, part, fid in zip(*(c.to_pylist() for c in b.columns)):
+                got[k] = (part, fid)
+        assert calls == []
+        monkeypatch.undo()
+        assert got == read_record_index(path)
+        assert len(got) == 42

@@ -228,6 +228,36 @@ class TestConnectorStorageOptions:
         )
         assert all(p.storage_options == opts for p in parts)
 
+    def test_log_slice_read_opens_every_file_with_table_options(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """One log-bearing slice descriptor, read in the test process
+        (the function executors run): every storage lookup of the base
+        file and of each log file carries the table's options."""
+        from hudi_rs_spark.fs import storage
+        from hudi_rs_spark.sources.hudi import HudiTable
+        from hudi_rs_spark.sources.pyds import _read_slice, _slice_partitions
+
+        t = _synth(tmp_path)
+        opts = {"endpoint_override": "http://table-endpoint"}
+        table = HudiTable(t.base_path, spark, storage_options=opts)
+        parts = _slice_partitions(
+            table, table.get_file_slices(), None, read_optimized=False
+        )
+        [part] = [p for p in parts if p.log_files]
+        seen = []
+        real = storage.storage_for
+
+        def recording(path, options=None):
+            seen.append((path, options))
+            return real(path, options)
+
+        monkeypatch.setattr(storage, "storage_for", recording)
+        rows = [r for b in _read_slice(part) for r in b.to_pylist()]
+        assert rows
+        assert {p for p, _o in seen} >= set(part.log_files)
+        assert all(o == opts for _p, o in seen), seen
+
 
 class TestPlannerOnArrowFS:
     """The same planner matrix as TestPlannerOnMemory, but through a REAL

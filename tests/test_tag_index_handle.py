@@ -83,7 +83,7 @@ class TestTagIndexHandle:
 
     def test_handle_is_used_not_rebuilt(self, spark, tmp_path, monkeypatch):
         """After handle creation the index tiers must never re-run:
-        poisoning _build_tag_index proves the consuming writes read the
+        poisoning _tag_index proves the consuming writes read the
         materialized handle."""
         import importlib
 
@@ -96,7 +96,7 @@ class TestTagIndexHandle:
         def boom(*a, **k):
             raise AssertionError("index rebuilt despite handle")
 
-        monkeypatch.setattr(U, "_build_tag_index", boom)
+        monkeypatch.setattr(U, "_tag_index", boom)
         _lifecycle(spark, df, path, h)
         expect = {
             (i, f"n{i}#u" if i % 3 == 0 else f"n{i}")
@@ -137,3 +137,103 @@ class TestTagIndexHandle:
                 if ".log." in name:
                     versions.add(LogFile.parse(name).version)
         assert versions == {1, 2}, versions
+
+
+def _log_names(path):
+    """LogFile of every data log file under ``path``."""
+    from hudi_rs_spark.fs.file_group import LogFile
+
+    out = []
+    for root, _dirs, files in os.walk(path):
+        if "/.hoodie" in root:
+            continue
+        out.extend(LogFile.parse(n) for n in files if ".log." in n)
+    return out
+
+
+class TestHandleAcrossServices:
+    """The handle pins (key, partition, file id) only; each call joins a
+    fresh file-group side, so it survives what keeps file ids and
+    refuses what replaces them."""
+
+    @pytest.mark.parametrize("record_index", [True, False], ids=["ri", "scan"])
+    def test_reuse_after_compaction_matches_plain(
+        self, spark, tmp_path, monkeypatch, record_index
+    ):
+        from hudi_rs_spark.write import compact
+        from hudi_rs_spark.write.upsert import tag_index_handle, upsert
+
+        if not record_index:
+            monkeypatch.setitem(OPTS, "metadata.recordindex.enable", "false")
+        p_plain = os.path.join(str(tmp_path), "plain")
+        p_handle = os.path.join(str(tmp_path), "handled")
+        df = _seed(spark, p_plain)
+        _seed(spark, p_handle)
+        h = tag_index_handle(spark, p_handle)
+        first = (
+            df.filter(F.col("id") % 3 == 0)
+            .withColumn("name", F.concat(F.col("name"), F.lit("#u")))
+            .withColumn("ts", F.lit(2))
+        )
+        later = (
+            df.filter(F.col("id") % 5 == 0)
+            .withColumn("name", F.concat(F.col("name"), F.lit("#c")))
+            .withColumn("ts", F.lit(3))
+        )
+        for path, handle in ((p_plain, None), (p_handle, h)):
+            upsert(first, path, index_handle=handle)
+            compact(spark, path)
+            upsert(later, path, index_handle=handle)
+
+        expect = {
+            (i, f"n{i}#c" if i % 5 == 0 else f"n{i}#u" if i % 3 == 0 else f"n{i}")
+            for i in range(40)
+        }
+        assert _snapshot(spark, p_plain) == expect
+        assert _snapshot(spark, p_handle) == expect
+
+    def test_reuse_after_clustering_raises(self, spark, tmp_path):
+        from hudi_rs_spark.write.cluster import cluster
+        from hudi_rs_spark.write.upsert import tag_index_handle, upsert
+
+        path = os.path.join(str(tmp_path), "t")
+        df = _seed(spark, path)
+        h = tag_index_handle(spark, path)
+        cluster(spark, path, sort_columns=("id",), min_group_slices=1)
+        with pytest.raises(ValueError, match="no longer live"):
+            upsert(
+                df.filter(F.col("id") % 5 == 0).withColumn("ts", F.lit(2)),
+                path, index_handle=h,
+            )
+
+    def test_reuse_under_scheduled_compaction_anchors_at_plan(
+        self, spark, tmp_path
+    ):
+        from hudi_rs_spark.write.async_compact import (
+            run_scheduled_compaction,
+            schedule_compaction,
+        )
+        from hudi_rs_spark.write.upsert import tag_index_handle, upsert
+
+        path = os.path.join(str(tmp_path), "t")
+        df = _seed(spark, path)
+        h = tag_index_handle(spark, path)
+        upsert(
+            df.filter(F.col("id") % 3 == 0).withColumn("ts", F.lit(2)),
+            path, index_handle=h,
+        )
+        plan = schedule_compaction(path)
+        assert plan is not None
+        before = {lf.file_name for lf in _log_names(path)}
+        upsert(
+            df.filter(F.col("id") % 5 == 0)
+            .withColumn("name", F.concat(F.col("name"), F.lit("#p")))
+            .withColumn("ts", F.lit(3)),
+            path, index_handle=h,
+        )
+        new = [lf for lf in _log_names(path) if lf.file_name not in before]
+        assert new and {lf.timestamp for lf in new} == {plan}
+        run_scheduled_compaction(spark, path)
+        assert _snapshot(spark, path) == {
+            (i, f"n{i}#p" if i % 5 == 0 else f"n{i}") for i in range(40)
+        }

@@ -33,7 +33,8 @@ SCHEMA = "id long, name string, part string, ts long"
 @pytest.fixture()
 def reads(monkeypatch):
     """Counter of ``props`` (hoodie.properties) reads and ``timeline``
-    loads made in this process while the fixture is active."""
+    loads made in this process while the fixture is active; those of
+    the metadata table also count as ``mdt_props`` / ``mdt_timeline``."""
     from hudi_rs_spark.config.table_config import HudiTableConfig
     from hudi_rs_spark.timeline.timeline import Timeline
 
@@ -42,9 +43,11 @@ def reads(monkeypatch):
     def counting(owner, name, kind):
         orig = getattr(owner, name).__func__
 
-        def wrapped(cls, *a, **k):
+        def wrapped(cls, base_path, *a, **k):
             counts[kind] += 1
-            return orig(cls, *a, **k)
+            if str(base_path).rstrip("/").endswith("/.hoodie/metadata"):
+                counts["mdt_" + kind] += 1
+            return orig(cls, base_path, *a, **k)
 
         monkeypatch.setattr(owner, name, classmethod(wrapped))
 
@@ -82,7 +85,11 @@ def test_upsert_and_delete_load_the_table_once_on_the_driver(
         ),
         tdir,
     )
-    assert reads["timeline"] <= 1 and reads["props"] <= 2, dict(reads)
+    # the data table once; the metadata table once, for the
+    # record-index shard plan the shard tasks read from
+    assert reads["mdt_timeline"] <= 1 and reads["mdt_props"] <= 1, dict(reads)
+    assert reads["timeline"] - reads["mdt_timeline"] <= 1, dict(reads)
+    assert reads["props"] - reads["mdt_props"] <= 2, dict(reads)
     reads.clear()
     delete(
         spark.createDataFrame(
@@ -91,7 +98,9 @@ def test_upsert_and_delete_load_the_table_once_on_the_driver(
         ),
         tdir,
     )
-    assert reads["timeline"] <= 1 and reads["props"] <= 2, dict(reads)
+    assert reads["mdt_timeline"] <= 1 and reads["mdt_props"] <= 1, dict(reads)
+    assert reads["timeline"] - reads["mdt_timeline"] <= 1, dict(reads)
+    assert reads["props"] - reads["mdt_props"] <= 2, dict(reads)
     live = _live(spark, tdir)
     assert len(live) == 190
     assert live[10] == "u10" and live[11] == "n11" and 1 not in live

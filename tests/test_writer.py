@@ -664,15 +664,15 @@ class TestRecordIndexWriter:
         })
 
         called = {"n": 0}
-        orig = upsert_mod._index_from_record_index
+        orig = upsert_mod._record_index_tier
 
-        def spy(spark_, cfg, slices):
-            out = orig(spark_, cfg, slices)
+        def spy(spark_, table):
+            out = orig(spark_, table)
             assert out is not None
             called["n"] += 1
             return out
 
-        monkeypatch.setattr(upsert_mod, "_index_from_record_index", spy)
+        monkeypatch.setattr(upsert_mod, "_record_index_tier", spy)
         real_parquet = type(spark.read).parquet
 
         def poisoned(self_, *paths, **kw):
